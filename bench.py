@@ -23,10 +23,6 @@ executor criterion, proxied by two parallelism levels on one host):
   Spark's own per-task machinery scaling at 0.87 for 2->8 vs 0.58 for
   4->16. `--lo 4 --hi 16` records that saturated companion pair for the
   record (see BENCH/BASELINE.md and BENCH/SCALING_ANALYSIS.md).
-
-Path comparison:
-    python bench.py --compare-paths [--cpus 16]
-  CSR kernel vs join path on the sf tables; writes BENCH/PATHS.md.
 """
 
 from __future__ import annotations
@@ -238,34 +234,23 @@ def run_default(sf_dir: str, cpus: int) -> dict:
     extras["pagerank_iter_sec"] = round(pr.total_seconds, 3)
     extras["pagerank_setup_sec"] = round(pr_sec - pr.total_seconds, 3)
 
-    # Same convergence via the CSR entry point. mode="auto" (default)
+    # Same convergence again, through the same auto dispatcher: mode="auto"
     # encodes the measured per-algorithm crossovers (csr.py constants;
     # scripts/sf01_path_ab.py): at sf0.1 the cust-supp graph is 587k
     # edges >= STREAM_AUTO_MIN_EDGES, so auto serves this leg through
-    # the fused stream path (cold 5.9 s vs join 11.6 s). The forced
-    # classic-kernel time is kept in extras so the raw CSR path stays
-    # attributable per round.
-    from chaos_spark.csr import pagerank_csr
-
+    # the fused stream path (cold 5.9 s vs join 11.6 s), adopting the
+    # blocks registered by the leg above. The leg name is kept for
+    # round-over-round comparability of the record.
     t0 = time.time()
-    pr2 = pagerank_csr(spark, e_cs, tol=1e-6, max_iters=100, num_edges=n_edges_cs)
+    pr2 = pagerank(spark, e_cs, tol=1e-6, max_iters=100, num_edges=n_edges_cs)
     csr_sec = time.time() - t0
     timings["pagerank_conv_csr"] = round(csr_sec, 3)
     extras["pagerank_csr_supersteps"] = pr2.supersteps
     extras["pagerank_csr_iter_sec"] = round(pr2.total_seconds, 3)
     extras["pagerank_csr_build_sec"] = round(csr_sec - pr2.total_seconds, 3)
-    # Forced classic kernel. Its CsrGraph adopts the auto leg's directed
-    # blocks via the warm-block registry (csr.py _WARM_BLOCKS), so this
-    # leg measures the classic kernel WARM — build cost is attributed
-    # once, to pagerank_conv_csr above; iter_sec is the comparable number.
-    t0 = time.time()
-    pr3 = pagerank_csr(spark, e_cs, tol=1e-6, max_iters=100, mode="csr")
-    extras["pagerank_csr_forced_sec"] = round(time.time() - t0, 3)
-    extras["pagerank_csr_forced_iter_sec"] = round(pr3.total_seconds, 3)
 
     e_part = harness.part_edges(spark, sf_dir).persist()
     n_edges_part = e_part.count()
-    from chaos_spark.csr import lpa_csr
 
     cc_res = timed(
         "cc_conv",
@@ -281,25 +266,19 @@ def run_default(sf_dir: str, cpus: int) -> dict:
     extras["lpa_iter_sec"] = round(lpa_res.total_seconds, 3)
     lpa_csr_res = timed(
         "lpa_csr_10",
-        lambda: lpa_csr(spark, e_part, max_iters=10, num_edges=n_edges_part),
+        lambda: label_propagation(
+            spark, e_part, max_iters=10, num_edges=n_edges_part
+        ),
     )
     extras["lpa_csr_iter_sec"] = round(lpa_csr_res.total_seconds, 3)
-    t0 = time.time()
-    lpa_forced = lpa_csr(spark, e_part, max_iters=10, mode="csr")
-    extras["lpa_csr_forced_sec"] = round(time.time() - t0, 3)
-    extras["lpa_csr_forced_iter_sec"] = round(lpa_forced.total_seconds, 3)
-    # Fused stream path, forced, same jobs — kept in extras (like the
-    # forced-CSR legs) so the per-round record shows where each path wins
-    # at this scale. Since the per-algorithm crossover landed (csr.py,
-    # scripts/sf01_path_ab.py) auto serves lpa_csr_10 through the stream
-    # path at sf0.1 (294k edges), building the undirected part-graph
-    # blocks once; the warm-block registry then serves those same blocks
-    # to this section's forced classic + stream legs, which therefore
-    # measure WARM (and it would route a subsequent cc_csr auto
-    # call through warm stream — measured 2.1 s vs join 4.4 s; the
+    # Fused stream path, forced, same jobs — kept in extras so the
+    # per-round record shows where each path wins at this scale. Auto
+    # serves lpa_10 through the stream path at sf0.1 (294k edges >=
+    # STREAM_AUTO_MIN_EDGES), building the undirected part-graph blocks
+    # once; the warm-block registry then serves those same blocks to the
+    # forced stream legs below, which therefore measure WARM (the
     # headline cc_conv leg stays the join algorithm for round-over-round
-    # comparability and runs before any blocks exist anyway). These
-    # forced legs keep both paths attributable: WARM wall + iter times.
+    # comparability and runs before any blocks exist anyway).
     from chaos_spark.stream_algos import cc_stream, lpa_stream
 
     t0 = time.time()
@@ -334,72 +313,6 @@ def run_default(sf_dir: str, cpus: int) -> dict:
 
 
 # ---------------------------------------------------------------------------
-# Path comparison — CSR kernel vs join path at a given parallelism
-# ---------------------------------------------------------------------------
-
-def run_compare_paths(sf_dir: str, cpus: int, write_md: bool = True) -> dict:
-    """r2 verdict item 2's done-criterion: pagerank_conv_csr <= pagerank_conv
-    and lpa_csr_10 <= lpa_10 at the protocol parallelism (local[16], the
-    unsaturated level where a CSR task's JVM thread + Python worker pair
-    does not oversubscribe the host). Reports wall AND iterate-only time
-    (sum of per-superstep seconds) so one-time setup (dedup/partition vs
-    CSR block build) is attributable."""
-    spark = _session(cpus)
-    from chaos_spark.csr import lpa_csr, pagerank_csr
-
-    out: dict = {"cpus": cpus, "sf_dir": sf_dir}
-    e_cs = harness.cust_supp_edges(spark, sf_dir).persist()
-    n_cs = e_cs.count()
-
-    def leg(name, fn):
-        t0 = time.time()
-        res = fn()
-        wall = time.time() - t0
-        out[name] = {
-            "wall_sec": round(wall, 3),
-            "iter_sec": round(res.total_seconds, 3),
-            "setup_sec": round(wall - res.total_seconds, 3),
-            "supersteps": res.supersteps,
-        }
-
-    leg("pagerank_conv", lambda: pagerank(
-        spark, e_cs, tol=1e-6, max_iters=100, num_edges=n_cs))
-    leg("pagerank_conv_csr", lambda: pagerank_csr(
-        spark, e_cs, tol=1e-6, max_iters=100, mode="csr"))
-    e_part = harness.part_edges(spark, sf_dir).persist()
-    n_part = e_part.count()
-    leg("lpa_10", lambda: label_propagation(
-        spark, e_part, max_iters=10, num_edges=n_part))
-    leg("lpa_csr_10", lambda: lpa_csr(spark, e_part, max_iters=10, mode="csr"))
-    out["csr_wins_pagerank"] = (
-        out["pagerank_conv_csr"]["wall_sec"] <= out["pagerank_conv"]["wall_sec"]
-    )
-    out["csr_wins_lpa"] = out["lpa_csr_10"]["wall_sec"] <= out["lpa_10"]["wall_sec"]
-    if write_md:
-        p = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH", "PATHS.md")
-        os.makedirs(os.path.dirname(p), exist_ok=True)
-        with open(p, "w") as f:
-            f.write(
-                f"# BENCH/PATHS — CSR kernel vs join path (local[{cpus}], {sf_dir})\n\n"
-                "| query | wall (s) | iterate (s) | setup (s) | supersteps |\n"
-                "|---|---|---|---|---|\n"
-            )
-            for k in ("pagerank_conv", "pagerank_conv_csr", "lpa_10", "lpa_csr_10"):
-                r = out[k]
-                f.write(
-                    f"| {k} | {r['wall_sec']} | {r['iter_sec']} |"
-                    f" {r['setup_sec']} | {r['supersteps']} |\n"
-                )
-            f.write(
-                f"\nCSR <= join: pagerank **{out['csr_wins_pagerank']}**,"
-                f" lpa **{out['csr_wins_lpa']}** (wall). Iterate-only is the\n"
-                "steady-state comparison; setup is one-time (static layout /\n"
-                "block build, amortized across runs via pinned tokens).\n"
-            )
-    return out
-
-
-# ---------------------------------------------------------------------------
 # Scaling mode — BASELINE.md protocol
 # ---------------------------------------------------------------------------
 
@@ -423,7 +336,7 @@ def _pagerank_throughput(
         # The per-PROCESS transient (JIT of generated code, Arrow paths,
         # python worker pool, block caches) lasts ~10 supersteps: measured
         # 20s -> 4-7s steady on the 64M graph even with warm disk blocks.
-        warmup_steps = 10 if algo_path in ("csr", "stream") else 2
+        warmup_steps = 10 if algo_path == "stream" else 2
     spark = _session(cpus, shuffle=shuffle)
     edges = spark.read.parquet(path)
     n_edges = edges.count()
@@ -431,9 +344,13 @@ def _pagerank_throughput(
         from chaos_spark.csr import CsrGraph
         from chaos_spark.stream import pagerank_stream
 
-        # Same reuse rules as the csr branch: one block layout per leg
-        # (static preprocessed input), checkpoint reset excluded from the
-        # timed window (periodic maintenance, amortized 1/k in prod).
+        # Build the block layout ONCE and reuse it for warmup + timed run
+        # — the layout is static preprocessed input (Chaos's on-disk edge
+        # files); rebuilding per call restarts the JVM/JIT/cleaner warm-up
+        # transient at the head of every timed leg. checkpoint_every >
+        # run length: the durable reset is periodic maintenance
+        # (amortized 1/k in production) and would distort the
+        # steady-state median inside a short timed window.
         g = CsrGraph(spark, edges, num_partitions=shuffle,
                      token=f"bench-{path}-{shuffle}")
         no_ckpt = supersteps + warmup_steps + 1
@@ -458,47 +375,7 @@ def _pagerank_throughput(
             "per_superstep_sec": [h["seconds"] for h in res.history],
             "per_superstep_steal": [h.get("steal_frac") for h in res.history],
         }
-    if algo_path == "csr":
-        from chaos_spark.csr import CsrGraph, _pagerank_csr_disk
-        from chaos_spark.engine import superstep_conf
-
-        # Build the block layout ONCE and reuse it for warmup + timed run
-        # — the layout is static preprocessed input (Chaos's on-disk edge
-        # files); rebuilding the CsrGraph per call re-ran the dedup/degree
-        # jobs and restarted the JVM/JIT/cleaner warm-up transient, which
-        # measured as a 6-superstep decay (76s -> 6s) at the head of every
-        # timed leg.
-        g = CsrGraph(spark, edges, num_partitions=shuffle,
-                     token=f"bench-{path}-{shuffle}")
-        # checkpoint_every > run length: the every-5-supersteps durable
-        # reset (lineage/stats barrier) is periodic MAINTENANCE, amortized
-        # 1/k in production; inside a 10-superstep timed window it lands on
-        # exactly one superstep and distorts the steady-state median
-        # (r3 diag: step 6 measured 14.0 s vs 3.5 s steady at local[16]
-        # purely from the superstep-5 parquet round trip billed to the
-        # following step). Steady-state superstep throughput is the north
-        # metric; checkpoint cost is reported by the default bench's
-        # setup/iter split instead.
-        no_ckpt = supersteps + warmup_steps + 1
-        with superstep_conf(spark, g.p, adaptive=False):
-            _pagerank_csr_disk(spark, g, 0.85, 0.0, warmup_steps,
-                               checkpoint_every=no_ckpt)
-            t0 = time.time()
-            res = _pagerank_csr_disk(spark, g, 0.85, 0.0, supersteps,
-                                     checkpoint_every=no_ckpt)
-            wall = time.time() - t0
-        assert res.supersteps == supersteps
-        return {
-            "cpus": cpus,
-            "edges": n_edges,
-            "supersteps": supersteps,
-            "wall_sec": round(wall, 2),
-            "supersteps_per_sec": round(supersteps / wall, 4),
-            "edges_per_sec": round(n_edges * supersteps / wall, 1),
-            "per_superstep_sec": [h["seconds"] for h in res.history],
-            "per_superstep_steal": [h.get("steal_frac") for h in res.history],
-        }
-    elif algo_path in ("broadcast", "shuffle"):
+    if algo_path in ("broadcast", "shuffle"):
         import functools
 
         pr_fn = functools.partial(pagerank, mode=algo_path)
@@ -550,12 +427,6 @@ def _throughput_subprocess(
     # CSR disk blocks + ephemeral state resets on tmpfs too (see _session).
     env.setdefault("CHAOS_CSR_BLOCK_DIR", "/dev/shm/chaos_csr_blocks")
     env.setdefault("TMPDIR", "/dev/shm/chaos-tmp")
-    # Worker block caches sized so NO leg thrashes (1.5 GB/worker >= the
-    # whole 64M-edge block set): the scaling number should measure compute
-    # scaling, not cache-capacity asymmetry — a small leg that re-reads
-    # npz blocks every superstep inflates the ratio dishonestly. (The
-    # 256 MB default exists for 32-worker production sessions.)
-    env.setdefault("CHAOS_BLOCK_CACHE_BYTES", str(1536 * 1024 * 1024))
     os.makedirs(env["TMPDIR"], exist_ok=True)
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), "--one",
@@ -848,7 +719,7 @@ def main() -> None:
     ap.add_argument("--lo", type=int, default=2)
     ap.add_argument("--hi", type=int, default=8)
     ap.add_argument("--path", dest="algo_path",
-                    choices=["join", "shuffle", "broadcast", "csr", "stream"],
+                    choices=["join", "shuffle", "broadcast", "stream"],
                     default="stream")
     ap.add_argument("--shuffle", type=int, default=None)
     ap.add_argument("--repeats", type=int, default=3)
@@ -856,16 +727,13 @@ def main() -> None:
     ap.add_argument("--no-md", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", 32)))
-    ap.add_argument("--compare-paths", action="store_true")
     ap.add_argument(
         "--companion", action="store_true",
         help="record this scaling pair as a companion (own JSON; never "
         "overwrites the declared-protocol headline record)",
     )
     args = ap.parse_args()
-    if args.compare_paths:
-        out = run_compare_paths(args.sf_dir, args.cpus, write_md=not args.no_md)
-    elif args.scaling:
+    if args.scaling:
         out = run_scaling(
             args.scale, args.edges, args.supersteps, args.lo, args.hi,
             algo_path=args.algo_path, shuffle=args.shuffle,

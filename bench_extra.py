@@ -212,9 +212,6 @@ def run_scale(cpus: int = 8, edges: int = 64_000_000, scale: int = 22) -> None:
     local dirs, generous worker block cache)."""
     os.environ.setdefault("CHAOS_AQE", "off")
     os.environ.setdefault("CHAOS_CSR_BLOCK_DIR", "/dev/shm/chaos_csr_blocks")
-    os.environ.setdefault(
-        "CHAOS_BLOCK_CACHE_BYTES", str(1536 * 1024 * 1024)
-    )
     from bench import _ensure_bench_graph, _host_busy_check
 
     path = _ensure_bench_graph(scale, edges)

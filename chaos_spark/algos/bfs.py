@@ -66,8 +66,9 @@ def sssp(
         kern = _MinPlusSSSP(root, weight_col, symmetric)
         route_stream = mode == "stream"
         if not route_stream:
-            ne = num_edges if num_edges is not None else edges.count()
-            route_stream = ne >= CSR_AUTO_MIN_EDGES or (
+            if num_edges is None:
+                num_edges = edges.count()
+            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
                 _warm_blocks_ready(_warm_key(
                     kern.prep_edges(edges), False,
                     None if weight_col is None else "w", num_partitions,
@@ -79,9 +80,12 @@ def sssp(
                 symmetric=symmetric, max_iters=max_iters,
                 num_partitions=num_partitions, checkpointer=checkpointer,
                 checkpoint_every=checkpoint_every,
+                num_edges=num_edges,
             )
     p = num_partitions or choose_num_partitions(
-        spark, edges.count() * (2 if symmetric else 1)
+        spark,
+        (num_edges if num_edges is not None else edges.count())
+        * (2 if symmetric else 1)
     )
     with superstep_conf(spark, p):
         return _sssp(

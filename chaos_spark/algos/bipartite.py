@@ -62,8 +62,9 @@ def bipartite_check(
 
         route_stream = mode == "stream"
         if not route_stream:
-            ne = num_edges if num_edges is not None else edges.count()
-            route_stream = ne >= CSR_AUTO_MIN_EDGES or (
+            if num_edges is None:
+                num_edges = edges.count()
+            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
                 _warm_blocks_ready(_warm_key(
                     edges, True, None, num_partitions,
                 )) is not None
@@ -72,8 +73,11 @@ def bipartite_check(
             return bipartite_stream(
                 spark, edges, max_iters=max_iters,
                 num_partitions=num_partitions,
+                num_edges=num_edges,
             )
-    p = num_partitions or choose_num_partitions(spark, edges.count() * 2)
+    p = num_partitions or choose_num_partitions(
+        spark, (num_edges if num_edges is not None else edges.count()) * 2
+    )
     with superstep_conf(spark, p):
         return _bipartite(spark, edges, max_iters, p)
 

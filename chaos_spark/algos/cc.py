@@ -50,7 +50,7 @@ def connected_components(
     and integer labels) from CC_STREAM_MIN_EDGES raw edges, or below it
     when the warm-block registry already holds this graph's undirected
     blocks (then the cold-build argument for the join path is void);
-    ``"join"`` pins the classic join path; ``"stream"`` pins the stream
+    ``"join"`` pins the join path; ``"stream"`` pins the stream
     kernel. Warm-start (``init_labels``) and resumable (``checkpointer``)
     runs stay on the join path — the stream kernel's blob checkpoints
     and seed contract are separate.
@@ -89,7 +89,7 @@ def connected_components(
 
             return cc_stream(
                 spark, edges, max_iters=max_iters,
-                num_partitions=num_partitions,
+                num_partitions=num_partitions, num_edges=ne,
             )
     elif mode == "stream":
         raise ValueError(

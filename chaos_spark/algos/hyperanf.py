@@ -117,8 +117,9 @@ def hyper_anf(
 
         route_stream = mode == "stream"
         if not route_stream:
-            ne = num_edges if num_edges is not None else edges.count()
-            route_stream = ne >= STREAM_AUTO_MIN_EDGES or (
+            if num_edges is None:
+                num_edges = edges.count()
+            route_stream = num_edges >= STREAM_AUTO_MIN_EDGES or (
                 _warm_blocks_ready(
                     _warm_key(edges, True, None, num_partitions)
                 ) is not None
@@ -127,9 +128,12 @@ def hyper_anf(
             return hyperanf_stream(
                 spark, edges, max_iters=max_iters, seed=seed,
                 num_partitions=num_partitions,
+                num_edges=num_edges,
             )
     ensure_shipped(spark)  # UDFs reference module fns on executors
-    p = num_partitions or choose_num_partitions(spark, edges.count() * 2)
+    p = num_partitions or choose_num_partitions(
+        spark, (num_edges if num_edges is not None else edges.count()) * 2
+    )
     with superstep_conf(spark, p):
         return _hyper_anf(spark, edges, max_iters, seed, p)
 

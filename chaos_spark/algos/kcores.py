@@ -56,8 +56,9 @@ def k_core(
         kern = _KCorePeel(k)
         route_stream = mode == "stream"
         if not route_stream:
-            ne = num_edges if num_edges is not None else edges.count()
-            route_stream = ne >= CSR_AUTO_MIN_EDGES or (
+            if num_edges is None:
+                num_edges = edges.count()
+            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
                 _warm_blocks_ready(_warm_key(
                     kern.prep_edges(edges), True, None, num_partitions,
                 )) is not None
@@ -66,8 +67,11 @@ def k_core(
             return kcore_stream(
                 spark, edges, k, max_iters=max_iters,
                 num_partitions=num_partitions,
+                num_edges=num_edges,
             )
-    p = num_partitions or choose_num_partitions(spark, edges.count() * 2)
+    p = num_partitions or choose_num_partitions(
+        spark, (num_edges if num_edges is not None else edges.count()) * 2
+    )
     with superstep_conf(spark, p):
         return _k_core(spark, edges, k, max_iters, p)
 

@@ -53,9 +53,9 @@ def label_propagation(
     (stream_algos.lpa_stream — EXACT same fixed point, superstep count,
     deterministic tie-break, integer labels) from STREAM_AUTO_MIN_EDGES
     raw edges, or below it when the warm-block registry already holds
-    this graph's undirected blocks; ``"join"`` pins the classic join
-    path; ``"stream"`` pins the stream kernel. Resumable runs
-    (``checkpointer``) stay on the join path."""
+    this graph's undirected blocks; ``"join"`` pins the join path;
+    ``"stream"`` pins the stream kernel. Resumable runs (``checkpointer``)
+    stay on the join path."""
     if mode not in ("auto", "join", "stream"):
         raise ValueError(f"unknown mode {mode!r}")
     if mode in ("auto", "stream") and checkpointer is None:
@@ -71,7 +71,7 @@ def label_propagation(
 
             return lpa_stream(
                 spark, edges, max_iters=max_iters,
-                num_partitions=num_partitions,
+                num_partitions=num_partitions, num_edges=ne,
             )
     elif mode == "stream":
         raise ValueError("mode='stream' does not support checkpointer")

@@ -100,9 +100,9 @@ def _broadcast_max_vertices(spark) -> int:
 
 def seed_ranks(verts, deg, n, init_ranks=None) -> DataFrame:
     """Initial ``(id, out_degree, rank)`` frame — the ONE definition of
-    the warm-start contract, shared by the join regimes (here), the CSR
-    kernel (csr._rank_seed delegates), and mirrored by the stream path's
-    in-kernel NaN-fill (stream.pagerank_stream init_kernel).
+    the warm-start contract, shared by the join regimes (here) and
+    mirrored by the stream path's in-kernel NaN-fill
+    (stream.pagerank_stream init_kernel).
 
     ``init_ranks`` (columns ``id, rank``) warm-starts the run: prior
     ranks are taken verbatim; vertices absent from the prior start at

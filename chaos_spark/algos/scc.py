@@ -63,8 +63,9 @@ def strongly_connected_components(
 
         route_stream = mode == "stream"
         if not route_stream:
-            ne = num_edges if num_edges is not None else edges.count()
-            route_stream = ne >= CSR_AUTO_MIN_EDGES or (
+            if num_edges is None:
+                num_edges = edges.count()
+            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
                 _warm_blocks_ready(_warm_key(
                     edges, False, None, num_partitions,
                 )) is not None
@@ -73,8 +74,8 @@ def strongly_connected_components(
             return scc_stream(
                 spark, edges, max_iters=2 * max_iters,
                 num_partitions=num_partitions,
+                num_edges=num_edges,
             )
-        num_edges = ne  # routing already scanned the plan — reuse below
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )

@@ -1,100 +1,55 @@
-"""CSR fast path — partition-parallel sparse gather-scatter in numpy.
+"""CSR block store — the v6 disk blocks the fused stream kernels
+(chaos_spark.stream, chaos_spark.stream_algos) run over.
 
-This is the north-star mechanism [BJ north_star]: replace the per-superstep
-join+groupBy with per-partition CSR-block kernels built in Arrow-backed
-pandas UDFs, the 1:1 Spark image of an X-Stream streaming partition
-([X13] §3.2): a vertex interval, the edge block whose ``src`` falls in the
-interval, and the update stream routed to it.
+Each block is the 1:1 image of an X-Stream streaming partition ([X13]
+§3.2): a vertex interval, the edge block whose ``src`` falls in the
+interval, and the routing table of the update stream it emits. Edges are
+hash-partitioned ONCE by Spark's own ``repartition(p, src)``, and each
+physical partition's CSR arrays are written to ONE block directory of
+mmap-able .npy files, named by partition index. Per superstep the kernels
+MEMORY-MAP their block via the partition index — written once, faulted
+from the shared page cache every iteration, no locality assumption (the
+block dir is shared storage on a real cluster: Chaos's slipstore model,
+[C15] §4). No edge bytes cross the JVM->Python boundary per superstep.
 
-Three block layouts; ``layout="disk"`` is the default (round 2):
+The src->state-row gather POSITIONS are computed at build time and stored
+in the block, against the sorted per-partition vertex-id vector ``ids``
+(also stored). The id set of a state partition is fully determined by the
+graph + the Murmur3 pmod partitioner, so positions never depend on which
+Python worker serves the task (a per-worker position cache measured a 78%
+MISS rate under Spark's nondeterministic task placement). Edges are stored
+sorted by (dst-bucket, dst) — dst-bucket being the Murmur3 pmod partition
+of the dst's state row — so per-dst accumulation is a streaming
+ufunc.reduceat over build-time segment ``starts``, and each TARGET
+partition's update slice is contiguous: the block doubles as the
+slipstore update-stream routing table. Blocks are MEMORY-MAPPED, not
+read: all workers on a host share one physical copy of each block.
 
-- **disk** — the X-Stream edge-file image done right. Edges are hash-
-  partitioned ONCE by Spark's own ``repartition(p, src)``, sorted by
-  ``dst`` within the partition, and each physical partition's CSR arrays
-  are written to ONE block directory of mmap-able .npy files, named by
-  partition index. Per superstep only the (small) vertex state flows
-  JVM->Python through ``mapInPandas``; the kernel MEMORY-MAPS its block
-  via ``TaskContext.partitionId()`` — written once, faulted from the
-  shared page cache every iteration, no locality assumption (the block
-  dir is shared storage on a real cluster: Chaos's slipstore model,
-  [C15] §4). Round-1's cogroup layout re-shipped + re-sorted ALL edge
-  rows JVM->Python every superstep, which made the CSR path 2.3x SLOWER
-  than the join path; disk layout ships zero edge bytes per superstep.
-
-  Block format v4 (round 4): the src->state-row gather POSITIONS are
-  computed at build time and stored in the block, against the sorted
-  per-partition vertex-id vector ``ids`` (also stored). The id set of a
-  state partition is fully determined by the graph + the Murmur3 pmod
-  partitioner, so positions never depend on which Python worker serves
-  the task — r4 diagnosed the v2 per-worker position cache at a 78%
-  MISS rate under Spark's nondeterministic task placement (16 workers x
-  64 blocks), each miss costing ~500 ms of searchsorted against ~24 ms
-  for the whole hit-path kernel; build-time positions make every task a
-  hit from superstep 1 on every worker. Edges are stored sorted by
-  (dst-bucket, dst) — dst-bucket being the Murmur3 pmod partition of the
-  dst's state row — so per-dst accumulation is a streaming
-  ufunc.reduceat over build-time segment ``starts`` (bit-identical to
-  the v4 bincount, without re-reading a per-edge dst_inverse stream),
-  and each TARGET partition's update slice is contiguous: the v5 block
-  doubles as the slipstore update-stream routing table that
-  chaos_spark.stream's fused superstep rides. Blocks are MEMORY-MAPPED, not
-  read: all workers on a host share one physical copy of each block
-  (the v2 scheme measured 90-870 ms read-and-widen loads per cold
-  (worker, block) pair and duplicated blocks into every worker's cache).
-  Alignment contract: state is hash(id, p)-partitioned with the SAME
-  Murmur3 pmod as the edge build, AQE is pinned off inside the run so no
-  re-planning changes partition counts, and the kernel verifies the
-  state partition's sorted id vector EQUALS the block's stored ``ids``
-  (raises loudly on misalignment — a wrong-but-silent gather is the one
-  failure mode this design must not have).
-
-- **rows** — round-1 cogroup of raw edge rows with worker-memoized blocks
-  (kept for A/B tests).
-
-- **packed** — round-1 packed-blob cogroup (measured 30x regression on
-  cache misses; kept opt-in for the record).
-
-Per superstep the kernel computes every edge message in vectorized numpy,
-PRE-AGGREGATES per ``dst`` inside the partition (np.bincount / np.minimum
-.at — X-Stream's in-buffer pre-aggregation), and emits only
-``(dst, partial)`` rows.  The only shuffle per superstep is that partial
-stream — |shuffle| is bounded by P x |distinct dst per partition|, not |E|.
-
-Equivalence contract (SURVEY §3.2): identical supersteps and results vs the
-join path — exact for CC (min is order-independent), allclose for PageRank
-(float summation order differs).  Property-tested in tests/test_csr.py.
+This module owns the build (two Spark jobs, see CsrGraph), warm adoption
+of marker-validated blocks (one validation job), the worker-side mmap
+loaders, the cross-algorithm warm-block registry, and the join-vs-stream
+crossover constants the ``algos.*`` dispatchers route by.
 """
 
 from __future__ import annotations
+
+import os as _os
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .checkpoint import CheckpointManager
-from .engine import (
-    RunResult,
-    choose_num_partitions,
-    materialize,
-    materialize_stats,
-    resume_or_init,
-    run_supersteps,
-    superstep_conf,
-)
-from .graph import DST, ID, SRC, dedup_edges, out_degrees, symmetrize, vertices_from_edges
+from .engine import choose_num_partitions
+from .graph import DST, ID, SRC
 
-# Per-Python-worker memo of immutable per-partition edge blocks.
-# key: (graph_token, part) -> dict(src, dst_unique, dst_inverse)
-# BYTES-capped LRU (default 256 MB/worker, env CHAOS_BLOCK_CACHE_BYTES):
-# Spark schedules tasks onto workers nondeterministically, so an unbounded
-# cache costs O(workers x blocks) memory (measured: 64-entry cap at 32
-# workers on a 64M-edge graph thrashed the whole host); a bytes budget also
-# keeps the capacity comparable across parallelism levels (fewer workers
-# each own more partitions and need proportionally more slots).
-import os as _os
-
+# Per-Python-worker memo of loaded block / apply-plan members.
+# key: (cache_token, part) -> dict of np.memmap members. FIFO with a fixed
+# bytes budget: Spark schedules tasks onto workers nondeterministically,
+# so an unbounded cache costs O(workers x blocks) memory. Memmapped
+# members are shared page cache, not worker RSS, and are accounted at a
+# nominal 4 KiB each (_blk_nbytes).
 _BLOCK_CACHE: dict[tuple[str, int], dict[str, np.ndarray]] = {}
-_BLOCK_CACHE_BYTES = int(_os.environ.get("CHAOS_BLOCK_CACHE_BYTES", 256 * 1024 * 1024))
+_BLOCK_CACHE_BYTES = 256 * 1024 * 1024
 _cache_bytes = 0
 
 
@@ -119,72 +74,28 @@ def _cache_put(key, blk: dict[str, np.ndarray]) -> None:
     _cache_bytes += nbytes
 
 
-def _edge_block(token: str, part: int, pdf_edges: pd.DataFrame) -> dict[str, np.ndarray]:
-    from .shipping import worker_fastpath
-
-    worker_fastpath()  # kill the per-task zip-directory re-read tax
-    key = (token, part)
-    blk = _BLOCK_CACHE.get(key)
-    if blk is not None and len(blk["src"]) == len(pdf_edges):
-        return blk
-    src = pdf_edges[SRC].to_numpy(dtype=np.int64)
-    dst = pdf_edges[DST].to_numpy(dtype=np.int64)
-    dst_unique, dst_inverse = np.unique(dst, return_inverse=True)
-    blk = {"src": src, "dst_unique": dst_unique, "dst_inverse": dst_inverse}
-    _cache_put(key, blk)
-    return blk
-
-
-def _lookup(state_ids: np.ndarray, order: np.ndarray, values: np.ndarray, src: np.ndarray):
-    """values[src] via sorted-id binary search; src ids absent from state
-    (can't happen when state covers all vertices) would map arbitrarily, so
-    callers guarantee coverage."""
-    ids_sorted = state_ids[order]
-    idx = np.searchsorted(ids_sorted, src)
-    return values[order[np.clip(idx, 0, len(order) - 1)]]
-
-
-def _check_aligned(blk: dict[str, np.ndarray], ids_sorted: np.ndarray) -> None:
-    """The disk kernels' misalignment guard: the state partition's sorted
-    id vector must EQUAL the block's build-time ``ids`` — the block's
-    stored gather positions index into exactly that vector. An AQE
-    re-plan, a parquet round trip, or a partitioner change silently
-    altering the state layout must fail loudly, never gather from the
-    wrong rows. Vectorized compare over |V|/p int64s, ~0.05 ms."""
-    if not np.array_equal(blk["ids"], ids_sorted):
-        inter = len(np.intersect1d(blk["ids"], ids_sorted, assume_unique=True))
-        raise RuntimeError(
-            "CSR disk block misaligned with state partitioning: block has "
-            f"{len(blk['ids'])} ids, state partition {len(ids_sorted)}, "
-            f"{inter} common"
-        )
-
-
 _DISK_BLOCK_BASE = _os.environ.get("CHAOS_CSR_BLOCK_DIR", "/tmp/chaos_csr_blocks")
 
-# Join-vs-CSR crossover (measured, BENCH/SCALING_ANALYSIS.md §3c): below
-# ~1M edges the per-partition blocks are ~tens-of-k edges and the Python
-# worker round trip is pure overhead — the JVM join path wins (sf0.1:
-# join 14.7 s vs CSR 17.0 s iterate). At 64M edges the paths are at
-# per-superstep parity and CSR wins on scaling + amortized setup. The
-# ``mode="auto"`` default in pagerank_csr/cc_csr/lpa_csr encodes that
-# crossover so callers never run the measured-slower path by default.
-#
-# That 1M figure was measured against the CLASSIC kernel. The fused
-# stream path amortizes much earlier because its per-superstep cost is
-# 3-6x lower than the join path's even at sf0.1 (scripts/sf01_path_ab.py,
-# BENCH/sf01_path_ab.json — cold, fresh block dir, local[32]):
+# Join-vs-stream crossovers: the ``mode="auto"`` dispatchers in
+# chaos_spark.algos route to the fused stream kernels at or above these raw
+# edge counts, and to the join path below them (unless the warm-block
+# registry already holds the graph's blocks). The stream path's
+# per-superstep cost is 3-6x lower than the join path's even at sf0.1, so
+# what decides the crossover is whether the one-time block build amortizes
+# from cold (scripts/sf01_path_ab.py, BENCH/sf01_path_ab.json — cold,
+# fresh block dir, local[32]):
 #   pagerank conv 587k edges, 31 steps: join 11.6 s, stream COLD 5.9 s
 #   lpa 10 steps, 294k edges:           join  7.3 s, stream COLD 3.0 s
 #   cc  ~5 steps, 294k edges:           join  4.4 s, stream COLD 5.6 s
 #                                        (stream warm-blocks 2.1 s)
 # and at sf0.01 (~5k edges) the two are a wash (driver record: 2.3 s vs
-# 2.4 s — fixed Spark job cost dominates either path). So the many-
-# superstep algorithms (PageRank, LPA) route to the stream path from
-# 100k edges; CC — few, cheap supersteps, so the one-time block build
-# isn't amortized from cold at ~300k — keeps the conservative 1M
-# crossover (block reuse via the _BUILT fingerprint makes warm CC calls
-# win anyway whenever another algorithm already built the layout).
+# 2.4 s — fixed Spark job cost dominates either path).
+#
+# CSR_AUTO_MIN_EDGES (1M) is the cold-stream crossover of the BFS/SSSP,
+# k-core, MIS, SCC and bipartite dispatchers: their join paths run few or
+# cheap supersteps, so the block build must stand on a graph large enough
+# to amortize it. STREAM_AUTO_MIN_EDGES (100k) serves the many-superstep
+# algorithms (PageRank, LPA, HyperANF).
 CSR_AUTO_MIN_EDGES = int(_os.environ.get("CHAOS_CSR_MIN_EDGES", 1_000_000))
 STREAM_AUTO_MIN_EDGES = int(
     _os.environ.get("CHAOS_STREAM_MIN_EDGES", 100_000)
@@ -196,7 +107,7 @@ STREAM_AUTO_MIN_EDGES = int(
 # 0.4 s init/expand + 0.7 s iterate ≈ 2.8 s vs join 4.7–7.4 s, while at
 # ~29k (sf0.01) the join path still wins by a few hundred ms — the
 # crossover sits between, 200k keeps a safety margin on the join side
-# (OPTIMIZATION_r06.md). algos.connected_components and cc_csr read this.
+# (OPTIMIZATION_r06.md). algos.connected_components reads this.
 CC_STREAM_MIN_EDGES = int(
     _os.environ.get("CHAOS_CC_STREAM_MIN_EDGES", 200_000)
 )
@@ -250,54 +161,6 @@ def _warm_blocks_ready(key: tuple | None) -> str | None:
         return token
     _WARM_BLOCKS.pop(key, None)
     return None
-
-
-def _auto_route(
-    edges: DataFrame,
-    mode: str,
-    num_edges: int | None,
-    token: str | None,
-    layout: str | None,
-    packed: bool = False,
-    min_edges: int = CSR_AUTO_MIN_EDGES,
-    warm_key: tuple | None = None,
-) -> tuple[str, int | None]:
-    """Shared auto-mode router: ``("join", |E|)`` below the crossover,
-    ``("stream", <known |E| or None>)`` at scale (the dispatch count is
-    threaded to the stream build so it is never re-scanned),
-    ``("csr", None)`` when the caller pins the classic kernel. The scale default moved from the classic CSR
-    kernel to the fused slipstore stream path in round 5 on measured
-    evidence: 5.8–8.4× faster per superstep on the 64M-edge bench graph
-    (local[16] 2.79 s → 0.48 s) and 455M edges/s sustained at 512M edges
-    (BENCH/BASELINE.md); at sf0.1 with blocks built, stream supersteps
-    are also ~4–6× faster (BENCH_r05 extras *_stream_forced_iter_sec) —
-    the join path only wins cold below the per-algorithm ``min_edges``
-    crossover where block build dominates (see the constants above:
-    100k for the many-superstep algorithms, 1M for CC). Explicit
-    ``mode="stream"`` pins the stream path (token forwarded for block
-    reuse); explicit classic-kernel knobs (token/layout/packed or
-    ``mode="csr"``) pin the classic kernel — tests and block-reusing
-    callers mean that path.
-
-    ``warm_key``: when the warm-block registry already holds built v5
-    blocks for this exact edges-plan + flavor, the cold-build argument
-    behind the join crossover is void — route stream even below
-    ``min_edges`` (measured: CC at sf0.1 join 4.4 s vs stream
-    warm-blocks 2.1 s, BENCH/sf01_path_ab.json)."""
-    if mode == "stream":
-        return "stream", num_edges
-    if mode == "csr" or token is not None or layout is not None or packed:
-        return "csr", None
-    if mode != "auto":
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'csr' or 'stream')"
-        )
-    ne = num_edges if num_edges is not None else edges.count()
-    if ne < min_edges:
-        if _warm_blocks_ready(warm_key) is not None:
-            return "stream", ne
-        return "join", ne
-    return "stream", ne
 
 
 _BLOCK_MEMBERS = ("ids", "pos", "du", "di", "starts", "boff", "w")
@@ -435,43 +298,6 @@ def _load_apply_plan(token: str, q: int, block_dir: str):
     return plan
 
 
-# -- packed blocks: X-Stream's fixed-size packed records, one blob per
-#    streaming partition. Built ONCE; per superstep the blob rides the
-#    Arrow boundary as a single binary cell (12 B/edge: i64 src + u32
-#    dst_inverse) instead of 20 B/edge of row-oriented (src, dst, part).
-#    MEASURED REGRESSION (64M edges, local[32]): cache-miss supersteps cost
-#    ~30x rows-mode (Spark's cogroup sort + shuffle handles 12 MB-wide rows
-#    far worse than 1M narrow rows), so packed stays opt-in (packed=False
-#    default) until the wide-row path is understood.
-
-def _pack_block(pdf_edges: pd.DataFrame) -> tuple[bytes, int, int]:
-    src = pdf_edges[SRC].to_numpy(dtype=np.int64)
-    dst = pdf_edges[DST].to_numpy(dtype=np.int64)
-    dst_unique, dst_inverse = np.unique(dst, return_inverse=True)
-    blob = (
-        src.tobytes()
-        + dst_inverse.astype(np.uint32).tobytes()
-        + dst_unique.tobytes()
-    )
-    return blob, len(src), len(dst_unique)
-
-
-def _unpack_block(token: str, part: int, blob: bytes, n: int, nu: int) -> dict[str, np.ndarray]:
-    key = (token, part)
-    blk = _BLOCK_CACHE.get(key)
-    if blk is not None and len(blk["src"]) == n:
-        return blk
-    b = memoryview(blob)
-    o1, o2 = 8 * n, 8 * n + 4 * n
-    blk = {
-        "src": np.frombuffer(b[:o1], dtype=np.int64),
-        "dst_inverse": np.frombuffer(b[o1:o2], dtype=np.uint32).astype(np.int64),
-        "dst_unique": np.frombuffer(b[o2:], dtype=np.int64),
-    }
-    _cache_put(key, blk)
-    return blk
-
-
 def _npy_replace(path: str, arr: np.ndarray) -> None:
     """Atomic single-file .npy publish (same pattern as stream._publish_arr)."""
     tmp = f"{path}.{_os.getpid()}.tmp"
@@ -481,7 +307,7 @@ def _npy_replace(path: str, arr: np.ndarray) -> None:
 
 
 def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
-    """v6 build pass 2 for vertex partition ``q`` (see _init_disk):
+    """v6 build pass 2 for vertex partition ``q`` (see CsrGraph):
     derive q's sorted vertex-id vector from the blocks (unique srcs of
     block q ∪ every block's bucket-q du slice), write the aligned
     out-degree vector + slipstore apply plan (apply-{q}/), back-fill the
@@ -575,7 +401,39 @@ def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
 
 
 class CsrGraph:
-    """Per-partition CSR edge blocks built once (see module docstring)."""
+    """Per-partition CSR edge blocks built once (see module docstring).
+
+    Construction runs TWO Spark jobs:
+
+    1. edge pass (the only shuffle of edge rows): ``repartition(p, src)``
+       over the RAW selected edge stream; the kernel dedups (src, dst)
+       [summing duplicate weights], sorts by (dst-bucket, dst, src),
+       computes du/di/starts/boff, the per-unique-src out-degrees, and
+       the partition's xor-fold content fingerprint (bit-exact Spark
+       xxhash64, see _edge_fp_np).
+    2. vertex/apply pass (NO shuffle — ``spark.range(p)`` with one
+       partition per index): partition q's vertex set is derived from the
+       blocks themselves (unique srcs of block q ∪ every block's bucket-q
+       du slice — both defined by the SAME Murmur3 routing
+       ``repartition(p, col)`` uses, so it equals {v : hash(v) % p == q}
+       by construction), then the pass writes the aligned out-degree
+       vector, the slipstore apply plan (apos/aoff/soff/iod), and
+       back-fills the block's build-time gather positions (pos.npy,
+       strict-checked) + ids.npy, dropping the temporary per-edge src
+       array.
+
+    Partition sizing uses the RAW row count (``num_edges`` skips the
+    scan; duplicates only oversize the heuristic). The deduped |E|, |V|,
+    and fingerprint are recorded in the _BUILT marker; a pinned token's
+    warm path validates the marker with ONE Spark dedup+bit_xor(xxhash64)
+    job and adopts without any build work — the ``verts`` DataFrame is
+    reconstructed lazily from the apply dirs (zero shuffles) only if
+    something asks for it.
+
+    Type-2 (weighted) edges ([X13] §5.1, ``weight_col``): blocks gain a
+    float64 ``w`` array; duplicate (src,dst) weights are SUMMED (same
+    prep as the join paths). Directed blocks only.
+    """
 
     def __init__(
         self,
@@ -584,133 +442,25 @@ class CsrGraph:
         num_partitions: int | None = None,
         undirected: bool = False,
         token: str | None = None,
-        packed: bool = False,
-        layout: str | None = None,
         weight_col: str | None = None,
         num_edges: int | None = None,
     ):
         from .shipping import ensure_shipped
 
         ensure_shipped(spark)  # kernels reference module fns on executors
-        if layout is None:
-            layout = "packed" if packed else "disk"
-        if layout not in ("disk", "rows", "packed"):
-            raise ValueError(f"unknown CSR layout {layout!r}")
-        # Type-2 (weighted) edges ([X13] §5.1): blocks gain a float64 ``w``
-        # array; duplicate (src,dst) weights are SUMMED (same prep as the
-        # join paths). Disk layout only — it is the scale path, and the
-        # r1 cogroup layouts exist for A/B tests, not new features.
         self.weighted = weight_col is not None
-        if self.weighted and (undirected or layout != "disk"):
-            raise ValueError(
-                "weighted CSR supports the directed disk layout only"
-            )
+        if self.weighted and undirected:
+            raise ValueError("weighted CSR supports directed blocks only")
         self.spark = spark
-        self.layout = layout
-        self.packed = layout == "packed"
-        self.block_dir = None
-        self.blocks = None
         self._verts = None
-        self._out_deg = None
-        if layout == "disk":
-            self._init_disk(
-                spark, edges, num_partitions, undirected, token,
-                weight_col, num_edges,
-            )
-            return
-        # --- legacy cogroup layouts (rows/packed, A/B tests only) ---
-        e = dedup_edges(edges)
-        if undirected:
-            e = symmetrize(e)
-        e = e.persist()
-        fp_cols = [F.col(SRC), F.col(DST)]
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64(*fp_cols)).alias("fp"),
-        ).first()
-        self.num_edges = int(row["n"])
-        self.edge_fp = int(row["fp"] or 0)
-        self.p = num_partitions or choose_num_partitions(spark, self.num_edges)
-        import uuid
-
-        self._warm_key = None
-        self.token = token or f"g-{uuid.uuid4().hex}-{self.num_edges}-{self.p}"
-        self.cache_token = f"{self.token}#{self.num_edges}:{self.edge_fp:x}"
-        self._ephemeral_blocks = token is None
-        self.edges = (
-            e.withColumn("part", F.pmod(F.xxhash64(F.col(SRC)), F.lit(self.p)).cast("int"))
-            .repartition(self.p, F.col("part"))
-            .persist()
-        )
-        self.edges.count()
-        e.unpersist()  # build-time cache superseded by the row layout
-        self._verts = vertices_from_edges(self.edges).persist()
-        self.num_vertices = self._verts.count()
-        # Degree pre-pass while the row layout is cached (PageRank init).
-        self._out_deg = out_degrees(self.edges).persist()
-        self._out_deg.count()
-        if layout == "packed":
-            def pack_kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-                blob, n, nu = _pack_block(pdf)
-                return pd.DataFrame(
-                    {"part": [int(key[0])], "n": [n], "nu": [nu], "blob": [blob]}
-                )
-
-            self.blocks = self.edges.groupby("part").applyInPandas(
-                pack_kernel, schema="part int, n long, nu long, blob binary"
-            ).persist()
-            self.blocks.count()
-            # the packed blobs supersede the row layout for supersteps
-            self.edges.unpersist()
-
-    def _init_disk(
-        self, spark, edges, num_partitions, undirected, token, weight_col,
-        num_edges,
-    ) -> None:
-        """v6 disk-layout construction — TWO jobs instead of round 5's six:
-
-        1. edge pass (the only shuffle of edge rows): ``repartition(p,
-           src)`` over the RAW selected edge stream; the kernel dedups
-           (src, dst) [summing duplicate weights], sorts by (dst-bucket,
-           dst, src), computes du/di/starts/boff, the per-unique-src
-           out-degrees, and the partition's xor-fold content fingerprint
-           (bit-exact Spark xxhash64, see _edge_fp_np) — the distinct
-           shuffle, the count+fingerprint agg, the vertex distinct, and
-           the degree groupBy of the old build all collapse into this one
-           pass's kernel.
-        2. vertex/apply pass (NO shuffle — ``spark.range(p)`` with one
-           partition per index): partition q's vertex set is derived from
-           the blocks themselves (unique srcs of block q ∪ every block's
-           bucket-q du slice — both defined by the SAME Murmur3 routing
-           ``repartition(p, col)`` uses, so it equals {v : hash(v) % p ==
-           q} by construction), then the pass writes the aligned
-           out-degree vector, the slipstore apply plan (apos/aoff/soff/
-           iod), and back-fills the block's build-time gather positions
-           (pos.npy, strict-checked) + ids.npy, dropping the temporary
-           per-edge src array.
-
-        Partition sizing uses the RAW row count (``num_edges`` skips the
-        scan; duplicates only oversize the heuristic). The deduped |E|,
-        |V|, and fingerprint are recorded in the _BUILT marker; a pinned
-        token's warm path validates the marker with ONE Spark
-        dedup+bit_xor(xxhash64) job and adopts without any build work —
-        verts/out_degrees DataFrames are reconstructed lazily from the
-        apply dirs (zero shuffles) only if something asks for them.
-        """
-        w = self.weighted
-        if w:
+        if self.weighted:
             e = edges.select(
                 SRC, DST, F.col(weight_col).cast("double").alias("w")
             )
         else:
             e = edges.select(SRC, DST)
         if undirected:
-            rev = (
-                e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST), "w")
-                if w
-                else e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-            )
-            e = e.union(rev)
+            e = e.union(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
         self.undirected = undirected
         e = e.persist()
         raw = (
@@ -743,7 +493,6 @@ class CsrGraph:
         ):
             _WARM_BLOCKS[self._warm_key] = (self.token, self.block_dir)
             self._ephemeral_blocks = False
-        self.edges = e  # logical only; supersteps never touch the row table
         e.unpersist()
 
     def _build_or_adopt(self, e: DataFrame) -> None:
@@ -905,660 +654,34 @@ class CsrGraph:
                 f"v6:{self.num_edges}:{self.num_vertices}:{p}:{self.edge_fp:x}"
             )
 
-    # -- vertex/degree views --------------------------------------------
-    # Disk layout (v6): |V| and the degree pre-pass live in the apply
-    # dirs; the DataFrame views are reconstructed LAZILY from those .npy
-    # files via a shuffle-free range(p) scan — most runs (the fused
-    # stream kernels) never ask for them at all. Valid only while the
-    # block dir exists (i.e. before unpersist() of an ephemeral graph).
-    # Legacy layouts keep their eagerly persisted frames.
-
-    def _apply_scan(self, with_deg: bool) -> DataFrame:
+    def _apply_scan(self) -> DataFrame:
+        """``(id)`` for every vertex, read straight from the apply dirs'
+        sorted id vectors via a shuffle-free range(p) scan. Valid only
+        while the block dir exists (before unpersist() of an ephemeral
+        graph)."""
         bd, p = self.block_dir, self.p
 
         def read(batches):
             for pdf in batches:
                 for qv in pdf["id"].tolist():
                     d = _os.path.join(bd, f"apply-{int(qv)}")
-                    if not _os.path.isdir(d):
-                        continue
-                    ids = np.load(_os.path.join(d, "ids.npy"))
-                    if with_deg:
-                        od = np.load(_os.path.join(d, "od.npy"))
-                        yield pd.DataFrame({ID: ids, "out_degree": od})
-                    else:
-                        yield pd.DataFrame({ID: ids})
+                    if _os.path.isdir(d):
+                        yield pd.DataFrame({ID: np.load(_os.path.join(d, "ids.npy"))})
 
-        deg_t = "double" if self.weighted else "long"
-        schema = (
-            f"{ID} long, out_degree {deg_t}" if with_deg else f"{ID} long"
-        )
-        return self.spark.range(0, p, 1, p).mapInPandas(read, schema=schema)
-
-    def vertex_degrees(self) -> DataFrame:
-        """``(id, out_degree)`` for EVERY vertex (0 for dangling) — the
-        pre-joined seed base the rank init needs (disk layout only)."""
-        if self.layout != "disk":
-            raise ValueError("vertex_degrees requires the disk layout")
-        return self._apply_scan(with_deg=True)
+        return self.spark.range(0, p, 1, p).mapInPandas(read, schema=f"{ID} long")
 
     @property
     def verts(self) -> DataFrame:
         if self._verts is None:
-            self._verts = self._apply_scan(with_deg=False)
+            self._verts = self._apply_scan()
         return self._verts
-
-    @property
-    def out_deg(self) -> DataFrame:
-        if self._out_deg is None:
-            self._out_deg = self._apply_scan(with_deg=True)
-        return self._out_deg
-
-    def part_col(self, col: str):
-        return F.pmod(F.xxhash64(F.col(col)), F.lit(self.p)).cast("int")
-
-    def grouped_edges(self):
-        return (self.blocks if self.packed else self.edges).groupby("part")
 
     def align_state(self, df: DataFrame) -> DataFrame:
         """Hash(id, p)-partition state to match the disk-block layout."""
         return df.repartition(self.p, F.col(ID))
 
     def unpersist(self) -> None:
-        if self.layout != "disk":
-            self.edges.unpersist()
-            if self._verts is not None:
-                self._verts.unpersist()
-            if self._out_deg is not None:
-                self._out_deg.unpersist()
-        if self.blocks is not None:
-            self.blocks.unpersist()
-        if self.block_dir is not None and self._ephemeral_blocks:
+        if self._ephemeral_blocks:
             import shutil
 
             shutil.rmtree(self.block_dir, ignore_errors=True)
-
-
-# ---------------------------------------------------------------------------
-# PageRank
-# ---------------------------------------------------------------------------
-
-def pagerank_csr(
-    spark: SparkSession,
-    edges: DataFrame,
-    damping: float = 0.85,
-    tol: float = 1e-6,
-    max_iters: int = 100,
-    num_partitions: int | None = None,
-    packed: bool = False,
-    token: str | None = None,
-    layout: str | None = None,
-    checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 5,
-    mode: str = "auto",
-    num_edges: int | None = None,
-    weight_col: str | None = None,
-    init_ranks: DataFrame | None = None,
-) -> RunResult:
-    """PageRank via the CSR kernel; same semantics as algos.pagerank
-    (dangling mass redistributed, L-inf convergence). ``token``: pass a
-    stable value ONLY when repeated calls use the identical edge set,
-    weighting, and partition count — lets worker block caches (and disk
-    blocks) survive across calls. ``checkpointer``: durable resume every
-    ``checkpoint_every`` supersteps (disk layout only); the post-restore
-    ``realign`` hook re-establishes the hash(id, p) partitioning the
-    block routing depends on.
-
-    ``weight_col``: weighted PageRank over type-2 blocks — duplicate
-    (src,dst) weights summed, out-strength normalization, messages scaled
-    by the block's float64 ``w`` array; same weight-domain validation as
-    algos.pagerank (positive, non-NULL).
-
-    ``mode="auto"`` (default): below STREAM_AUTO_MIN_EDGES (100k; CC
-    uses the conservative 1M CSR_AUTO_MIN_EDGES) the call is served by
-    the measured-faster JOIN path (identical semantics, same oracle);
-    at or above it by the fused slipstore STREAM path (measured
-    5.8–8.4× faster per superstep than the classic kernel, same oracle —
-    see _auto_route). ``mode="csr"`` or any explicit token/layout/packed
-    pins the classic kernel; ``mode="stream"`` pins the stream path.
-    ``num_edges``: caller-known |E| skips the dispatch count."""
-    route, ne = _auto_route(
-        edges, mode, num_edges, token, layout, packed,
-        min_edges=STREAM_AUTO_MIN_EDGES,
-        warm_key=_warm_key(edges, False, weight_col, num_partitions),
-    )
-    if route == "join":
-        from .algos.pagerank import pagerank as _pr_join
-
-        return _pr_join(
-            spark, edges, damping=damping, tol=tol, max_iters=max_iters,
-            num_partitions=num_partitions, checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every, num_edges=ne,
-            weight_col=weight_col, init_ranks=init_ranks,
-        )
-    if route == "stream":
-        from .stream import pagerank_stream as _pr_stream
-
-        return _pr_stream(
-            spark, edges, damping=damping, tol=tol, max_iters=max_iters,
-            num_partitions=num_partitions, token=token,
-            weight_col=weight_col, checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every, init_ranks=init_ranks,
-            num_edges=ne,
-        )
-    if weight_col is not None:
-        from .algos.pagerank import _validate_weights
-
-        _validate_weights(edges, weight_col)
-    g = CsrGraph(
-        spark, edges, num_partitions, packed=packed, token=token, layout=layout,
-        weight_col=weight_col,
-    )
-    # AQE pinned off: the disk layout's state->block routing is by physical
-    # partition index; AQE coalescing would change partition counts mid-run
-    # (the kernel's strict check would catch it, but don't invite it).
-    with superstep_conf(spark, g.p, adaptive=False):
-        if g.layout == "disk":
-            res = _pagerank_csr_disk(
-                spark, g, damping, tol, max_iters, checkpointer,
-                checkpoint_every, init_ranks,
-            )
-        else:
-            res = _pagerank_csr(spark, g, damping, tol, max_iters, init_ranks)
-    g.unpersist()
-    return res
-
-
-def _rank_seed(g: "CsrGraph", n: int, init_ranks) -> DataFrame:
-    """Initial ``(id, out_degree, rank)`` frame — the seed_ranks warm-start
-    contract (prior ranks verbatim, absent vertices 1/n). Disk layout
-    reads the pre-joined ``(id, out_degree)`` view straight from the
-    apply dirs (v6: no verts x degrees join); legacy layouts delegate to
-    algos.pagerank.seed_ranks."""
-    from .algos.pagerank import seed_ranks
-
-    if g.layout != "disk":
-        return seed_ranks(g.verts, g.out_deg, n, init_ranks)
-    base = g.vertex_degrees()
-    if init_ranks is None:
-        return base.select(ID, "out_degree", F.lit(1.0 / n).alias("rank"))
-    prior = init_ranks.select(
-        F.col(ID).alias("_pid"), F.col("rank").cast("double").alias("_prank")
-    )
-    return base.join(prior, base[ID] == F.col("_pid"), "left").select(
-        base[ID],
-        base["out_degree"],
-        F.coalesce(F.col("_prank"), F.lit(1.0 / n)).alias("rank"),
-    )
-
-
-def _pagerank_csr_disk(
-    spark, g: CsrGraph, damping, tol, max_iters,
-    checkpointer: CheckpointManager | None = None, checkpoint_every: int = 5,
-    init_ranks=None,
-) -> RunResult:
-    n = g.num_vertices
-
-    def init() -> DataFrame:
-        return _rank_seed(g, n, init_ranks)
-
-    raw, start = resume_or_init(spark, checkpointer, init)
-    # Fresh init and checkpoint-loaded parquet both go through align_state:
-    # the kernel routes state rows to disk blocks by physical partition
-    # index, so the hash(id, p) layout is a hard precondition either way.
-    state = materialize(g.align_state(raw))
-    row = state.agg(
-        F.sum(F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
-    ).first()
-    dangling = {"mass": float(row["dm"] or 0.0)}
-    token, block_dir = g.cache_token, g.block_dir
-
-    def kernel(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        pdfs = list(batches)
-        blk = _load_disk_block(token, pid, block_dir)
-        if blk is None or not pdfs:
-            return
-        pdf = pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
-        ids = pdf[ID].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        od = pdf["out_degree"].to_numpy(dtype=np.float64)
-        rank = pdf["rank"].to_numpy(dtype=np.float64)
-        m = np.where(od > 0, rank / np.where(od > 0, od, 1.0), 0.0)
-        _check_aligned(blk, ids[order])
-        m_edge = m[order][blk["pos"]]
-        if "w" in blk:  # type-2 block: message = rank(u)/W(u) * w(e)
-            m_edge = m_edge * blk["w"]
-        # v5: per-dst sums via reduceat over the build-time segment
-        # starts — identical left-to-right accumulation order to the v4
-        # bincount (bit-exact), but the kernel no longer streams the
-        # 8-byte-per-edge dst_inverse from the block every superstep.
-        partial = np.add.reduceat(m_edge, blk["starts"])
-        yield pd.DataFrame({DST: blk["dst_unique"], "partial": partial})
-
-    def step(cur: DataFrame, superstep: int):
-        dm = dangling["mass"]
-        partials = cur.mapInPandas(kernel, schema=f"{DST} long, partial double")
-        contribs = partials.groupBy(DST).agg(F.sum("partial").alias("contrib"))
-        # shuffle_hash hint: without it Catalyst's propagated size estimate
-        # auto-BROADCASTs contribs (|V| rows!) — a per-superstep driver
-        # collect + rebuild that serializes and grows with parallelism
-        # (r3's stage timeline shows the broadcast stages). Both sides are
-        # already hash-partitioned p on the join key, so SHJ joins in
-        # place: zero extra exchange, no SMJ sort, fully parallel.
-        new = cur.join(
-            contribs.hint("shuffle_hash"), cur[ID] == contribs[DST], "left"
-        ).select(
-            cur[ID],
-            cur["out_degree"],
-            cur["rank"].alias("_prev"),
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dm / n))
-            ).alias("rank"),
-        )
-        new, m = materialize_stats(
-            new,
-            [
-                F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-                F.sum(
-                    F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            ],
-            keep=[ID, "out_degree", "rank"],
-        )
-        dangling["mass"] = float(m["dm"] or 0.0)
-        delta = float(m["delta"] or 0.0)
-        return new, {"converged": delta < tol, "delta": delta}
-
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every,
-        start_superstep=start, realign=g.align_state,
-    )
-    result.state = result.state.select(ID, "out_degree", "rank")
-    return result
-
-
-def _resolve_block(token: str, pdf_left: pd.DataFrame) -> dict[str, np.ndarray]:
-    """Edge block from either layout: packed blob row or raw edge rows."""
-    if "blob" in pdf_left.columns:
-        row = pdf_left.iloc[0]
-        return _unpack_block(
-            token, int(row["part"]), row["blob"], int(row["n"]), int(row["nu"])
-        )
-    return _edge_block(token, int(pdf_left["part"].iloc[0]), pdf_left)
-
-
-def _pagerank_csr(
-    spark, g: CsrGraph, damping, tol, max_iters, init_ranks=None
-) -> RunResult:
-    n = g.num_vertices
-    state = materialize(
-        _rank_seed(g, n, init_ranks)
-        .withColumn("part", g.part_col(ID))
-        .repartition(g.p, F.col("part"))
-    )
-    row = state.agg(
-        F.sum(F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
-    ).first()
-    dangling = {"mass": float(row["dm"] or 0.0)}
-    token = g.token
-
-    def kernel(edges_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(edges_pdf) == 0 or len(state_pdf) == 0:
-            return pd.DataFrame({DST: pd.Series([], dtype="int64"),
-                                 "partial": pd.Series([], dtype="float64")})
-        blk = _resolve_block(token, edges_pdf)
-        ids = state_pdf[ID].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        od = state_pdf["out_degree"].to_numpy(dtype=np.float64)
-        rank = state_pdf["rank"].to_numpy(dtype=np.float64)
-        m = np.where(od > 0, rank / np.where(od > 0, od, 1.0), 0.0)
-        m_edge = _lookup(ids, order, m, blk["src"])
-        partial = np.bincount(blk["dst_inverse"], weights=m_edge,
-                              minlength=len(blk["dst_unique"]))
-        return pd.DataFrame({DST: blk["dst_unique"], "partial": partial})
-
-    def step(cur: DataFrame, superstep: int):
-        dm = dangling["mass"]
-        partials = g.grouped_edges().cogroup(cur.groupby("part")).applyInPandas(
-            kernel, schema=f"{DST} long, partial double"
-        )
-        contribs = partials.groupBy(DST).agg(F.sum("partial").alias("contrib"))
-        new = cur.join(
-            contribs.hint("shuffle_hash"), cur[ID] == contribs[DST], "left"
-        ).select(
-            cur[ID],
-            cur["out_degree"],
-            cur["part"],
-            cur["rank"].alias("_prev"),
-            (
-                F.lit((1.0 - damping) / n)
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + F.lit(dm / n))
-            ).alias("rank"),
-        )
-        new, m = materialize_stats(
-            new,
-            [
-                F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-                F.sum(
-                    F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            ],
-            keep=[ID, "out_degree", "part", "rank"],
-        )
-        dangling["mass"] = float(m["dm"] or 0.0)
-        delta = float(m["delta"] or 0.0)
-        return new, {"converged": delta < tol, "delta": delta}
-
-    result = run_supersteps(state, step, max_iters)
-    result.state = result.state.select(ID, "out_degree", "rank")
-    return result
-
-
-# ---------------------------------------------------------------------------
-# Connected components (hash-min)
-# ---------------------------------------------------------------------------
-
-def cc_csr(
-    spark: SparkSession,
-    edges: DataFrame,
-    max_iters: int = 100,
-    num_partitions: int | None = None,
-    packed: bool = False,
-    token: str | None = None,
-    layout: str | None = None,
-    checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 5,
-    mode: str = "auto",
-    num_edges: int | None = None,
-) -> RunResult:
-    """Hash-min connected components via the CSR kernel; exact same
-    fixed point as algos.connected_components (min is order-free).
-    ``checkpointer``: durable resume (disk layout only).
-    ``mode``/``num_edges``: join/stream/CSR dispatch, see pagerank_csr.
-    CC keeps the conservative 1M cold crossover (few cheap supersteps
-    don't amortize a cold block build) but routes stream below it when
-    the warm-block registry already holds this graph's undirected blocks
-    (e.g. LPA ran first: sf0.1 join 4.4 s vs warm stream 2.1 s)."""
-    route, ne = _auto_route(
-        edges, mode, num_edges, token, layout, packed,
-        min_edges=CC_STREAM_MIN_EDGES,
-        warm_key=_warm_key(edges, True, None, num_partitions),
-    )
-    if route == "join":
-        from .algos.cc import connected_components as _cc_join
-
-        return _cc_join(
-            spark, edges, max_iters=max_iters, num_partitions=num_partitions,
-            checkpointer=checkpointer, checkpoint_every=checkpoint_every,
-            num_edges=ne,
-        )
-    if route == "stream":
-        from .stream_algos import cc_stream as _cc_stream
-
-        return _cc_stream(
-            spark, edges, max_iters=max_iters, num_partitions=num_partitions,
-            token=token, checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every,
-        )
-    g = CsrGraph(
-        spark, edges, num_partitions, undirected=True, packed=packed,
-        token=token, layout=layout,
-    )
-    with superstep_conf(spark, g.p, adaptive=False):
-        if g.layout == "disk":
-            res = _cc_csr_disk(spark, g, max_iters, checkpointer, checkpoint_every)
-        else:
-            res = _cc_csr(spark, g, max_iters)
-    g.unpersist()
-    return res
-
-
-def _cc_csr_disk(
-    spark, g: CsrGraph, max_iters,
-    checkpointer: CheckpointManager | None = None, checkpoint_every: int = 5,
-) -> RunResult:
-    def init() -> DataFrame:
-        return g.verts.select(F.col(ID), F.col(ID).alias("label"))
-
-    raw, start = resume_or_init(spark, checkpointer, init)
-    state = materialize(g.align_state(raw))
-    state.count()
-    token, block_dir = g.cache_token, g.block_dir
-
-    def kernel(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        pdfs = list(batches)
-        blk = _load_disk_block(token, pid, block_dir)
-        if blk is None or not pdfs:
-            return
-        pdf = pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
-        ids = pdf[ID].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        labels = pdf["label"].to_numpy(dtype=np.int64)
-        _check_aligned(blk, ids[order])
-        lab_edge = labels[order][blk["pos"]]
-        # v5: per-dst min via reduceat over the build-time segment starts
-        # (min is order-free; skips the per-edge dst_inverse stream)
-        out = np.minimum.reduceat(lab_edge, blk["starts"])
-        yield pd.DataFrame({DST: blk["dst_unique"], "ml": out})
-
-    def step(cur: DataFrame, superstep: int):
-        partials = cur.mapInPandas(kernel, schema=f"{DST} long, ml long")
-        mins = partials.groupBy(DST).agg(F.min("ml").alias("ml"))
-        new = cur.join(
-            mins.hint("shuffle_hash"), cur[ID] == mins[DST], "left"
-        ).select(
-            cur[ID],
-            F.least(cur["label"], F.coalesce(F.col("ml"), cur["label"])).alias("label"),
-            (F.coalesce(F.col("ml"), cur["label"]) < cur["label"]).alias("_chg"),
-        )
-        new, m = materialize_stats(
-            new,
-            [F.sum(F.col("_chg").cast("long")).alias("c")],
-            keep=[ID, "label"],
-        )
-        changed = int(m["c"] or 0)
-        return new, {"converged": changed == 0, "changed": changed}
-
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every,
-        start_superstep=start, realign=g.align_state,
-    )
-    result.state = result.state.select(ID, "label")
-    return result
-
-
-# ---------------------------------------------------------------------------
-# Label propagation (most-frequent neighbor label, min-label ties)
-# ---------------------------------------------------------------------------
-
-def lpa_csr(
-    spark: SparkSession,
-    edges: DataFrame,
-    max_iters: int = 10,
-    num_partitions: int | None = None,
-    token: str | None = None,
-    checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 5,
-    mode: str = "auto",
-    num_edges: int | None = None,
-) -> RunResult:
-    """Synchronous LPA via the CSR disk-block kernel; exact same fixed
-    point as algos.label_propagation (deterministic min-label ties).
-
-    The per-partition kernel pre-aggregates (dst, label) COUNTS with a
-    lexsort + run-length pass — X-Stream's in-buffer pre-aggregation for
-    the two-level LPA fold; the JVM side then sums partial counts and
-    picks max_by(label, (cnt, -label)) per dst. The north star names LPA
-    among the CSR-path algorithms [BJ north_star].
-    ``mode``/``num_edges``: join/stream/CSR dispatch, see pagerank_csr."""
-    route, ne = _auto_route(
-        edges, mode, num_edges, token, None,
-        min_edges=STREAM_AUTO_MIN_EDGES,
-        warm_key=_warm_key(edges, True, None, num_partitions),
-    )
-    if route == "join":
-        from .algos.lpa import label_propagation as _lpa_join
-
-        return _lpa_join(
-            spark, edges, max_iters=max_iters, num_partitions=num_partitions,
-            checkpointer=checkpointer, checkpoint_every=checkpoint_every,
-            num_edges=ne,
-        )
-    if route == "stream":
-        from .stream_algos import lpa_stream as _lpa_stream
-
-        return _lpa_stream(
-            spark, edges, max_iters=max_iters, num_partitions=num_partitions,
-            token=token, checkpointer=checkpointer,
-            checkpoint_every=checkpoint_every,
-        )
-    g = CsrGraph(spark, edges, num_partitions, undirected=True, token=token)
-    with superstep_conf(spark, g.p, adaptive=False):
-        res = _lpa_csr_disk(spark, g, max_iters, checkpointer, checkpoint_every)
-    g.unpersist()
-    return res
-
-
-def _lpa_csr_disk(
-    spark, g: CsrGraph, max_iters,
-    checkpointer: CheckpointManager | None = None, checkpoint_every: int = 5,
-) -> RunResult:
-    def init() -> DataFrame:
-        return g.verts.select(F.col(ID), F.col(ID).alias("label"))
-
-    raw, start = resume_or_init(spark, checkpointer, init)
-    state = materialize(g.align_state(raw))
-    state.count()
-    token, block_dir = g.cache_token, g.block_dir
-
-    def kernel(batches):
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        pdfs = list(batches)
-        blk = _load_disk_block(token, pid, block_dir)
-        if blk is None or not pdfs:
-            return
-        pdf = pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
-        ids = pdf[ID].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        labels = pdf["label"].to_numpy(dtype=np.int64)
-        _check_aligned(blk, ids[order])
-        lab_edge = labels[order][blk["pos"]]
-        di = blk["dst_inverse"]
-        if len(di) == 0:
-            return
-        # partial count per (dst, label). Fast path: pack (dst_inverse,
-        # label) into ONE int64 key — di < 2^31 slots, labels (vertex
-        # ids) in [0, 2^31) — and np.sort it directly: no argsort
-        # permutation gather, no two-key lexsort. Measured 9.3x over the
-        # lexsort on the bench block shape (37 vs 348 ms/block), and the
-        # sort was LPA's dominant kernel cost. Labels outside the packable
-        # domain fall back to the lexsort (identical output).
-        if (
-            len(blk["dst_unique"]) < 2**31
-            and lab_edge.min() >= 0
-            and lab_edge.max() < 2**31
-        ):
-            key = (di << np.int64(31)) | lab_edge
-            key.sort()  # di is monotone already (v3) — near-sorted input
-            d_s = key >> np.int64(31)
-            l_s = key & np.int64(2**31 - 1)
-        else:
-            o = np.lexsort((lab_edge, di))
-            d_s, l_s = di[o], lab_edge[o]
-        boundary = np.empty(len(d_s), dtype=bool)
-        boundary[0] = True
-        boundary[1:] = (d_s[1:] != d_s[:-1]) | (l_s[1:] != l_s[:-1])
-        starts = np.flatnonzero(boundary)
-        cnt = np.diff(np.append(starts, len(d_s)))
-        yield pd.DataFrame({
-            DST: blk["dst_unique"][d_s[starts]],
-            "label": l_s[starts],
-            "cnt": cnt.astype(np.int64),
-        })
-
-    def step(cur: DataFrame, superstep: int):
-        partials = cur.mapInPandas(kernel, schema=f"{DST} long, label long, cnt long")
-        counts = partials.groupBy(DST, "label").agg(F.sum("cnt").alias("cnt"))
-        best = counts.groupBy(DST).agg(
-            F.max_by("label", F.struct(F.col("cnt"), -F.col("label"))).alias("_nl")
-        )
-        new = cur.join(
-            best.hint("shuffle_hash"), cur[ID] == best[DST], "left"
-        ).select(
-            cur[ID],
-            F.coalesce(F.col("_nl"), cur["label"]).alias("label"),
-            (F.coalesce(F.col("_nl"), cur["label"]) != cur["label"]).alias("_chg"),
-        )
-        new, m = materialize_stats(
-            new,
-            [F.sum(F.col("_chg").cast("long")).alias("c")],
-            keep=[ID, "label"],
-        )
-        changed = int(m["c"] or 0)
-        return new, {"converged": changed == 0, "changed": changed}
-
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every,
-        start_superstep=start, realign=g.align_state,
-    )
-    result.state = result.state.select(ID, "label")
-    return result
-
-
-def _cc_csr(spark, g: CsrGraph, max_iters) -> RunResult:
-    state = materialize(
-        g.verts.select(F.col(ID), F.col(ID).alias("label"))
-        .withColumn("part", g.part_col(ID))
-        .repartition(g.p, F.col("part"))
-    )
-    state.count()
-    token = g.token + ":cc"
-
-    def kernel(edges_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(edges_pdf) == 0 or len(state_pdf) == 0:
-            return pd.DataFrame({DST: pd.Series([], dtype="int64"),
-                                 "ml": pd.Series([], dtype="int64")})
-        blk = _resolve_block(token, edges_pdf)
-        ids = state_pdf[ID].to_numpy(dtype=np.int64)
-        order = np.argsort(ids, kind="stable")
-        labels = state_pdf["label"].to_numpy(dtype=np.int64)
-        lab_edge = _lookup(ids, order, labels, blk["src"])
-        out = np.full(len(blk["dst_unique"]), np.iinfo(np.int64).max, dtype=np.int64)
-        np.minimum.at(out, blk["dst_inverse"], lab_edge)
-        return pd.DataFrame({DST: blk["dst_unique"], "ml": out})
-
-    def step(cur: DataFrame, superstep: int):
-        partials = g.grouped_edges().cogroup(cur.groupby("part")).applyInPandas(
-            kernel, schema=f"{DST} long, ml long"
-        )
-        mins = partials.groupBy(DST).agg(F.min("ml").alias("ml"))
-        new = cur.join(
-            mins.hint("shuffle_hash"), cur[ID] == mins[DST], "left"
-        ).select(
-            cur[ID],
-            cur["part"],
-            F.least(cur["label"], F.coalesce(F.col("ml"), cur["label"])).alias("label"),
-            (F.coalesce(F.col("ml"), cur["label"]) < cur["label"]).alias("_chg"),
-        )
-        new, m = materialize_stats(
-            new,
-            [F.sum(F.col("_chg").cast("long")).alias("c")],
-            keep=[ID, "part", "label"],
-        )
-        changed = int(m["c"] or 0)
-        return new, {"converged": changed == 0, "changed": changed}
-
-    result = run_supersteps(state, step, max_iters)
-    result.state = result.state.select(ID, "label")
-    return result

@@ -361,13 +361,13 @@ def q_pagerank_k5(spark, sf_dir):
 
 
 def q_pagerank_csr_k5(spark, sf_dir):
-    """Same 5-superstep PageRank as pagerank_k5 but through the CSR
-    fast path (per-partition numpy kernels) — verified against the SAME
-    unrolled-CTE oracle, proving kernel ≡ join path to the driver."""
-    from .csr import pagerank_csr
-
+    """Same 5-superstep PageRank as pagerank_k5 but served over the CSR
+    block store by the ``algos.pagerank`` dispatcher pinned to the stream
+    path — verified against the SAME unrolled-CTE oracle, proving the
+    dispatcher's stream route ≡ join path to the driver (pagerank_stream_k5
+    covers the direct kernel call)."""
     e = cust_supp_edges(spark, sf_dir)
-    res = pagerank_csr(spark, e, damping=D, tol=0.0, max_iters=5, mode="csr")
+    res = pagerank(spark, e, damping=D, tol=0.0, max_iters=5, mode="stream")
     return res.state.select("id", F.round("rank", 6).alias("rank"))
 
 
@@ -464,13 +464,12 @@ def q_pagerank_warm_k5(spark, sf_dir):
 
 
 def q_cc_csr_k(spark, sf_dir):
-    """CC to convergence via the CSR kernel; exact (min is order-free),
-    same fixed point as the unrolled-k oracle for any k >= diameter —
-    uses k=6 like cc_k6."""
-    from .csr import cc_csr
-
+    """CC over the CSR block store via the ``connected_components``
+    dispatcher pinned to the stream path; exact (min is order-free), same
+    fixed point as the unrolled-k oracle for any k >= diameter — uses k=6
+    like cc_k6 (cc_stream_k6 covers the direct kernel call)."""
     e = part_edges(spark, sf_dir)
-    res = cc_csr(spark, e, max_iters=6, mode="csr")
+    res = connected_components(spark, e, max_iters=6, mode="stream")
     return res.state.select("id", "label")
 
 
@@ -613,30 +612,29 @@ def q_pagerank_w_k5(spark, sf_dir):
 
 
 def q_pagerank_w_csr_k5(spark, sf_dir):
-    """Weighted PageRank through the CSR disk-block kernel (type-2 blocks
-    carry a float64 ``w`` array; messages = rank/W * w) — verified
-    against the SAME weighted unrolled oracle as pagerank_w_k5, proving
-    the weighted kernel ≡ both join regimes."""
-    from .csr import pagerank_csr
-
+    """Weighted PageRank over type-2 CSR blocks (float64 ``w`` array;
+    messages = rank/W * w) via the ``algos.pagerank`` dispatcher pinned to
+    the stream path — verified against the SAME weighted unrolled oracle
+    as pagerank_w_k5 (pagerank_w_stream_k5 covers the direct kernel
+    call)."""
     e = cust_supp_edges(spark, sf_dir).withColumn(
         "weight",
         (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5))).cast("double"),
     )
-    res = pagerank_csr(
-        spark, e, damping=D, tol=0.0, max_iters=5, mode="csr", weight_col="weight"
+    res = pagerank(
+        spark, e, damping=D, tol=0.0, max_iters=5, mode="stream",
+        weight_col="weight",
     )
     return res.state.select("id", F.round("rank", 6).alias("rank"))
 
 
 def q_lpa_csr_k3(spark, sf_dir):
-    """Same 3-superstep LPA as lpa_k3 but through the CSR disk-block
-    kernel (partition-local (dst,label) count pre-aggregation) — verified
-    against the SAME unrolled oracle, proving kernel ≡ join path."""
-    from .csr import lpa_csr
-
+    """Same 3-superstep LPA as lpa_k3 but over the CSR block store via the
+    ``label_propagation`` dispatcher pinned to the stream path — verified
+    against the SAME unrolled oracle (lpa_stream_k3 covers the direct
+    kernel call)."""
     e = part_edges(spark, sf_dir)
-    res = lpa_csr(spark, e, max_iters=3, mode="csr")
+    res = label_propagation(spark, e, max_iters=3, mode="stream")
     return res.state.select("id", "label")
 
 
@@ -669,7 +667,7 @@ def q_pagerank_w_stream_k5(spark, sf_dir):
     carry the float64 ``w`` array; scatter publishes rank/W * w partials)
     — verified against the SAME weighted unrolled oracle as
     pagerank_w_k5/pagerank_w_csr_k5, proving the weighted fused superstep
-    ≡ both join regimes and the classic CSR kernel."""
+    ≡ both join regimes."""
     from .stream import pagerank_stream
 
     e = cust_supp_edges(spark, sf_dir).withColumn(

@@ -1,15 +1,15 @@
 """Streaming-partition superstep — Chaos's slipstore loop as ONE fused
 Spark stage per iteration (chainable to K iterations per Spark JOB).
 
-The classic CSR disk path (csr.py) still runs the exchange through Spark
-row machinery: the kernel emits ~|distinct dst per block| x p update ROWS
-(20.3M on the 64M-edge bench graph) that cross Arrow into the JVM, shuffle
-through groupBy(dst).sum, and join back into a 2.4M-row state table that
-itself crosses Arrow both ways every superstep. scripts/kernel_internals.py
-measured that machinery — NOT the numpy math (~8 ms/block) and NOT the
-gather bandwidth — as the dominant per-superstep cost at both parallelism
-levels (a drain-only no-op mapInPandas pass over the row state costs ~85%
-of the full kernel phase).
+A row-based superstep over the same blocks would run the exchange
+through Spark row machinery: ~|distinct dst per block| x p update ROWS
+(20.3M on the 64M-edge bench graph) crossing Arrow into the JVM, a
+groupBy(dst).sum shuffle, and a join back into a row state table that
+crosses Arrow both ways every superstep. That machinery — NOT the numpy
+math (~8 ms/block) and NOT the gather bandwidth — was measured as the
+dominant per-superstep cost at both parallelism levels (a drain-only
+no-op mapInPandas pass over the row state costs ~85% of the full kernel
+phase).
 
 This module removes the rows. It is the 1:1 Spark image of how Chaos
 actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
@@ -55,12 +55,12 @@ actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
   superstep-count parity holds for chain=1 (the default) and fixed-iters
   runs (tol=0), which is what the scaling bench uses.
 
-Correctness contract: identical supersteps and results vs the join and
-classic-CSR paths — the apply formula, dangling redistribution, and
-convergence test are the same expressions; per-dst partial sums are
-bit-identical to the classic kernel (same reduceat over the same edge
-order); the cross-block apply sum and the dangling-mass fold run in fixed
-block order, so results are deterministic run-to-run at any parallelism.
+Correctness contract: identical supersteps and results vs the join
+path — the apply formula, dangling redistribution, and convergence test
+are the same expressions; per-dst partial sums are a fixed reduceat over
+the build-time edge order, and the cross-block apply sum and the
+dangling-mass fold run in fixed block order, so results are
+deterministic run-to-run at any parallelism.
 Allclose vs the join path (float association differs there),
 property-tested in tests/test_stream.py.
 
@@ -185,8 +185,8 @@ def _scatter_publish(
     delta: float = float("inf"),
 ) -> None:
     """Block-local scatter: messages m = rank/W(u), pre-aggregated per dst
-    via reduceat over the build-time segment starts (bit-identical to the
-    classic kernel's accumulation), published as this block's update
+    via reduceat over the build-time segment starts (a fixed, arrival-
+    independent accumulation order), published as this block's update
     stream together with the partition's dangling mass."""
     if blk is not None:
         m = rank * iod
@@ -282,12 +282,11 @@ def pagerank_stream(
     (np.isin against the closure-shipped sorted source array), so blobs,
     update streams, and checkpoints are unchanged.
 
-    Same semantics as algos.pagerank / csr.pagerank_csr: damping with
+    Same semantics as algos.pagerank: damping with
     dangling-mass redistribution, convergence when max |Δrank| < tol,
     superstep count identical to the join path (for chain=1; see module
     docstring for the chain>1 convergence granularity). ``graph`` lets
-    callers (bench warmup → timed run) reuse a built CsrGraph; it must be
-    a disk-layout v5 graph.
+    callers (bench warmup → timed run) reuse a built CsrGraph.
 
     ``state_partitions``: physical partition count of the BLOB state —
     independent of the block count p, because every kernel routes by the
@@ -307,12 +306,14 @@ def pagerank_stream(
     the streaming ingest lane grows the graph. A checkpoint resume, when
     present, takes precedence over ``init_ranks``.
     """
+    if weight_col is not None:
+        from .algos.pagerank import _validate_weights
+
+        _validate_weights(edges, weight_col)
     g = graph or CsrGraph(
         spark, edges, num_partitions=num_partitions, token=token,
         weight_col=weight_col, num_edges=num_edges,
     )
-    if g.layout != "disk":
-        raise ValueError("pagerank_stream requires the disk block layout")
     if chain < 1:
         raise ValueError("chain must be >= 1")
     n = g.num_vertices

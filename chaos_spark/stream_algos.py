@@ -39,8 +39,8 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   bucket's du slice, so the apply side routes through apos without
   knowing b's boff), ``llab-{b}``, ``lcnt-{b}``, and ``loff-{b}`` (p+1
   entry offsets per target bucket — the per-superstep analogue of the
-  build-time boff). In-block counting reuses the pack-key sort of
-  csr._lpa_csr_disk (measured 9.3x over lexsort there). Apply: concat all
+  build-time boff). In-block counting uses a pack-key sort (measured
+  9.3x over the two-key lexsort). Apply: concat all
   incoming (row, label, cnt) triples, sum counts per (row, label) via one
   pack-key argsort + reduceat, then winner per row = (max cnt, min label)
   via one lexsort — all integer ops, deterministic at any parallelism.
@@ -63,8 +63,8 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   self-loops are min-noops (_ParityBFS).
 
 Correctness contract: EXACT same fixed point and superstep count as the
-join and classic-CSR paths (cc: min-fold is order-free; lpa: integer
-counts and deterministic min-tie). Convergence = zero changed labels,
+join paths (cc: min-fold is order-free; lpa: integer counts and
+deterministic min-tie). Convergence = zero changed labels,
 identical to algos.cc/algos.lpa. Checkpoint/resume mirrors
 pagerank_stream: blob state through CheckpointManager; update streams are
 derived state, regenerated by one scatter-only job on resume.
@@ -167,10 +167,11 @@ class _Int64LabelBase:
     dtype = np.int64
     out_schema = f"{ID} long, label long"
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True,
+            undirected=True, num_edges=num_edges,
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -215,8 +216,8 @@ class _ModeLabelLPA(_Int64LabelBase):
             lab_edge = labels[blk["pos"]]
             di = np.asarray(blk["dst_inverse"])
             # Per-(dst, label) counts: pack-key sort when the domain fits
-            # (di < 2^31 slots, labels in [0, 2^31)) — csr._lpa_csr_disk
-            # measured 9.3x over the two-key lexsort; identical output.
+            # (di < 2^31 slots, labels in [0, 2^31)) — measured 9.3x
+            # over the two-key lexsort; identical output.
             if (
                 len(blk["dst_unique"]) < 2**31
                 and lab_edge.min() >= 0
@@ -303,7 +304,7 @@ class _ModeLabelLPA(_Int64LabelBase):
                 ru, lu = r_s[st], l_s[st]
             # Winner per row: max count, ties -> SMALLEST label — the
             # exact max_by(label, struct(cnt, -label)) pick of the join
-            # and CSR paths, as one lexsort + first-per-run.
+            # path, as one lexsort + first-per-run.
             o2 = np.lexsort((lu, -csum, ru))
             r2 = ru[o2]
             first = np.empty(len(r2), dtype=bool)
@@ -362,11 +363,16 @@ class _MinPlusSSSP:
             e = e.groupBy(SRC, DST).agg(F.min("w").alias("w"))
         return e
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, self.prep_edges(edges), num_partitions=num_partitions,
             token=token,
             weight_col=None if self.weight_col is None else "w",
+            num_edges=(
+                None if num_edges is None
+                else num_edges * (2 if self.symmetric else 1)
+            ),
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -436,10 +442,11 @@ class _HllMaxANF:
         body = blob_len - n * _ANF_M
         return body >= 8 * n and body % (8 * n) == 0
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True,
+            undirected=True, num_edges=num_edges,
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -518,10 +525,11 @@ class _ParityBFS:
     out_schema = f"{ID} long, root long, dist long, color long"
     name = "bipartite_stream"
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True,
+            undirected=True, num_edges=num_edges,
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -597,10 +605,11 @@ class _LubyMIS:
     def blob_ok(self, n: int, blob_len: int) -> bool:
         return blob_len == n + 2
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True,
+            undirected=True, num_edges=num_edges,
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -723,10 +732,11 @@ class _KCorePeel:
         # actually keyed on (same contract as _MinPlusSSSP.prep_edges).
         return edges.select(SRC, DST).where(F.col(SRC) != F.col(DST))
 
-    def prep_graph(self, spark, edges, num_partitions, token) -> CsrGraph:
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
         return CsrGraph(
             spark, self.prep_edges(edges), num_partitions=num_partitions,
-            token=token, undirected=True,
+            token=token, undirected=True, num_edges=num_edges,
         )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
@@ -777,6 +787,7 @@ def _label_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Generic fused-stream vertex-state loop shared by cc_stream /
     lpa_stream / sssp_stream / bfs_stream.
@@ -790,9 +801,9 @@ def _label_stream(
     undirected blocks for CC/LPA; float64 root-seeded distances over
     directed, optionally weighted blocks for SSSP/BFS).
     """
-    g = graph or algo.prep_graph(spark, edges, num_partitions, token)
-    if g.layout != "disk":
-        raise ValueError(f"{algo.name} requires the disk block layout")
+    g = graph or algo.prep_graph(
+        spark, edges, num_partitions, token, num_edges
+    )
     n = g.num_vertices
     p = g.p
     token_, block_dir = g.cache_token, g.block_dir
@@ -957,14 +968,16 @@ def cc_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Hash-min connected components via the fused stream superstep —
-    exact same fixed point and superstep count as algos.cc and csr.cc_csr
-    (min-fold is order-free). ``graph`` must be a disk-layout CsrGraph
-    built with undirected=True (bench warmup → timed run reuse)."""
+    exact same fixed point and superstep count as algos.cc (min-fold is
+    order-free). ``graph`` must be a CsrGraph built with undirected=True
+    (bench warmup → timed run reuse). ``num_edges``: caller-known raw |E|
+    skips the block build's counting scan."""
     return _label_stream(
         spark, edges, _HashMinCC(), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
 
 
@@ -978,14 +991,16 @@ def lpa_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Synchronous LPA (most-frequent neighbor label, min-label ties) via
     the fused stream superstep — exact same fixed point and superstep
-    count as algos.lpa and csr.lpa_csr (integer counts, deterministic
-    tie-break, fixed fold order)."""
+    count as algos.lpa (integer counts, deterministic tie-break, fixed
+    fold order). ``num_edges``: caller-known raw |E| skips the block
+    build's counting scan."""
     return _label_stream(
         spark, edges, _ModeLabelLPA(), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
 
 
@@ -1002,6 +1017,7 @@ def sssp_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Single-source shortest paths (Bellman–Ford) via the fused stream
     superstep — exact same per-superstep state, fixed point, superstep
@@ -1013,7 +1029,7 @@ def sssp_stream(
     return _label_stream(
         spark, edges, _MinPlusSSSP(root, weight_col, symmetric), max_iters,
         num_partitions, token, checkpointer, checkpoint_every, graph,
-        state_partitions,
+        state_partitions, num_edges,
     )
 
 
@@ -1028,17 +1044,18 @@ def hyperanf_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """HyperANF via the fused stream superstep — bit-identical ``(id, nf)``
     neighborhood-function curves, fixed point, and superstep count as
     algos.hyperanf.hyper_anf (register max is order-free and idempotent;
     the HLL estimate is the same elementwise float64 expression on
-    identical registers). ``graph`` must be a disk-layout CsrGraph built
+    identical registers). ``graph`` must be a CsrGraph built
     with undirected=True (same flavor CC/LPA use — the warm-block registry
     shares one build across all three)."""
     return _label_stream(
         spark, edges, _HllMaxANF(seed), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
 
 
@@ -1053,6 +1070,7 @@ def kcore_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """K-core decomposition via the fused stream superstep — exact same
     per-superstep alive set, fixed point, superstep count, and
@@ -1061,7 +1079,7 @@ def kcore_stream(
     edge prep (undirected, self-loops dropped)."""
     return _label_stream(
         spark, edges, _KCorePeel(k), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
 
 
@@ -1075,6 +1093,7 @@ def mis_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Deterministic Luby MIS via the fused stream superstep — exact same
     per-round status vectors, fixed point, and ``(id, in_set)`` output as
@@ -1086,7 +1105,7 @@ def mis_stream(
     in-kernel)."""
     return _label_stream(
         spark, edges, _LubyMIS(), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
 
 
@@ -1100,6 +1119,7 @@ def bipartite_stream(
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Bipartiteness check via the fused stream superstep — exact same
     per-superstep (root, dist) state, superstep count, ``(id, root,
@@ -1111,7 +1131,7 @@ def bipartite_stream(
 
     res = _label_stream(
         spark, edges, _ParityBFS(), max_iters, num_partitions, token,
-        checkpointer, checkpoint_every, graph, state_partitions,
+        checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
     colored = res.state
     und = symmetrize(dedup_edges(edges).where(F.col(SRC) != F.col(DST)))
@@ -1196,6 +1216,7 @@ def scc_stream(
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 10,
     state_partitions: int | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
     """Strongly connected components (FB-coloring, algos.scc semantics)
     via the fused stream superstep — the kernel family's first TWO-GRAPH
@@ -1231,7 +1252,10 @@ def scc_stream(
     argument), so per-phase fixpoint detection lands on the same
     superstep."""
     e = dedup_edges(edges)
-    g_f = CsrGraph(spark, e, num_partitions=num_partitions, token=token)
+    g_f = CsrGraph(
+        spark, e, num_partitions=num_partitions, token=token,
+        num_edges=num_edges,
+    )
     if g_f.num_edges == 0:
         empty = spark.createDataFrame([], schema=f"{ID} long, label long")
         return RunResult(state=empty, supersteps=0, converged=True, history=[])
@@ -1239,10 +1263,8 @@ def scc_stream(
     g_b = CsrGraph(
         spark, e_rev, num_partitions=g_f.p,
         token=None if token is None else f"{token}|rev",
+        num_edges=g_f.num_edges,
     )
-    for g in (g_f, g_b):
-        if g.layout != "disk":
-            raise ValueError("scc_stream requires the disk block layout")
     assert g_b.p == g_f.p and g_b.num_vertices == g_f.num_vertices
     n, p = g_f.num_vertices, g_f.p
     tok_f, bdir_f = g_f.cache_token, g_f.block_dir

@@ -40,9 +40,6 @@ def main() -> None:
 
     os.environ.setdefault("CHAOS_AQE", "off")
     os.environ.setdefault("CHAOS_PERIODIC_GC", "10min")
-    os.environ.setdefault(
-        "CHAOS_BLOCK_CACHE_BYTES", str(1536 * 1024 * 1024)
-    )
     path = _ensure_bench_graph(args.scale, args.edges)
     spark = _session(args.cpus, shuffle=args.shuffle)
 

@@ -2,12 +2,12 @@
 vs the fused min-plus stream path (stream_algos.sssp_stream), on the
 persisted RMAT bench graph.
 
-Same protocol as scripts/label_stream_ab.py: fixed supersteps, a pinned
-directed block layout shared by the warm and timed stream legs (64M-edge
-graphs exceed the warm-registry cap, so the token is pinned explicitly),
-a 2-superstep warm leg per path excluded from the timed window, and an
-exact value check (dist IS DISTINCT FROM dist — NULLs included) between
-the two paths after the same fixed k.
+Protocol (shared with the other scripts/*_stream_ab.py): fixed
+supersteps, a pinned directed block layout shared by the warm and timed
+stream legs (64M-edge graphs exceed the warm-registry cap, so the token
+is pinned explicitly), a 2-superstep warm leg per path excluded from the
+timed window, and an exact value check (dist IS DISTINCT FROM dist —
+NULLs included) between the two paths after the same fixed k.
 
 Usage: python scripts/sssp_stream_ab.py [--scale 22] [--edges 64000000]
        [--cpus 8] [--iters 5] [--algo bfs|sssp|both]
@@ -39,9 +39,6 @@ def main() -> None:
 
     os.environ.setdefault("CHAOS_AQE", "off")
     os.environ.setdefault("CHAOS_PERIODIC_GC", "10min")
-    os.environ.setdefault(
-        "CHAOS_BLOCK_CACHE_BYTES", str(1536 * 1024 * 1024)
-    )
     path = _ensure_bench_graph(args.scale, args.edges)
     spark = _session(args.cpus, shuffle=args.shuffle)
     from pyspark.sql import functions as F
@@ -81,7 +78,7 @@ def main() -> None:
     if args.algo in ("bfs", "both"):
         # One pinned block layout shared by the warm and timed legs,
         # built OUTSIDE every timed window (static preprocessed input,
-        # same protocol as label_stream_ab / bench.py --one).
+        # same protocol as bench.py --one).
         g = _MinPlusSSSP(root).prep_graph(
             spark, edges, args.shuffle, f"ab-bfs-{path}-{args.shuffle}")
         timed("bfs_stream_warm", lambda: sssp_stream(

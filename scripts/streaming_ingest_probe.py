@@ -33,7 +33,7 @@ from chaos_spark.session import get_spark  # noqa: E402
 from chaos_spark.fixtures import gen_source_files  # noqa: E402
 from chaos_spark.extract import extract_references, resolve_references  # noqa: E402
 from chaos_spark.streaming import ingest_corpus_stream, read_edges  # noqa: E402
-from chaos_spark.csr import pagerank_csr  # noqa: E402
+from chaos_spark.algos import pagerank  # noqa: E402
 
 BASE = "/tmp/chaos_stream_probe"
 N_BASE, N_DELTA, N_REPOS = 100_000, 5_000, 200
@@ -123,7 +123,7 @@ def main():
     # -- 2. cold converge on the base graph -----------------------------
     e0 = id_edges(edges).localCheckpoint(eager=True)
     t0 = time.perf_counter()
-    cold0 = pagerank_csr(spark, e0, tol=1e-6, max_iters=100)
+    cold0 = pagerank(spark, e0, tol=1e-6, max_iters=100)
     cold0_sec = time.perf_counter() - t0
     prior = cold0.state.select("id", "rank").localCheckpoint(eager=True)
     report["cold_base"] = {
@@ -169,12 +169,12 @@ def main():
     #       NEITHER timed run pays the block build — the comparison
     #       isolates the superstep savings.
     e1 = id_edges(edges2).localCheckpoint(eager=True)
-    pagerank_csr(spark, e1, tol=0.0, max_iters=1)
+    pagerank(spark, e1, tol=0.0, max_iters=1)
     t0 = time.perf_counter()
-    cold1 = pagerank_csr(spark, e1, tol=1e-6, max_iters=100)
+    cold1 = pagerank(spark, e1, tol=1e-6, max_iters=100)
     cold1_sec = time.perf_counter() - t0
     t0 = time.perf_counter()
-    warm = pagerank_csr(spark, e1, tol=1e-6, max_iters=100, init_ranks=prior)
+    warm = pagerank(spark, e1, tol=1e-6, max_iters=100, init_ranks=prior)
     warm_sec = time.perf_counter() - t0
     # same fixed point
     j = warm.state.select("id", F.col("rank").alias("wr")).join(

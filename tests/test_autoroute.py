@@ -71,3 +71,42 @@ def test_cc_auto_upgrades_to_stream_on_warm_blocks(spark, monkeypatch):
     got = _labels(connected_components(spark, edges))
     assert calls == [1]
     assert got == want
+
+
+def _dispatch_cases():
+    from chaos_spark import algos
+
+    return {
+        "pagerank": lambda s, e: algos.pagerank(s, e, tol=0.0, max_iters=2),
+        "cc": lambda s, e: algos.connected_components(s, e, max_iters=2),
+        "lpa": lambda s, e: algos.label_propagation(s, e, max_iters=2),
+        "bfs": lambda s, e: algos.bfs(s, e, 1, max_iters=2),
+        "kcore": lambda s, e: algos.k_core(s, e, 2, max_iters=2),
+        "mis": lambda s, e: algos.maximal_independent_set(s, e, max_iters=1),
+        "bipartite": lambda s, e: algos.bipartite_check(s, e, max_iters=2),
+        "hyperanf": lambda s, e: algos.hyper_anf(s, e, max_iters=2),
+        "scc": lambda s, e: algos.strongly_connected_components(s, e, max_iters=2),
+    }
+
+
+@pytest.mark.parametrize("algo", sorted(_dispatch_cases()))
+def test_auto_dispatch_threads_edge_count_into_block_build(spark, monkeypatch, algo):
+    """Each auto dispatcher counts |E| to route; the stream route must hand
+    that count to the block build instead of paying a second count job."""
+    import chaos_spark.stream as st_mod
+
+    for name in ("CSR_AUTO_MIN_EDGES", "STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+        monkeypatch.setattr(csr_mod, name, 1)
+    seen = []
+
+    class SpyGraph(csr_mod.CsrGraph):
+        def __init__(self, *a, **k):
+            seen.append(k.get("num_edges"))
+            super().__init__(*a, **k)
+
+    monkeypatch.setattr(sa_mod, "CsrGraph", SpyGraph)
+    monkeypatch.setattr(st_mod, "CsrGraph", SpyGraph)
+    pdf = g3_cliques()
+    _dispatch_cases()[algo](spark, spark.createDataFrame(pdf))
+    assert seen and None not in seen
+    assert seen[0] == len(pdf)

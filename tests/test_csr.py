@@ -1,25 +1,22 @@
-"""CSR fast path ≡ join path (SURVEY §3.2 property) + oracle checks.
+"""CSR block store: build, marker-validated adoption, the warm-block
+registry, and the build's Spark-parity content fingerprint.
 
-The CSR kernel must compute the same fixed point as the DataFrame join
-path on every fixture graph: exact for CC (min is summation-order-free),
-allclose for PageRank (float sums reorder), and the same superstep count
-(both paths see the same convergence deltas up to ulp noise).
+The algorithms that run over the blocks (the fused stream kernels) are
+checked against the join path and the oracles in tests/test_stream.py
+and tests/test_stream_algos.py.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
-from chaos_spark.algos import connected_components, pagerank
-from chaos_spark.csr import cc_csr, pagerank_csr
-from chaos_spark.fixtures import g1_chain, g2_star, g3_cliques, g4_powerlaw
-
-from tests.oracles import pagerank_oracle
+from chaos_spark.algos import connected_components
+from chaos_spark.fixtures import g1_chain, g3_cliques, g4_powerlaw
+from chaos_spark.stream import pagerank_stream
 
 GRAPHS = {
-    "chain": g1_chain,
-    "star_hub": g2_star,
     "two_cliques_bridge": g3_cliques,
     "powerlaw": lambda: g4_powerlaw(scale=10, num_edges=5000),
 }
@@ -29,101 +26,18 @@ def _ranks(res):
     return {r["id"]: r["rank"] for r in res.state.select("id", "rank").collect()}
 
 
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_pagerank_csr_equals_join_path(spark, name):
-    edges = spark.createDataFrame(GRAPHS[name]())
-    r_join = pagerank(spark, edges, tol=1e-6, max_iters=60, mode="shuffle")
-    r_csr = pagerank_csr(spark, edges, tol=1e-6, max_iters=60, mode="csr")
-    a, b = _ranks(r_join), _ranks(r_csr)
-    assert set(a) == set(b)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
-    assert r_csr.supersteps == r_join.supersteps
-
-
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_pagerank_csr_matches_oracle(spark, name):
-    pdf = GRAPHS[name]()
-    edges = spark.createDataFrame(pdf)
-    res = pagerank_csr(spark, edges, tol=1e-9, max_iters=500, mode="csr")
-    assert res.converged
-    got = _ranks(res)
-    want = pagerank_oracle(pdf)
-    assert set(got) == set(want)
-    assert max(abs(got[v] - want[v]) for v in want) < 1e-6
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
-@pytest.mark.parametrize("name", sorted(GRAPHS))
-def test_cc_csr_equals_join_path(spark, name):
-    edges = spark.createDataFrame(GRAPHS[name]())
-    a = dict(
-        connected_components(spark, edges, max_iters=100, mode="join")
-        .state.select("id", "label").collect()
-    )
-    b = dict(cc_csr(spark, edges, max_iters=100, mode="csr").state.select("id", "label").collect())
-    assert a == b
-
-
-@pytest.mark.parametrize("other", ["rows", "packed"])
-def test_csr_layouts_equal(spark, other):
-    """Disk blocks, cogrouped rows, and packed blobs are pure layout
-    choices — equal results (per-block fold order may differ between
-    disk and cogroup partitionings, so allclose at float tolerance)."""
-    edges = spark.createDataFrame(GRAPHS["powerlaw"]())
-    a = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=4, layout="disk"))
-    b = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=4, layout=other))
-    ks = sorted(a)
-    assert a.keys() == b.keys()
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
-
-
-def test_lpa_csr_equals_join_path(spark):
-    """lpa_csr (disk-block kernel) reaches the identical labeling as the
-    DataFrame join path — exact (counts + deterministic min-label ties)."""
-    from chaos_spark.algos import label_propagation
-    from chaos_spark.csr import lpa_csr
-
-    for name in ("two_cliques_bridge", "powerlaw"):
-        edges = spark.createDataFrame(GRAPHS[name]())
-        a = dict(
-            label_propagation(spark, edges, max_iters=7, mode="join")
-            .state.select("id", "label").collect()
-        )
-        b = dict(
-            lpa_csr(spark, edges, max_iters=7, mode="csr").state.select("id", "label").collect()
-        )
-        assert a == b
-
-
-def test_pagerank_weighted_csr_equals_join_path(spark):
-    """Type-2 (weighted) disk blocks: the CSR kernel's rank/W * w messages
-    reach the same fixed point as the join path's weighted regime
-    (VERDICT r3 item 6 done-criterion)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    pdf = g4_powerlaw(scale=9, num_edges=3000)
-    edges = spark.createDataFrame(pdf).withColumn(
-        "weight",
-        (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5))).cast("double"),
-    )
-    a = _ranks(pagerank(spark, edges, tol=0.0, max_iters=6, weight_col="weight",
-                        mode="shuffle"))
-    b = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=6, mode="csr",
-                            weight_col="weight"))
-    assert set(a) == set(b)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
+def _labels(res):
+    return dict(res.state.select("id", "label").collect())
 
 
 def test_csr_partition_invariance(spark):
-    """Result must not depend on the partition count (the autotuned P is a
+    """Result must not depend on the block count (the autotuned P is a
     physical choice, never semantic)."""
     edges = spark.createDataFrame(GRAPHS["powerlaw"]())
-    r4 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=4, mode="csr"))
-    r11 = _ranks(pagerank_csr(spark, edges, tol=0.0, max_iters=5, num_partitions=11, mode="csr"))
+    r4 = _ranks(pagerank_stream(spark, edges, tol=0.0, max_iters=5, num_partitions=4))
+    r11 = _ranks(pagerank_stream(spark, edges, tol=0.0, max_iters=5, num_partitions=11))
     ks = sorted(r4)
+    assert r4.keys() == r11.keys()
     assert np.allclose([r4[k] for k in ks], [r11[k] for k in ks], rtol=0, atol=1e-12)
 
 
@@ -168,156 +82,115 @@ def test_disk_blocks_rebuilt_on_changed_edges(spark, tmp_path, monkeypatch):
     with open(marker) as f:
         assert f.read() == marker_text(g_new)
     # and the rebuilt blocks drive a correct run on the NEW graph
-    res = csr_mod.cc_csr(spark, e2, num_partitions=4, token="pinned")
+    from chaos_spark.stream_algos import cc_stream
+
+    res = cc_stream(spark, e2, num_partitions=4, token="pinned")
     labels = {r["id"]: r["label"] for r in res.state.collect()}
     from tests.oracles import cc_oracle
 
     assert labels == cc_oracle(g3_cliques())
 
 
-def test_check_aligned_guard():
-    """The v4 kernels' misalignment guard: the state partition's sorted id
-    vector must EQUAL the block's build-time ``ids`` — any repartitioning
-    drift (AQE re-plan, parquet round trip, partitioner change) must raise,
-    never gather silently from the wrong rows. Pure-numpy unit test of the
-    guard itself; the Spark-level layout precondition is exercised by every
-    disk-path test above via align_state."""
-    from chaos_spark.csr import _check_aligned
-
-    ids = np.array([2, 5, 9, 11], dtype=np.int64)
-    blk = {"ids": ids}
-    _check_aligned(blk, ids.copy())  # equal vector: no raise
-
-    for bad in (
-        np.array([2, 5, 9], dtype=np.int64),        # missing id
-        np.array([2, 5, 9, 11, 13], dtype=np.int64),  # extra id
-        np.array([2, 5, 10, 11], dtype=np.int64),   # same size, drifted id
-        np.array([], dtype=np.int64),               # empty state partition
-    ):
-        with pytest.raises(RuntimeError, match="misaligned"):
-            _check_aligned(blk, bad)
-
-
-def test_auto_route_three_way():
-    """mode="auto" routes by the measured crossover — join below
-    CSR_AUTO_MIN_EDGES, fused stream at/above it — while explicit knobs
-    pin the named path. Pure routing unit test (num_edges supplied so no
-    count job runs; edges is never touched)."""
-    from chaos_spark import csr as csr_mod
-
-    lo, hi = csr_mod.CSR_AUTO_MIN_EDGES - 1, csr_mod.CSR_AUTO_MIN_EDGES
-    route = csr_mod._auto_route
-    assert route(None, "auto", lo, None, None) == ("join", lo)
-    assert route(None, "auto", hi, None, None) == ("stream", hi)
-    # per-algorithm crossover: the many-superstep algorithms (pagerank,
-    # lpa) pass min_edges=STREAM_AUTO_MIN_EDGES (100k, measured in
-    # scripts/sf01_path_ab.py); CC keeps the conservative default.
-    s_lo = csr_mod.STREAM_AUTO_MIN_EDGES - 1
-    s_hi = csr_mod.STREAM_AUTO_MIN_EDGES
-    assert csr_mod.STREAM_AUTO_MIN_EDGES < csr_mod.CSR_AUTO_MIN_EDGES
-    assert route(None, "auto", s_lo, None, None,
-                 min_edges=s_hi) == ("join", s_lo)
-    assert route(None, "auto", s_hi, None, None,
-                 min_edges=s_hi) == ("stream", s_hi)
-    # ... and a size between the two crossovers routes join for CC but
-    # stream for pagerank/lpa
-    mid = (s_hi + csr_mod.CSR_AUTO_MIN_EDGES) // 2
-    assert route(None, "auto", mid, None, None) == ("join", mid)
-    assert route(None, "auto", mid, None, None,
-                 min_edges=s_hi) == ("stream", mid)
-    assert route(None, "csr", lo, None, None) == ("csr", None)
-    assert route(None, "stream", lo, "tok", None) == ("stream", lo)
-    # explicit classic-kernel knobs pin the kernel even in auto mode
-    assert route(None, "auto", hi, "tok", None) == ("csr", None)
-    assert route(None, "auto", hi, None, "disk") == ("csr", None)
-    assert route(None, "auto", hi, None, None, packed=True) == ("csr", None)
-    with pytest.raises(ValueError, match="unknown mode"):
-        route(None, "bogus", hi, None, None)
-
-
-def test_auto_route_serves_stream_above_crossover(spark, monkeypatch):
-    """End-to-end: with the crossover lowered beneath the fixture size,
-    mode="auto" serves pagerank/cc/lpa through the fused stream path and
-    still matches the join-path fixed point (same oracle as the forced
-    paths above)."""
-    from chaos_spark import csr as csr_mod
-    from chaos_spark.algos import label_propagation
-    from chaos_spark.csr import lpa_csr
-
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
-    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
-    edges = spark.createDataFrame(GRAPHS["two_cliques_bridge"]())
-    a = _ranks(pagerank_csr(spark, edges, tol=1e-6, max_iters=60))
-    b = _ranks(pagerank(spark, edges, tol=1e-6, max_iters=60, mode="shuffle"))
-    ks = sorted(a)
-    assert a.keys() == b.keys()
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
-    cc_a = dict(cc_csr(spark, edges).state.select("id", "label").collect())
-    cc_b = dict(
-        connected_components(spark, edges, mode="join")
-        .state.select("id", "label").collect()
-    )
-    assert cc_a == cc_b
-    lpa_a = dict(
-        lpa_csr(spark, edges, max_iters=3).state.select("id", "label").collect()
-    )
-    lpa_b = dict(
-        label_propagation(spark, edges, max_iters=3, mode="join")
-        .state.select("id", "label").collect()
-    )
-    assert lpa_a == lpa_b
-
-
 def test_warm_block_registry_reuse_and_reroute(spark, monkeypatch):
     """Cross-algorithm block reuse ([C15] §4 partition reuse): a stream
-    LPA run registers its undirected v5 blocks; a subsequent cc_csr in
-    AUTO mode below the cold crossover then routes STREAM (warm blocks
-    void the cold-build argument), adopts the same block dir without
-    rebuilding, and still matches the join fixed point."""
+    LPA run registers its undirected blocks; a subsequent AUTO-mode
+    connected_components below the cold crossover then routes STREAM
+    (warm blocks void the cold-build argument), adopts the same block dir
+    without rebuilding, and still matches the join fixed point."""
     import os
+    import shutil
 
     from chaos_spark import csr as csr_mod
-    from chaos_spark.csr import lpa_csr
+    from chaos_spark import stream_algos as sa_mod
 
     monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
     edges = spark.createDataFrame(GRAPHS["two_cliques_bridge"]())
+    assert edges.count() < csr_mod.CC_STREAM_MIN_EDGES
 
     # Directed / weighted flavors are distinct keys — no false sharing.
     k_und = csr_mod._warm_key(edges, True, None, None)
     k_dir = csr_mod._warm_key(edges, False, None, None)
     assert k_und is not None and k_dir is not None and k_und != k_dir
 
-    lpa_csr(spark, edges, max_iters=3, mode="stream")
+    sa_mod.lpa_stream(spark, edges, max_iters=3)
     assert csr_mod._warm_blocks_ready(k_und) is not None
     assert csr_mod._warm_blocks_ready(k_dir) is None
     token, block_dir = csr_mod._WARM_BLOCKS[k_und]
     marker = os.path.join(block_dir, "_BUILT")
     built_at = os.path.getmtime(marker)
 
-    # Below the cold crossover the plain router says join...
-    assert csr_mod._auto_route(edges, "auto", 12, None, None) == ("join", 12)
-    # ...but with warm blocks the probe flips it to stream.
-    assert csr_mod._auto_route(
-        edges, "auto", 12, None, None, warm_key=k_und
-    ) == ("stream", 12)
-
-    cc_a = dict(cc_csr(spark, edges).state.select("id", "label").collect())
-    cc_b = dict(
-        connected_components(spark, edges, mode="join")
-        .state.select("id", "label").collect()
+    calls = []
+    real_cc_stream = sa_mod.cc_stream
+    monkeypatch.setattr(
+        sa_mod, "cc_stream",
+        lambda *a, **k: calls.append(1) or real_cc_stream(*a, **k),
     )
+    cc_a = _labels(connected_components(spark, edges))
+    assert calls == [1]
+    cc_b = _labels(connected_components(spark, edges, mode="join"))
     assert cc_a == cc_b
     # Same registered dir, no rebuild (marker untouched), entry intact.
     assert csr_mod._WARM_BLOCKS[k_und] == (token, block_dir)
     assert os.path.getmtime(marker) == built_at
 
     # Registry self-heals when the dir vanishes: probe drops the entry
-    # and the router falls back to the join path.
-    import shutil
-
+    # and auto routing falls back to the join path.
     shutil.rmtree(block_dir)
     assert csr_mod._warm_blocks_ready(k_und) is None
     assert k_und not in csr_mod._WARM_BLOCKS
-    assert csr_mod._auto_route(
-        edges, "auto", 12, None, None, warm_key=k_und
-    ) == ("join", 12)
+    assert _labels(connected_components(spark, edges)) == cc_b
+    assert calls == [1]
+
+
+# Negative ids, ids past 2^32, duplicate (src, dst) pairs — (1, 2) and
+# (-3, 1) twice each — and a unique edge weighted -0.0: catalyst hashes
+# a double as doubleToLongBits with -0.0 normalized to 0.0, while the
+# build's numpy dedup keeps the sign bit of a lone -0.0.
+_FP_EDGES = pd.DataFrame({
+    "src": np.array([1, 2, -3, 2**40, 1, -3, 4, -9], dtype=np.int64),
+    "dst": np.array([2, 3, 1, -7, 2, 1, 5, -(2**35)], dtype=np.int64),
+    "w": np.array([0.5, 1.25, 3.0, 3.0, 2.0, 0.25, -0.0, 7.5]),
+})
+
+
+def _spark_fp(spark, pdf: pd.DataFrame, weighted: bool) -> tuple[int, int]:
+    """The warm-adoption validator's (|E| dedup, fingerprint): Spark's own
+    dedup (weights summed) + bit_xor(xxhash64(src, dst[, w]))."""
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame(pdf)
+    if weighted:
+        dd = df.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+        cols = ["src", "dst", "w"]
+    else:
+        dd = df.select("src", "dst").distinct()
+        cols = ["src", "dst"]
+    row = dd.agg(
+        F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64(*cols)).alias("fp")
+    ).first()
+    return int(row["n"]), int(row["fp"])
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "weighted"])
+def test_edge_fp_np_matches_spark_xxhash64(spark, weighted):
+    """The block build fingerprints edges in numpy (_edge_fp_np) while
+    warm adoption validates the marker with Spark's bit_xor(xxhash64); any
+    disagreement would silently rebuild on every warm call. Checked both
+    on the raw rows (the hash itself, -0.0 included) and end to end
+    through CsrGraph (the build's in-kernel dedup + weight sum)."""
+    from chaos_spark.csr import CsrGraph, _edge_fp_np
+
+    raw = _FP_EDGES.drop_duplicates(["src", "dst"])
+    if not weighted:
+        raw = raw[["src", "dst"]]
+    w = raw["w"].to_numpy() if weighted else None
+    assert _edge_fp_np(raw["src"].to_numpy(), raw["dst"].to_numpy(), w) == (
+        _spark_fp(spark, raw, weighted)[1]
+    )
+
+    pdf = _FP_EDGES if weighted else _FP_EDGES[["src", "dst"]]
+    g = CsrGraph(
+        spark, spark.createDataFrame(pdf), num_partitions=3,
+        weight_col="w" if weighted else None,
+    )
+    assert (g.num_edges, g.edge_fp) == _spark_fp(spark, pdf, weighted)

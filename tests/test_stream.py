@@ -1,8 +1,8 @@
 """Fused streaming-partition superstep ≡ join path (SURVEY §3.2 property).
 
 pagerank_stream must compute the same fixed point, in the same number of
-supersteps, as the DataFrame join path and the classic CSR path — allclose
-(float association differs across paths), exact id set, rank mass 1. Plus
+supersteps, as the DataFrame join path — allclose (float association
+differs across paths), exact id set, rank mass 1. Plus
 the stream-specific invariants: resume from a mid-run checkpoint equals the
 uninterrupted run (update streams are regenerated, not checkpointed), and
 weighted graphs ride the same blocks.
@@ -44,8 +44,9 @@ def test_pagerank_stream_equals_join_path(spark, name):
     assert r_str.supersteps == r_join.supersteps
 
 
-def test_pagerank_stream_matches_oracle(spark):
-    pdf = GRAPHS["powerlaw"]()
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_pagerank_stream_matches_oracle(spark, name):
+    pdf = GRAPHS[name]()
     edges = spark.createDataFrame(pdf)
     res = pagerank_stream(spark, edges, tol=1e-9, max_iters=500)
     assert res.converged
@@ -216,18 +217,21 @@ def test_pagerank_stream_warm_start_continues_exactly(spark):
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-15)
 
 
-def test_pagerank_csr_warm_start_continues_exactly(spark):
-    from chaos_spark.csr import pagerank_csr
+@pytest.mark.parametrize("bad", [None, -1.0], ids=["null", "negative"])
+@pytest.mark.parametrize("route", ["direct", "stream", "auto"])
+def test_pagerank_stream_rejects_bad_weights(spark, monkeypatch, route, bad):
+    """A NULL or non-positive weight makes a vertex neither sender nor
+    dangling (silent rank-mass leak), so every weighted path must raise
+    like the join path does — the direct kernel call, the pinned stream
+    mode, and auto mode above the stream crossover."""
+    import chaos_spark.csr as csr_mod
 
-    pdf = g4_powerlaw(scale=9, num_edges=3000)
-    edges = spark.createDataFrame(pdf)
-    cold3 = pagerank_csr(spark, edges, tol=0.0, max_iters=3, mode="csr")
-    warm = pagerank_csr(
-        spark, edges, tol=0.0, max_iters=2, mode="csr",
-        init_ranks=cold3.state.select("id", "rank"),
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
+    edges = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 2, bad), (2, 0, 2.0)], "src long, dst long, w double"
     )
-    cold5 = pagerank_csr(spark, edges, tol=0.0, max_iters=5, mode="csr")
-    a, b = _ranks(warm), _ranks(cold5)
-    assert set(a) == set(b)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
+    with pytest.raises(ValueError, match="strictly positive"):
+        if route == "direct":
+            pagerank_stream(spark, edges, weight_col="w", max_iters=3)
+        else:
+            pagerank(spark, edges, weight_col="w", max_iters=3, mode=route)
