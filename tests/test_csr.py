@@ -1,9 +1,14 @@
 """CSR block store: build, marker-validated adoption, the warm-block
-registry, and the build's Spark-parity content fingerprint.
+registry, the build's Spark-parity content fingerprint — and the scale
+path over the blocks as callers reach it.
 
-The algorithms that run over the blocks (the fused stream kernels) are
-checked against the join path and the oracles in tests/test_stream.py
-and tests/test_stream_algos.py.
+The ``*_csr_*`` tests drive the ``algos.*`` dispatchers pinned to (or
+auto-routed onto) the fused stream kernels over the CSR blocks, and must
+reach the join path's fixed point on every fixture graph: exact for CC
+and LPA (min / counts + min-label ties are order-free), allclose for
+PageRank (float sums reorder), and the same superstep count. The direct
+kernel calls are checked in tests/test_stream.py and
+tests/test_stream_algos.py.
 """
 
 from __future__ import annotations
@@ -12,11 +17,15 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from chaos_spark.algos import connected_components
-from chaos_spark.fixtures import g1_chain, g3_cliques, g4_powerlaw
+from chaos_spark.algos import connected_components, label_propagation, pagerank
+from chaos_spark.fixtures import g1_chain, g2_star, g3_cliques, g4_powerlaw
 from chaos_spark.stream import pagerank_stream
 
+from tests.oracles import pagerank_oracle
+
 GRAPHS = {
+    "chain": g1_chain,
+    "star_hub": g2_star,
     "two_cliques_bridge": g3_cliques,
     "powerlaw": lambda: g4_powerlaw(scale=10, num_edges=5000),
 }
@@ -28,6 +37,101 @@ def _ranks(res):
 
 def _labels(res):
     return dict(res.state.select("id", "label").collect())
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_pagerank_csr_equals_join_path(spark, name):
+    edges = spark.createDataFrame(GRAPHS[name]())
+    r_join = pagerank(spark, edges, tol=1e-6, max_iters=60, mode="shuffle")
+    r_csr = pagerank(spark, edges, tol=1e-6, max_iters=60, mode="stream")
+    a, b = _ranks(r_join), _ranks(r_csr)
+    assert set(a) == set(b)
+    ks = sorted(a)
+    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
+    assert r_csr.supersteps == r_join.supersteps
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_pagerank_csr_matches_oracle(spark, name):
+    pdf = GRAPHS[name]()
+    edges = spark.createDataFrame(pdf)
+    res = pagerank(spark, edges, tol=1e-9, max_iters=500, mode="stream")
+    assert res.converged
+    got = _ranks(res)
+    want = pagerank_oracle(pdf)
+    assert set(got) == set(want)
+    assert max(abs(got[v] - want[v]) for v in want) < 1e-6
+    assert abs(sum(got.values()) - 1.0) < 1e-9
+
+
+@pytest.mark.parametrize("name", sorted(GRAPHS))
+def test_cc_csr_equals_join_path(spark, name):
+    edges = spark.createDataFrame(GRAPHS[name]())
+    a = _labels(connected_components(spark, edges, max_iters=100, mode="join"))
+    b = _labels(connected_components(spark, edges, max_iters=100, mode="stream"))
+    assert a == b
+
+
+def test_lpa_csr_equals_join_path(spark):
+    """LPA over the CSR blocks reaches the identical labeling as the
+    DataFrame join path — exact (counts + deterministic min-label ties)."""
+    for name in ("two_cliques_bridge", "powerlaw"):
+        edges = spark.createDataFrame(GRAPHS[name]())
+        a = _labels(label_propagation(spark, edges, max_iters=7, mode="join"))
+        b = _labels(label_propagation(spark, edges, max_iters=7, mode="stream"))
+        assert a == b
+
+
+def test_pagerank_weighted_csr_equals_join_path(spark):
+    """Type-2 (weighted) blocks: the rank/W * w messages reach the same
+    fixed point as the join path's weighted regime."""
+    from pyspark.sql import functions as F
+
+    pdf = g4_powerlaw(scale=9, num_edges=3000)
+    edges = spark.createDataFrame(pdf).withColumn(
+        "weight",
+        (F.lit(1) + F.pmod(F.col("src") + F.col("dst"), F.lit(5))).cast("double"),
+    )
+    a = _ranks(pagerank(spark, edges, tol=0.0, max_iters=6, weight_col="weight",
+                        mode="shuffle"))
+    b = _ranks(pagerank(spark, edges, tol=0.0, max_iters=6, weight_col="weight",
+                        mode="stream"))
+    assert set(a) == set(b)
+    ks = sorted(a)
+    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
+
+
+def test_auto_route_serves_stream_above_crossover(spark, monkeypatch):
+    """End-to-end: with the crossovers lowered beneath the fixture size,
+    mode="auto" serves pagerank/cc/lpa through the fused stream path and
+    still matches the join-path fixed point."""
+    from chaos_spark import csr as csr_mod
+    from chaos_spark import stream as st_mod
+    from chaos_spark import stream_algos as sa_mod
+
+    for name in ("CSR_AUTO_MIN_EDGES", "STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+        monkeypatch.setattr(csr_mod, name, 1)
+    calls = []
+    for mod, fn in ((st_mod, "pagerank_stream"), (sa_mod, "cc_stream"),
+                    (sa_mod, "lpa_stream")):
+        real = getattr(mod, fn)
+        monkeypatch.setattr(
+            mod, fn,
+            lambda *a, _f=fn, _r=real, **k: calls.append(_f) or _r(*a, **k),
+        )
+    edges = spark.createDataFrame(GRAPHS["two_cliques_bridge"]())
+    a = _ranks(pagerank(spark, edges, tol=1e-6, max_iters=60))
+    b = _ranks(pagerank(spark, edges, tol=1e-6, max_iters=60, mode="shuffle"))
+    ks = sorted(a)
+    assert a.keys() == b.keys()
+    assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
+    assert _labels(connected_components(spark, edges)) == _labels(
+        connected_components(spark, edges, mode="join")
+    )
+    assert _labels(label_propagation(spark, edges, max_iters=3)) == _labels(
+        label_propagation(spark, edges, max_iters=3, mode="join")
+    )
+    assert calls == ["pagerank_stream", "cc_stream", "lpa_stream"]
 
 
 def test_csr_partition_invariance(spark):
