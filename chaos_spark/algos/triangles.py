@@ -19,6 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..engine import is_stored
 from ..graph import DST, ID, SRC
 
 
@@ -49,9 +50,9 @@ def _oriented_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def _closed_wedges(edges: DataFrame) -> DataFrame:
-    """All triangles, one row each, as ``(x, y, z)`` corners."""
-    eo = _oriented_edges(edges).persist()
+def _wedges(eo: DataFrame) -> DataFrame:
+    """All triangles over the oriented edge set ``eo``, one row each, as
+    ``(x, y, z)`` corners. Reads ``eo`` three times."""
     e1 = eo.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = eo.select(F.col("a").alias("x"), F.col("b").alias("z"))
     wedges = e1.join(e2, "x").where(F.col("y") != F.col("z"))
@@ -59,14 +60,36 @@ def _closed_wedges(edges: DataFrame) -> DataFrame:
     return wedges.join(closing, ["y", "z"]).select("x", "y", "z")
 
 
+def _closed_wedges(edges: DataFrame) -> DataFrame:
+    """All triangles, one row each, as ``(x, y, z)`` corners, over a
+    persisted oriented edge set that stays cached after the call."""
+    return _wedges(_oriented_edges(edges).persist())
+
+
 def triangle_count(spark: SparkSession, edges: DataFrame) -> int:
-    """Global triangle count (exact)."""
-    return _closed_wedges(edges).count()
+    """Global triangle count (exact). The oriented edge set is cached for
+    the count and released after it, unless its plan was already cached
+    (then that entry is read and left alone)."""
+    eo = _oriented_edges(edges)
+    owned = not is_stored(eo)
+    if owned:
+        eo = eo.persist()
+    try:
+        return _wedges(eo).count()
+    finally:
+        if owned:
+            eo.unpersist()
 
 
 def triangle_counts_per_vertex(spark: SparkSession, edges: DataFrame) -> DataFrame:
     """Per-vertex triangle counts ``(id, triangles)``, zeros included —
-    matches ``networkx.triangles`` exactly."""
+    matches ``networkx.triangles`` exactly.
+
+    Lazy: no job runs here. The result reads a persisted oriented edge
+    set, and that cache entry outlives the call so the result can be
+    consumed repeatedly. The caller owns it: Spark matches cache entries
+    by plan, so ``_oriented_edges(edges).unpersist()`` (or
+    ``spark.catalog.clearCache()``) releases it."""
     tris = _closed_wedges(edges)
     corners = (
         tris.select(F.col("x").alias(ID))

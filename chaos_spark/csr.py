@@ -39,7 +39,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import choose_num_partitions
+from .engine import choose_num_partitions, is_stored
 from .graph import DST, ID, SRC
 
 # Per-Python-worker memo of loaded block / apply-plan members.
@@ -430,6 +430,16 @@ class CsrGraph:
     reconstructed lazily from the apply dirs (zero shuffles) only if
     something asks for it.
 
+    Caching: the graph persists only a copy it owns. With ``num_edges``
+    given it persists nothing — the edge stream is scanned once, by the
+    build's edge pass or by the adoption validation job (both only when
+    a stale marker fails validation and forces a rebuild). Without
+    it the stream is scanned twice (count, then build/validate), so it is
+    persisted for the constructor's duration and released at its end —
+    unless its plan is already cached (``storageLevel``, e.g. the caller
+    persisted an exactly ``(src, dst)`` frame), in which case the
+    caller's entry serves both scans and is never touched.
+
     Type-2 (weighted) edges ([X13] §5.1, ``weight_col``): blocks gain a
     float64 ``w`` array; duplicate (src,dst) weights are SUMMED (same
     prep as the join paths). Directed blocks only.
@@ -445,6 +455,8 @@ class CsrGraph:
         weight_col: str | None = None,
         num_edges: int | None = None,
     ):
+        import uuid
+
         from .shipping import ensure_shipped
 
         ensure_shipped(spark)  # kernels reference module fns on executors
@@ -462,27 +474,36 @@ class CsrGraph:
         if undirected:
             e = e.union(e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)))
         self.undirected = undirected
-        e = e.persist()
-        raw = (
-            num_edges * (2 if undirected else 1)
-            if num_edges is not None
-            else e.count()
-        )
-        self.p = num_partitions or choose_num_partitions(spark, raw)
-        import uuid
-
-        # Warm-block adoption: an un-tokened graph whose edges plan +
-        # flavor matches a registered build reuses that token (and its
-        # block dir). Always safe: the _BUILT marker is re-validated
-        # against a freshly computed |E| + content fingerprint before any
-        # block is trusted.
-        self._warm_key = _warm_key(edges, undirected, weight_col, num_partitions)
-        warm_tok = _warm_blocks_ready(self._warm_key) if token is None else None
-        self.token = (
-            token or warm_tok or f"g-{uuid.uuid4().hex}-{raw}-{self.p}"
-        )
-        self._ephemeral_blocks = token is None and warm_tok is None
-        self._build_or_adopt(e)
+        # Persist only what this graph owns. ``e`` can be plan-equal to a
+        # frame the caller cached (edges already exactly (src, dst)): then
+        # persist() is a no-op and unpersist() would evict the CALLER's
+        # entry. With ``num_edges`` given, ``e`` is scanned once (build
+        # pass or validation job) and needs no cache at all.
+        owned = num_edges is None and not is_stored(e)
+        if owned:
+            e = e.persist()
+        try:
+            raw = (
+                num_edges * (2 if undirected else 1)
+                if num_edges is not None
+                else e.count()
+            )
+            self.p = num_partitions or choose_num_partitions(spark, raw)
+            # Warm-block adoption: an un-tokened graph whose edges plan +
+            # flavor matches a registered build reuses that token (and its
+            # block dir). Always safe: the _BUILT marker is re-validated
+            # against a freshly computed |E| + content fingerprint before any
+            # block is trusted.
+            self._warm_key = _warm_key(edges, undirected, weight_col, num_partitions)
+            warm_tok = _warm_blocks_ready(self._warm_key) if token is None else None
+            self.token = (
+                token or warm_tok or f"g-{uuid.uuid4().hex}-{raw}-{self.p}"
+            )
+            self._ephemeral_blocks = token is None and warm_tok is None
+            self._build_or_adopt(e)
+        finally:
+            if owned:
+                e.unpersist()
         # Worker-cache namespace: count + content fingerprint, so a pinned
         # token whose underlying data changed can never serve stale
         # in-memory blocks cached by a still-alive Python worker.
@@ -493,7 +514,6 @@ class CsrGraph:
         ):
             _WARM_BLOCKS[self._warm_key] = (self.token, self.block_dir)
             self._ephemeral_blocks = False
-        e.unpersist()
 
     def _build_or_adopt(self, e: DataFrame) -> None:
         """Adopt marker-validated blocks (one Spark validation job) or

@@ -125,6 +125,19 @@ def materialize_stats(
     return out, obs.get
 
 
+def is_stored(df: DataFrame) -> bool:
+    """True if ``df``'s plan is already in Spark's cache (memory or disk).
+
+    Asks the JVM CacheManager (``storageLevel``, a plan-equality lookup);
+    PySpark's ``is_cached`` is only a flag on the one Python object that
+    called persist(). Code that caches a frame it derived from a caller's
+    input persists only when this is False, and unpersists only what it
+    persisted: persist() of a plan-equal cached frame is a no-op, and the
+    matching unpersist() would evict the caller's entry."""
+    lvl = df.storageLevel
+    return lvl.useMemory or lvl.useDisk
+
+
 def release_state(df: DataFrame) -> None:
     """Free a superseded state's cached blocks NOW, not at the next driver
     GC. ``DataFrame.unpersist`` only covers CacheManager entries; a
