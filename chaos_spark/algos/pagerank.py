@@ -35,9 +35,7 @@ from ..checkpoint import CheckpointManager
 from ..engine import (
     RunResult,
     choose_num_partitions,
-    materialize,
     materialize_stats,
-    resume_or_init,
     run_supersteps,
     superstep_conf,
 )
@@ -131,12 +129,6 @@ def seed_ranks(verts, deg, n, init_ranks=None) -> DataFrame:
     )
 
 
-def _init_state(verts, deg, n, p, init_ranks=None) -> DataFrame:
-    return materialize(
-        seed_ranks(verts, deg, n, init_ranks).repartition(p, F.col(ID))
-    )
-
-
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
@@ -185,7 +177,7 @@ def pagerank(
 
     ``init_ranks``: warm-start from a prior ``(id, rank)`` frame (e.g.
     the last converged run before the streaming lane grew the graph) —
-    see ``_init_state`` for the exact semantics and why no
+    see ``seed_ranks`` for the exact semantics and why no
     renormalization is needed.
 
     ``mode``:
@@ -241,6 +233,7 @@ def pagerank(
         spark, num_edges if num_edges is not None else edges.count()
     )
     with superstep_conf(spark, p):
+        n_verts = None
         if mode == "auto":
             n_verts = vertices_from_edges(edges.select(SRC, DST)).count()
             mode = (
@@ -251,15 +244,13 @@ def pagerank(
         if sources is not None and not sources:
             raise ValueError("sources must be a non-empty id list")
         if mode == "broadcast" and hub_threshold is None:
-            return _pagerank_broadcast(
-                spark, edges, damping, tol, max_iters, p,
-                checkpointer, checkpoint_every, weight_col, init_ranks,
-                sources,
-            )
-        return _pagerank(
-            spark, edges, damping, tol, max_iters, p, checkpointer,
-            checkpoint_every, hub_threshold, salt_buckets, weight_col,
-            init_ranks, sources,
+            layout, scatter = _broadcast_regime(p)
+        else:
+            layout, scatter = _shuffle_regime(p, hub_threshold, salt_buckets)
+        return _pagerank_join(
+            spark, edges, layout, scatter, damping, tol, max_iters, p,
+            checkpointer, checkpoint_every, weight_col, init_ranks, sources,
+            n_verts,
         )
 
 
@@ -270,6 +261,13 @@ def _pref_expr(sources, id_col=None):
     return F.when(
         col.isin([int(s) for s in sources]), F.lit(1.0 / len(sources))
     ).otherwise(F.lit(0.0))
+
+
+def _dangling_mass():
+    """Sum of the ranks of out-degree-0 vertices, as the ``dm`` metric."""
+    return F.sum(
+        F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)
+    ).alias("dm")
 
 
 def _validate_weights(edges, weight_col: str) -> None:
@@ -298,10 +296,7 @@ def _prep_weighted(edges, weight_col: str):
     )
 
 
-def _pagerank_broadcast(
-    spark, edges, damping, tol, max_iters, p, checkpointer, checkpoint_every,
-    weight_col=None, init_ranks=None, sources=None,
-) -> RunResult:
+def _broadcast_regime(p):
     """Zero-shuffle superstep: edges hash-partitioned on dst ONCE; the
     sender vector (id, rank/outdeg) is broadcast; groupBy(dst) reuses the
     static layout (no exchange); the apply join sees both sides hash-
@@ -310,149 +305,97 @@ def _pagerank_broadcast(
     X-Stream's in-memory streaming partitions. Weighted runs broadcast
     ``rank/W`` and scale by ``w`` on the (static, co-partitioned) edge
     side — the zero-shuffle property is weight-agnostic."""
-    weighted = weight_col is not None
-    if weighted:
-        _validate_weights(edges, weight_col)
-        e = _prep_weighted(edges, weight_col)
-    else:
-        e = dedup_edges(edges)
-    verts = vertices_from_edges(e)
-    n = verts.count()
 
-    e = e.repartition(p, F.col(DST)).persist()
-    e.count()
-    if weighted:
-        deg = e.groupBy(F.col(SRC).alias(ID)).agg(F.sum("w").alias("out_degree"))
-    else:
-        deg = out_degrees(e)
+    def layout(e):
+        return e.repartition(p, F.col(DST))
 
-    def init() -> DataFrame:
-        st = _init_state(verts, deg, n, p, init_ranks)
-        if sources is not None and init_ranks is None:
-            # PPR power-iteration start: rank0 = pref (oracle recurrence).
-            st = materialize(
-                st.select(ID, "out_degree", _pref_expr(sources).alias("rank"))
-            )
-        return st
-
-    state, start = resume_or_init(spark, checkpointer, init)
-
-    row = state.agg(
-        F.sum(F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
-    ).first()
-    dangling = {"mass": float(row["dm"] or 0.0)}
-
-    def step(cur: DataFrame, superstep: int):
-        dm = dangling["mass"]
-        senders = cur.where(F.col("out_degree") > 0).select(
-            F.col(ID), (F.col("rank") / F.col("out_degree")).alias("m")
-        )
-        m_expr = (F.col("m") * F.col("w")) if weighted else F.col("m")
-        contribs = (
+    def scatter(e, senders, m):
+        return (
             e.join(F.broadcast(senders), e[SRC] == senders[ID])
             .groupBy(DST)
-            .agg(F.sum(m_expr).alias("contrib"))
+            .agg(F.sum(m).alias("contrib"))
         )
-        if sources is None:
-            teleport = F.lit((1.0 - damping) / n)
-            dang_share = F.lit(dm / n)
-        else:
-            pref = _pref_expr(sources, cur[ID])
-            teleport = F.lit(1.0 - damping) * pref
-            dang_share = F.lit(dm) * pref
-        new = cur.join(
-            contribs.hint("shuffle_hash"), cur[ID] == contribs[DST], "left"
-        ).select(
-            cur[ID],
-            cur["out_degree"],
-            cur["rank"].alias("_prev"),
-            (
-                teleport
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
-            ).alias("rank"),
-        )
-        new, m = materialize_stats(
-            new,
-            [
-                F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-                F.sum(
-                    F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
-            ],
-            keep=[ID, "out_degree", "rank"],
-        )
-        dangling["mass"] = float(m["dm"] or 0.0)
-        delta = float(m["delta"] or 0.0)
-        return new, {"converged": delta < tol, "delta": delta}
 
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
-    )
-    e.unpersist()
-    result.state = result.state.select(ID, "out_degree", "rank")
-    return result
+    return layout, scatter
 
 
-def _pagerank(
-    spark, edges, damping, tol, max_iters, p, checkpointer,
-    checkpoint_every, hub_threshold, salt_buckets, weight_col=None,
-    init_ranks=None, sources=None,
+def _shuffle_regime(p, hub_threshold, salt_buckets):
+    """Scatter join + exchange from groupBy(dst): edges partitioned on the
+    scatter join key ONCE, only the state side shuffles; hub destinations
+    optionally salted into two-level aggregation."""
+
+    def layout(e):
+        e = partition_edges(e, p, by=SRC)
+        return e if hub_threshold is None else salt_edges(e, hub_threshold, salt_buckets)
+
+    def scatter(e, senders, m):
+        keys = [F.col(DST)] if hub_threshold is None else [F.col(DST), F.col("salt")]
+        msgs = e.join(senders, e[SRC] == senders[ID]).select(*keys, m.alias("m"))
+        if hub_threshold is not None:
+            return salted_agg(msgs, "m", "sum").withColumnRenamed("m", "contrib")
+        return msgs.groupBy(DST).agg(F.sum("m").alias("contrib"))
+
+    return layout, scatter
+
+
+def _pagerank_join(
+    spark, edges, layout, scatter, damping, tol, max_iters, p, checkpointer,
+    checkpoint_every, weight_col, init_ranks, sources, n_verts,
 ) -> RunResult:
+    """Setup and superstep loop of both join regimes. ``layout(e)`` places
+    the static edge table; ``scatter(e, senders, m)`` sums the message
+    column ``m`` per destination into ``(dst, contrib)``.
+
+    Setup runs each fact once. The edge table is persisted and filled by
+    its first real job: the vertex count when the caller pinned the mode,
+    else the init job, or on resume the first superstep. ``n_verts`` is
+    the auto-mode count over the raw edges; dedup keeps every vertex, so
+    it is |V| here too.
+    """
     weighted = weight_col is not None
     if weighted:
         _validate_weights(edges, weight_col)
         e = _prep_weighted(edges, weight_col)
     else:
         e = dedup_edges(edges)
+    e = layout(e).persist()
     verts = vertices_from_edges(e)
-    n = verts.count()
-
-    # Static edge table: partition on the scatter join key ONCE, persist.
-    e = partition_edges(e, p, by=SRC)
-    if hub_threshold is not None:
-        e = salt_edges(e, hub_threshold, salt_buckets)
-    e = e.persist()
-    e.count()
-
+    n = n_verts if n_verts is not None else verts.count()
     if weighted:
         # Out-strength W(u) — the weighted analogue of the degree pre-pass.
         deg = e.groupBy(F.col(SRC).alias(ID)).agg(F.sum("w").alias("out_degree"))
     else:
         deg = out_degrees(e)
 
-    def init() -> DataFrame:
-        st = _init_state(verts, deg, n, p, init_ranks)
+    # Dangling mass is a driver-side scalar, refreshed by the barrier job
+    # that tests convergence and recorded in each step's stats (so in every
+    # checkpoint manifest). A fresh run observes it in the init job; a
+    # resume reads it from the manifest, aggregating the loaded state only
+    # for a manifest written without it.
+    manifest = checkpointer.latest() if checkpointer is not None else None
+    if manifest is None:
+        start = 0
+        state = seed_ranks(verts, deg, n, init_ranks).repartition(p, F.col(ID))
         if sources is not None and init_ranks is None:
             # PPR power-iteration start: rank0 = pref (oracle recurrence).
-            st = materialize(
-                st.select(ID, "out_degree", _pref_expr(sources).alias("rank"))
-            )
-        return st
-
-    state, start = resume_or_init(spark, checkpointer, init)
-
-    # Dangling mass is a driver-side scalar, refreshed by the same agg that
-    # tests convergence (and computed once at init/resume).
-    row = state.agg(
-        F.sum(F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)).alias("dm")
-    ).first()
-    dangling = {"mass": float(row["dm"] or 0.0)}
+            state = state.select(ID, "out_degree", _pref_expr(sources).alias("rank"))
+        state, stats = materialize_stats(state, [_dangling_mass()])
+        dm = stats["dm"]
+    else:
+        start = int(manifest["superstep"])
+        state = checkpointer.load(spark, manifest)
+        dm = manifest["metrics"].get("dm")
+        if dm is None:
+            dm = state.agg(_dangling_mass()).first()["dm"]
+    dangling = {"mass": float(dm or 0.0)}
+    m = (F.col("m0") * F.col("w")) if weighted else F.col("m0")
 
     def step(cur: DataFrame, superstep: int):
         dm = dangling["mass"]
         senders = cur.where(F.col("out_degree") > 0).select(
             F.col(ID), (F.col("rank") / F.col("out_degree")).alias("m0")
         )
-        m_expr = (F.col("m0") * F.col("w")) if weighted else F.col("m0")
-        msgs = e.join(senders, e[SRC] == senders[ID]).select(
-            *([F.col(DST), F.col("salt")] if hub_threshold is not None else [F.col(DST)]),
-            m_expr.alias("m"),
-        )
-        if hub_threshold is not None:
-            contribs = salted_agg(msgs, "m", "sum").withColumnRenamed("m", "contrib")
-        else:
-            contribs = msgs.groupBy(DST).agg(F.sum("m").alias("contrib"))
+        contribs = scatter(e, senders, m)
         if sources is None:
             teleport = F.lit((1.0 - damping) / n)
             dang_share = F.lit(dm / n)
@@ -472,19 +415,17 @@ def _pagerank(
                 * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
             ).alias("rank"),
         )
-        new, m = materialize_stats(
+        new, stats = materialize_stats(
             new,
             [
                 F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-                F.sum(
-                    F.when(F.col("out_degree") == 0, F.col("rank")).otherwise(0.0)
-                ).alias("dm"),
+                _dangling_mass(),
             ],
             keep=[ID, "out_degree", "rank"],
         )
-        dangling["mass"] = float(m["dm"] or 0.0)
-        delta = float(m["delta"] or 0.0)
-        return new, {"converged": delta < tol, "delta": delta}
+        dangling["mass"] = float(stats["dm"] or 0.0)
+        delta = float(stats["delta"] or 0.0)
+        return new, {"converged": delta < tol, "delta": delta, "dm": dangling["mass"]}
 
     result = run_supersteps(
         state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start

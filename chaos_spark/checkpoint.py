@@ -4,9 +4,15 @@ Chaos's fault tolerance is slipstore chunk replication ([C15] §4.3); ours is
 stronger for iterative jobs: every k supersteps the vertex-state DataFrame is
 written to a Parquet (or Iceberg, if a catalog is configured) table together
 with a JSON manifest recording ``(algo, superstep, config sha256,
-per-partition row counts, wall times)``. ``resume()`` restarts any run from
-the last *complete* superstep — the manifest is written only after the data
-write succeeds, so a torn write is invisible.
+per-partition row counts, state schema, wall times, step metrics)``.
+``resume()`` restarts any run from the last *complete* superstep — the
+manifest is written only after the data write succeeds, so a torn write is
+invisible.
+
+A round trip runs one Spark job, the write. The row counts come from the
+written files' parquet footers, read on the driver, and ``load`` reads with
+the schema stored in the manifest, so neither re-scans the data nor infers
+its schema.
 
 Layout under ``base_dir``::
 
@@ -22,7 +28,8 @@ import os
 import time
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def config_sha(config: dict[str, Any]) -> str:
@@ -55,28 +62,33 @@ class CheckpointManager:
         """Durably checkpoint ``state`` at ``superstep``; returns the path.
 
         Data first, manifest last: the manifest is the completion marker.
-        Per-partition row counts come from re-scanning the written files so
-        they describe what is actually on disk, not the in-memory plan.
+        Per-partition row counts are read from the written files' parquet
+        footers on the driver, so they describe what is actually on disk,
+        not the in-memory plan, without a Spark job; ``partitions`` is keyed
+        by the writing task's partition number. ``state.schema`` is stored
+        in the manifest for ``load``.
         """
+        import pyarrow.parquet as pq  # driver only; kept off executor imports
+
         path = self._state_path(superstep)
         t0 = time.time()
         state.write.mode("overwrite").parquet(path)
         write_s = time.time() - t0
-        spark = state.sparkSession
-        per_part = (
-            spark.read.parquet(path)
-            .groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
+        partitions: dict[int, int] = {}
+        for name in os.listdir(path):
+            if name.startswith("part-") and name.endswith(".parquet"):
+                part = int(name.split("-")[1])
+                rows = pq.read_metadata(os.path.join(path, name)).num_rows
+                partitions[part] = partitions.get(part, 0) + rows
         manifest = {
             "algo": self.algo,
             "superstep": superstep,
             "config_sha": self.sha,
             "config": self.config,
             "path": path,
-            "partitions": {int(r["partition"]): int(r["rows"]) for r in per_part},
-            "total_rows": int(sum(r["rows"] for r in per_part)),
+            "partitions": partitions,
+            "total_rows": sum(partitions.values()),
+            "schema": state.schema.json(),
             "write_seconds": round(write_s, 3),
             "metrics": metrics or {},
         }
@@ -103,4 +115,9 @@ class CheckpointManager:
         return max(candidates, key=lambda m: m["superstep"]) if candidates else None
 
     def load(self, spark: SparkSession, manifest: dict[str, Any]) -> DataFrame:
-        return spark.read.parquet(manifest["path"])
+        """Read a checkpoint back with the schema its manifest stores (no
+        schema-inference job); a manifest without one is inferred."""
+        reader = spark.read
+        if "schema" in manifest:
+            reader = reader.schema(StructType.fromJson(json.loads(manifest["schema"])))
+        return reader.parquet(manifest["path"])
