@@ -355,14 +355,12 @@ def _pagerank_throughput(
                      token=f"bench-{path}-{shuffle}")
         no_ckpt = supersteps + warmup_steps + 1
         sp = int(os.environ.get("CHAOS_STREAM_STATE_PARTS", "0")) or None
-        chain = int(os.environ.get("CHAOS_STREAM_CHAIN", "1"))
         pagerank_stream(spark, edges, tol=0.0, max_iters=warmup_steps,
-                        checkpoint_every=no_ckpt, graph=g,
-                        state_partitions=sp, chain=chain)
+                        checkpoint_every=no_ckpt, graph=g, state_partitions=sp)
         t0 = time.time()
         res = pagerank_stream(spark, edges, tol=0.0, max_iters=supersteps,
                               checkpoint_every=no_ckpt, graph=g,
-                              state_partitions=sp, chain=chain)
+                              state_partitions=sp)
         wall = time.time() - t0
         assert res.supersteps == supersteps
         return {

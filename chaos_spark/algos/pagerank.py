@@ -100,7 +100,7 @@ def seed_ranks(verts, deg, n, init_ranks=None) -> DataFrame:
     """Initial ``(id, out_degree, rank)`` frame — the ONE definition of
     the warm-start contract, shared by the join regimes (here) and
     mirrored by the stream path's in-kernel NaN-fill
-    (stream.pagerank_stream init_kernel).
+    (stream._SumPageRank.init_from_rows).
 
     ``init_ranks`` (columns ``id, rank``) warm-starts the run: prior
     ranks are taken verbatim; vertices absent from the prior start at

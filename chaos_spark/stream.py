@@ -1,5 +1,5 @@
-"""Streaming-partition superstep — Chaos's slipstore loop as ONE fused
-Spark stage per iteration (chainable to K iterations per Spark JOB).
+"""Streaming-partition supersteps — Chaos's slipstore loop as ONE fused
+Spark stage per iteration, shared by every ``*_stream`` kernel.
 
 A row-based superstep over the same blocks would run the exchange
 through Spark row machinery: ~|distinct dst per block| x p update ROWS
@@ -15,54 +15,59 @@ This module removes the rows. It is the 1:1 Spark image of how Chaos
 actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
 
 - Vertex state is a BLOB per streaming partition: one Spark row
-  ``(part int, blob binary)`` holding the partition's float64 rank vector,
-  aligned to the build-time sorted id vector (csr.py apply-{q}/ids.npy).
-  Per superstep, Spark moves p rows x |V|/p x 8 bytes — raw vector bytes,
-  no per-row Arrow columns, no shuffle of messages.
+  ``(part int, blob binary)`` holding the partition's state vector
+  (PageRank: float64 ranks), aligned to the build-time sorted id vector
+  (csr.py apply-{q}/ids.npy). Per superstep, Spark moves p rows of raw
+  vector bytes — no per-row Arrow columns, no shuffle of messages.
 - Update streams are PER-TARGET-PARTITION SLICES of each block's partial
   array, written to shared storage (the same block_dir the static CSR
   blocks live in — Chaos's slipstore; tmpfs/page-cache locally, shared
   storage on a real cluster). The v5 block layout orders each block's
   distinct-dst vector by target bucket, so a block's update stream for
-  partition q is ONE contiguous float slice [soff, soff+len) — the only
-  bytes that change per superstep. The dst ids themselves are static and
-  never retransmitted (they live in the build-time apply plan). The
-  global dangling mass is itself a message: each partition publishes its
-  dangling sum next to its partials (stats-{q}.npy) and every apply task
-  folds the same fixed-order sum — no driver round trip carries it.
+  partition q is ONE contiguous slice [soff, soff+len) — the only bytes
+  that change per superstep. The dst ids themselves are static and never
+  retransmitted (they live in the build-time apply plan). Next to its
+  partials each partition publishes ``stats-{q} = [message, stat]``: a
+  global message every apply task folds in the same fixed order
+  (PageRank's dangling mass), and the convergence statistic the DRIVER
+  reads after the barrier — no CollectMetrics node, no listener wait, no
+  driver round trip inside the loop.
 - The superstep is ONE narrow mapInPandas stage over the blob state that
-  FUSES apply and scatter, plus an eager localCheckpoint barrier:
-    1. apply:  contrib = bincount(apos, weights=concat of incoming
-       slices) — build-time positions, zero per-superstep searches;
-       rank' = (1-d)/n + d * (contrib + dangling/n)
-    2. scatter: m = rank' * iod; partial = add.reduceat(m[pos], starts);
-       atomically publish the block's new update stream for step t+1.
-    3. emit (part, blob'); the convergence statistic max|Δrank| is
-       published with the update stream (stats-{q}) and read by the
-       driver from files after the barrier — no CollectMetrics node,
-       no listener wait.
-  The eager checkpoint action is the superstep BARRIER: step t+1's apply
-  can only run after every step-t scatter has published (exactly
-  X-Stream's phase barrier between scatter and gather).
-- ``chain=K`` stacks K fused layers inside ONE Spark job, with a
-  round-robin repartition of the p blob rows (a ~|V| x 8-byte shuffle)
-  between layers: the shuffle dependency IS the superstep barrier, so the
-  per-JOB driver costs (plan analysis, job scheduling, py4j) are paid
-  once per K supersteps. Convergence is still recorded per layer (each
-  layer's stats files); with tol > 0 the run stops at the
-  first job whose layers converged — the state may then be up to K-1
-  supersteps MORE converged than the join path would return, so exact
-  superstep-count parity holds for chain=1 (the default) and fixed-iters
-  runs (tol=0), which is what the scaling bench uses.
+  FUSES gather/apply and scatter, plus an eager localCheckpoint barrier:
+  step t+1's apply can only run after every step-t scatter has published
+  (exactly X-Stream's phase barrier between scatter and gather).
+
+One loop, many kernels (``_stream_loop``, the Pregelix shape: a vertex
+program as a UDF over one generic plan). The loop owns the graph build
+or reuse, the cold / warm / resumed init, the fused superstep jobs, the
+strict blob/plan alignment checks, checkpoint cadence, update-stream
+cleanup, the expand to ``(id, ...)`` rows, and releasing an ephemeral
+block dir it built. A kernel is a ``_StreamKernel`` plugin that supplies
+only what differs (PageRank's ``_SumPageRank`` is below; the others live
+in stream_algos; scc_stream keeps its own loop because it runs two
+graphs):
+
+- ``prep_graph(spark, edges, num_partitions, token, num_edges)``: the
+  block flavor (default plain undirected blocks);
+- ``bind(n, qs)``: run facts, |V| and the non-empty partitions;
+- ``init_blob(ids)``, and ``init_from_rows(ids, pdf)`` for a warm start
+  from ``(id, ...)`` rows;
+- ``gather_apply(plan, upd_dir, p, q, prev) -> (blob, stat)``;
+- ``scatter(upd_dir, q, blk, plan, blob, stat)``: publish partial-{q}
+  and stats-{q};
+- ``read_stat(upd_dir, qs)``, ``converged(stat)`` and ``stat_key``: the
+  driver-side statistic, its test, and its history key (default: changed
+  vertices summed over partitions, converged at 0);
+- ``expand_pdf(plan, blob)`` with ``out_schema``, and ``blob_ok`` for
+  blobs that are not one word per vertex.
 
 Correctness contract: identical supersteps and results vs the join
-path — the apply formula, dangling redistribution, and convergence test
-are the same expressions; per-dst partial sums are a fixed reduceat over
-the build-time edge order, and the cross-block apply sum and the
-dangling-mass fold run in fixed block order, so results are
-deterministic run-to-run at any parallelism.
-Allclose vs the join path (float association differs there),
-property-tested in tests/test_stream.py.
+paths. For PageRank the apply formula, dangling redistribution, and
+convergence test are the same expressions; per-dst partial sums are a
+fixed reduceat over the build-time edge order, and the cross-block apply
+sum and the dangling-mass fold run in fixed block order, so results are
+deterministic run-to-run at any parallelism (allclose vs the join path,
+whose float association differs; tests/test_stream.py).
 
 Retry/speculation safety: update-stream files are published by atomic
 rename and their content is a pure function of (blob state, static block)
@@ -73,15 +78,15 @@ layout never collide; consumed dirs are deleted as each job completes.
 Checkpoint/resume: the blob state is written as-is (part, blob) through
 the standard CheckpointManager (parquet + per-partition manifest +
 config-sha refusal). On resume the update stream is regenerated from the
-loaded blobs by one scatter-only job — update streams (and the dangling
-mass riding them) are derived state and are never checkpointed.
+loaded blobs by one scatter-only job — update streams (and the messages
+riding them) are derived state and are never checkpointed.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
-import time as _time
 import uuid
 
 import numpy as np
@@ -91,7 +96,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .checkpoint import CheckpointManager
 from .engine import (
     RunResult,
-    _host_cpu_jiffies,
     materialize,
     maybe_explain,
     release_state,
@@ -107,24 +111,6 @@ _STATE_SCHEMA = f"{PART} int, {BLOB} binary"
 # Worker-level memo: dangling mass per update dir (each worker folds the
 # p tiny stats files once per superstep, not once per task/row).
 _DM_CACHE: dict[str, float] = {}
-
-
-def _prof_write(prof_dir, superstep, q, t00, t0, t1, t2):
-    """CHAOS_STREAM_PROF diagnostics: per-task phase seconds (drain = Arrow
-    decode wait before the first row, apply, scatter) + absolute task
-    start/end, so the in-task time can be separated from scheduling and
-    barrier gaps. Dev-only, off unless the env var is set."""
-    import json
-
-    os.makedirs(prof_dir, exist_ok=True)
-    with open(os.path.join(
-        prof_dir, f"s{superstep}-q{q}-{os.getpid()}.json"
-    ), "w") as f:
-        json.dump({
-            "superstep": superstep, "q": q,
-            "drain": t0 - t00, "apply": t1 - t0, "scatter": t2 - t1,
-            "t_start": t00, "t_end": t2, "pid": os.getpid(),
-        }, f)
 
 
 def _upd_dir(block_dir: str, run_id: str, superstep: int) -> str:
@@ -180,194 +166,122 @@ def _publish_arr(upd_dir: str, name: str, arr: np.ndarray) -> None:
         raise
 
 
-def _scatter_publish(
-    upd_dir: str, q: int, blk, rank: np.ndarray, iod: np.ndarray,
-    delta: float = float("inf"),
-) -> None:
-    """Block-local scatter: messages m = rank/W(u), pre-aggregated per dst
-    via reduceat over the build-time segment starts (a fixed, arrival-
-    independent accumulation order), published as this block's update
-    stream together with the partition's dangling mass."""
-    if blk is not None:
-        m = rank * iod
-        me = m[blk["pos"]]
-        if "w" in blk:  # type-2 block: message = rank(u)/W(u) * w(e)
-            me = me * blk["w"]
-        _publish_arr(upd_dir, f"partial-{q}", np.add.reduceat(me, blk["starts"]))
-    dang = float(rank[iod == 0.0].sum())
-    # stats-{q} = [dangling, max-delta]: dangling is a MESSAGE (peer apply
-    # tasks fold it next superstep); delta is the convergence statistic the
-    # DRIVER reads after the barrier — riding the same channel avoids a
-    # CollectMetrics node + listener wait per job entirely.
-    _publish_arr(upd_dir, f"stats-{q}", np.array([dang, delta]))
-
-
-def _dangling_mass(upd_dir: str, qs) -> float:
-    """Fixed-order fold of the per-partition dangling masses riding the
-    update stream — every task computes the identical float.
+def _stats(upd_dir: str, qs) -> list[np.ndarray]:
+    """The ``[message, stat]`` rows every partition in ``qs`` published
+    with its update stream, in fixed partition order.
 
     ``qs`` is the exact set of non-empty state partitions, recorded once
-    by the init/scatter job: every one of them published a stats file with
-    its update stream (edge-less blocks included), so a missing file is a
-    publish or barrier failure — np.load's FileNotFoundError is the loud
-    failure we want, never a silent zero contribution."""
-    dm = _DM_CACHE.get(upd_dir)
-    if dm is not None:
-        return dm
-    total = 0.0
-    for q in qs:
-        total += float(np.load(os.path.join(upd_dir, f"stats-{q}.npy"))[0])
-    if len(_DM_CACHE) > 64:
-        _DM_CACHE.clear()
-    _DM_CACHE[upd_dir] = total
-    return total
+    by the driver: every one of them published a stats file (edge-less
+    blocks included), so a missing file is a publish or barrier failure —
+    np.load's FileNotFoundError is the loud failure we want, never a
+    silently understated statistic or message."""
+    return [np.load(os.path.join(upd_dir, f"stats-{q}.npy")) for q in qs]
 
 
-def _read_delta(upd_dir: str, qs) -> float:
-    """Driver-side convergence read: max of the per-partition deltas
-    published with the update stream (file reads, no CollectMetrics).
-    Strict over the recorded non-empty partition set ``qs`` — a missing
-    stats file raises instead of understating the convergence delta."""
-    mx = 0.0
-    for q in qs:
-        mx = max(mx, float(np.load(os.path.join(upd_dir, f"stats-{q}.npy"))[1]))
-    return mx
+class _StreamKernel:
+    """Plugin contract of ``_stream_loop`` (module docstring), with the
+    defaults most kernels share: plain undirected blocks, one state word
+    per vertex, and the count of changed vertices as the convergence
+    statistic — summed over partitions, converged at zero."""
+
+    stat_key = "changed"
+
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
+        return CsrGraph(
+            spark, edges, num_partitions=num_partitions, token=token,
+            undirected=True, num_edges=num_edges,
+        )
+
+    def bind(self, n: int, qs: tuple) -> None:
+        """Run facts, known once the graph is: |V| and the non-empty
+        partitions. Set before any kernel ships to the executors."""
+
+    def blob_ok(self, n: int, blob_len: int) -> bool:
+        return n == blob_len
+
+    def read_stat(self, upd_dir: str, qs):
+        return int(sum(float(s[1]) for s in _stats(upd_dir, qs)))
+
+    def converged(self, stat) -> bool:
+        return stat == 0
 
 
-def _gather(plan, upd_dir: str, p: int) -> np.ndarray:
-    """Apply-side gather: one bincount over the build-time positions of
-    every incoming update slice (fixed block order -> deterministic
-    float association)."""
-    parts = []
-    aoff, soff = plan["aoff"], plan["soff"]
-    for b in range(p):
-        ln = int(aoff[b + 1] - aoff[b])
-        if ln <= 0:
-            continue
-        f = os.path.join(upd_dir, f"partial-{b}.npy")
-        arr = np.load(f, mmap_mode="r")
-        parts.append(np.asarray(arr[int(soff[b]):int(soff[b]) + ln]))
-    n_state = len(plan["iod"])
-    if not parts:
-        return np.zeros(n_state)
-    w = parts[0] if len(parts) == 1 else np.concatenate(parts)
-    return np.bincount(plan["apos"], weights=w, minlength=n_state)
-
-
-def pagerank_stream(
+def _stream_loop(
     spark: SparkSession,
     edges: DataFrame,
-    damping: float = 0.85,
-    tol: float = 1e-6,
-    max_iters: int = 100,
+    algo: _StreamKernel,
+    max_iters: int,
     num_partitions: int | None = None,
     token: str | None = None,
-    weight_col: str | None = None,
     checkpointer: CheckpointManager | None = None,
     checkpoint_every: int = 5,
     graph: CsrGraph | None = None,
     state_partitions: int | None = None,
-    chain: int = 1,
-    init_ranks: DataFrame | None = None,
-    sources: list[int] | None = None,
     num_edges: int | None = None,
+    init_rows: DataFrame | None = None,
 ) -> RunResult:
-    """PageRank over the fused streaming-partition superstep.
+    """Run ``algo`` over the fused stream superstep (module docstring).
 
-    ``sources``: personalized PageRank — teleport and dangling
-    redistribution follow ``pref(v) = 1/|S|`` on the source set (0
-    elsewhere) and ``rank0 = pref``, the exact recurrence of
-    algos.pagerank(sources=...) and its unrolled oracle. The preference
-    vector is derived in-kernel from the partition's id vector
-    (np.isin against the closure-shipped sorted source array), so blobs,
-    update streams, and checkpoints are unchanged.
-
-    Same semantics as algos.pagerank: damping with
-    dangling-mass redistribution, convergence when max |Δrank| < tol,
-    superstep count identical to the join path (for chain=1; see module
-    docstring for the chain>1 convergence granularity). ``graph`` lets
-    callers (bench warmup → timed run) reuse a built CsrGraph.
+    Init → one fused mapInPandas job per superstep with the
+    eager-localCheckpoint barrier → expand. A cold init is ONE fused
+    init+scatter job; a warm start (``init_rows``: an ``(id, ...)`` frame
+    joined onto every vertex and handed to ``algo.init_from_rows``) or a
+    checkpoint resume adds one scatter job that regenerates the starting
+    update stream. A checkpoint resume takes precedence over
+    ``init_rows``. ``graph`` reuses a built CsrGraph; a graph the loop
+    built itself is released before returning.
 
     ``state_partitions``: physical partition count of the BLOB state —
     independent of the block count p, because every kernel routes by the
-    row's ``part`` value, never by task index. Blob rows are ~|V|/p x 8
-    bytes, so the per-task mapInPandas machinery (JVM task setup, Python
-    worker round trip, Arrow stream open/close — measured ~0.13 s/task
-    against ~0.03 s of kernel math on the 64M-edge bench graph) dominates
-    when each task carries ONE row; packing several blob rows per task
-    amortizes it. Default p (one row per task).
-
-    ``chain``: supersteps per Spark job (module docstring). Default 1.
-
-    ``init_ranks``: warm-start from a prior ``(id, rank)`` frame — same
-    contract as algos.pagerank (prior taken verbatim, absent vertices
-    start at 1/n, mass self-corrects; exact continuation on an unchanged
-    graph). This is the scale path's incremental re-rank handoff after
-    the streaming ingest lane grows the graph. A checkpoint resume, when
-    present, takes precedence over ``init_ranks``.
+    row's ``part`` value, never by task index. The per-task mapInPandas
+    machinery (JVM task setup, Python worker round trip, Arrow stream
+    open/close — measured ~0.13 s/task against ~0.03 s of kernel math on
+    the 64M-edge bench graph) dominates when each task carries ONE row;
+    packing several blob rows per task amortizes it. Default p.
     """
-    if weight_col is not None:
-        from .algos.pagerank import _validate_weights
-
-        _validate_weights(edges, weight_col)
-    g = graph or CsrGraph(
-        spark, edges, num_partitions=num_partitions, token=token,
-        weight_col=weight_col, num_edges=num_edges,
+    g = graph or algo.prep_graph(
+        spark, edges, num_partitions, token, num_edges
     )
-    if chain < 1:
-        raise ValueError("chain must be >= 1")
     n = g.num_vertices
     p = g.p
     token_, block_dir = g.cache_token, g.block_dir
     run_id = uuid.uuid4().hex[:8]
-    damping = float(damping)
-    if sources is not None and not sources:
-        raise ValueError("sources must be a non-empty id list")
-    src_arr = (
-        None if sources is None
-        else np.unique(np.asarray(sorted(int(s) for s in sources), np.int64))
-    )
+    # The exact set of non-empty state partitions: exactly the vertex
+    # partitions the build wrote an apply plan for (a blob row exists iff
+    # the partition has vertices). The strict stats folds check precisely
+    # these files each superstep.
+    qs = _apply_parts(block_dir)
+    algo.bind(n, qs)
 
-    def _pref(ids: np.ndarray) -> np.ndarray | float:
-        """Per-partition preference vector (uniform 1/n when no sources)."""
-        if src_arr is None:
-            return 1.0 / n
-        return np.isin(ids, src_arr).astype(np.float64) / len(src_arr)
-
-    def range_init_kernel_for(superstep: int):
+    def init_kernel_for(superstep: int):
         ud = _upd_dir(block_dir, run_id, superstep)
 
-        def range_init_kernel(batches):
-            # Cold init (v6): blobs are derived straight from the apply
-            # plans' sorted id vectors over a shuffle-free spark.range(p)
-            # — no vertex rows cross the boundary at all (the plan IS the
+        def init_kernel(batches):
+            # Cold init (v6): blobs derive straight from the apply plans'
+            # sorted id vectors over a shuffle-free spark.range(p) — no
+            # vertex rows cross the boundary (the plan IS the
             # authoritative layout; runtime alignment stays checked by
-            # every apply/expand kernel). The initial scatter is FUSED in
-            # (publish the starting update stream here), so cold init is
-            # ONE job instead of init + scatter.
+            # the apply/expand kernels' blob/plan length guards). The
+            # initial scatter is FUSED in: cold init is ONE job.
             for pdf in batches:
                 for qv in pdf["id"].tolist():
                     q = int(qv)
                     plan = _load_apply_plan(token_, q, block_dir)
                     if plan is None:
                         continue
-                    ids = np.asarray(plan["ids"])
-                    if src_arr is not None:
-                        rank = np.asarray(_pref(ids))  # PPR: rank0 = pref
-                    else:
-                        rank = np.full(len(ids), 1.0 / n)
+                    blob = algo.init_blob(np.asarray(plan["ids"]))
                     blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud, q, blk, rank, np.asarray(plan["iod"]))
-                    yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
+                    algo.scatter(ud, q, blk, plan, blob, float("inf"))
+                    yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
 
-        return range_init_kernel
+        return init_kernel
 
-    def init_kernel(batches):
-        # Warm init (init_ranks): prior ranks ride the seed rows, aligned
-        # to the apply plan's sorted id vector (strict-checked — the one
-        # chance to verify the row layout before ids stop crossing the
-        # boundary). A partition may arrive as several Arrow batches —
-        # concat before blob-ifying.
+    def rows_init_kernel(batches):
+        # Warm init: the seed rows are aligned to the apply plan's sorted
+        # id vector (strict-checked — the one chance to verify the row
+        # layout before ids stop crossing the boundary). A partition may
+        # arrive as several Arrow batches — concat before blob-ifying.
         from pyspark import TaskContext
 
         pdfs = [pdf for pdf in batches if len(pdf)]
@@ -377,25 +291,16 @@ def pagerank_stream(
         q = TaskContext.get().partitionId()
         plan = _load_apply_plan(token_, q, block_dir)
         if plan is None:
-            raise RuntimeError(f"stream init: no apply plan for partition {q}")
+            raise RuntimeError(f"{algo.name} init: no apply plan for partition {q}")
         pdf = pdf.sort_values(ID)
         ids = pdf[ID].to_numpy(dtype=np.int64)
         if not np.array_equal(plan["ids"], ids):
             raise RuntimeError(
-                "stream init: state partition ids do not match the "
+                f"{algo.name} init: state partition ids do not match the "
                 f"apply plan for partition {q} — partitioner mismatch"
             )
-        if "_prank" in pdf.columns:
-            # Warm start: prior ranks ride the seed rows (left join on
-            # id); NaN = vertex absent from the prior -> 1/n (the join
-            # path's seed_ranks fill, sources or not).
-            rank = pdf["_prank"].to_numpy(dtype=np.float64).copy()
-            rank[np.isnan(rank)] = 1.0 / n
-        elif src_arr is not None:
-            rank = np.asarray(_pref(ids))  # PPR start: rank0 = pref
-        else:
-            rank = np.full(len(ids), 1.0 / n)
-        yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
+        blob = algo.init_from_rows(ids, pdf)
+        yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
 
     def scatter_kernel_for(superstep: int):
         ud = _upd_dir(block_dir, run_id, superstep)
@@ -404,52 +309,37 @@ def pagerank_stream(
             for pdf in batches:
                 for _, row in pdf.iterrows():
                     q = int(row[PART])
-                    rank = np.frombuffer(row[BLOB], dtype=np.float64)
+                    blob = np.frombuffer(row[BLOB], dtype=algo.dtype)
                     plan = _load_apply_plan(token_, q, block_dir)
                     blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud, q, blk, rank, np.asarray(plan["iod"]))
-                    yield pd.DataFrame({PART: [q], "n": [len(rank)]})
+                    algo.scatter(ud, q, blk, plan, blob, float("inf"))
+                    # Vertex count from the apply plan, not len(blob):
+                    # multi-word-per-vertex blobs (HyperANF registers +
+                    # nf history) have len(blob) != |V_q|.
+                    yield pd.DataFrame({PART: [q], "n": [len(plan["ids"])]})
 
         return scatter_only
 
-    def fused_kernel_for(superstep: int, qs: tuple):
+    def fused_kernel_for(superstep: int):
         """Apply step ``superstep`` (reads upd of superstep-1), then
-        scatter for step superstep+1 (writes upd of superstep). ``qs`` is
-        the recorded non-empty state-partition set (strict stats fold)."""
+        scatter for step superstep+1 (writes upd of superstep)."""
         ud_in = _upd_dir(block_dir, run_id, superstep - 1)
         ud_out = _upd_dir(block_dir, run_id, superstep)
 
         def fused(batches):
-            prof_dir = os.environ.get("CHAOS_STREAM_PROF")
-            t00 = _time.perf_counter()
             for pdf in batches:
                 for _, row in pdf.iterrows():
-                    t0 = _time.perf_counter()
                     q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=np.float64)
+                    prev = np.frombuffer(row[BLOB], dtype=algo.dtype)
                     plan = _load_apply_plan(token_, q, block_dir)
-                    if plan is None or len(plan["iod"]) != len(prev):
+                    if plan is None or not algo.blob_ok(len(plan["ids"]), len(prev)):
                         raise RuntimeError(
-                            f"stream apply: blob/plan mismatch at partition {q}"
+                            f"{algo.name} apply: blob/plan mismatch at partition {q}"
                         )
-                    dm = _dangling_mass(ud_in, qs)
-                    contrib = _gather(plan, ud_in, p)
-                    iod = np.asarray(plan["iod"])
-                    if src_arr is None:
-                        rank = (1.0 - damping) / n + damping * (contrib + dm / n)
-                    else:
-                        pref = _pref(np.asarray(plan["ids"]))
-                        rank = (1.0 - damping) * pref + damping * (
-                            contrib + dm * pref
-                        )
-                    delta = float(np.max(np.abs(rank - prev))) if len(rank) else 0.0
-                    t1 = _time.perf_counter()
+                    new, stat = algo.gather_apply(plan, ud_in, p, q, prev)
                     blk = _load_disk_block(token_, q, block_dir)
-                    _scatter_publish(ud_out, q, blk, rank, iod, delta)
-                    t2 = _time.perf_counter()
-                    if prof_dir:
-                        _prof_write(prof_dir, superstep, q, t00, t0, t1, t2)
-                    yield pd.DataFrame({PART: [q], BLOB: [rank.tobytes()]})
+                    algo.scatter(ud_out, q, blk, plan, new, float(stat))
+                    yield pd.DataFrame({PART: [q], BLOB: [new.tobytes()]})
 
         return fused
 
@@ -470,28 +360,17 @@ def pagerank_stream(
             state = realign(checkpointer.load(spark, manifest))
 
     with superstep_conf(spark, p):
-        # The exact set of non-empty state partitions: exactly the vertex
-        # partitions the build wrote an apply plan for (a blob row exists
-        # iff the partition has vertices). The strict stats fold
-        # (_dangling_mass/_read_delta) checks precisely these files each
-        # superstep, so a publish/barrier failure raises instead of
-        # folding a silently-wrong dangling mass or delta.
-        qs = _apply_parts(block_dir)
-        if state is None and init_ranks is None:
-            # ONE fused init+scatter job (see range_init_kernel_for).
+        if state is None and init_rows is None:
+            # ONE fused init+scatter job (see init_kernel_for).
             state = spark.range(0, p, 1, p).mapInPandas(
-                range_init_kernel_for(start), schema=_STATE_SCHEMA
+                init_kernel_for(start), schema=_STATE_SCHEMA
             ).localCheckpoint(eager=True)
             if sp != p:
                 state = materialize(state.repartition(sp))
         else:
             if state is None:
-                pri = init_ranks.select(
-                    F.col(ID), F.col("rank").cast("double").alias("_prank")
-                )
-                seed = g.verts.join(pri, ID, "left")
-                state = g.align_state(seed).mapInPandas(
-                    init_kernel, schema=_STATE_SCHEMA
+                state = g.align_state(g.verts.join(init_rows, ID, "left")).mapInPandas(
+                    rows_init_kernel, schema=_STATE_SCHEMA
                 ).localCheckpoint(eager=True)
             else:
                 state = state.select(PART, BLOB).localCheckpoint(eager=True)
@@ -499,11 +378,9 @@ def pagerank_stream(
                 # Lazy checkpoint: the scatter job below is the action
                 # that materializes the repacked layout.
                 state = materialize(state.repartition(sp))
-            # Publish the update stream of the starting state (derived
-            # state: regenerated rather than checkpointed — it also
-            # carries the dangling mass). One tiny job, warm-init/resume
-            # only — steady-state supersteps publish inside the fused
-            # stage.
+            # Update stream of the starting state: derived state,
+            # regenerated rather than checkpointed (one tiny job);
+            # steady-state supersteps publish inside the fused stage.
             rows = state.mapInPandas(
                 scatter_kernel_for(start), schema=f"{PART} int, n long"
             ).collect()
@@ -511,140 +388,216 @@ def pagerank_stream(
             assert tuple(sorted(int(r[PART]) for r in rows)) == qs
 
         try:
-            fk = lambda s: fused_kernel_for(s, qs)  # noqa: E731
-            read_delta = lambda s: _read_delta(  # noqa: E731
-                _upd_dir(block_dir, run_id, s), qs
+            def step(cur: DataFrame, superstep: int):
+                pre = cur.mapInPandas(
+                    fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA
+                )
+                maybe_explain(pre, "superstep")
+                new = pre.localCheckpoint(eager=True)
+                # The barrier just completed, so every stats file of step
+                # superstep+1 is published.
+                stat = algo.read_stat(_upd_dir(block_dir, run_id, superstep + 1), qs)
+                # Step superstep+1 published upd-(superstep+1) and consumed
+                # upd-superstep; upd-(superstep-1) is now unreachable.
+                if superstep >= 1:
+                    shutil.rmtree(
+                        _upd_dir(block_dir, run_id, superstep - 1),
+                        ignore_errors=True,
+                    )
+                return new, {"converged": algo.converged(stat), algo.stat_key: stat}
+
+            result = run_supersteps(
+                state, step, max_iters, checkpointer,
+                _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
+                start_superstep=start, realign=realign,
             )
-            if chain == 1:
-                result = _run_unchained(
-                    state, fk, max_iters, checkpointer,
-                    _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
-                    start, realign, tol, read_delta,
-                    lambda s: _upd_cleanup(block_dir, run_id, s),
-                )
-            else:
-                result = _run_chained(
-                    state, fk, max_iters, checkpointer,
-                    checkpoint_every, start, tol, chain, sp, read_delta,
-                    lambda lo, hi: _upd_cleanup_range(block_dir, run_id, lo, hi),
-                )
 
             def expand(batches):
                 for pdf in batches:
                     for _, row in pdf.iterrows():
                         q = int(row[PART])
                         plan = _load_apply_plan(token_, q, block_dir)
-                        yield pd.DataFrame({
-                            ID: np.asarray(plan["ids"]),
-                            "rank": np.frombuffer(row[BLOB], np.float64),
-                        })
+                        yield algo.expand_pdf(plan, row[BLOB])
 
             blob_state = result.state
+            # Eager localCheckpoint (not persist): the expanded rows must
+            # never be recomputed — the apply plans they read may be an
+            # EPHEMERAL block dir reclaimed by g.unpersist() below.
             result.state = blob_state.mapInPandas(
-                expand, schema=f"{ID} long, rank double"
-            ).persist()
-            result.state.count()  # blob rows may live in an ephemeral dir
+                expand, schema=algo.out_schema
+            ).localCheckpoint(eager=True)
+            release_state(blob_state)
         finally:
             # Update streams are derived per-run state — always reclaimed.
-            import glob as _glob
-
-            for d in _glob.glob(
-                os.path.join(block_dir, f"upd-{run_id}-*")
-            ):
+            for d in glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
                 shutil.rmtree(d, ignore_errors=True)
+    if graph is None:
+        g.unpersist()
     return result
 
 
-def _upd_cleanup(block_dir: str, run_id: str, superstep: int) -> None:
-    shutil.rmtree(_upd_dir(block_dir, run_id, superstep), ignore_errors=True)
+class _SumPageRank(_StreamKernel):
+    """PageRank over the fused stream superstep: a float64 rank blob,
+    add-fold gather, and the dangling mass as a global message on
+    ``stats-{q}``. Convergence: the MAX over partitions of max |Δrank|,
+    compared against ``tol``.
+
+    ``sources``: personalized PageRank — teleport and dangling
+    redistribution follow ``pref(v) = 1/|S|`` on the source set (0
+    elsewhere) and ``rank0 = pref``. The preference vector is derived
+    in-kernel from the partition's id vector (np.isin against the sorted
+    source array shipped with the plugin), so blobs, update streams, and
+    checkpoints are unchanged."""
+
+    name = "pagerank_stream"
+    dtype = np.float64
+    out_schema = f"{ID} long, rank double"
+    stat_key = "delta"
+
+    def __init__(self, damping: float, tol: float, sources,
+                 weight_col: str | None):
+        self.damping = float(damping)
+        self.tol = tol
+        self.src_arr = (
+            None if sources is None
+            else np.unique(np.asarray([int(s) for s in sources], np.int64))
+        )
+        self.weight_col = weight_col
+
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
+        return CsrGraph(
+            spark, edges, num_partitions=num_partitions, token=token,
+            weight_col=self.weight_col, num_edges=num_edges,
+        )
+
+    def bind(self, n: int, qs: tuple) -> None:
+        self.n, self.qs = n, qs
+
+    def _pref(self, ids: np.ndarray) -> np.ndarray:
+        return np.isin(ids, self.src_arr).astype(np.float64) / len(self.src_arr)
+
+    def init_blob(self, ids: np.ndarray) -> np.ndarray:
+        if self.src_arr is not None:
+            return self._pref(ids)  # PPR start: rank0 = pref
+        return np.full(len(ids), 1.0 / self.n)
+
+    def init_from_rows(self, ids: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
+        # Prior ranks taken verbatim; NaN = vertex absent from the prior
+        # -> 1/n (the join path's seed_ranks fill, sources or not).
+        rank = pdf["rank"].to_numpy(dtype=np.float64).copy()
+        rank[np.isnan(rank)] = 1.0 / self.n
+        return rank
+
+    def _dangling_mass(self, upd_dir: str) -> float:
+        """Fixed-order fold of the per-partition dangling masses riding
+        the update stream — every task computes the identical float."""
+        dm = _DM_CACHE.get(upd_dir)
+        if dm is None:
+            dm = sum(float(s[0]) for s in _stats(upd_dir, self.qs))
+            if len(_DM_CACHE) > 64:
+                _DM_CACHE.clear()
+            _DM_CACHE[upd_dir] = dm
+        return dm
+
+    def gather_apply(self, plan, upd_dir: str, p: int, q: int,
+                     prev: np.ndarray) -> tuple[np.ndarray, float]:
+        # Add-fold gather: one bincount over the build-time positions of
+        # every incoming update slice (fixed block order -> deterministic
+        # float association).
+        parts = []
+        aoff, soff = plan["aoff"], plan["soff"]
+        for b in range(p):
+            ln = int(aoff[b + 1] - aoff[b])
+            if ln <= 0:
+                continue
+            arr = np.load(os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r")
+            parts.append(np.asarray(arr[int(soff[b]):int(soff[b]) + ln]))
+        contrib = np.zeros(len(prev))
+        if parts:
+            w = parts[0] if len(parts) == 1 else np.concatenate(parts)
+            contrib = np.bincount(plan["apos"], weights=w, minlength=len(prev))
+        d, dm = self.damping, self._dangling_mass(upd_dir)
+        if self.src_arr is None:
+            rank = (1.0 - d) / self.n + d * (contrib + dm / self.n)
+        else:
+            pref = self._pref(np.asarray(plan["ids"]))
+            rank = (1.0 - d) * pref + d * (contrib + dm * pref)
+        delta = float(np.max(np.abs(rank - prev))) if len(rank) else 0.0
+        return rank, delta
+
+    def scatter(self, upd_dir: str, q: int, blk, plan, rank: np.ndarray,
+                delta: float) -> None:
+        # Messages m = rank/W(u), pre-aggregated per dst via reduceat over
+        # the build-time segment starts (a fixed, arrival-independent
+        # accumulation order), published with the partition's dangling
+        # mass as stats-{q} = [dangling, delta].
+        iod = np.asarray(plan["iod"])
+        if blk is not None:
+            me = (rank * iod)[blk["pos"]]
+            if "w" in blk:  # type-2 block: message = rank(u)/W(u) * w(e)
+                me = me * blk["w"]
+            _publish_arr(upd_dir, f"partial-{q}", np.add.reduceat(me, blk["starts"]))
+        dang = float(rank[iod == 0.0].sum())
+        _publish_arr(upd_dir, f"stats-{q}", np.array([dang, delta]))
+
+    def read_stat(self, upd_dir: str, qs) -> float:
+        return max((float(s[1]) for s in _stats(upd_dir, qs)), default=0.0)
+
+    def converged(self, delta: float) -> bool:
+        return delta < self.tol
+
+    def expand_pdf(self, plan, blob: bytes) -> pd.DataFrame:
+        return pd.DataFrame({
+            ID: np.asarray(plan["ids"]),
+            "rank": np.frombuffer(blob, np.float64),
+        })
 
 
-def _upd_cleanup_range(block_dir: str, run_id: str, lo: int, hi: int) -> None:
-    for s in range(lo, hi):
-        _upd_cleanup(block_dir, run_id, s)
-
-
-def _run_unchained(
-    state, fused_kernel_for, max_iters, checkpointer, checkpoint_every,
-    start, realign, tol, read_delta, cleanup,
+def pagerank_stream(
+    spark: SparkSession,
+    edges: DataFrame,
+    damping: float = 0.85,
+    tol: float = 1e-6,
+    max_iters: int = 100,
+    num_partitions: int | None = None,
+    token: str | None = None,
+    weight_col: str | None = None,
+    checkpointer: CheckpointManager | None = None,
+    checkpoint_every: int = 5,
+    graph: CsrGraph | None = None,
+    state_partitions: int | None = None,
+    init_ranks: DataFrame | None = None,
+    sources: list[int] | None = None,
+    num_edges: int | None = None,
 ) -> RunResult:
-    """chain=1: one fused job per superstep, driven by the generic
-    engine loop (checkpoint cadence, steal accounting, release_state)."""
+    """PageRank over the fused streaming-partition superstep.
 
-    def step(cur: DataFrame, superstep: int):
-        pre = cur.mapInPandas(fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA)
-        maybe_explain(pre, "superstep")
-        new = pre.localCheckpoint(eager=True)
-        # Convergence statistic rides the update stream (no CollectMetrics
-        # node, no listener wait): the barrier just completed, so the
-        # stats files of step superstep+1 are all published.
-        delta = read_delta(superstep + 1)
-        # Step superstep+1 published upd-(superstep+1) and consumed
-        # upd-superstep; upd-(superstep-1) is now unreachable.
-        if superstep >= 1:
-            cleanup(superstep - 1)
-        return new, {"converged": delta < tol, "delta": delta}
+    Same semantics as algos.pagerank: damping with dangling-mass
+    redistribution, convergence when max |Δrank| < tol, superstep count
+    identical to the join path. ``sources``: personalized PageRank, the
+    exact recurrence of algos.pagerank(sources=...) (see _SumPageRank).
+    ``graph`` lets callers (bench warmup → timed run) reuse a built
+    CsrGraph; ``state_partitions`` as in _stream_loop.
 
-    return run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every,
-        start_superstep=start, realign=realign,
-    )
+    ``init_ranks``: warm-start from a prior ``(id, rank)`` frame — same
+    contract as algos.pagerank (prior taken verbatim, absent vertices
+    start at 1/n, mass self-corrects; exact continuation on an unchanged
+    graph). This is the scale path's incremental re-rank handoff after
+    the streaming ingest lane grows the graph. A checkpoint resume, when
+    present, takes precedence over ``init_ranks``.
+    """
+    if weight_col is not None:
+        from .algos.pagerank import _validate_weights
 
-
-def _run_chained(
-    state, fused_kernel_for, max_iters, checkpointer, checkpoint_every,
-    start, tol, chain, sp, read_delta, cleanup_range,
-) -> RunResult:
-    """chain>1: K fused layers per Spark job. The round-robin repartition
-    of the p blob rows between layers is the superstep barrier (a shuffle
-    dependency: no layer-t+1 task starts before every layer-t task has
-    published its update stream). Per-layer convergence rides the per-layer
-    update-stream stats files (read by the driver after the job, before
-    cleanup); per-layer seconds are the job wall amortized over its layers
-    (the barriers are internal, so finer attribution would be fiction)."""
-    history: list[dict] = []
-    t = start
-    converged = False
-    prev = None
-    while t < max_iters and not converged:
-        k = min(chain, max_iters - t)
-        cpu0 = _host_cpu_jiffies()
-        t0 = _time.time()
-        df = state
-        for i in range(1, k + 1):
-            df = df.mapInPandas(fused_kernel_for(t + i), schema=_STATE_SCHEMA)
-            if i < k:
-                df = df.repartition(sp)
-        new = df.localCheckpoint(eager=True)
-        wall = _time.time() - t0
-        cpu1 = _host_cpu_jiffies()
-        steal = None
-        if cpu0 is not None and cpu1 is not None and cpu1[1] > cpu0[1]:
-            steal = round((cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]), 4)
-        deltas = [read_delta(t + i) for i in range(1, k + 1)]
-        for i, dlt in enumerate(deltas):
-            entry = {
-                "superstep": t + i + 1,
-                "seconds": round(wall / k, 4),
-                "delta": dlt,
-                "chained": k,
-            }
-            if steal is not None:
-                entry["steal_frac"] = steal
-            history.append(entry)
-        converged = tol > 0 and any(d < tol for d in deltas)
-        # Layers consumed upd[t .. t+k-1]; upd[t+k] feeds the next job.
-        cleanup_range(t, t + k)
-        if prev is not None:
-            release_state(prev)
-        prev, state = state, new
-        t_before = t
-        t += k
-        if checkpointer and (
-            converged
-            or (t // checkpoint_every) > (t_before // checkpoint_every)
-        ):
-            checkpointer.save(state, t, metrics=history[-1])
-    return RunResult(
-        state=state, supersteps=t, converged=converged, history=history
+        _validate_weights(edges, weight_col)
+    if sources is not None and not sources:
+        raise ValueError("sources must be a non-empty id list")
+    init_rows = None
+    if init_ranks is not None:
+        init_rows = init_ranks.select(ID, F.col("rank").cast("double").alias("rank"))
+    return _stream_loop(
+        spark, edges, _SumPageRank(damping, tol, sources, weight_col),
+        max_iters, num_partitions, token, checkpointer, checkpoint_every,
+        graph, state_partitions, num_edges, init_rows,
     )

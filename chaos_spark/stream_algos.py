@@ -1,18 +1,11 @@
 """Fused streaming-partition supersteps for CC (hash-min), LPA (mode
-label), BFS/SSSP (min-plus), HyperANF (register-max), and k-core
-(threshold-peel degree sums) — the slipstore stream path of
-chaos_spark.stream generalized past PageRank, per the r4 verdict ("the
-apply plan already carries the same apos/boff routing a hash-min or
-mode-label blob kernel needs").
-
-Same execution shape as stream.pagerank_stream ([C15] §4 slipstore /
-[X13] §3.2 update streams; see that module's docstring for the full
-design): vertex state is ONE int64 label blob per streaming partition,
-the superstep is ONE narrow mapInPandas stage fusing apply+scatter, the
-eager localCheckpoint is the barrier, update streams are per-target
-contiguous slices in the shared block_dir, and the convergence statistic
-(count of changed labels) rides the update stream's stats files — zero
-driver round-trips inside the loop.
+label), BFS/SSSP (min-plus), HyperANF (register-max), k-core
+(threshold-peel degree sums), MIS and bipartiteness — plugins of the one
+fused-stream loop in chaos_spark.stream (see that module's docstring for
+the design and the plugin contract) — plus SCC, which runs its own
+two-graph loop. Vertex state is one blob per streaming partition, and
+the convergence statistic (count of changed vertices) rides the update
+stream's stats files.
 
 Per-algorithm update streams over the SAME v5 blocks and apply plans
 (csr.py — no new build pass):
@@ -65,9 +58,9 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
 Correctness contract: EXACT same fixed point and superstep count as the
 join paths (cc: min-fold is order-free; lpa: integer counts and
 deterministic min-tie). Convergence = zero changed labels,
-identical to algos.cc/algos.lpa. Checkpoint/resume mirrors
-pagerank_stream: blob state through CheckpointManager; update streams are
-derived state, regenerated by one scatter-only job on resume.
+identical to algos.cc/algos.lpa. Checkpoint/resume: blob state through
+CheckpointManager; update streams are derived state, regenerated by one
+scatter-only job on resume.
 Parity-tested in tests/test_stream_algos.py.
 
 Scale notes (100 TB / 1000-executor design review): per superstep each
@@ -105,7 +98,6 @@ from .csr import CsrGraph, _load_apply_plan, _load_disk_block
 from .engine import (
     RunResult,
     materialize,
-    maybe_explain,
     release_state,
     run_supersteps,
     superstep_conf,
@@ -115,25 +107,16 @@ from .stream import (
     BLOB,
     PART,
     _STATE_SCHEMA,
-    _apply_parts,
+    _StreamKernel,
     _loop_checkpoint_every,
     _publish_arr,
+    _stats,
+    _stream_loop,
     _upd_dir,
 )
 
 _PACK_BITS = np.int64(31)
 _PACK_MASK = np.int64(2**31 - 1)
-
-
-def _read_changed(upd_dir: str, qs) -> float:
-    """Driver-side convergence read: TOTAL changed labels across the
-    recorded non-empty partitions (sum-fold of the stats files riding the
-    update stream — same strict contract as stream._read_delta: a missing
-    file raises instead of understating the change count)."""
-    total = 0.0
-    for q in qs:
-        total += float(np.load(os.path.join(upd_dir, f"stats-{q}.npy"))[1])
-    return total
 
 
 def _min_fold_gather(plan, upd_dir: str, p: int, q: int,
@@ -160,19 +143,12 @@ def _min_fold_gather(plan, upd_dir: str, p: int, q: int,
     return new, int(np.count_nonzero(new != prev))
 
 
-class _Int64LabelBase:
+class _Int64LabelBase(_StreamKernel):
     """Shared shape of the int64-label kernels (CC, LPA): undirected
     blocks, label = own id at init, ``(id, label)`` output rows."""
 
     dtype = np.int64
     out_schema = f"{ID} long, label long"
-
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True, num_edges=num_edges,
-        )
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         return ids  # label = own id
@@ -189,8 +165,8 @@ class _HashMinCC(_Int64LabelBase):
 
     name = "cc_stream"
 
-    def scatter(self, upd_dir: str, q: int, blk, labels: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                labels: np.ndarray, changed: float) -> None:
         if blk is not None:
             lab_edge = labels[blk["pos"]]
             _publish_arr(
@@ -210,8 +186,8 @@ class _ModeLabelLPA(_Int64LabelBase):
 
     name = "lpa_stream"
 
-    def scatter(self, upd_dir: str, q: int, blk, labels: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                labels: np.ndarray, changed: float) -> None:
         if blk is not None:
             lab_edge = labels[blk["pos"]]
             di = np.asarray(blk["dst_inverse"])
@@ -314,7 +290,7 @@ class _ModeLabelLPA(_Int64LabelBase):
         return new, int(np.count_nonzero(new != prev))
 
 
-class _MinPlusSSSP:
+class _MinPlusSSSP(_StreamKernel):
     """Min-plus Bellman–Ford relaxation over the fused stream superstep
     ([X13] §5.2 sssp.hpp semantics; BFS = w ≡ 1). State blob = the
     partition's float64 distance vector (np.inf = unreached, expanded to
@@ -380,8 +356,8 @@ class _MinPlusSSSP:
         blob[ids == self.root] = 0.0
         return blob
 
-    def scatter(self, upd_dir: str, q: int, blk, dist: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                dist: np.ndarray, changed: float) -> None:
         if blk is not None:
             w = blk.get("w")
             vals = dist[blk["pos"]] + (np.asarray(w) if w is not None else 1.0)
@@ -405,7 +381,7 @@ class _MinPlusSSSP:
         })
 
 
-class _HllMaxANF:
+class _HllMaxANF(_StreamKernel):
     """HyperANF over the fused stream superstep ([X13] §5.2 lists ANF;
     Boldi-Rosa-Vigna 2011) — the max-semiring member of the kernel family
     (scatter-sum PageRank / hash-min CC / min-plus SSSP / mode-label LPA /
@@ -442,13 +418,6 @@ class _HllMaxANF:
         body = blob_len - n * _ANF_M
         return body >= 8 * n and body % (8 * n) == 0
 
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True, num_edges=num_edges,
-        )
-
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         regs = _init_registers(ids, self.seed)
         est = _hll_estimate(regs).astype(np.float64)
@@ -456,8 +425,8 @@ class _HllMaxANF:
             [regs.reshape(-1), np.frombuffer(est.tobytes(), np.uint8)]
         )
 
-    def scatter(self, upd_dir: str, q: int, blk, labels: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                labels: np.ndarray, changed: float) -> None:
         if blk is not None:
             n = len(blk["ids"])
             regs = labels[: n * _ANF_M].reshape(n, _ANF_M)
@@ -503,7 +472,7 @@ class _HllMaxANF:
         })
 
 
-class _ParityBFS:
+class _ParityBFS(_StreamKernel):
     """Bipartiteness 2-coloring over the fused stream superstep ([X13]
     §5.2 lists a BFS-parity bipartiteness kernel) — the packed-lexmin
     member of the kernel family: state = int64 ``pack(root, dist) =
@@ -525,13 +494,6 @@ class _ParityBFS:
     out_schema = f"{ID} long, root long, dist long, color long"
     name = "bipartite_stream"
 
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True, num_edges=num_edges,
-        )
-
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         if len(ids) and int(ids.max()) >= 2**31:
             raise ValueError(
@@ -540,8 +502,8 @@ class _ParityBFS:
             )
         return ids.astype(np.int64) << np.int64(32)  # (root=id, dist=0)
 
-    def scatter(self, upd_dir: str, q: int, blk, labels: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                labels: np.ndarray, changed: float) -> None:
         if blk is not None:
             _publish_arr(
                 upd_dir, f"partial-{q}",
@@ -567,7 +529,7 @@ class _ParityBFS:
         })
 
 
-class _LubyMIS:
+class _LubyMIS(_StreamKernel):
     """Luby MIS over the fused stream superstep ([X13] §5.2 lists mis;
     Luby 1986) — the kernel family's first TWO-PHASE member: each Luby
     round = a SELECT superstep (per-dst min of packed (priority, id)
@@ -605,13 +567,6 @@ class _LubyMIS:
     def blob_ok(self, n: int, blob_len: int) -> bool:
         return blob_len == n + 2
 
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True, num_edges=num_edges,
-        )
-
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         if len(ids) and int(ids.max()) >= 2**31:
             raise ValueError(
@@ -631,8 +586,8 @@ class _LubyMIS:
         ) % np.uint64(_MIS_PRI_P)
         return (pri.astype(np.int64) << np.int64(32)) | ids.astype(np.int64)
 
-    def scatter(self, upd_dir: str, q: int, blk, blob: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                blob: np.ndarray, changed: float) -> None:
         if blk is not None:
             rnd, phase = int(blob[0]), int(blob[1])
             status = blob[2:]
@@ -698,7 +653,7 @@ class _LubyMIS:
         })
 
 
-class _KCorePeel:
+class _KCorePeel(_StreamKernel):
     """K-core peeling over the fused stream superstep ([X13] §5.2 lists
     kcores) — the sum-semiring + threshold-apply member of the kernel
     family (scatter-sum PageRank / hash-min CC / mode-label LPA /
@@ -742,8 +697,8 @@ class _KCorePeel:
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         return np.ones(len(ids), dtype=np.int64)
 
-    def scatter(self, upd_dir: str, q: int, blk, alive: np.ndarray,
-                changed: float) -> None:
+    def scatter(self, upd_dir: str, q: int, blk, plan,
+                alive: np.ndarray, changed: float) -> None:
         if blk is not None:
             _publish_arr(
                 upd_dir, f"partial-{q}",
@@ -776,188 +731,6 @@ class _KCorePeel:
         })
 
 
-def _label_stream(
-    spark: SparkSession,
-    edges: DataFrame,
-    algo,
-    max_iters: int,
-    num_partitions: int | None = None,
-    token: str | None = None,
-    checkpointer: CheckpointManager | None = None,
-    checkpoint_every: int = 5,
-    graph: CsrGraph | None = None,
-    state_partitions: int | None = None,
-    num_edges: int | None = None,
-) -> RunResult:
-    """Generic fused-stream vertex-state loop shared by cc_stream /
-    lpa_stream / sssp_stream / bfs_stream.
-
-    Mirrors stream.pagerank_stream's structure 1:1 (init blob job →
-    initial scatter job recording the non-empty partition set → one fused
-    mapInPandas job per superstep with the eager-localCheckpoint barrier
-    → expand). State blob = the partition's ``algo.dtype`` state vector
-    aligned to the apply plan's sorted id vector; init / graph flavor /
-    output rows come from the algo object (int64 own-id labels over
-    undirected blocks for CC/LPA; float64 root-seeded distances over
-    directed, optionally weighted blocks for SSSP/BFS).
-    """
-    g = graph or algo.prep_graph(
-        spark, edges, num_partitions, token, num_edges
-    )
-    n = g.num_vertices
-    p = g.p
-    token_, block_dir = g.cache_token, g.block_dir
-    run_id = uuid.uuid4().hex[:8]
-
-    def init_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def init_kernel(batches):
-            # Cold init (v6): blobs derive straight from the apply plans'
-            # sorted id vectors over a shuffle-free spark.range(p) — no
-            # vertex rows cross the boundary (the plan IS the
-            # authoritative layout; runtime alignment stays checked by
-            # the apply/expand kernels' blob/plan length guards). The
-            # initial scatter is FUSED in: cold init is ONE job.
-            for pdf in batches:
-                for qv in pdf["id"].tolist():
-                    q = int(qv)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    if plan is None:
-                        continue
-                    ids = np.asarray(plan["ids"])
-                    blob = algo.init_blob(ids)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud, q, blk, blob, float("inf"))
-                    yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
-
-        return init_kernel
-
-    def scatter_kernel_for(superstep: int):
-        ud = _upd_dir(block_dir, run_id, superstep)
-
-        def scatter_only(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    labels = np.frombuffer(row[BLOB], dtype=algo.dtype)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud, q, blk, labels, float("inf"))
-                    # Vertex count from the apply plan, not len(labels):
-                    # multi-word-per-vertex blobs (HyperANF registers +
-                    # nf history) have len(labels) != |V_q|.
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    yield pd.DataFrame({PART: [q], "n": [len(plan["ids"])]})
-
-        return scatter_only
-
-    def fused_kernel_for(superstep: int):
-        ud_in = _upd_dir(block_dir, run_id, superstep - 1)
-        ud_out = _upd_dir(block_dir, run_id, superstep)
-
-        def fused(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=algo.dtype)
-                    plan = _load_apply_plan(token_, q, block_dir)
-                    blob_ok = getattr(
-                        algo, "blob_ok", lambda n, ln: n == ln
-                    )
-                    if plan is None or not blob_ok(len(plan["ids"]), len(prev)):
-                        raise RuntimeError(
-                            f"{algo.name} apply: blob/plan mismatch at partition {q}"
-                        )
-                    new, changed = algo.gather_apply(plan, ud_in, p, q, prev)
-                    blk = _load_disk_block(token_, q, block_dir)
-                    algo.scatter(ud_out, q, blk, new, float(changed))
-                    yield pd.DataFrame({PART: [q], BLOB: [new.tobytes()]})
-
-        return fused
-
-    sp = state_partitions or p
-
-    def realign(df: DataFrame) -> DataFrame:
-        return df.repartition(sp)
-
-    start = 0
-    state = None
-    if checkpointer is not None:
-        manifest = checkpointer.latest()
-        if manifest is not None:
-            start = int(manifest["superstep"])
-            state = realign(checkpointer.load(spark, manifest))
-
-    with superstep_conf(spark, p):
-        qs = _apply_parts(block_dir)
-        if state is None:
-            # ONE fused init+scatter job (see init_kernel_for).
-            state = spark.range(0, p, 1, p).mapInPandas(
-                init_kernel_for(start), schema=_STATE_SCHEMA
-            ).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-        else:
-            state = state.select(PART, BLOB).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-            # Update stream of the starting state: derived state,
-            # regenerated on resume (one tiny job); steady-state
-            # supersteps publish inside the fused stage.
-            rows = state.mapInPandas(
-                scatter_kernel_for(start), schema=f"{PART} int, n long"
-            ).collect()
-            assert sum(r["n"] for r in rows) == n
-            assert tuple(sorted(int(r[PART]) for r in rows)) == qs
-
-        try:
-            def step(cur: DataFrame, superstep: int):
-                pre = cur.mapInPandas(
-                    fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA
-                )
-                maybe_explain(pre, "superstep")
-                new = pre.localCheckpoint(eager=True)
-                changed = int(_read_changed(
-                    _upd_dir(block_dir, run_id, superstep + 1), qs
-                ))
-                if superstep >= 1:
-                    shutil.rmtree(
-                        _upd_dir(block_dir, run_id, superstep - 1),
-                        ignore_errors=True,
-                    )
-                return new, {"converged": changed == 0, "changed": changed}
-
-            result = run_supersteps(
-                state, step, max_iters, checkpointer,
-                _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
-                start_superstep=start, realign=realign,
-            )
-
-            def expand(batches):
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        q = int(row[PART])
-                        plan = _load_apply_plan(token_, q, block_dir)
-                        yield algo.expand_pdf(plan, row[BLOB])
-
-            blob_state = result.state
-            # Eager localCheckpoint (not persist): the expanded rows must
-            # never be recomputed — the apply plans they read may be an
-            # EPHEMERAL block dir reclaimed by g.unpersist() below.
-            result.state = blob_state.mapInPandas(
-                expand, schema=algo.out_schema
-            ).localCheckpoint(eager=True)
-            release_state(blob_state)
-        finally:
-            import glob as _glob
-
-            for d in _glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
-                shutil.rmtree(d, ignore_errors=True)
-    if graph is None:
-        g.unpersist()
-    return result
-
-
 def cc_stream(
     spark: SparkSession,
     edges: DataFrame,
@@ -975,7 +748,7 @@ def cc_stream(
     order-free). ``graph`` must be a CsrGraph built with undirected=True
     (bench warmup → timed run reuse). ``num_edges``: caller-known raw |E|
     skips the block build's counting scan."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _HashMinCC(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -998,7 +771,7 @@ def lpa_stream(
     count as algos.lpa (integer counts, deterministic tie-break, fixed
     fold order). ``num_edges``: caller-known raw |E| skips the block
     build's counting scan."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _ModeLabelLPA(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -1026,7 +799,7 @@ def sssp_stream(
     ``weight_col=None`` → BFS (w ≡ 1, unweighted blocks); a caller
     ``graph`` must match the kernel's edge prep (directed unless
     ``symmetric``; weighted blocks built from MIN-folded duplicates)."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _MinPlusSSSP(root, weight_col, symmetric), max_iters,
         num_partitions, token, checkpointer, checkpoint_every, graph,
         state_partitions, num_edges,
@@ -1053,7 +826,7 @@ def hyperanf_stream(
     identical registers). ``graph`` must be a CsrGraph built
     with undirected=True (same flavor CC/LPA use — the warm-block registry
     shares one build across all three)."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _HllMaxANF(seed), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -1077,7 +850,7 @@ def kcore_stream(
     ``(id, in_core)`` output as algos.kcores.k_core (integer degree
     counts; see _KCorePeel). A caller ``graph`` must match the kernel's
     edge prep (undirected, self-loops dropped)."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _KCorePeel(k), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -1103,7 +876,7 @@ def mis_stream(
     ``max_iters=rounds``. A caller ``graph`` must be the plain undirected
     flavor (the same blocks CC/LPA/HyperANF use; self-loops masked
     in-kernel)."""
-    return _label_stream(
+    return _stream_loop(
         spark, edges, _LubyMIS(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -1129,7 +902,7 @@ def bipartite_stream(
     join the join path runs."""
     from .graph import symmetrize
 
-    res = _label_stream(
+    res = _stream_loop(
         spark, edges, _ParityBFS(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
@@ -1194,17 +967,6 @@ def _scc_fold(plan, upd_dir: str, p: int, init_val, ufunc) -> np.ndarray:
         rows = apos[int(aoff[b]):int(aoff[b]) + ln]
         fold[rows] = ufunc(fold[rows], sl)
     return fold
-
-
-def _scc_read_stats(upd_dir: str, qs) -> tuple[int, int]:
-    """Driver-side (live, changed) totals riding the update stream — same
-    strict contract as _read_changed (a missing stats file raises)."""
-    live = changed = 0.0
-    for q in qs:
-        arr = np.load(os.path.join(upd_dir, f"stats-{q}.npy"))
-        live += float(arr[0])
-        changed += float(arr[1])
-    return int(live), int(changed)
 
 
 def scc_stream(
@@ -1443,7 +1205,9 @@ def scc_stream(
                     fused_kernel_for(superstep + 1, ap, sc),
                     schema=_STATE_SCHEMA,
                 ).localCheckpoint(eager=True)
-                live, changed = _scc_read_stats(ud_of(superstep + 1), qs)
+                stats = _stats(ud_of(superstep + 1), qs)
+                live = int(sum(float(r[0]) for r in stats))
+                changed = int(sum(float(r[1]) for r in stats))
                 if superstep >= 1:
                     shutil.rmtree(ud_of(superstep - 1), ignore_errors=True)
                 # Driver phase machine (deterministic in (ap, changed)):

@@ -78,6 +78,22 @@ def test_caller_cache_survives(spark, blocks, name):
         edges.unpersist()
 
 
+@pytest.mark.parametrize(
+    "name", ["pagerank_stream", "pagerank_stream_weighted", "cc_stream", "lpa_stream"]
+)
+def test_stream_call_removes_its_blocks(spark, blocks, tmp_path, monkeypatch, name):
+    """A stream call that built an ephemeral block dir (no token, no warm
+    registration) removes it before returning."""
+    monkeypatch.setattr(csr_mod, "_WARM_KEEP_MAX_EDGES", 0)
+    weighted, call = CALLS[name]
+    edges = _cached_edges(spark, weighted)
+    try:
+        call(spark, edges)
+    finally:
+        edges.unpersist()
+    assert os.listdir(tmp_path) == []
+
+
 def _persistent_rdd_ids(spark) -> set[int]:
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 

@@ -1,8 +1,10 @@
 """Every ``chaos_spark`` name the scripts and bench drivers import must
-exist. Scripts run only by hand, so a deleted engine function would
-otherwise leave them silently dead until the next campaign. Spark-free:
-the files are parsed with ``ast``, never executed; only the imported
-chaos_spark modules are loaded (no SparkSession starts).
+exist, and every keyword they pass to an imported chaos_spark function
+must be one of its parameters. Scripts run only by hand, so a deleted
+engine function or parameter would otherwise leave them silently dead
+until the next campaign. Spark-free: the files are parsed with ``ast``,
+never executed; only the imported chaos_spark modules are loaded (no
+SparkSession starts).
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ from __future__ import annotations
 import ast
 import importlib
 import importlib.util
+import inspect
 from pathlib import Path
 
 import pytest
@@ -62,3 +65,97 @@ def test_script_chaos_imports_resolve(path):
         if not _exists(mod, name)
     ]
     assert not missing, f"{path.relative_to(ROOT)} imports missing names: {missing}"
+
+
+def _bindings(tree: ast.AST) -> dict[str, tuple[str, str | None]]:
+    """Local name -> ``(module, name)`` of the chaos_spark object an import
+    binds it to, at any nesting depth; name is None for a module."""
+    out = {}
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and (
+            node.module or ""
+        ).split(".")[0] == "chaos_spark":
+            for alias in node.names:
+                if alias.name != "*":
+                    out[alias.asname or alias.name] = (node.module, alias.name)
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                if alias.name.split(".")[0] == "chaos_spark":
+                    if alias.asname:
+                        out[alias.asname] = (alias.name, None)
+                    else:
+                        out["chaos_spark"] = ("chaos_spark", None)
+    return out
+
+
+def _member(obj, name: str):
+    """``obj.name``, importing it when ``obj`` is a package and ``name``
+    one of its submodules; None when there is no such member."""
+    if hasattr(obj, name):
+        return getattr(obj, name)
+    if inspect.ismodule(obj) and hasattr(obj, "__path__"):
+        full = f"{obj.__name__}.{name}"
+        if importlib.util.find_spec(full) is not None:
+            return importlib.import_module(full)
+    return None
+
+
+def _callee(func: ast.expr, bindings: dict):
+    """The chaos_spark object a call's ``f`` / ``mod.f`` expression names,
+    or None when it is not reached through an import."""
+    path = []
+    while isinstance(func, ast.Attribute):
+        path.append(func.attr)
+        func = func.value
+    if not isinstance(func, ast.Name) or func.id not in bindings:
+        return None
+    module, name = bindings[func.id]
+    obj = importlib.import_module(module)
+    for part in ([name] if name else []) + path[::-1]:
+        obj = None if obj is None else _member(obj, part)
+    return obj
+
+
+def _stale_keywords(tree: ast.AST) -> list[str]:
+    """``line: callee(kw=)`` for every keyword passed to an imported
+    chaos_spark callable that its signature does not accept. Callees that
+    take ``**kwargs`` accept anything and are skipped."""
+    bindings = _bindings(tree)
+    stale = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call):
+            continue
+        obj = _callee(node.func, bindings)
+        if obj is None or inspect.ismodule(obj) or not callable(obj):
+            continue
+        try:
+            params = inspect.signature(obj).parameters
+        except (TypeError, ValueError):
+            continue
+        if any(p.kind is p.VAR_KEYWORD for p in params.values()):
+            continue
+        for kw in node.keywords:
+            p = params.get(kw.arg) if kw.arg is not None else None
+            if kw.arg is not None and (p is None or p.kind is p.POSITIONAL_ONLY):
+                stale.append(f"{node.lineno}: {ast.unparse(node.func)}({kw.arg}=)")
+    return stale
+
+
+def test_keyword_check_catches_a_deleted_parameter():
+    src = (
+        "from chaos_spark import algos\n"
+        "from chaos_spark.stream import pagerank_stream as prs\n"
+        "def run(s, e):\n"
+        "    prs(s, e, tol=0.0, chain=2)\n"
+        "    algos.pagerank(s, e, max_iters=3, chain=2)\n"
+        "    algos.bfs(s, e, 0, max_iters=3)\n"
+    )
+    assert _stale_keywords(ast.parse(src)) == [
+        "4: prs(chain=)", "5: algos.pagerank(chain=)",
+    ]
+
+
+@pytest.mark.parametrize("path", FILES, ids=lambda p: str(p.relative_to(ROOT)))
+def test_script_chaos_keywords_exist(path):
+    stale = _stale_keywords(ast.parse(path.read_text(), str(path)))
+    assert not stale, f"{path.relative_to(ROOT)} passes unknown keywords: {stale}"

@@ -78,80 +78,6 @@ def test_pagerank_stream_weighted_equals_join(spark):
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-9)
 
 
-def test_pagerank_stream_chained_equals_unchained(spark):
-    # chain=K stacks K supersteps per Spark job with shuffle barriers;
-    # fixed-iteration runs must produce identical results (same kernels,
-    # same fixed-order dangling fold) and the same superstep count.
-    pdf = g4_powerlaw(scale=9, num_edges=3000)
-    edges = spark.createDataFrame(pdf)
-    a = pagerank_stream(spark, edges, tol=0.0, max_iters=9, chain=1)
-    b = pagerank_stream(spark, edges, tol=0.0, max_iters=9, chain=4)
-    assert a.supersteps == b.supersteps == 9
-    ra, rb = _ranks(a), _ranks(b)
-    assert set(ra) == set(rb)
-    ks = sorted(ra)
-    assert np.allclose([ra[k] for k in ks], [rb[k] for k in ks],
-                       rtol=0, atol=1e-15)
-    # per-layer deltas observed inside the chained jobs match unchained
-    da = [h["delta"] for h in a.history]
-    db = [h["delta"] for h in b.history]
-    assert np.allclose(da[1:], db[1:], rtol=1e-9, atol=1e-15)
-
-
-def test_pagerank_stream_chained_with_tol_overshoot_bounded(spark):
-    # ADVICE r4: chain>1 + tol>0 was untested. Contract (module docstring):
-    # the chained run stops at the first JOB whose layers converged, so it
-    # may run up to chain-1 supersteps PAST the unchained convergence
-    # point — never fewer, never more than that, and the returned state is
-    # at least as converged (its last observed delta is also under tol).
-    pdf = g4_powerlaw(scale=9, num_edges=3000)
-    edges = spark.createDataFrame(pdf)
-    tol = 1e-6
-    a = pagerank_stream(spark, edges, tol=tol, max_iters=60, chain=1)
-    b = pagerank_stream(spark, edges, tol=tol, max_iters=60, chain=3)
-    assert a.converged and b.converged
-    assert a.supersteps <= b.supersteps <= a.supersteps + 2
-    assert b.history[-1]["delta"] < tol
-    # Both are within tol of the fixed point; successive iterates differ
-    # by < tol, so the K-1 overshoot bounds the disagreement by ~2*tol.
-    ra, rb = _ranks(a), _ranks(b)
-    assert set(ra) == set(rb)
-    ks = sorted(ra)
-    assert np.allclose([ra[k] for k in ks], [rb[k] for k in ks],
-                       rtol=0, atol=3 * tol)
-
-
-def test_pagerank_stream_chained_resume_equals_uninterrupted(spark, tmp_path):
-    # ADVICE r4: resume of a CHAINED run was untested. Fixed-iters (tol=0)
-    # so the contract is exact: checkpoint at superstep 4, resume with the
-    # same chain, identical final blobs vs the uninterrupted chained run.
-    pdf = g4_powerlaw(scale=9, num_edges=3000)
-    edges = spark.createDataFrame(pdf)
-    config = {"algo": "pagerank_stream", "chain": 2, "graph": "g4s9"}
-
-    full = pagerank_stream(spark, edges, tol=0.0, max_iters=8, chain=2)
-
-    cp1 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
-    part = pagerank_stream(
-        spark, edges, tol=0.0, max_iters=4, chain=2,
-        checkpointer=cp1, checkpoint_every=4,
-    )
-    assert part.supersteps == 4
-    assert cp1.latest() is not None and cp1.latest()["superstep"] == 4
-
-    cp2 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
-    res = pagerank_stream(
-        spark, edges, tol=0.0, max_iters=8, chain=2,
-        checkpointer=cp2, checkpoint_every=4,
-    )
-    a, b = _ranks(full), _ranks(res)
-    assert set(a) == set(b)
-    ks = sorted(a)
-    assert np.allclose([a[k] for k in ks], [b[k] for k in ks],
-                       rtol=0, atol=1e-15)
-    assert res.supersteps == full.supersteps == 8
-
-
 def test_pagerank_stream_state_partitions_invariance(spark):
     # Physical blob placement must never affect results: kernels route by
     # the row's part value, not the task index.
@@ -194,6 +120,36 @@ def test_pagerank_stream_resume_equals_uninterrupted(spark, tmp_path):
     ks = sorted(a)
     assert np.allclose([a[k] for k in ks], [b[k] for k in ks], rtol=0, atol=1e-12)
     assert res.supersteps == full.supersteps
+
+
+def test_pagerank_stream_resume_beats_init_ranks(spark, tmp_path):
+    """A checkpoint resume takes precedence over ``init_ranks``: a warm
+    personalized run stopped at superstep 3 and resumed with the same
+    ``init_ranks`` equals the uninterrupted warm run."""
+    pdf = g4_powerlaw(scale=9, num_edges=3000)
+    edges = spark.createDataFrame(pdf)
+    sources = sorted(set(pdf["src"]))[:3]
+    prior = pagerank_stream(
+        spark, edges, tol=0.0, max_iters=2, sources=sources
+    ).state.select("id", "rank")
+    kw = dict(tol=0.0, init_ranks=prior, sources=sources)
+    full = pagerank_stream(spark, edges, max_iters=6, **kw)
+
+    config = {"algo": "pagerank_stream", "warm": True, "graph": "g4s9"}
+    cp1 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
+    part = pagerank_stream(
+        spark, edges, max_iters=3, checkpointer=cp1, checkpoint_every=3, **kw
+    )
+    assert part.supersteps == 3
+    cp2 = CheckpointManager(str(tmp_path / "cp"), "pagerank_stream", config)
+    res = pagerank_stream(
+        spark, edges, max_iters=6, checkpointer=cp2, checkpoint_every=3, **kw
+    )
+    assert res.history[0]["superstep"] == 4
+    assert res.supersteps == full.supersteps == 6
+    a, b = _ranks(full), _ranks(res)
+    assert set(a) == set(b)
+    assert max(abs(a[k] - b[k]) for k in a) < 1e-12
 
 
 def test_pagerank_stream_warm_start_continues_exactly(spark):
