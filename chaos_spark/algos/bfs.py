@@ -25,6 +25,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 
 def sssp(
@@ -43,45 +44,29 @@ def sssp(
     """Single-source shortest paths; result state ``(id, dist)`` with NULL
     dist for unreachable vertices. ``weight_col=None`` -> BFS (w = 1).
 
-    ``mode="auto"`` (default) serves the call through the fused min-plus
-    STREAM path (stream_algos.sssp_stream — exact same per-superstep
-    state, superstep count, and output, see _MinPlusSSSP) at or above
-    csr.CSR_AUTO_MIN_EDGES, or below it when the warm-block registry
-    already holds this graph's blocks; the frontier join path serves the
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused min-plus STREAM path (stream_algos.sssp_stream —
+    exact same per-superstep state, superstep count, and output, see
+    _MinPlusSSSP) from the 1M-edge cold crossover, or below it on warm
+    blocks of the kernel's flavor; the frontier join path serves the
     rest (BFS/SSSP run few, cheap supersteps at small scale, so a cold
-    block build isn't amortized — CC's rationale). Measured at 64M edges
-    local[8], 5 fixed supersteps (scripts/sssp_stream_ab.py,
+    block build isn't amortized — CC's rationale). Measured at 64M
+    edges local[8], 5 fixed supersteps (scripts/sssp_stream_ab.py,
     BENCH/sssp_stream_ab_64m.json): stream supersteps 0.33–0.66 s vs
-    join 0.86–19.3 s, dist diff 0. ``mode="join"``/``mode="stream"``
-    pin a path; ``num_edges``: caller-known |E| skips the dispatch
-    count."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
-        )
-    if mode != "join":
-        from ..csr import CSR_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import _MinPlusSSSP, sssp_stream
+    join 0.86–19.3 s, dist diff 0."""
+    from ..stream_algos import _MinPlusSSSP, sssp_stream
 
-        kern = _MinPlusSSSP(root, weight_col, symmetric)
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(_warm_key(
-                    kern.prep_edges(edges), False,
-                    None if weight_col is None else "w", num_partitions,
-                )) is not None
-            )
-        if route_stream:
-            return sssp_stream(
-                spark, edges, root, weight_col=weight_col,
-                symmetric=symmetric, max_iters=max_iters,
-                num_partitions=num_partitions, checkpointer=checkpointer,
-                checkpoint_every=checkpoint_every,
-                num_edges=num_edges,
-            )
+    stream, num_edges = stream_route(
+        "sssp", edges, mode, num_edges, num_partitions,
+        _MinPlusSSSP(root, weight_col, symmetric).block_flavor,
+    )
+    if stream:
+        return sssp_stream(
+            spark, edges, root, weight_col=weight_col,
+            symmetric=symmetric, max_iters=max_iters,
+            num_partitions=num_partitions, checkpointer=checkpointer,
+            checkpoint_every=checkpoint_every, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark,
         (num_edges if num_edges is not None else edges.count())

@@ -25,6 +25,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 
 def bipartite_check(
@@ -39,42 +40,28 @@ def bipartite_check(
     the component's min-id root. ``history[-1]['odd_edges']`` counts
     conflict edges; bipartite iff it is 0 (also in stats).
 
-    ``mode="auto"`` (default) serves the call through the fused
-    packed-lexmin STREAM path (stream_algos.bipartite_stream — exact
-    same per-superstep (root, dist) state, superstep count, output, and
-    odd-edge count, see _ParityBFS) at or above csr.CSR_AUTO_MIN_EDGES,
-    or below it when the warm-block registry already holds this graph's
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused packed-lexmin STREAM path
+    (stream_algos.bipartite_stream — exact same per-superstep (root,
+    dist) state, superstep count, output, and odd-edge count, see
+    _ParityBFS) from the 1M-edge cold crossover, or below it on warm
     plain undirected blocks (the CC/LPA/HyperANF/MIS flavor). Measured
     at 64M edges local[8], 4 fixed supersteps
     (scripts/bipartite_stream_ab.py,
     BENCH/bipartite_stream_ab_64m.json): stream supersteps 0.41–0.61 s
     vs join 1.1–13.9 s (15.6× on superstep totals), state diff 0,
-    identical odd-edge counts.
-    ``mode="join"``/``mode="stream"`` pin a path; ``num_edges``:
-    caller-known |E| skips the dispatch count."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
-        )
-    if mode != "join":
-        from ..csr import CSR_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import bipartite_stream
+    identical odd-edge counts."""
+    from ..stream_algos import _ParityBFS, bipartite_stream
 
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(_warm_key(
-                    edges, True, None, num_partitions,
-                )) is not None
-            )
-        if route_stream:
-            return bipartite_stream(
-                spark, edges, max_iters=max_iters,
-                num_partitions=num_partitions,
-                num_edges=num_edges,
-            )
+    stream, num_edges = stream_route(
+        "bipartite", edges, mode, num_edges, num_partitions,
+        _ParityBFS().block_flavor,
+    )
+    if stream:
+        return bipartite_stream(
+            spark, edges, max_iters=max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )

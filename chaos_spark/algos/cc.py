@@ -28,6 +28,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 
 def connected_components(
@@ -45,15 +46,13 @@ def connected_components(
     ``label`` is the minimum vertex id of the component.
     ``num_edges``: caller-known |E| — skips the partition-sizing count.
 
-    ``mode`` (r6): ``"auto"`` routes to the fused slipstore stream kernel
-    (stream_algos.cc_stream — EXACT same fixed point, superstep count,
-    and integer labels) from CC_STREAM_MIN_EDGES raw edges, or below it
-    when the warm-block registry already holds this graph's undirected
-    blocks (then the cold-build argument for the join path is void);
-    ``"join"`` pins the join path; ``"stream"`` pins the stream
-    kernel. Warm-start (``init_labels``) and resumable (``checkpointer``)
-    runs stay on the join path — the stream kernel's blob checkpoints
-    and seed contract are separate.
+    ``mode`` (r6; routing in algos._route): ``"auto"`` routes to the
+    fused slipstore stream kernel (stream_algos.cc_stream — EXACT same
+    fixed point, superstep count, and integer labels) from CC's cold
+    crossover (200k raw edges, measured in csr.py), or below it on warm
+    undirected blocks. Warm-start (``init_labels``) and resumable
+    (``checkpointer``) runs stay on the join path — the stream kernel's
+    blob checkpoints and seed contract are separate.
 
     ``init_labels``: warm-start from a prior ``(id, label)`` frame — the
     incremental-ingest handoff for CC, and unlike PageRank's it is EXACT
@@ -74,26 +73,17 @@ def connected_components(
     clamped with least(id, prior) so a malformed prior (label > id)
     cannot raise the fixed point.
     """
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if mode in ("auto", "stream") and init_labels is None and checkpointer is None:
-        from ..csr import CC_STREAM_MIN_EDGES, _warm_blocks_ready, _warm_key
+    from ..stream_algos import _HashMinCC, cc_stream
 
-        ne = num_edges if num_edges is not None else edges.count()
-        num_edges = ne
-        warm = _warm_blocks_ready(
-            _warm_key(edges, True, None, num_partitions)
-        ) is not None
-        if mode == "stream" or ne >= CC_STREAM_MIN_EDGES or warm:
-            from ..stream_algos import cc_stream
-
-            return cc_stream(
-                spark, edges, max_iters=max_iters,
-                num_partitions=num_partitions, num_edges=ne,
-            )
-    elif mode == "stream":
-        raise ValueError(
-            "mode='stream' does not support init_labels or checkpointer"
+    stream, num_edges = stream_route(
+        "cc", edges, mode, num_edges, num_partitions,
+        _HashMinCC().block_flavor,
+        {"init_labels": init_labels, "checkpointer": checkpointer},
+    )
+    if stream:
+        return cc_stream(
+            spark, edges, max_iters=max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
         )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2

@@ -33,6 +33,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 B_BITS = 6  # 2^6 = 64 registers, rel. std err ~ 1.04/sqrt(64) ~ 13%
 M = 1 << B_BITS
@@ -91,45 +92,31 @@ def hyper_anf(
     neighborhood-function estimates [N(v,0), N(v,1), ..., N(v,H)];
     ``history`` carries the per-hop global sum (the ANF curve).
 
-    ``mode="auto"`` (default) serves the call through the fused
-    register-max STREAM path (stream_algos.hyperanf_stream — bit-identical
-    nf curves, superstep count, and fixed point, see _HllMaxANF) from
-    csr.STREAM_AUTO_MIN_EDGES: ANF ships one 64-byte sketch per
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused register-max STREAM path
+    (stream_algos.hyperanf_stream — bit-identical nf curves, superstep
+    count, and fixed point, see _HllMaxANF) from the many-superstep
+    100k-edge cold crossover: ANF ships one 64-byte sketch per
     symmetrized edge per superstep on the join path — the fattest
     payload in the suite — where the stream path publishes one sketch
     per distinct in-block dst. Measured at 64M edges local[8], 3 fixed
     supersteps (scripts/hyperanf_stream_ab.py,
     BENCH/hyperanf_stream_ab_64m.json): stream supersteps 12.8–17.2 s
     vs join 94.3–163.3 s (7.4× wall), nf_diff 0. Below the crossover,
-    the warm-block registry still routes stream when another algorithm
-    (CC/LPA — same undirected flavor) already built this graph's blocks.
-    ``mode="join"``/``mode="stream"`` pin a path; ``num_edges``:
-    caller-known |E| skips the dispatch count."""
+    warm blocks that another algorithm (CC/LPA — same undirected
+    flavor) already built still route stream."""
     from ..shipping import ensure_shipped
+    from ..stream_algos import _HllMaxANF, hyperanf_stream
 
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
+    stream, num_edges = stream_route(
+        "hyperanf", edges, mode, num_edges, num_partitions,
+        _HllMaxANF(seed).block_flavor,
+    )
+    if stream:
+        return hyperanf_stream(
+            spark, edges, max_iters=max_iters, seed=seed,
+            num_partitions=num_partitions, num_edges=num_edges,
         )
-    if mode != "join":
-        from ..csr import STREAM_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import hyperanf_stream
-
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= STREAM_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(
-                    _warm_key(edges, True, None, num_partitions)
-                ) is not None
-            )
-        if route_stream:
-            return hyperanf_stream(
-                spark, edges, max_iters=max_iters, seed=seed,
-                num_partitions=num_partitions,
-                num_edges=num_edges,
-            )
     ensure_shipped(spark)  # UDFs reference module fns on executors
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2

@@ -17,6 +17,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 
 def k_core(
@@ -30,45 +31,29 @@ def k_core(
 ) -> RunResult:
     """Vertices of the k-core; result state ``(id, in_core boolean)``.
 
-    ``mode="auto"`` (default) serves the call through the fused
-    sum-semiring STREAM path (stream_algos.kcore_stream — exact same
-    per-superstep alive set and superstep count, see _KCorePeel) at or
-    above csr.CSR_AUTO_MIN_EDGES: each join-path superstep is TWO
-    shuffle joins (both-endpoints-alive filter) plus a groupBy where the
-    stream superstep is one blob pass. Measured at 64M edges local[8],
-    3 fixed supersteps, k=8 (scripts/kcore_stream_ab.py,
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused sum-semiring STREAM path (stream_algos.kcore_stream
+    — exact same per-superstep alive set and superstep count, see
+    _KCorePeel) from the 1M-edge cold crossover: each join-path
+    superstep is TWO shuffle joins (both-endpoints-alive filter) plus a
+    groupBy where the stream superstep is one blob pass. Measured at 64M
+    edges local[8], 3 fixed supersteps, k=8 (scripts/kcore_stream_ab.py,
     BENCH/kcore_stream_ab_64m.json): stream supersteps 0.36–0.39 s vs
     join 16.3–81.5 s (56× wall), in_core diff 0. Peeling still runs few
     supersteps, so k-core keeps CC's conservative 1M cold crossover
     (a cold block build isn't amortized below it). Below the crossover,
-    the warm-block registry still routes stream when this graph's
-    self-loop-free undirected blocks were already built.
-    ``mode="join"``/``mode="stream"`` pin a path; ``num_edges``:
-    caller-known |E| skips the dispatch count."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
-        )
-    if mode != "join":
-        from ..csr import CSR_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import _KCorePeel, kcore_stream
+    warm self-loop-free undirected blocks still route stream."""
+    from ..stream_algos import _KCorePeel, kcore_stream
 
-        kern = _KCorePeel(k)
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(_warm_key(
-                    kern.prep_edges(edges), True, None, num_partitions,
-                )) is not None
-            )
-        if route_stream:
-            return kcore_stream(
-                spark, edges, k, max_iters=max_iters,
-                num_partitions=num_partitions,
-                num_edges=num_edges,
-            )
+    stream, num_edges = stream_route(
+        "kcores", edges, mode, num_edges, num_partitions,
+        _KCorePeel(k).block_flavor,
+    )
+    if stream:
+        return kcore_stream(
+            spark, edges, k, max_iters=max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )

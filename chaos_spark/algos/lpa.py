@@ -34,6 +34,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 
 def label_propagation(
@@ -49,32 +50,23 @@ def label_propagation(
     """Synchronous LPA; result ``state`` has columns ``(id, label)``.
     ``num_edges``: caller-known |E| — skips the partition-sizing count.
 
-    ``mode`` (r6): ``"auto"`` routes to the fused slipstore stream kernel
-    (stream_algos.lpa_stream — EXACT same fixed point, superstep count,
-    deterministic tie-break, integer labels) from STREAM_AUTO_MIN_EDGES
-    raw edges, or below it when the warm-block registry already holds
-    this graph's undirected blocks; ``"join"`` pins the join path;
-    ``"stream"`` pins the stream kernel. Resumable runs (``checkpointer``)
-    stay on the join path."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if mode in ("auto", "stream") and checkpointer is None:
-        from ..csr import STREAM_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
+    ``mode`` (r6; routing in algos._route): ``"auto"`` routes to the
+    fused slipstore stream kernel (stream_algos.lpa_stream — EXACT same
+    fixed point, superstep count, deterministic tie-break, integer
+    labels) from the many-superstep cold crossover (100k raw edges), or
+    below it on warm undirected blocks. Resumable runs
+    (``checkpointer``) stay on the join path."""
+    from ..stream_algos import _ModeLabelLPA, lpa_stream
 
-        ne = num_edges if num_edges is not None else edges.count()
-        num_edges = ne
-        warm = _warm_blocks_ready(
-            _warm_key(edges, True, None, num_partitions)
-        ) is not None
-        if mode == "stream" or ne >= STREAM_AUTO_MIN_EDGES or warm:
-            from ..stream_algos import lpa_stream
-
-            return lpa_stream(
-                spark, edges, max_iters=max_iters,
-                num_partitions=num_partitions, num_edges=ne,
-            )
-    elif mode == "stream":
-        raise ValueError("mode='stream' does not support checkpointer")
+    stream, num_edges = stream_route(
+        "lpa", edges, mode, num_edges, num_partitions,
+        _ModeLabelLPA().block_flavor, {"checkpointer": checkpointer},
+    )
+    if stream:
+        return lpa_stream(
+            spark, edges, max_iters=max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )

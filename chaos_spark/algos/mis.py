@@ -32,6 +32,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, symmetrize, vertices_from_edges
+from ._route import stream_route
 
 PRI_A = 2654435761
 PRI_B = 40503
@@ -55,46 +56,31 @@ def maximal_independent_set(
     """Luby MIS; result ``state`` has ``(id, in_set)`` with in_set boolean.
     Deterministic for a given edge set (seeded hash priorities).
 
-    ``mode="auto"`` (default) serves the call through the fused two-phase
-    STREAM path (stream_algos.mis_stream — identical per-round status
-    vectors and final set, 2 supersteps per Luby round, see _LubyMIS) at
-    or above csr.CSR_AUTO_MIN_EDGES: each join-path round is two shuffled
-    message exchanges plus a distinct and two left joins, where the two
-    stream phases are blob passes. Measured at 64M edges local[8], 2
-    fixed rounds (scripts/mis_stream_ab.py,
-    BENCH/mis_stream_ab_64m.json): stream phases 0.55–0.60 s (3.85 s
-    wall) vs join rounds 6.1–24.2 s (102.2 s wall, 26.5×), in_set diff
-    0. MIS runs few rounds (O(log n) expected), so it keeps CC's
-    conservative 1M cold crossover; below it,
-    the warm-block registry routes stream when this graph's plain
-    undirected blocks were already built (the same flavor CC/LPA/HyperANF
-    build — self-loops masked in-kernel, not at prep).
-    ``mode="join"``/``mode="stream"`` pin a path; ``num_edges``:
-    caller-known |E| skips the dispatch count. ``max_iters`` counts Luby
-    ROUNDS on every path (the stream path is budgeted 2x internally)."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
-        )
-    if mode != "join":
-        from ..csr import CSR_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import mis_stream
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused two-phase STREAM path (stream_algos.mis_stream —
+    identical per-round status vectors and final set, 2 supersteps per
+    Luby round, see _LubyMIS) from the 1M-edge cold crossover: each
+    join-path round is two shuffled message exchanges plus a distinct
+    and two left joins, where the two stream phases are blob passes.
+    Measured at 64M edges local[8], 2 fixed rounds
+    (scripts/mis_stream_ab.py, BENCH/mis_stream_ab_64m.json): stream
+    phases 0.55–0.60 s (3.85 s wall) vs join rounds 6.1–24.2 s (102.2 s
+    wall, 26.5×), in_set diff 0. MIS runs few rounds (O(log n)
+    expected), so it keeps CC's conservative 1M cold crossover; below
+    it, warm plain undirected blocks route stream (the same flavor
+    CC/LPA/HyperANF build — self-loops masked in-kernel, not at prep).
+    ``max_iters`` counts Luby ROUNDS on every path (the stream path is
+    budgeted 2x internally)."""
+    from ..stream_algos import _LubyMIS, mis_stream
 
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(_warm_key(
-                    edges, True, None, num_partitions,
-                )) is not None
-            )
-        if route_stream:
-            return mis_stream(
-                spark, edges, max_iters=2 * max_iters,
-                num_partitions=num_partitions,
-                num_edges=num_edges,
-            )
+    stream, num_edges = stream_route(
+        "mis", edges, mode, num_edges, num_partitions, _LubyMIS().block_flavor,
+    )
+    if stream:
+        return mis_stream(
+            spark, edges, max_iters=2 * max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )

@@ -50,6 +50,7 @@ from ..graph import (
     salted_agg,
     vertices_from_edges,
 )
+from ._route import stream_route
 
 
 # Broadcast-mode hard cap. The real ceiling is memory-derived (see
@@ -191,9 +192,10 @@ def pagerank(
       stream): blob state, file-sliced update streams, one narrow
       mapInPandas stage per superstep. Same recurrence and superstep
       count; float association differs (allclose, same rounded oracle).
-    - ``"auto"`` — r6: from STREAM_AUTO_MIN_EDGES (100k) deduped-ish raw
-      edges the call is served by the STREAM path — measured faster than
-      broadcast/shuffle at every scale past the block-build crossover
+    - ``"auto"`` — r6 (routing in algos._route): from the 100k-edge
+      cold crossover (raw edges) the call is served by the STREAM path
+      — measured faster than broadcast/shuffle at every scale past the
+      block-build crossover
       (sf0.1: broadcast 21.2 s iterate + 28.0 s setup vs stream 3.9 s
       iterate + build; 64M: BENCH/*_ab_64m.json). Below it: broadcast
       iff |V| <= the memory-derived ceiling (_broadcast_max_vertices:
@@ -210,24 +212,20 @@ def pagerank(
     aggregation) to absorb reducer skew on hub vertices; broadcast mode
     has no reducer at all, so skew is moot there.
     """
-    if mode not in ("auto", "shuffle", "broadcast", "stream"):
-        raise ValueError(f"unknown mode {mode!r}")
-    if mode in ("auto", "stream") and hub_threshold is None and checkpointer is None:
-        from ..csr import STREAM_AUTO_MIN_EDGES
+    from ..stream import pagerank_stream
 
-        ne = num_edges if num_edges is not None else edges.count()
-        num_edges = ne
-        if mode == "stream" or ne >= STREAM_AUTO_MIN_EDGES:
-            from ..stream import pagerank_stream
-
-            return pagerank_stream(
-                spark, edges, damping=damping, tol=tol, max_iters=max_iters,
-                num_partitions=num_partitions, weight_col=weight_col,
-                init_ranks=init_ranks, sources=sources, num_edges=ne,
-            )
-    elif mode == "stream":
-        raise ValueError(
-            "mode='stream' does not support hub_threshold or checkpointer"
+    # No block flavor: below its crossover PageRank stays on the join
+    # path even when warm blocks exist.
+    stream, num_edges = stream_route(
+        "pagerank", edges, mode, num_edges,
+        unsupported={"hub_threshold": hub_threshold, "checkpointer": checkpointer},
+        modes=("auto", "shuffle", "broadcast", "stream"),
+    )
+    if stream:
+        return pagerank_stream(
+            spark, edges, damping=damping, tol=tol, max_iters=max_iters,
+            num_partitions=num_partitions, weight_col=weight_col,
+            init_ranks=init_ranks, sources=sources, num_edges=num_edges,
         )
     p = num_partitions or choose_num_partitions(
         spark, num_edges if num_edges is not None else edges.count()

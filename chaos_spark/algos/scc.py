@@ -29,6 +29,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, vertices_from_edges
+from ._route import stream_route
 
 
 def strongly_connected_components(
@@ -43,39 +44,25 @@ def strongly_connected_components(
     """FB-coloring SCC; result ``state`` has ``(id, label)`` where label is
     the minimum vertex id of the SCC.
 
-    ``mode="auto"`` (default) serves the call through the fused two-graph
-    STREAM path (stream_algos.scc_stream — identical final labels; dead
-    vertices masked in-kernel instead of the per-round live-subgraph
-    rebuild, which at scale costs two full-graph joins per peeling round)
-    at or above csr.CSR_AUTO_MIN_EDGES, or below it when this graph's
-    directed blocks are already warm in the registry.
-    ``mode="join"``/``mode="stream"`` pin a path; ``num_edges``:
-    caller-known |E| skips the dispatch count. ``max_iters`` budgets the
-    inner fixpoints; the stream path's total-superstep budget is
+    ``mode="auto"`` (default; routing in algos._route) serves the call
+    through the fused two-graph STREAM path (stream_algos.scc_stream —
+    identical final labels; dead vertices masked in-kernel instead of
+    the per-round live-subgraph rebuild, which at scale costs two
+    full-graph joins per peeling round) from the 1M-edge cold
+    crossover, or below it when scc_stream's forward blocks (directed,
+    deduped) are already warm. ``max_iters`` budgets the inner
+    fixpoints; the stream path's total-superstep budget is
     ``2 * max_iters``."""
-    if mode not in ("auto", "join", "stream"):
-        raise ValueError(
-            f"unknown mode {mode!r} (expected 'auto', 'join' or 'stream')"
-        )
-    if mode != "join":
-        from ..csr import CSR_AUTO_MIN_EDGES, _warm_blocks_ready, _warm_key
-        from ..stream_algos import scc_stream
+    from ..stream_algos import _scc_block_flavor, scc_stream
 
-        route_stream = mode == "stream"
-        if not route_stream:
-            if num_edges is None:
-                num_edges = edges.count()
-            route_stream = num_edges >= CSR_AUTO_MIN_EDGES or (
-                _warm_blocks_ready(_warm_key(
-                    edges, False, None, num_partitions,
-                )) is not None
-            )
-        if route_stream:
-            return scc_stream(
-                spark, edges, max_iters=2 * max_iters,
-                num_partitions=num_partitions,
-                num_edges=num_edges,
-            )
+    stream, num_edges = stream_route(
+        "scc", edges, mode, num_edges, num_partitions, _scc_block_flavor,
+    )
+    if stream:
+        return scc_stream(
+            spark, edges, max_iters=2 * max_iters,
+            num_partitions=num_partitions, num_edges=num_edges,
+        )
     p = num_partitions or choose_num_partitions(
         spark, (num_edges if num_edges is not None else edges.count()) * 2
     )
@@ -104,7 +91,6 @@ def _scc(spark, edges, max_rounds, max_iters, p) -> RunResult:
 
     assigned = None  # DataFrame (id, scc)
     remaining = materialize(verts.repartition(p, F.col(ID)))
-    remaining.count()
     n_remaining = remaining.count()
     history = []
     total_supersteps = 0

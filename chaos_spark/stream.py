@@ -47,8 +47,11 @@ only what differs (PageRank's ``_SumPageRank`` is below; the others live
 in stream_algos; scc_stream keeps its own loop because it runs two
 graphs):
 
-- ``prep_graph(spark, edges, num_partitions, token, num_edges)``: the
-  block flavor (default plain undirected blocks);
+- ``block_flavor(edges) -> (block edges, undirected, weight column)``:
+  the one statement of the blocks the kernel runs over (default plain
+  undirected blocks over the raw edges). ``prep_graph`` builds the
+  CsrGraph from it, and the auto router (algos._route) keys its
+  warm-block probe on it;
 - ``bind(n, qs)``: run facts, |V| and the non-empty partitions;
 - ``init_blob(ids)``, and ``init_from_rows(ids, pdf)`` for a warm start
   from ``(id, ...)`` rows;
@@ -186,11 +189,15 @@ class _StreamKernel:
 
     stat_key = "changed"
 
+    def block_flavor(self, edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
+        return edges, True, None
+
     def prep_graph(self, spark, edges, num_partitions, token,
                    num_edges=None) -> CsrGraph:
+        e, undirected, weight_col = self.block_flavor(edges)
         return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            undirected=True, num_edges=num_edges,
+            spark, e, num_partitions=num_partitions, token=token,
+            undirected=undirected, weight_col=weight_col, num_edges=num_edges,
         )
 
     def bind(self, n: int, qs: tuple) -> None:
@@ -464,12 +471,8 @@ class _SumPageRank(_StreamKernel):
         )
         self.weight_col = weight_col
 
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, edges, num_partitions=num_partitions, token=token,
-            weight_col=self.weight_col, num_edges=num_edges,
-        )
+    def block_flavor(self, edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
+        return edges, False, self.weight_col
 
     def bind(self, n: int, qs: tuple) -> None:
         self.n, self.qs = n, qs

@@ -314,16 +314,13 @@ class _MinPlusSSSP(_StreamKernel):
         self.symmetric = symmetric
         self.name = "bfs_stream" if weight_col is None else "sssp_stream"
 
-    def prep_edges(self, edges: DataFrame) -> DataFrame:
+    def block_flavor(self, edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
         # Same edge prep as algos.bfs._sssp. Weighted: duplicate
         # (src,dst) edges fold by MIN under SSSP's gather — but the
         # weighted block build SUMS duplicates (PageRank's semantics), so
         # pre-aggregate to min here; the build's sum then sees unique
         # pairs and is the identity. Unweighted (BFS): dedup + w ≡ 1,
-        # served by plain unweighted blocks (no w array needed). Split
-        # from prep_graph so algos.bfs.sssp's auto router can compute
-        # the warm-block registry key of the plan the blocks are
-        # actually keyed on.
+        # served by plain unweighted blocks (no w array needed).
         if self.weight_col is None:
             e = dedup_edges(edges)
         else:
@@ -337,19 +334,13 @@ class _MinPlusSSSP(_StreamKernel):
             )
         if self.weight_col is not None:
             e = e.groupBy(SRC, DST).agg(F.min("w").alias("w"))
-        return e
+        return e, False, None if self.weight_col is None else "w"
 
     def prep_graph(self, spark, edges, num_partitions, token,
                    num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, self.prep_edges(edges), num_partitions=num_partitions,
-            token=token,
-            weight_col=None if self.weight_col is None else "w",
-            num_edges=(
-                None if num_edges is None
-                else num_edges * (2 if self.symmetric else 1)
-            ),
-        )
+        if num_edges is not None and self.symmetric:
+            num_edges *= 2  # the block edges carry both directions
+        return super().prep_graph(spark, edges, num_partitions, token, num_edges)
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         blob = np.full(len(ids), np.inf, dtype=np.float64)
@@ -670,7 +661,7 @@ class _KCorePeel(_StreamKernel):
     ⇒ parity with algos.kcores.k_core is superstep-for-superstep (same
     degrees, same drops, same converged-when-nothing-dropped test).
 
-    Self-loops are dropped at prep (prep_edges) to match the join path's
+    Self-loops are dropped from the block flavor to match the join path's
     ``symmetrize(edges).where(src != dst)`` — a kept self-loop would
     wrongly count a vertex toward its own surviving degree."""
 
@@ -681,18 +672,8 @@ class _KCorePeel(_StreamKernel):
     def __init__(self, k: int):
         self.k = int(k)
 
-    def prep_edges(self, edges: DataFrame) -> DataFrame:
-        # Split from prep_graph so the auto router in algos.kcores can
-        # compute the warm-block registry key of the plan the blocks are
-        # actually keyed on (same contract as _MinPlusSSSP.prep_edges).
-        return edges.select(SRC, DST).where(F.col(SRC) != F.col(DST))
-
-    def prep_graph(self, spark, edges, num_partitions, token,
-                   num_edges=None) -> CsrGraph:
-        return CsrGraph(
-            spark, self.prep_edges(edges), num_partitions=num_partitions,
-            token=token, undirected=True, num_edges=num_edges,
-        )
+    def block_flavor(self, edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
+        return edges.select(SRC, DST).where(F.col(SRC) != F.col(DST)), True, None
 
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
         return np.ones(len(ids), dtype=np.int64)
@@ -969,6 +950,13 @@ def _scc_fold(plan, upd_dir: str, p: int, init_val, ufunc) -> np.ndarray:
     return fold
 
 
+def _scc_block_flavor(edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
+    """scc_stream's forward blocks: directed, over the deduped edges (the
+    backward set is built from their reversal). algos.scc's auto router
+    probes the warm-block registry with it."""
+    return dedup_edges(edges), False, None
+
+
 def scc_stream(
     spark: SparkSession,
     edges: DataFrame,
@@ -1013,10 +1001,10 @@ def scc_stream(
     both phases (max/min folds are monotone and idempotent — the SSSP
     argument), so per-phase fixpoint detection lands on the same
     superstep."""
-    e = dedup_edges(edges)
+    e, undirected, weight_col = _scc_block_flavor(edges)
     g_f = CsrGraph(
         spark, e, num_partitions=num_partitions, token=token,
-        num_edges=num_edges,
+        undirected=undirected, weight_col=weight_col, num_edges=num_edges,
     )
     if g_f.num_edges == 0:
         empty = spark.createDataFrame([], schema=f"{ID} long, label long")

@@ -1,8 +1,10 @@
-"""r6 auto-routing: the algos entry points (pagerank / connected_components
-/ label_propagation) route mode="auto" calls to the fused stream kernels
-above the measured crossovers (and, for the integer-exact CC/LPA, below
-them when the warm-block registry already holds the graph's undirected
-blocks) — with results identical to the pinned join path."""
+"""Auto-routing of the nine stream-capable dispatchers (pagerank, cc, lpa,
+bfs/sssp, kcores, mis, bipartite, hyperanf, scc) through algos._route:
+mode="auto" calls take the fused stream kernels above the measured
+crossovers and, for every dispatcher but PageRank, below them when the
+warm-block registry already holds the blocks the kernel would build —
+with results identical to the pinned join path. Also covers the mode
+check and the mode="stream" refusals."""
 
 import numpy as np
 import pytest
@@ -77,15 +79,17 @@ def _dispatch_cases():
     from chaos_spark import algos
 
     return {
-        "pagerank": lambda s, e: algos.pagerank(s, e, tol=0.0, max_iters=2),
-        "cc": lambda s, e: algos.connected_components(s, e, max_iters=2),
-        "lpa": lambda s, e: algos.label_propagation(s, e, max_iters=2),
-        "bfs": lambda s, e: algos.bfs(s, e, 1, max_iters=2),
-        "kcore": lambda s, e: algos.k_core(s, e, 2, max_iters=2),
-        "mis": lambda s, e: algos.maximal_independent_set(s, e, max_iters=1),
-        "bipartite": lambda s, e: algos.bipartite_check(s, e, max_iters=2),
-        "hyperanf": lambda s, e: algos.hyper_anf(s, e, max_iters=2),
-        "scc": lambda s, e: algos.strongly_connected_components(s, e, max_iters=2),
+        "pagerank": lambda s, e, **k: algos.pagerank(s, e, tol=0.0, max_iters=2, **k),
+        "cc": lambda s, e, **k: algos.connected_components(s, e, max_iters=2, **k),
+        "lpa": lambda s, e, **k: algos.label_propagation(s, e, max_iters=2, **k),
+        "bfs": lambda s, e, **k: algos.bfs(s, e, 1, max_iters=2, **k),
+        "kcore": lambda s, e, **k: algos.k_core(s, e, 2, max_iters=2, **k),
+        "mis": lambda s, e, **k: algos.maximal_independent_set(s, e, max_iters=1, **k),
+        "bipartite": lambda s, e, **k: algos.bipartite_check(s, e, max_iters=2, **k),
+        "hyperanf": lambda s, e, **k: algos.hyper_anf(s, e, max_iters=2, **k),
+        "scc": lambda s, e, **k: algos.strongly_connected_components(
+            s, e, max_iters=2, **k
+        ),
     }
 
 
@@ -110,3 +114,101 @@ def test_auto_dispatch_threads_edge_count_into_block_build(spark, monkeypatch, a
     _dispatch_cases()[algo](spark, spark.createDataFrame(pdf))
     assert seen and None not in seen
     assert seen[0] == len(pdf)
+
+
+# dispatcher -> (stream_algos function the auto call must reach, a call
+# of the matching kernel that builds and registers the warm blocks).
+_WARM_CASES = {
+    "cc": ("cc_stream", lambda s, e: sa_mod.cc_stream(s, e, max_iters=2)),
+    "lpa": ("lpa_stream", lambda s, e: sa_mod.lpa_stream(s, e, max_iters=2)),
+    "bfs": ("sssp_stream", lambda s, e: sa_mod.bfs_stream(s, e, 1, max_iters=2)),
+    "kcore": ("kcore_stream", lambda s, e: sa_mod.kcore_stream(s, e, 2, max_iters=2)),
+    "mis": ("mis_stream", lambda s, e: sa_mod.mis_stream(s, e, max_iters=2)),
+    "bipartite": (
+        "bipartite_stream", lambda s, e: sa_mod.bipartite_stream(s, e, max_iters=2)
+    ),
+    "hyperanf": (
+        "hyperanf_stream", lambda s, e: sa_mod.hyperanf_stream(s, e, max_iters=2)
+    ),
+    "scc": ("scc_stream", lambda s, e: sa_mod.scc_stream(s, e, max_iters=20)),
+}
+
+
+def _markers():
+    import os
+
+    return {
+        key: os.path.getmtime(os.path.join(block_dir, "_BUILT"))
+        for key, (_, block_dir) in csr_mod._WARM_BLOCKS.items()
+    }
+
+
+@pytest.mark.parametrize("algo", sorted(_WARM_CASES))
+def test_auto_dispatch_adopts_its_kernels_warm_blocks(spark, monkeypatch, algo):
+    """Below every crossover, blocks built by the dispatcher's own stream
+    kernel route the auto call to that kernel, which adopts them with no
+    rebuild (registry unchanged, every _BUILT marker untouched)."""
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
+    edges = spark.createDataFrame(g3_cliques())
+    target, build = _WARM_CASES[algo]
+    build(spark, edges)
+    registered, built_at = dict(csr_mod._WARM_BLOCKS), _markers()
+    assert registered
+
+    calls = []
+    real = getattr(sa_mod, target)
+    monkeypatch.setattr(
+        sa_mod, target, lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    _dispatch_cases()[algo](spark, edges).state.count()
+    assert calls == [1]
+    assert csr_mod._WARM_BLOCKS == registered
+    assert _markers() == built_at
+
+
+def test_auto_scc_ignores_pagerank_blocks(spark, monkeypatch):
+    """PageRank's raw directed blocks are not scc_stream's deduped forward
+    blocks, so they must not pull an auto SCC call off the join path."""
+    from chaos_spark import algos
+    from chaos_spark.stream import pagerank_stream
+
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
+    edges = spark.createDataFrame(g3_cliques())
+    pagerank_stream(spark, edges, max_iters=2)
+    calls = []
+    real = sa_mod.scc_stream
+    monkeypatch.setattr(
+        sa_mod, "scc_stream", lambda *a, **k: calls.append(1) or real(*a, **k)
+    )
+    algos.strongly_connected_components(spark, edges)
+    assert calls == []
+
+
+@pytest.mark.parametrize("algo", sorted(_dispatch_cases()))
+def test_unknown_mode_names_the_accepted_modes(spark, algo):
+    edges = spark.createDataFrame(g3_cliques())
+    accepted = (
+        ("auto", "shuffle", "broadcast", "stream") if algo == "pagerank"
+        else ("auto", "join", "stream")
+    )
+    with pytest.raises(ValueError, match="unknown mode 'bogus'") as err:
+        _dispatch_cases()[algo](spark, edges, mode="bogus")
+    assert all(repr(m) in str(err.value) for m in accepted)
+
+
+@pytest.mark.parametrize("algo,arg", [
+    ("pagerank", "checkpointer"),
+    ("cc", "init_labels"),
+    ("cc", "checkpointer"),
+    ("lpa", "checkpointer"),
+])
+def test_stream_mode_refuses_join_only_arguments(spark, tmp_path, algo, arg):
+    from chaos_spark.checkpoint import CheckpointManager
+
+    edges = spark.createDataFrame(g3_cliques())
+    value = (
+        CheckpointManager(str(tmp_path), algo, {}) if arg == "checkpointer"
+        else spark.createDataFrame([(0, 0)], "id long, label long")
+    )
+    with pytest.raises(ValueError, match=f"mode='stream' does not support {arg}"):
+        _dispatch_cases()[algo](spark, edges, mode="stream", **{arg: value})

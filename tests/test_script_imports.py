@@ -5,6 +5,10 @@ engine function or parameter would otherwise leave them silently dead
 until the next campaign. Spark-free: the files are parsed with ``ast``,
 never executed; only the imported chaos_spark modules are loaded (no
 SparkSession starts).
+
+The same ``ast`` pass keeps stream routing in one place: no
+``chaos_spark/algos`` module but the router (``algos/_route.py``) may use
+the warm-block probe or a ``*_MIN_EDGES`` crossover.
 """
 
 from __future__ import annotations
@@ -159,3 +163,53 @@ def test_keyword_check_catches_a_deleted_parameter():
 def test_script_chaos_keywords_exist(path):
     stale = _stale_keywords(ast.parse(path.read_text(), str(path)))
     assert not stale, f"{path.relative_to(ROOT)} passes unknown keywords: {stale}"
+
+
+ROUTER = ROOT / "chaos_spark" / "algos" / "_route.py"
+DISPATCHERS = sorted(set((ROOT / "chaos_spark" / "algos").glob("*.py")) - {ROUTER})
+
+
+def _routing_refs(src: str) -> list[str]:
+    """Routing internals ``src`` imports from csr or reads as an
+    attribute: the warm-block probe and the ``*_MIN_EDGES`` crossovers."""
+    hits = []
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, ast.ImportFrom) and (
+            node.module or ""
+        ).split(".")[-1] == "csr":
+            names = [alias.name for alias in node.names]
+        elif isinstance(node, ast.Attribute):
+            names = [node.attr]
+        else:
+            continue
+        hits += [
+            n for n in names
+            if n in ("_warm_key", "_warm_blocks_ready") or n.endswith("_MIN_EDGES")
+        ]
+    return hits
+
+
+def test_routing_check_fires_on_a_hand_copied_router():
+    # The routing preamble algos/cc.py carried before algos/_route.py.
+    src = (
+        "def connected_components(spark, edges, mode, num_edges, num_partitions):\n"
+        "    from ..csr import CC_STREAM_MIN_EDGES, _warm_blocks_ready, _warm_key\n"
+        "    ne = num_edges if num_edges is not None else edges.count()\n"
+        "    warm = _warm_blocks_ready(\n"
+        "        _warm_key(edges, True, None, num_partitions)\n"
+        "    ) is not None\n"
+        "    return mode == 'stream' or ne >= CC_STREAM_MIN_EDGES or warm\n"
+    )
+    assert _routing_refs(src) == [
+        "CC_STREAM_MIN_EDGES", "_warm_blocks_ready", "_warm_key",
+    ]
+    assert _routing_refs("from chaos_spark import csr\ncsr.CSR_AUTO_MIN_EDGES\n")
+    assert _routing_refs(ROUTER.read_text())
+
+
+@pytest.mark.parametrize(
+    "path", DISPATCHERS, ids=lambda p: str(p.relative_to(ROOT))
+)
+def test_only_the_router_routes(path):
+    refs = _routing_refs(path.read_text())
+    assert not refs, f"{path.relative_to(ROOT)} routes by hand: {refs}; use algos._route"
