@@ -111,6 +111,18 @@ STREAM_AUTO_MIN_EDGES = int(
 CC_STREAM_MIN_EDGES = int(
     _os.environ.get("CHAOS_CC_STREAM_MIN_EDGES", 200_000)
 )
+# One-task crossover of the stream loop (stream._stream_loop): at or below
+# this deduplicated |E| the blob state defaults to ONE partition, whose
+# task runs a whole checkpoint interval of supersteps itself — one Spark
+# job per interval instead of one per superstep. Above it the state keeps
+# one partition per block, so the kernel math runs in parallel. Measured
+# by scripts/stream_batch_sweep.py (BENCH/stream_batch_sweep.json: RMAT
+# PageRank, 20 supersteps, pre-built blocks, local[4], min of 3): one task
+# / per-superstep jobs = 0.15-0.30 up to 2.9M deduplicated edges, 0.60 at
+# 15.4M, 0.81 at 23.4M, parity (0.99) at 31.0M and 1.26 at 46.9M. The
+# per-superstep shape gains from more cores and one task does not, so the
+# constant sits at half the 4-core parity point.
+STREAM_ONE_TASK_MAX_EDGES = 16_000_000
 
 # ---------------------------------------------------------------------------
 # Warm-block registry — in-process analogue of Chaos's cross-algorithm

@@ -35,7 +35,9 @@ from pyspark.sql import Column, DataFrame, Observation
 
 from .checkpoint import CheckpointManager
 
-StepFn = Callable[[DataFrame, int], tuple[DataFrame, dict[str, Any]]]
+StepFn = Callable[
+    [DataFrame, int], tuple[DataFrame, dict[str, Any] | list[dict[str, Any]]]
+]
 
 
 def materialize(df: DataFrame, superstep: int | None = None) -> DataFrame:
@@ -303,6 +305,14 @@ def run_supersteps(
     step contract depends on it (the CSR disk-block path routes state to
     per-partition edge blocks by partition INDEX) pass e.g.
     ``lambda df: df.repartition(p, F.col("id"))`` here.
+
+    A step may advance several supersteps: ``step_fn`` then returns a
+    LIST of per-superstep stats, each optionally carrying the
+    ``seconds`` it measured itself. The batch must stop at the next
+    checkpoint boundary or ``max_iters`` at the latest, and only its last
+    entry may read converged. ``history`` keeps one entry per superstep;
+    the part of the step's wall time the entries did not measure is
+    spread evenly over them, so a batch's entries sum to its wall time.
     """
     history: list[dict[str, Any]] = []
     converged = False
@@ -313,17 +323,34 @@ def run_supersteps(
         while superstep < max_iters:
             cpu0 = _host_cpu_jiffies()
             t0 = time.time()
-            new_state, stats = step_fn(state, superstep)
+            new_state, out = step_fn(state, superstep)
             seconds = time.time() - t0
             cpu1 = _host_cpu_jiffies()
-            superstep += 1
-            stats = dict(stats)
-            stats.update({"superstep": superstep, "seconds": round(seconds, 4)})
+            batch = [dict(s) for s in (out if isinstance(out, list) else [out])]
+            boundary = (superstep // checkpoint_every + 1) * checkpoint_every
+            if superstep + len(batch) > min(max_iters, boundary) or any(
+                s.get("converged", False) for s in batch[:-1]
+            ):
+                raise RuntimeError(
+                    f"a step from superstep {superstep} returned {len(batch)} "
+                    f"supersteps: it crosses superstep {min(max_iters, boundary)} "
+                    "or continues past convergence"
+                )
+            rest = (seconds - sum(s.get("seconds", 0.0) for s in batch)) / len(batch)
+            steal = {}
             if cpu0 is not None and cpu1 is not None and cpu1[1] > cpu0[1]:
-                stats["steal_frac"] = round(
+                steal["steal_frac"] = round(
                     (cpu1[0] - cpu0[0]) / (cpu1[1] - cpu0[1]), 4
                 )
-            history.append(stats)
+            for stats in batch:
+                superstep += 1
+                stats.update(
+                    superstep=superstep,
+                    seconds=round(stats.get("seconds", 0.0) + rest, 4),
+                    **steal,
+                )
+            history.extend(batch)
+            stats = batch[-1]
             converged = bool(stats.get("converged", False))
             if not converged and superstep % checkpoint_every == 0:
                 written = new_state

@@ -1,5 +1,6 @@
-"""Streaming-partition supersteps — Chaos's slipstore loop as ONE fused
-Spark stage per iteration, shared by every ``*_stream`` kernel.
+"""Streaming-partition supersteps — Chaos's slipstore loop as fused Spark
+stages, shared by every ``*_stream`` kernel: one stage per superstep, or,
+when one task holds the whole blob state, one per checkpoint interval.
 
 A row-based superstep over the same blocks would run the exchange
 through Spark row machinery: ~|distinct dst per block| x p update ROWS
@@ -29,13 +30,23 @@ actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
   retransmitted (they live in the build-time apply plan). Next to its
   partials each partition publishes ``stats-{q} = [message, stat]``: a
   global message every apply task folds in the same fixed order
-  (PageRank's dangling mass), and the convergence statistic the DRIVER
-  reads after the barrier — no CollectMetrics node, no listener wait, no
-  driver round trip inside the loop.
+  (PageRank's dangling mass), and the convergence statistic read after
+  the barrier — no CollectMetrics node, no listener wait, no driver
+  round trip inside the loop.
 - The superstep is ONE narrow mapInPandas stage over the blob state that
   FUSES gather/apply and scatter, plus an eager localCheckpoint barrier:
   step t+1's apply can only run after every step-t scatter has published
-  (exactly X-Stream's phase barrier between scatter and gather).
+  (exactly X-Stream's phase barrier between scatter and gather), and the
+  driver reads the statistic.
+- When the blob state is ONE partition (the default on graphs at or
+  below ``csr.STREAM_ONE_TASK_MAX_EDGES``), its one task holds every
+  blob, so the barrier between supersteps is program order inside the
+  task, as in X-Stream's in-memory engine ([X13] §4): the task runs
+  superstep after superstep, reads the statistic itself, and stops at
+  convergence, ``max_iters`` or the next checkpoint boundary. The Spark
+  job — whose fixed cost dwarfs a small graph's kernel math — is paid
+  once per checkpoint interval instead of once per superstep. Same
+  plugin calls in the same order, so results are bit-identical.
 
 One loop, many kernels (``_stream_loop``, the Pregelix shape: a vertex
 program as a UDF over one generic plan). The loop owns the graph build
@@ -76,7 +87,10 @@ Retry/speculation safety: update-stream files are published by atomic
 rename and their content is a pure function of (blob state, static block)
 — a retried or speculative task republishes identical bytes. Stream dirs
 are namespaced by a per-run id so concurrent runs sharing a pinned block
-layout never collide; consumed dirs are deleted as each job completes.
+layout never collide. A task running several supersteps deletes each dir
+it published once the next superstep has consumed it, but never the
+job's input stream, so a retried attempt restarts from intact input; the
+driver deletes the rest as each job completes.
 
 Checkpoint/resume: the blob state is written as-is (part, blob) through
 the standard CheckpointManager (parquet + per-partition manifest +
@@ -88,8 +102,10 @@ riding them) are derived state and are never checkpointed.
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
+import time
 import uuid
 
 import numpy as np
@@ -105,6 +121,7 @@ from .engine import (
     run_supersteps,
     superstep_conf,
 )
+from . import csr
 from .csr import CsrGraph, _load_apply_plan, _load_disk_block
 from .graph import ID
 
@@ -141,20 +158,22 @@ def _loop_checkpoint_every(checkpointer, checkpoint_every: int, max_iters: int) 
     is one mapInPandas over a LogicalRDD; no resume point to write), so
     disable it rather than pay ~6 parquet round trips per 31-superstep
     bench run. With a checkpointer the cadence is the resume contract —
-    kept as declared."""
+    kept as declared. It also bounds a one-task batch: without a
+    checkpointer a one-task run is one superstep job."""
     return checkpoint_every if checkpointer is not None else max_iters + 1
 
 
-def _publish_arr(upd_dir: str, name: str, arr: np.ndarray) -> None:
-    """Atomically publish one update-stream member. Idempotent under task
-    retry/speculation: content is deterministic, and a lost rename race
-    leaves the winner's identical bytes."""
+def _publish(upd_dir: str, fname: str, write) -> None:
+    """Atomically publish one update-stream member written by
+    ``write(file)``. Idempotent under task retry/speculation: content is
+    deterministic, and a lost rename race leaves the winner's identical
+    bytes."""
     os.makedirs(upd_dir, exist_ok=True)
-    tmp = os.path.join(upd_dir, f".{name}.{os.getpid()}.npy")
+    tmp = os.path.join(upd_dir, f".{fname}.{os.getpid()}")
     with open(tmp, "wb") as f:
-        np.save(f, arr)
+        write(f)
     try:
-        os.replace(tmp, os.path.join(upd_dir, f"{name}.npy"))
+        os.replace(tmp, os.path.join(upd_dir, fname))
     except OSError:
         # On POSIX, replace over an existing file never fails for a lost
         # retry/speculation race (it atomically overwrites the winner's
@@ -167,6 +186,10 @@ def _publish_arr(upd_dir: str, name: str, arr: np.ndarray) -> None:
         except OSError:
             pass
         raise
+
+
+def _publish_arr(upd_dir: str, name: str, arr: np.ndarray) -> None:
+    _publish(upd_dir, f"{name}.npy", lambda f: np.save(f, arr))
 
 
 def _stats(upd_dir: str, qs) -> list[np.ndarray]:
@@ -230,22 +253,29 @@ def _stream_loop(
 ) -> RunResult:
     """Run ``algo`` over the fused stream superstep (module docstring).
 
-    Init → one fused mapInPandas job per superstep with the
-    eager-localCheckpoint barrier → expand. A cold init is ONE fused
-    init+scatter job; a warm start (``init_rows``: an ``(id, ...)`` frame
-    joined onto every vertex and handed to ``algo.init_from_rows``) or a
-    checkpoint resume adds one scatter job that regenerates the starting
-    update stream. A checkpoint resume takes precedence over
-    ``init_rows``. ``graph`` reuses a built CsrGraph; a graph the loop
-    built itself is released before returning.
+    Init → fused mapInPandas jobs with the eager-localCheckpoint barrier
+    → expand. A cold init is ONE fused init+scatter job; a warm start
+    (``init_rows``: an ``(id, ...)`` frame joined onto every vertex and
+    handed to ``algo.init_from_rows``) or a checkpoint resume adds one
+    scatter job that regenerates the starting update stream. A checkpoint
+    resume takes precedence over ``init_rows``. ``graph`` reuses a built
+    CsrGraph; a graph the loop built itself is released before returning,
+    and so are the run's update streams, whether the run returns or
+    raises.
 
     ``state_partitions``: physical partition count of the BLOB state —
     independent of the block count p, because every kernel routes by the
-    row's ``part`` value, never by task index. The per-task mapInPandas
-    machinery (JVM task setup, Python worker round trip, Arrow stream
-    open/close — measured ~0.13 s/task against ~0.03 s of kernel math on
-    the 64M-edge bench graph) dominates when each task carries ONE row;
-    packing several blob rows per task amortizes it. Default p.
+    row's ``part`` value, never by task index. With ONE partition, one
+    task holds every blob, so it runs superstep after superstep itself
+    (the barrier is program order, as in X-Stream's in-memory engine) and
+    a Spark job is needed only per checkpoint interval: the task reads
+    each superstep's statistic, stops at convergence, and records
+    ``[stat, seconds]`` per superstep in ``steps.json`` next to its last
+    stats file. With more partitions each job runs one superstep and the
+    driver reads the statistic. Default: 1 when the graph's deduplicated
+    |E| is at or below ``csr.STREAM_ONE_TASK_MAX_EDGES``, else p. Results
+    are identical either way: the same kernels run over the same bytes in
+    the same order.
     """
     g = graph or algo.prep_graph(
         spark, edges, num_partitions, token, num_edges
@@ -260,6 +290,10 @@ def _stream_loop(
     # these files each superstep.
     qs = _apply_parts(block_dir)
     algo.bind(n, qs)
+    sp = state_partitions or (
+        1 if g.num_edges <= csr.STREAM_ONE_TASK_MAX_EDGES else p
+    )
+    ck_every = _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters)
 
     def init_kernel_for(superstep: int):
         ud = _upd_dir(block_dir, run_id, superstep)
@@ -327,17 +361,24 @@ def _stream_loop(
 
         return scatter_only
 
-    def fused_kernel_for(superstep: int):
-        """Apply step ``superstep`` (reads upd of superstep-1), then
-        scatter for step superstep+1 (writes upd of superstep)."""
-        ud_in = _upd_dir(block_dir, run_id, superstep - 1)
-        ud_out = _upd_dir(block_dir, run_id, superstep)
+    def fused_kernel_for(first: int, last: int):
+        """Supersteps ``first..last``: superstep s applies upd-(s-1) and
+        scatters upd-s, partition by partition in ascending ``part``.
+        More than one superstep only with one task (sp == 1), which then
+        stops early at convergence and records its steps."""
 
         def fused(batches):
+            blobs = {}
             for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=algo.dtype)
+                for q, b in zip(pdf[PART].tolist(), pdf[BLOB].tolist()):
+                    blobs[int(q)] = np.frombuffer(b, dtype=algo.dtype)
+            steps = []
+            for s in range(first, last + 1):
+                t0 = time.perf_counter()
+                ud_in = _upd_dir(block_dir, run_id, s - 1)
+                ud_out = _upd_dir(block_dir, run_id, s)
+                for q in sorted(blobs):
+                    prev = blobs[q]
                     plan = _load_apply_plan(token_, q, block_dir)
                     if plan is None or not algo.blob_ok(len(plan["ids"]), len(prev)):
                         raise RuntimeError(
@@ -346,11 +387,38 @@ def _stream_loop(
                     new, stat = algo.gather_apply(plan, ud_in, p, q, prev)
                     blk = _load_disk_block(token_, q, block_dir)
                     algo.scatter(ud_out, q, blk, plan, new, float(stat))
-                    yield pd.DataFrame({PART: [q], BLOB: [new.tobytes()]})
+                    blobs[q] = new
+                if s > first:
+                    # Published by this task and now consumed. The job's
+                    # input stream stays, so a retried attempt restarts
+                    # from it.
+                    shutil.rmtree(ud_in, ignore_errors=True)
+                if sp == 1:
+                    stat = algo.read_stat(ud_out, qs)
+                    steps.append([stat, time.perf_counter() - t0])
+                    if algo.converged(stat):
+                        break
+            if sp == 1:
+                _publish(ud_out, "steps.json", lambda f: f.write(json.dumps(steps).encode()))
+            for q in sorted(blobs):
+                yield pd.DataFrame({PART: [q], BLOB: [blobs[q].tobytes()]})
 
         return fused
 
-    sp = state_partitions or p
+    def steps_of(first: int, last: int) -> list[dict]:
+        # The one task stopped at the first superstep whose dir holds its
+        # record (the intermediate dirs are gone; a failed attempt never
+        # writes one).
+        for s in range(first, last + 1):
+            path = os.path.join(_upd_dir(block_dir, run_id, s), "steps.json")
+            if os.path.exists(path):
+                with open(path) as f:
+                    return [
+                        {"converged": algo.converged(stat), algo.stat_key: stat,
+                         "seconds": secs}
+                        for stat, secs in json.load(f)
+                    ]
+        raise RuntimeError(f"{algo.name}: no steps record for supersteps {first}-{last}")
 
     def realign(df: DataFrame) -> DataFrame:
         # Blob rows are self-describing (routed by their part value) —
@@ -358,64 +426,67 @@ def _stream_loop(
         # parquet round trip; placement never affects results.
         return df.repartition(sp)
 
-    start = 0
-    state = None
-    if checkpointer is not None:
-        manifest = checkpointer.latest()
-        if manifest is not None:
-            start = int(manifest["superstep"])
-            state = realign(checkpointer.load(spark, manifest))
+    try:
+        start = 0
+        state = None
+        if checkpointer is not None:
+            manifest = checkpointer.latest()
+            if manifest is not None:
+                start = int(manifest["superstep"])
+                state = realign(checkpointer.load(spark, manifest))
 
-    with superstep_conf(spark, p):
-        if state is None and init_rows is None:
-            # ONE fused init+scatter job (see init_kernel_for).
-            state = spark.range(0, p, 1, p).mapInPandas(
-                init_kernel_for(start), schema=_STATE_SCHEMA
-            ).localCheckpoint(eager=True)
-            if sp != p:
-                state = materialize(state.repartition(sp))
-        else:
-            if state is None:
-                state = g.align_state(g.verts.join(init_rows, ID, "left")).mapInPandas(
-                    rows_init_kernel, schema=_STATE_SCHEMA
+        with superstep_conf(spark, p):
+            if state is None and init_rows is None:
+                # ONE fused init+scatter job (see init_kernel_for), already
+                # in sp partitions.
+                state = spark.range(0, p, 1, sp).mapInPandas(
+                    init_kernel_for(start), schema=_STATE_SCHEMA
                 ).localCheckpoint(eager=True)
             else:
-                state = state.select(PART, BLOB).localCheckpoint(eager=True)
-            if sp != p:
-                # Lazy checkpoint: the scatter job below is the action
-                # that materializes the repacked layout.
-                state = materialize(state.repartition(sp))
-            # Update stream of the starting state: derived state,
-            # regenerated rather than checkpointed (one tiny job);
-            # steady-state supersteps publish inside the fused stage.
-            rows = state.mapInPandas(
-                scatter_kernel_for(start), schema=f"{PART} int, n long"
-            ).collect()
-            assert sum(r["n"] for r in rows) == n
-            assert tuple(sorted(int(r[PART]) for r in rows)) == qs
+                if state is None:
+                    state = g.align_state(g.verts.join(init_rows, ID, "left")).mapInPandas(
+                        rows_init_kernel, schema=_STATE_SCHEMA
+                    ).localCheckpoint(eager=True)
+                    if sp != p:
+                        # Lazy checkpoint: the scatter job below is the
+                        # action that materializes the repacked layout.
+                        state = materialize(state.repartition(sp))
+                else:
+                    state = state.select(PART, BLOB).localCheckpoint(eager=True)
+                # Update stream of the starting state: derived state,
+                # regenerated rather than checkpointed (one tiny job);
+                # steady-state supersteps publish inside the fused stage.
+                rows = state.mapInPandas(
+                    scatter_kernel_for(start), schema=f"{PART} int, n long"
+                ).collect()
+                assert sum(r["n"] for r in rows) == n
+                assert tuple(sorted(int(r[PART]) for r in rows)) == qs
 
-        try:
             def step(cur: DataFrame, superstep: int):
-                pre = cur.mapInPandas(
-                    fused_kernel_for(superstep + 1), schema=_STATE_SCHEMA
+                first = superstep + 1
+                last = first if sp > 1 else min(
+                    max_iters, (superstep // ck_every + 1) * ck_every
                 )
+                pre = cur.mapInPandas(fused_kernel_for(first, last), schema=_STATE_SCHEMA)
                 maybe_explain(pre, "superstep")
                 new = pre.localCheckpoint(eager=True)
-                # The barrier just completed, so every stats file of step
-                # superstep+1 is published.
-                stat = algo.read_stat(_upd_dir(block_dir, run_id, superstep + 1), qs)
-                # Step superstep+1 published upd-(superstep+1) and consumed
-                # upd-superstep; upd-(superstep-1) is now unreachable.
-                if superstep >= 1:
-                    shutil.rmtree(
-                        _upd_dir(block_dir, run_id, superstep - 1),
-                        ignore_errors=True,
-                    )
-                return new, {"converged": algo.converged(stat), algo.stat_key: stat}
+                # The barrier just completed, so every stats file of the
+                # job's last superstep is published.
+                if sp == 1:
+                    stats = steps_of(first, last)
+                else:
+                    stat = algo.read_stat(_upd_dir(block_dir, run_id, first), qs)
+                    stats = [{"converged": algo.converged(stat), algo.stat_key: stat}]
+                # Keep the job's input and output streams; every other dir
+                # of the run is unreachable now.
+                keep = {superstep, superstep + len(stats)}
+                for d in glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
+                    if int(d.rsplit("-", 1)[1]) not in keep:
+                        shutil.rmtree(d, ignore_errors=True)
+                return new, stats
 
             result = run_supersteps(
-                state, step, max_iters, checkpointer,
-                _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
+                state, step, max_iters, checkpointer, ck_every,
                 start_superstep=start, realign=realign,
             )
 
@@ -434,13 +505,14 @@ def _stream_loop(
                 expand, schema=algo.out_schema
             ).localCheckpoint(eager=True)
             release_state(blob_state)
-        finally:
-            # Update streams are derived per-run state — always reclaimed.
-            for d in glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
-                shutil.rmtree(d, ignore_errors=True)
-    if graph is None:
-        g.unpersist()
-    return result
+        return result
+    finally:
+        # Update streams are derived per-run state — always reclaimed, and
+        # so is a block dir the loop built for this call alone.
+        for d in glob.glob(os.path.join(block_dir, f"upd-{run_id}-*")):
+            shutil.rmtree(d, ignore_errors=True)
+        if graph is None:
+            g.unpersist()
 
 
 class _SumPageRank(_StreamKernel):

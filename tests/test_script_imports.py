@@ -8,7 +8,8 @@ SparkSession starts).
 
 The same ``ast`` pass keeps stream routing in one place: no
 ``chaos_spark/algos`` module but the router (``algos/_route.py``) may use
-the warm-block probe or a ``*_MIN_EDGES`` crossover.
+the warm-block probe or a ``*_MIN_EDGES`` crossover. And it pins the
+env-knob budget: the ``CHAOS_*`` names read under ``chaos_spark/``.
 """
 
 from __future__ import annotations
@@ -213,3 +214,43 @@ def test_routing_check_fires_on_a_hand_copied_router():
 def test_only_the_router_routes(path):
     refs = _routing_refs(path.read_text())
     assert not refs, f"{path.relative_to(ROOT)} routes by hand: {refs}; use algos._route"
+
+
+# ROADMAP aim 2: no new ``CHAOS_*`` env knob without deleting one. These
+# are the knobs read under chaos_spark/ today; a change that adds one must
+# delete another (or say in its commit why the budget grows).
+ENV_KNOBS = frozenset({
+    "CHAOS_AQE", "CHAOS_CC_STREAM_MIN_EDGES", "CHAOS_CSR_BLOCK_DIR",
+    "CHAOS_CSR_MIN_EDGES", "CHAOS_EXPLAIN_DIR", "CHAOS_EXPLAIN_NAME",
+    "CHAOS_EXPLAIN_TAG", "CHAOS_PERIODIC_GC", "CHAOS_SPARK_DRIVER_MEM",
+    "CHAOS_STREAM_MIN_EDGES", "CHAOS_TRI_BCAST_MAX_ROWS",
+    "CHAOS_WARM_KEEP_MAX_EDGES", "CHAOS_WORKER_FASTPATH",
+})
+
+
+def _env_knobs(src: str) -> set[str]:
+    """Every string literal in ``src`` that is exactly a ``CHAOS_*`` name —
+    how an env knob is read (``os.environ.get("CHAOS_X")``); docstrings
+    that mention one are longer strings and do not count."""
+    return {
+        node.value for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Constant) and isinstance(node.value, str)
+        and node.value.startswith("CHAOS_")
+        and node.value.replace("_", "").isalnum() and node.value.isupper()
+    }
+
+
+def _knob_budget_excess(srcs) -> set[str]:
+    return set().union(*map(_env_knobs, srcs)) - ENV_KNOBS
+
+
+def test_env_knob_check_fires_on_an_added_knob():
+    srcs = [p.read_text() for p in (ROOT / "chaos_spark").rglob("*.py")]
+    added = 'import os\nX = int(os.environ.get("CHAOS_NEW_KNOB", 1))\n'
+    assert _knob_budget_excess([*srcs, added]) == {"CHAOS_NEW_KNOB"}
+    assert _env_knobs('"""Set CHAOS_AQE=on to pin it."""\n') == set()
+
+
+def test_env_knob_budget():
+    srcs = [p.read_text() for p in (ROOT / "chaos_spark").rglob("*.py")]
+    assert set().union(*map(_env_knobs, srcs)) == ENV_KNOBS
