@@ -57,8 +57,8 @@ def stream_route(
 ) -> tuple[bool, int | None]:
     """``(use the stream path, |E| if known)`` for one ``algo`` call.
 
-    ``flavor``: the kernel's block flavor (``_StreamKernel.block_flavor``
-    or scc's), keyed for the warm-block probe. ``unsupported``: argument
+    ``flavor``: the kernel's block flavor (``_StreamKernel.block_flavor``),
+    keyed for the warm-block probe. ``unsupported``: argument
     name -> value of each argument the stream path does not take; any
     non-None value keeps the call on the join path."""
     if mode not in modes:

@@ -38,7 +38,7 @@ def bipartite_check(
 ) -> RunResult:
     """Result ``state``: ``(id, root, dist, color)`` — color = dist % 2 from
     the component's min-id root. ``history[-1]['odd_edges']`` counts
-    conflict edges; bipartite iff it is 0 (also in stats).
+    conflict edges; bipartite iff it is 0 (``history[-1]['bipartite']``).
 
     ``mode="auto"`` (default; routing in algos._route) serves the call
     through the fused packed-lexmin STREAM path
@@ -119,6 +119,19 @@ def _bipartite(spark, edges, max_iters, p) -> RunResult:
 
     colored = result.state.select(ID, "root", "dist", (F.col("dist") % 2).alias("color"))
     colored = colored.persist()
+    _record_odd_edges(result, und, colored)
+    und.unpersist()
+    result.state = colored
+    return result
+
+
+def _record_odd_edges(result: RunResult, und: DataFrame, colored: DataFrame) -> None:
+    """Count the conflict edges — loop-free undirected edges ``und`` whose
+    endpoints ``colored`` gives one color — into the last superstep's
+    history entry as ``odd_edges`` and ``bipartite``. Shared by the join
+    and stream paths. A run of zero supersteps has no entry to hold it."""
+    if not result.history:
+        return
     odd = (
         und.where(F.col(SRC) < F.col(DST))
         .join(colored.select(F.col(ID).alias(SRC), F.col("color").alias("c1")), SRC)
@@ -126,10 +139,4 @@ def _bipartite(spark, edges, max_iters, p) -> RunResult:
         .where(F.col("c1") == F.col("c2"))
         .count()
     )
-    und.unpersist()
-    result.state = colored
-    result.history.append(
-        {"superstep": result.supersteps, "odd_edges": odd, "bipartite": odd == 0,
-         "seconds": 0.0, "converged": result.converged}
-    )
-    return result
+    result.history[-1].update(odd_edges=odd, bipartite=odd == 0)

@@ -53,10 +53,11 @@ def strongly_connected_components(
     deduped) are already warm. ``max_iters`` budgets the inner
     fixpoints; the stream path's total-superstep budget is
     ``2 * max_iters``."""
-    from ..stream_algos import _scc_block_flavor, scc_stream
+    from ..stream_algos import _FBColoringSCC, scc_stream
 
     stream, num_edges = stream_route(
-        "scc", edges, mode, num_edges, num_partitions, _scc_block_flavor,
+        "scc", edges, mode, num_edges, num_partitions,
+        _FBColoringSCC().block_flavor,
     )
     if stream:
         return scc_stream(

@@ -55,14 +55,14 @@ strict blob/plan alignment checks, checkpoint cadence, update-stream
 cleanup, the expand to ``(id, ...)`` rows, and releasing an ephemeral
 block dir it built. A kernel is a ``_StreamKernel`` plugin that supplies
 only what differs (PageRank's ``_SumPageRank`` is below; the others live
-in stream_algos; scc_stream keeps its own loop because it runs two
-graphs):
+in stream_algos):
 
 - ``block_flavor(edges) -> (block edges, undirected, weight column)``:
   the one statement of the blocks the kernel runs over (default plain
   undirected blocks over the raw edges). ``prep_graph`` builds the
   CsrGraph from it, and the auto router (algos._route) keys its
-  warm-block probe on it;
+  warm-block probe on it; ``release()`` frees whatever else
+  ``prep_graph`` built (default nothing);
 - ``bind(n, qs)``: run facts, |V| and the non-empty partitions;
 - ``init_blob(ids)``, and ``init_from_rows(ids, pdf)`` for a warm start
   from ``(id, ...)`` rows;
@@ -71,7 +71,8 @@ graphs):
   and stats-{q};
 - ``read_stat(upd_dir, qs)``, ``converged(stat)`` and ``stat_key``: the
   driver-side statistic, its test, and its history key (default: changed
-  vertices summed over partitions, converged at 0);
+  vertices summed over partitions, converged at 0). A dict statistic
+  is merged into the history entry field by field;
 - ``expand_pdf(plan, blob)`` with ``out_schema``, and ``blob_ok`` for
   blobs that are not one word per vertex.
 
@@ -128,9 +129,10 @@ from .graph import ID
 PART, BLOB = "part", "blob"
 _STATE_SCHEMA = f"{PART} int, {BLOB} binary"
 
-# Worker-level memo: dangling mass per update dir (each worker folds the
-# p tiny stats files once per superstep, not once per task/row).
-_DM_CACHE: dict[str, float] = {}
+# Worker-level memo: one column of the stats rows folded per update dir
+# (each worker folds the p tiny stats files once per superstep, not once
+# per task/row).
+_FOLD_CACHE: dict[tuple[str, int], float] = {}
 
 
 def _upd_dir(block_dir: str, run_id: str, superstep: int) -> str:
@@ -204,6 +206,36 @@ def _stats(upd_dir: str, qs) -> list[np.ndarray]:
     return [np.load(os.path.join(upd_dir, f"stats-{q}.npy")) for q in qs]
 
 
+def _stats_fold(upd_dir: str, qs, col: int) -> float:
+    """Fixed-order sum of column ``col`` of the stats rows: a global
+    message, the identical float in every task that folds it."""
+    key = (upd_dir, col)
+    v = _FOLD_CACHE.get(key)
+    if v is None:
+        v = sum(float(s[col]) for s in _stats(upd_dir, qs))
+        if len(_FOLD_CACHE) > 64:
+            _FOLD_CACHE.clear()
+        _FOLD_CACHE[key] = v
+    return v
+
+
+def _incoming(plan, upd_dir: str, p: int):
+    """``(rows, slice)`` for every block b with updates for this
+    partition, in ascending b: the block's slice ``[soff, soff+len)`` of
+    ``partial-{b}`` and the state rows it lands on. Rows are unique
+    within one slice (a block's dst vector is distinct), so a fold needs
+    no ufunc.at."""
+    aoff, soff = plan["aoff"], plan["soff"]
+    apos = np.asarray(plan["apos"])
+    for b in range(p):
+        ln = int(aoff[b + 1] - aoff[b])
+        if ln <= 0:
+            continue
+        arr = np.load(os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r")
+        a0, s0 = int(aoff[b]), int(soff[b])
+        yield apos[a0:a0 + ln], np.asarray(arr[s0:s0 + ln])
+
+
 class _StreamKernel:
     """Plugin contract of ``_stream_loop`` (module docstring), with the
     defaults most kernels share: plain undirected blocks, one state word
@@ -222,6 +254,9 @@ class _StreamKernel:
             spark, e, num_partitions=num_partitions, token=token,
             undirected=undirected, weight_col=weight_col, num_edges=num_edges,
         )
+
+    def release(self) -> None:
+        """Free what ``prep_graph`` built beside the graph it returned."""
 
     def bind(self, n: int, qs: tuple) -> None:
         """Run facts, known once the graph is: |V| and the non-empty
@@ -405,6 +440,10 @@ def _stream_loop(
 
         return fused
 
+    def entry(stat) -> dict:
+        return {"converged": algo.converged(stat),
+                **(stat if isinstance(stat, dict) else {algo.stat_key: stat})}
+
     def steps_of(first: int, last: int) -> list[dict]:
         # The one task stopped at the first superstep whose dir holds its
         # record (the intermediate dirs are gone; a failed attempt never
@@ -413,11 +452,8 @@ def _stream_loop(
             path = os.path.join(_upd_dir(block_dir, run_id, s), "steps.json")
             if os.path.exists(path):
                 with open(path) as f:
-                    return [
-                        {"converged": algo.converged(stat), algo.stat_key: stat,
-                         "seconds": secs}
-                        for stat, secs in json.load(f)
-                    ]
+                    return [{**entry(stat), "seconds": secs}
+                            for stat, secs in json.load(f)]
         raise RuntimeError(f"{algo.name}: no steps record for supersteps {first}-{last}")
 
     def realign(df: DataFrame) -> DataFrame:
@@ -475,8 +511,7 @@ def _stream_loop(
                 if sp == 1:
                     stats = steps_of(first, last)
                 else:
-                    stat = algo.read_stat(_upd_dir(block_dir, run_id, first), qs)
-                    stats = [{"converged": algo.converged(stat), algo.stat_key: stat}]
+                    stats = [entry(algo.read_stat(_upd_dir(block_dir, run_id, first), qs))]
                 # Keep the job's input and output streams; every other dir
                 # of the run is unreachable now.
                 keep = {superstep, superstep + len(stats)}
@@ -513,6 +548,7 @@ def _stream_loop(
             shutil.rmtree(d, ignore_errors=True)
         if graph is None:
             g.unpersist()
+            algo.release()
 
 
 class _SumPageRank(_StreamKernel):
@@ -564,35 +600,18 @@ class _SumPageRank(_StreamKernel):
         rank[np.isnan(rank)] = 1.0 / self.n
         return rank
 
-    def _dangling_mass(self, upd_dir: str) -> float:
-        """Fixed-order fold of the per-partition dangling masses riding
-        the update stream — every task computes the identical float."""
-        dm = _DM_CACHE.get(upd_dir)
-        if dm is None:
-            dm = sum(float(s[0]) for s in _stats(upd_dir, self.qs))
-            if len(_DM_CACHE) > 64:
-                _DM_CACHE.clear()
-            _DM_CACHE[upd_dir] = dm
-        return dm
-
     def gather_apply(self, plan, upd_dir: str, p: int, q: int,
                      prev: np.ndarray) -> tuple[np.ndarray, float]:
         # Add-fold gather: one bincount over the build-time positions of
         # every incoming update slice (fixed block order -> deterministic
         # float association).
-        parts = []
-        aoff, soff = plan["aoff"], plan["soff"]
-        for b in range(p):
-            ln = int(aoff[b + 1] - aoff[b])
-            if ln <= 0:
-                continue
-            arr = np.load(os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r")
-            parts.append(np.asarray(arr[int(soff[b]):int(soff[b]) + ln]))
+        parts = [sl for _, sl in _incoming(plan, upd_dir, p)]
         contrib = np.zeros(len(prev))
         if parts:
             w = parts[0] if len(parts) == 1 else np.concatenate(parts)
             contrib = np.bincount(plan["apos"], weights=w, minlength=len(prev))
-        d, dm = self.damping, self._dangling_mass(upd_dir)
+        # The dangling mass: a global message riding the stats files.
+        d, dm = self.damping, _stats_fold(upd_dir, self.qs, 0)
         if self.src_arr is None:
             rank = (1.0 - d) / self.n + d * (contrib + dm / self.n)
         else:

@@ -1,11 +1,10 @@
 """Fused streaming-partition supersteps for CC (hash-min), LPA (mode
 label), BFS/SSSP (min-plus), HyperANF (register-max), k-core
-(threshold-peel degree sums), MIS and bipartiteness — plugins of the one
-fused-stream loop in chaos_spark.stream (see that module's docstring for
-the design and the plugin contract) — plus SCC, which runs its own
-two-graph loop. Vertex state is one blob per streaming partition, and
-the convergence statistic (count of changed vertices) rides the update
-stream's stats files.
+(threshold-peel degree sums), MIS, bipartiteness and SCC — plugins of
+the one fused-stream loop in chaos_spark.stream (see that module's
+docstring for the design and the plugin contract). Vertex state is one
+blob per streaming partition, and the convergence statistic (count of
+changed vertices) rides the update stream's stats files.
 
 Per-algorithm update streams over the SAME v5 blocks and apply plans
 (csr.py — no new build pass):
@@ -55,6 +54,10 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   whose scatter message is literally ``label + 1`` under CC's min-fold;
   self-loops are min-noops (_ParityBFS).
 
+- **SCC (FB-coloring, two graphs)**: forward max-color folds over the
+  directed blocks, backward min-sweeps over a reversed-edge block set;
+  the phase rides the blob head (_FBColoringSCC).
+
 Correctness contract: EXACT same fixed point and superstep count as the
 join paths (cc: min-fold is order-free; lpa: integer counts and
 deterministic min-tie). Convergence = zero changed labels,
@@ -75,8 +78,6 @@ of contiguous file ranges (exactly Chaos's slipstore claim).
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 import numpy as np
 import pandas as pd
@@ -95,24 +96,15 @@ from .algos.mis import (
 )
 from .checkpoint import CheckpointManager
 from .csr import CsrGraph, _load_apply_plan, _load_disk_block
-from .engine import (
-    RunResult,
-    materialize,
-    release_state,
-    run_supersteps,
-    superstep_conf,
-)
+from .engine import RunResult, materialize
 from .graph import DST, ID, SRC, dedup_edges
 from .stream import (
-    BLOB,
-    PART,
-    _STATE_SCHEMA,
     _StreamKernel,
-    _loop_checkpoint_every,
+    _incoming,
     _publish_arr,
     _stats,
+    _stats_fold,
     _stream_loop,
-    _upd_dir,
 )
 
 _PACK_BITS = np.int64(31)
@@ -127,18 +119,8 @@ def _min_fold_gather(plan, upd_dir: str, p: int, q: int,
     distances). Exact at any parallelism: min is order-free, and rows are
     unique within one block's slice (du is distinct), so fancy indexing +
     minimum needs no ufunc.at."""
-    aoff, soff = plan["aoff"], plan["soff"]
-    apos = np.asarray(plan["apos"])
     new = prev.copy()
-    for b in range(p):
-        ln = int(aoff[b + 1] - aoff[b])
-        if ln <= 0:
-            continue
-        arr = np.load(
-            os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r"
-        )
-        sl = np.asarray(arr[int(soff[b]):int(soff[b]) + ln])
-        rows = apos[int(aoff[b]):int(aoff[b]) + ln]
+    for rows, sl in _incoming(plan, upd_dir, p):
         new[rows] = np.minimum(new[rows], sl)
     return new, int(np.count_nonzero(new != prev))
 
@@ -431,19 +413,9 @@ class _HllMaxANF(_StreamKernel):
     def gather_apply(self, plan, upd_dir: str, p: int, q: int,
                      prev: np.ndarray) -> tuple[np.ndarray, int]:
         n = len(plan["ids"])
-        aoff, soff = plan["aoff"], plan["soff"]
-        apos = np.asarray(plan["apos"])
         old = prev[: n * _ANF_M].reshape(n, _ANF_M)
         new = old.copy()
-        for b in range(p):
-            ln = int(aoff[b + 1] - aoff[b])
-            if ln <= 0:
-                continue
-            arr = np.load(
-                os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r"
-            )
-            sl = np.asarray(arr[int(soff[b]):int(soff[b]) + ln])
-            rows = apos[int(aoff[b]):int(aoff[b]) + ln]
+        for rows, sl in _incoming(plan, upd_dir, p):
             new[rows] = np.maximum(new[rows], sl)
         changed = int(np.count_nonzero((new != old).any(axis=1)))
         est = _hll_estimate(new).astype(np.float64)
@@ -610,18 +582,8 @@ class _LubyMIS(_StreamKernel):
         n = len(plan["ids"])
         rnd, phase = int(prev[0]), int(prev[1])
         status = prev[2:].copy()
-        aoff, soff = plan["aoff"], plan["soff"]
-        apos = np.asarray(plan["apos"])
         fold = np.full(n, self._SENTINEL, dtype=np.int64)
-        for b in range(p):
-            ln = int(aoff[b + 1] - aoff[b])
-            if ln <= 0:
-                continue
-            arr = np.load(
-                os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r"
-            )
-            sl = np.asarray(arr[int(soff[b]):int(soff[b]) + ln])
-            rows = apos[int(aoff[b]):int(aoff[b]) + ln]
+        for rows, sl in _incoming(plan, upd_dir, p):
             fold[rows] = np.minimum(fold[rows], sl)
         und = status == _MIS_UNDECIDED
         if phase == 0:
@@ -689,18 +651,8 @@ class _KCorePeel(_StreamKernel):
 
     def gather_apply(self, plan, upd_dir: str, p: int, q: int,
                      prev: np.ndarray) -> tuple[np.ndarray, int]:
-        aoff, soff = plan["aoff"], plan["soff"]
-        apos = np.asarray(plan["apos"])
         deg = np.zeros(len(prev), dtype=np.int64)
-        for b in range(p):
-            ln = int(aoff[b + 1] - aoff[b])
-            if ln <= 0:
-                continue
-            arr = np.load(
-                os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r"
-            )
-            sl = np.asarray(arr[int(soff[b]):int(soff[b]) + ln])
-            rows = apos[int(aoff[b]):int(aoff[b]) + ln]
+        for rows, sl in _incoming(plan, upd_dir, p):
             deg[rows] += sl
         new = ((prev != 0) & (deg >= self.k)).astype(np.int64)
         return new, int(np.count_nonzero(prev != new))
@@ -877,29 +829,19 @@ def bipartite_stream(
 ) -> RunResult:
     """Bipartiteness check via the fused stream superstep — exact same
     per-superstep (root, dist) state, superstep count, ``(id, root,
-    dist, color)`` output, and appended ``odd_edges`` history entry as
-    algos.bipartite.bipartite_check (see _ParityBFS). The odd-edge
-    conflict count after convergence is the same one-time loop-free-edge
-    join the join path runs."""
+    dist, color)`` output, and last-entry ``odd_edges`` / ``bipartite``
+    history fields as algos.bipartite.bipartite_check (see _ParityBFS).
+    The odd-edge conflict count after convergence is the same one-time
+    loop-free-edge join the join path runs."""
+    from .algos.bipartite import _record_odd_edges
     from .graph import symmetrize
 
     res = _stream_loop(
         spark, edges, _ParityBFS(), max_iters, num_partitions, token,
         checkpointer, checkpoint_every, graph, state_partitions, num_edges,
     )
-    colored = res.state
     und = symmetrize(dedup_edges(edges).where(F.col(SRC) != F.col(DST)))
-    odd = (
-        und.where(F.col(SRC) < F.col(DST))
-        .join(colored.select(F.col(ID).alias(SRC), F.col("color").alias("c1")), SRC)
-        .join(colored.select(F.col(ID).alias(DST), F.col("color").alias("c2")), DST)
-        .where(F.col("c1") == F.col("c2"))
-        .count()
-    )
-    res.history.append(
-        {"superstep": res.supersteps, "odd_edges": odd, "bipartite": odd == 0,
-         "seconds": 0.0, "converged": res.converged}
-    )
+    _record_odd_edges(res, und, res.state)
     return res
 
 
@@ -926,35 +868,202 @@ def bfs_stream(
 _SCC_UNASSIGNED = np.int64(-1)
 _SCC_SENTINEL_MIN = np.int64(-1)          # color max-fold identity (ids >= 0)
 _SCC_SENTINEL_MAX = np.iinfo(np.int64).max  # sweep min-fold identity
+# Apply ops of the phase machine, by the code the blob head stores.
+_SCC_OPS = ("color_fold", "sweep_init", "sweep_fold", "assign_reset")
+_COLOR_FOLD, _SWEEP_INIT, _SWEEP_FOLD, _ASSIGN_RESET = range(4)
 
 
-def _scc_fold(plan, upd_dir: str, p: int, init_val, ufunc) -> np.ndarray:
-    """Per-dst fold of the incoming fixed-length update-stream slices into
-    a fresh fold vector (NOT into the state — SCC applies the fold under a
-    live mask afterwards). Rows are unique within one block's slice, so
-    fancy indexing + the ufunc needs no ufunc.at; max/min are order-free,
-    hence exact at any parallelism."""
-    aoff, soff = plan["aoff"], plan["soff"]
-    apos = np.asarray(plan["apos"])
-    fold = np.full(len(plan["ids"]), init_val, dtype=np.int64)
-    for b in range(p):
-        ln = int(aoff[b + 1] - aoff[b])
-        if ln <= 0:
-            continue
-        arr = np.load(
-            os.path.join(upd_dir, f"partial-{b}.npy"), mmap_mode="r"
+class _EmptyGraph(Exception):
+    """scc_stream's forward graph has no edges: there is nothing to run."""
+
+
+class _FBColoringSCC(_StreamKernel):
+    """Strongly connected components (FB-coloring, algos.scc semantics)
+    over the fused stream superstep — the kernel family's TWO-GRAPH
+    member: forward max-coloring folds over the directed blocks of the
+    deduped edges, backward sweeps over a second block set built from
+    the REVERSED edges.
+
+    Two graphs: ``prep_graph`` builds the forward graph the loop runs
+    over, then the reversed one with the same p, keeping its cache token
+    and block dir for the sweep's plan and block loads; ``release()``
+    frees it when the loop frees the forward graph. Both share one
+    vertex partitioning (``repartition(p, id)`` Murmur3 is a pure
+    function of the id set and p; checked per partition at every
+    backward-plan load), so a single state blob serves both apply
+    plans. All update streams live under the forward block
+    dir.
+
+    The phase rides the blob, as _LubyMIS's round does: state blob per
+    partition = int64 ``[op, changed_q | assigned | color | in_scc]``
+    (2 + 3 x |V_q|), where ``op`` is the apply op this partition last
+    ran and ``changed_q`` the vertices it changed. ``scatter`` publishes
+    ``stats-{q} = [live, changed_q, op]`` from the blob alone, so the
+    loop's resume regeneration reproduces them bit for bit. Superstep s
+    reads the global changed count of s-1 from those stats and derives
+    its op: a color fixpoint seeds the sweep, a sweep fixpoint assigns
+    and resets, a reset colors again. The scatter op follows the apply
+    op (color_fold / assign_reset -> color over the forward blocks,
+    sweep_init / sweep_fold -> sweep over the reversed ones). The init
+    blob is the state right after an assign_reset that assigned
+    nothing, so superstep 1 colors. The run is done when an
+    assign_reset leaves nothing live.
+
+    Unlike algos.scc's per-round live-SUBGRAPH rebuild (two joins per
+    round to restrict the edge set), the stream path keeps the immutable
+    blocks and MASKS dead vertices in-kernel: a color scatter publishes
+    ``where(live, color, -1)`` (-1 is the max-fold identity), a sweep
+    scatter ``where(in_scc, color, int64_max)`` (the min-fold identity) —
+    at 100 TB the per-round rebuild is two full-graph shuffles per
+    peeling round, while masking costs a branchless where() on state
+    already in cache. Sweep joins fold to the per-dst MIN of incoming
+    in-SCC colors, and v joins iff that min == color(v): every incoming
+    in-SCC color is >= color(v) (colors are forward-monotone), so the
+    min detects a same-region message exactly. Full re-scatter ≡ the
+    join path's frontier scatter per superstep for both phases (max/min
+    folds are monotone and idempotent — the SSSP argument), so
+    per-phase fixpoint detection lands on the same superstep."""
+
+    name = "scc_stream"
+    dtype = np.int64
+    out_schema = f"{ID} long, scc long"
+
+    def block_flavor(self, edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
+        return dedup_edges(edges), False, None
+
+    def prep_graph(self, spark, edges, num_partitions, token,
+                   num_edges=None) -> CsrGraph:
+        g = super().prep_graph(spark, edges, num_partitions, token, num_edges)
+        if g.num_edges == 0:
+            g.unpersist()
+            raise _EmptyGraph
+        e = self.block_flavor(edges)[0]
+        try:
+            self.g_b = CsrGraph(
+                spark, e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST)),
+                num_partitions=g.p,
+                token=None if token is None else f"{token}|rev",
+                num_edges=g.num_edges,
+            )
+        except BaseException:
+            g.unpersist()
+            raise
+        self.tok_b, self.bdir_b = self.g_b.cache_token, self.g_b.block_dir
+        return g
+
+    def release(self) -> None:
+        self.g_b.unpersist()
+
+    def __getstate__(self):
+        # The backward CsrGraph holds the session; kernels never need it.
+        return {k: v for k, v in self.__dict__.items() if k != "g_b"}
+
+    def bind(self, n: int, qs: tuple) -> None:
+        self.qs = qs
+
+    def blob_ok(self, n: int, blob_len: int) -> bool:
+        return blob_len == 2 + 3 * n
+
+    @staticmethod
+    def _split(blob: np.ndarray, nq: int):
+        """``(assigned, color, in_scc)`` views behind the blob head."""
+        return blob[2:2 + nq], blob[2 + nq:2 + 2 * nq], blob[2 + 2 * nq:]
+
+    def init_blob(self, ids: np.ndarray) -> np.ndarray:
+        return np.concatenate([
+            np.array([_ASSIGN_RESET, 0], dtype=np.int64),
+            np.full(len(ids), _SCC_UNASSIGNED),  # assigned scc root
+            ids,                                  # color
+            np.zeros(len(ids), dtype=np.int64),   # in_scc
+        ])
+
+    def gather_apply(self, plan, upd_dir: str, p: int, q: int,
+                     prev: np.ndarray) -> tuple[np.ndarray, int]:
+        ids = np.asarray(plan["ids"])
+        assigned, color, insc = (a.copy() for a in self._split(prev, len(ids)))
+        live = assigned == _SCC_UNASSIGNED
+        op, changed = int(prev[0]), _stats_fold(upd_dir, self.qs, 1)
+        if op == _COLOR_FOLD:
+            op = _COLOR_FOLD if changed > 0 else _SWEEP_INIT
+        elif op == _ASSIGN_RESET:
+            op = _COLOR_FOLD
+        else:
+            op = _SWEEP_FOLD if changed > 0 else _ASSIGN_RESET
+        if op == _COLOR_FOLD:
+            fold = np.full(len(ids), _SCC_SENTINEL_MIN, dtype=np.int64)
+            for rows, sl in _incoming(plan, upd_dir, p):
+                fold[rows] = np.maximum(fold[rows], sl)
+            upd = live & (fold > color)
+            color[upd] = fold[upd]
+        elif op == _SWEEP_FOLD:
+            plan_b = _load_apply_plan(self.tok_b, q, self.bdir_b)
+            if plan_b is None or not np.array_equal(plan_b["ids"], ids):
+                raise RuntimeError(
+                    "scc_stream: forward/backward apply plans disagree at "
+                    f"partition {q} — partitioner mismatch"
+                )
+            fold = np.full(len(ids), _SCC_SENTINEL_MAX, dtype=np.int64)
+            for rows, sl in _incoming(plan_b, upd_dir, p):
+                fold[rows] = np.minimum(fold[rows], sl)
+            upd = live & (insc == 0) & (fold == color)
+            insc[upd] = 1
+        elif op == _SWEEP_INIT:
+            # Roots: live vertices whose color survived as their own id
+            # (the region max — always a member of its own SCC).
+            insc[:] = 0
+            upd = live & (color == ids)
+            insc[upd] = 1
+        else:  # _ASSIGN_RESET
+            upd = insc == 1
+            assigned[upd] = color[upd]
+            insc[:] = 0
+            reset = assigned == _SCC_UNASSIGNED
+            color[reset] = ids[reset]
+        changed_q = int(np.count_nonzero(upd))
+        head = np.array([op, changed_q], dtype=np.int64)
+        return np.concatenate([head, assigned, color, insc]), changed_q
+
+    def scatter(self, upd_dir: str, q: int, blk, plan, blob: np.ndarray,
+                stat: float) -> None:
+        op, changed_q = int(blob[0]), int(blob[1])
+        assigned, color, insc = self._split(blob, len(plan["ids"]))
+        live = assigned == _SCC_UNASSIGNED
+        if op in (_SWEEP_INIT, _SWEEP_FOLD):  # sweep over the REVERSED blocks
+            blk = _load_disk_block(self.tok_b, q, self.bdir_b)
+            if blk is not None:
+                vals = np.where(insc == 1, color, _SCC_SENTINEL_MAX)[blk["pos"]]
+                _publish_arr(
+                    upd_dir, f"partial-{q}",
+                    np.minimum.reduceat(vals, np.asarray(blk["starts"])),
+                )
+        elif blk is not None:  # color over the forward blocks
+            vals = np.where(live, color, _SCC_SENTINEL_MIN)[blk["pos"]]
+            _publish_arr(
+                upd_dir, f"partial-{q}",
+                np.maximum.reduceat(vals, np.asarray(blk["starts"])),
+            )
+        _publish_arr(
+            upd_dir, f"stats-{q}",
+            np.array([float(np.count_nonzero(live)), float(changed_q), float(op)]),
         )
-        sl = np.asarray(arr[int(soff[b]):int(soff[b]) + ln])
-        rows = apos[int(aoff[b]):int(aoff[b]) + ln]
-        fold[rows] = ufunc(fold[rows], sl)
-    return fold
 
+    def read_stat(self, upd_dir: str, qs) -> dict:
+        stats = _stats(upd_dir, qs)
+        return {
+            "live": int(sum(float(s[0]) for s in stats)),
+            "changed": int(sum(float(s[1]) for s in stats)),
+            "apply": _SCC_OPS[int(stats[0][2])],
+        }
 
-def _scc_block_flavor(edges: DataFrame) -> tuple[DataFrame, bool, str | None]:
-    """scc_stream's forward blocks: directed, over the deduped edges (the
-    backward set is built from their reversal). algos.scc's auto router
-    probes the warm-block registry with it."""
-    return dedup_edges(edges), False, None
+    def converged(self, stat: dict) -> bool:
+        return stat["apply"] == "assign_reset" and stat["live"] == 0
+
+    def expand_pdf(self, plan, blob: bytes) -> pd.DataFrame:
+        # Assigned vertices only; scc_stream relabels them after the loop.
+        ids = np.asarray(plan["ids"])
+        assigned = self._split(np.frombuffer(blob, np.int64), len(ids))[0]
+        sel = assigned != _SCC_UNASSIGNED
+        return pd.DataFrame({ID: ids[sel], "scc": assigned[sel]})
 
 
 def scc_stream(
@@ -968,293 +1077,25 @@ def scc_stream(
     state_partitions: int | None = None,
     num_edges: int | None = None,
 ) -> RunResult:
-    """Strongly connected components (FB-coloring, algos.scc semantics)
-    via the fused stream superstep — the kernel family's first TWO-GRAPH
-    member: forward max-coloring folds over the directed v5 blocks,
-    backward sweeps over a second block set built from the REVERSED
-    edges. Both graphs share one vertex partitioning (``repartition(p,
-    id)`` Murmur3 is a pure function of the id set and p, asserted at
-    init), so a single state blob serves both apply plans.
-
-    Unlike algos.scc's per-round live-SUBGRAPH rebuild (two joins per
-    round to restrict the edge set), the stream path keeps the immutable
-    blocks and MASKS dead vertices in-kernel: a color scatter publishes
-    ``where(live, color, -1)`` (-1 is the max-fold identity), a sweep
-    scatter ``where(in_scc, color, int64_max)`` (the min-fold identity) —
-    at 100 TB the per-round rebuild is two full-graph shuffles per
-    peeling round, while masking costs a branchless where() on state
-    already in cache. Sweep joins fold to the per-dst MIN of incoming
-    in-SCC colors, and v joins iff that min == color(v): every incoming
-    in-SCC color is >= color(v) (colors are forward-monotone), so the
-    min detects a same-region message exactly.
-
-    State blob per partition = int64 ``[assigned | color | in_scc]``
-    (3 x |V_q|); the phase machine is DRIVER-side, advanced from the
-    (live, changed) stats riding the update stream, and rides checkpoint
-    manifests (``next_apply`` / ``next_scatter`` metrics) for resume.
-    Each round costs two extra supersteps vs algos.scc's count (the
-    sweep-init and assign-reset steps are driver-side there) — final
-    labels, min-member normalization, and the converged flag are
-    IDENTICAL; ``max_iters`` caps total stream supersteps.
-
-    Full re-scatter ≡ the join path's frontier scatter per superstep for
-    both phases (max/min folds are monotone and idempotent — the SSSP
-    argument), so per-phase fixpoint detection lands on the same
-    superstep."""
-    e, undirected, weight_col = _scc_block_flavor(edges)
-    g_f = CsrGraph(
-        spark, e, num_partitions=num_partitions, token=token,
-        undirected=undirected, weight_col=weight_col, num_edges=num_edges,
-    )
-    if g_f.num_edges == 0:
+    """Strongly connected components via the fused stream superstep
+    (see _FBColoringSCC); ``(id, label)`` rows, label = the SCC's
+    minimum member id. Each round costs two extra supersteps vs
+    algos.scc's count (the sweep-init and assign-reset steps are
+    driver-side there) — final labels, min-member normalization, and
+    the converged flag are IDENTICAL; ``max_iters`` caps total stream
+    supersteps. ``token`` pins both block sets (the reversed one as
+    ``token|rev``)."""
+    try:
+        res = _stream_loop(
+            spark, edges, _FBColoringSCC(), max_iters, num_partitions, token,
+            checkpointer, checkpoint_every, None, state_partitions, num_edges,
+        )
+    except _EmptyGraph:
         empty = spark.createDataFrame([], schema=f"{ID} long, label long")
         return RunResult(state=empty, supersteps=0, converged=True, history=[])
-    e_rev = e.select(F.col(DST).alias(SRC), F.col(SRC).alias(DST))
-    g_b = CsrGraph(
-        spark, e_rev, num_partitions=g_f.p,
-        token=None if token is None else f"{token}|rev",
-        num_edges=g_f.num_edges,
-    )
-    assert g_b.p == g_f.p and g_b.num_vertices == g_f.num_vertices
-    n, p = g_f.num_vertices, g_f.p
-    tok_f, bdir_f = g_f.cache_token, g_f.block_dir
-    tok_b, bdir_b = g_b.cache_token, g_b.block_dir
-    run_id = uuid.uuid4().hex[:8]
-    ud_of = lambda s: _upd_dir(bdir_f, run_id, s)  # noqa: E731 — all
-    # update streams (color AND sweep) live under the forward block_dir
-
-    def init_kernel(batches):
-        from pyspark import TaskContext
-
-        pdfs = [pdf for pdf in batches if len(pdf)]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs) if len(pdfs) > 1 else pdfs[0]
-        q = TaskContext.get().partitionId()
-        plan_f = _load_apply_plan(tok_f, q, bdir_f)
-        plan_b = _load_apply_plan(tok_b, q, bdir_b)
-        if plan_f is None or plan_b is None:
-            raise RuntimeError(f"scc_stream init: no apply plan for partition {q}")
-        ids = np.sort(pdf[ID].to_numpy(dtype=np.int64))
-        if not (
-            np.array_equal(plan_f["ids"], ids)
-            and np.array_equal(plan_b["ids"], ids)
-        ):
-            raise RuntimeError(
-                "scc_stream init: forward/backward apply plans disagree "
-                f"with the state partition ids at {q} — partitioner mismatch"
-            )
-        blob = np.concatenate([
-            np.full(len(ids), _SCC_UNASSIGNED),  # assigned scc root
-            ids,                                  # color
-            np.zeros(len(ids), dtype=np.int64),   # in_scc
-        ])
-        yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
-
-    def _scatter(ud_out: str, q: int, scatter_op: str, live, color, insc,
-                 changed: float) -> None:
-        if scatter_op == "color":
-            blk = _load_disk_block(tok_f, q, bdir_f)
-            if blk is not None:
-                vals = np.where(live, color, _SCC_SENTINEL_MIN)[blk["pos"]]
-                _publish_arr(
-                    ud_out, f"partial-{q}",
-                    np.maximum.reduceat(vals, np.asarray(blk["starts"])),
-                )
-        else:  # sweep — over the REVERSED blocks
-            blk = _load_disk_block(tok_b, q, bdir_b)
-            if blk is not None:
-                vals = np.where(insc == 1, color, _SCC_SENTINEL_MAX)[blk["pos"]]
-                _publish_arr(
-                    ud_out, f"partial-{q}",
-                    np.minimum.reduceat(vals, np.asarray(blk["starts"])),
-                )
-        _publish_arr(
-            ud_out, f"stats-{q}",
-            np.array([float(np.count_nonzero(live)), changed]),
-        )
-
-    def scatter_kernel_for(superstep: int, scatter_op: str):
-        ud = ud_of(superstep)
-
-        def scatter_only(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    blob = np.frombuffer(row[BLOB], dtype=np.int64)
-                    nq = len(blob) // 3
-                    assigned, color, insc = blob[:nq], blob[nq:2 * nq], blob[2 * nq:]
-                    _scatter(
-                        ud, q, scatter_op, assigned == _SCC_UNASSIGNED,
-                        color, insc, float("inf"),
-                    )
-                    yield pd.DataFrame({PART: [q], "n": [nq]})
-
-        return scatter_only
-
-    def fused_kernel_for(superstep: int, apply_op: str, scatter_op: str):
-        ud_in, ud_out = ud_of(superstep - 1), ud_of(superstep)
-
-        def fused(batches):
-            for pdf in batches:
-                for _, row in pdf.iterrows():
-                    q = int(row[PART])
-                    prev = np.frombuffer(row[BLOB], dtype=np.int64)
-                    plan_f = _load_apply_plan(tok_f, q, bdir_f)
-                    if plan_f is None or len(prev) != 3 * len(plan_f["ids"]):
-                        raise RuntimeError(
-                            f"scc_stream apply: blob/plan mismatch at partition {q}"
-                        )
-                    ids = np.asarray(plan_f["ids"])
-                    nq = len(ids)
-                    assigned = prev[:nq].copy()
-                    color = prev[nq:2 * nq].copy()
-                    insc = prev[2 * nq:].copy()
-                    live = assigned == _SCC_UNASSIGNED
-                    if apply_op == "color_fold":
-                        fold = _scc_fold(
-                            plan_f, ud_in, p, _SCC_SENTINEL_MIN, np.maximum
-                        )
-                        upd = live & (fold > color)
-                        color[upd] = fold[upd]
-                        changed = int(np.count_nonzero(upd))
-                    elif apply_op == "sweep_fold":
-                        plan_b = _load_apply_plan(tok_b, q, bdir_b)
-                        fold = _scc_fold(
-                            plan_b, ud_in, p, _SCC_SENTINEL_MAX, np.minimum
-                        )
-                        upd = live & (insc == 0) & (fold == color)
-                        insc[upd] = 1
-                        changed = int(np.count_nonzero(upd))
-                    elif apply_op == "sweep_init":
-                        # Roots: live vertices whose color survived as
-                        # their own id (the region max — always a member
-                        # of its own SCC).
-                        insc[:] = 0
-                        upd = live & (color == ids)
-                        insc[upd] = 1
-                        changed = int(np.count_nonzero(upd))
-                    elif apply_op == "assign_reset":
-                        sel = insc == 1
-                        assigned[sel] = color[sel]
-                        insc[:] = 0
-                        live = assigned == _SCC_UNASSIGNED
-                        color[live] = ids[live]
-                        changed = int(np.count_nonzero(sel))
-                    else:
-                        raise RuntimeError(f"scc_stream: bad apply op {apply_op!r}")
-                    _scatter(ud_out, q, scatter_op, live, color, insc,
-                             float(changed))
-                    blob = np.concatenate([assigned, color, insc])
-                    yield pd.DataFrame({PART: [q], BLOB: [blob.tobytes()]})
-
-        return fused
-
-    sp = state_partitions or p
-
-    def realign(df: DataFrame) -> DataFrame:
-        return df.repartition(sp)
-
-    start = 0
-    state = None
-    # Ops for the NEXT kernel: after a fresh init the first superstep
-    # folds the initial color scatter; on resume they ride the manifest.
-    ops = {"apply": "color_fold", "scatter": "color"}
-    scatter0 = "color"
-    if checkpointer is not None:
-        manifest = checkpointer.latest()
-        if manifest is not None:
-            start = int(manifest["superstep"])
-            state = realign(checkpointer.load(spark, manifest))
-            m = manifest.get("metrics", {})
-            ops = {"apply": m["next_apply"], "scatter": m["next_scatter"]}
-            scatter0 = m["scatter"]  # regenerate the interrupt superstep's
-            # update stream with the SAME op that produced it
-
-    with superstep_conf(spark, p):
-        if state is None:
-            state = g_f.align_state(g_f.verts).mapInPandas(
-                init_kernel, schema=_STATE_SCHEMA
-            ).localCheckpoint(eager=True)
-        else:
-            state = state.select(PART, BLOB).localCheckpoint(eager=True)
-        if sp != p:
-            state = materialize(state.repartition(sp))
-        rows = state.mapInPandas(
-            scatter_kernel_for(start, scatter0), schema=f"{PART} int, n long"
-        ).collect()
-        assert sum(r["n"] for r in rows) == n
-        qs = tuple(sorted(int(r[PART]) for r in rows))
-
-        try:
-            def step(cur: DataFrame, superstep: int):
-                ap, sc = ops["apply"], ops["scatter"]
-                new = cur.mapInPandas(
-                    fused_kernel_for(superstep + 1, ap, sc),
-                    schema=_STATE_SCHEMA,
-                ).localCheckpoint(eager=True)
-                stats = _stats(ud_of(superstep + 1), qs)
-                live = int(sum(float(r[0]) for r in stats))
-                changed = int(sum(float(r[1]) for r in stats))
-                if superstep >= 1:
-                    shutil.rmtree(ud_of(superstep - 1), ignore_errors=True)
-                # Driver phase machine (deterministic in (ap, changed)):
-                # color fixpoint -> seed the sweep; sweep fixpoint ->
-                # assign + reset; done when an assign left nothing live.
-                if ap == "color_fold":
-                    nxt = (
-                        ("color_fold", "color") if changed > 0
-                        else ("sweep_init", "sweep")
-                    )
-                elif ap in ("sweep_init", "sweep_fold"):
-                    nxt = (
-                        ("sweep_fold", "sweep") if changed > 0
-                        else ("assign_reset", "color")
-                    )
-                else:  # assign_reset
-                    nxt = ("color_fold", "color")
-                done = ap == "assign_reset" and live == 0
-                ops["apply"], ops["scatter"] = nxt
-                return new, {
-                    "converged": done, "live": live, "changed": changed,
-                    "apply": ap, "scatter": sc,
-                    "next_apply": nxt[0], "next_scatter": nxt[1],
-                }
-
-            result = run_supersteps(
-                state, step, max_iters, checkpointer,
-                _loop_checkpoint_every(checkpointer, checkpoint_every, max_iters),
-                start_superstep=start, realign=realign,
-            )
-
-            def expand(batches):
-                for pdf in batches:
-                    for _, row in pdf.iterrows():
-                        q = int(row[PART])
-                        plan = _load_apply_plan(tok_f, q, bdir_f)
-                        blob = np.frombuffer(row[BLOB], dtype=np.int64)
-                        nq = len(plan["ids"])
-                        assigned = blob[:nq]
-                        sel = assigned != _SCC_UNASSIGNED
-                        yield pd.DataFrame({
-                            ID: np.asarray(plan["ids"])[sel],
-                            "scc": assigned[sel],
-                        })
-
-            blob_state = result.state
-            lab = blob_state.mapInPandas(
-                expand, schema=f"{ID} long, scc long"
-            ).localCheckpoint(eager=True)
-            release_state(blob_state)
-            # Min-member normalization (oracle form — algos.scc:188): the
-            # root id is the SCC's max member, relabel to its min member.
-            norm = lab.groupBy("scc").agg(F.min(ID).alias("label"))
-            result.state = materialize(lab.join(norm, "scc").select(ID, "label"))
-        finally:
-            import glob as _glob
-
-            for d in _glob.glob(os.path.join(bdir_f, f"upd-{run_id}-*")):
-                shutil.rmtree(d, ignore_errors=True)
-    g_b.unpersist()
-    g_f.unpersist()
-    return result
+    # Min-member normalization (oracle form — algos.scc): the root id is
+    # the SCC's max member, relabel to its min member.
+    lab = res.state
+    norm = lab.groupBy("scc").agg(F.min(ID).alias("label"))
+    res.state = materialize(lab.join(norm, "scc").select(ID, "label"))
+    return res

@@ -20,7 +20,7 @@ from chaos_spark import csr as csr_mod
 from chaos_spark.algos import pagerank, triangle_count
 from chaos_spark.fixtures import g3_cliques, g4_powerlaw
 from chaos_spark.stream import pagerank_stream
-from chaos_spark.stream_algos import cc_stream, lpa_stream
+from chaos_spark.stream_algos import cc_stream, lpa_stream, scc_stream
 
 
 @pytest.fixture
@@ -63,6 +63,7 @@ CALLS = {
     ),
     "cc_stream": (False, lambda s, e: cc_stream(s, e)),
     "lpa_stream": (False, lambda s, e: lpa_stream(s, e, max_iters=3)),
+    "scc_stream": (False, lambda s, e: scc_stream(s, e)),
 }
 
 
@@ -79,7 +80,10 @@ def test_caller_cache_survives(spark, blocks, name):
 
 
 @pytest.mark.parametrize(
-    "name", ["pagerank_stream", "pagerank_stream_weighted", "cc_stream", "lpa_stream"]
+    "name", [
+        "pagerank_stream", "pagerank_stream_weighted", "cc_stream", "lpa_stream",
+        "scc_stream",
+    ]
 )
 def test_stream_call_removes_its_blocks(spark, blocks, tmp_path, monkeypatch, name):
     """A stream call that built an ephemeral block dir (no token, no warm

@@ -8,8 +8,10 @@ SparkSession starts).
 
 The same ``ast`` pass keeps stream routing in one place: no
 ``chaos_spark/algos`` module but the router (``algos/_route.py``) may use
-the warm-block probe or a ``*_MIN_EDGES`` crossover. And it pins the
-env-knob budget: the ``CHAOS_*`` names read under ``chaos_spark/``.
+the warm-block probe or a ``*_MIN_EDGES`` crossover. It keeps one stream
+loop: in ``stream.py`` and ``stream_algos.py`` only ``_stream_loop``
+calls ``run_supersteps``. And it pins the env-knob budget: the
+``CHAOS_*`` names read under ``chaos_spark/``.
 """
 
 from __future__ import annotations
@@ -214,6 +216,39 @@ def test_routing_check_fires_on_a_hand_copied_router():
 def test_only_the_router_routes(path):
     refs = _routing_refs(path.read_text())
     assert not refs, f"{path.relative_to(ROOT)} routes by hand: {refs}; use algos._route"
+
+
+STREAM_MODULES = [ROOT / "chaos_spark" / "stream.py", ROOT / "chaos_spark" / "stream_algos.py"]
+
+
+def _superstep_drivers(src: str) -> list[str]:
+    """The top-level functions and classes of ``src`` that call
+    ``run_supersteps``, by name or as an attribute, anywhere inside."""
+    def drives(node):
+        return any(
+            isinstance(n, ast.Call) and "run_supersteps" in (
+                getattr(n.func, "id", None), getattr(n.func, "attr", None))
+            for n in ast.walk(node)
+        )
+    return [getattr(node, "name", "<module>") for node in ast.parse(src).body if drives(node)]
+
+
+def test_loop_check_fires_on_a_hand_copied_loop():
+    src = (
+        "from .engine import run_supersteps\n"
+        "def _stream_loop(state, step):\n"
+        "    return run_supersteps(state, step, 10)\n"
+        "def scc_stream(state, step):\n"
+        "    def go():\n"
+        "        return engine.run_supersteps(state, step, 10)\n"
+        "    return go()\n"
+    )
+    assert _superstep_drivers(src) == ["_stream_loop", "scc_stream"]
+
+
+def test_only_the_stream_loop_runs_supersteps():
+    drivers = [d for p in STREAM_MODULES for d in _superstep_drivers(p.read_text())]
+    assert drivers == ["_stream_loop"], f"hand-copied stream loops: {drivers}"
 
 
 # ROADMAP aim 2: no new ``CHAOS_*`` env knob without deleting one. These

@@ -5,9 +5,10 @@ runs superstep after superstep itself; with one partition per block each
 superstep is its own Spark job. The same kernels run over the same bytes
 in the same order, so every ``_stream_loop`` kernel must give the same
 supersteps, the same per-superstep statistics and bit-identical outputs
-in both shapes. Also here: a stream call that raises leaves no update
-stream and no ephemeral block dir behind, and a retried task attempt in
-the middle of a batch changes nothing.
+in both shapes, and a history of exactly one entry per superstep. Also
+here: a stream call that raises leaves no update stream and no
+ephemeral block dir behind, and a retried task attempt in the middle of
+a batch changes nothing.
 """
 
 from __future__ import annotations
@@ -22,6 +23,7 @@ import numpy as np
 import pytest
 
 from chaos_spark import csr as csr_mod
+from chaos_spark.checkpoint import CheckpointManager
 from chaos_spark.engine import run_supersteps
 from chaos_spark.fixtures import g4_powerlaw
 from chaos_spark.stream import _stream_loop, pagerank_stream
@@ -34,6 +36,7 @@ from chaos_spark.stream_algos import (
     kcore_stream,
     lpa_stream,
     mis_stream,
+    scc_stream,
     sssp_stream,
 )
 
@@ -62,6 +65,7 @@ KERNELS = {
     "bipartite": (lambda s, e, **kw: bipartite_stream(s, e, **kw), "color", "changed"),
     "hyperanf": (lambda s, e, **kw: hyperanf_stream(s, e, max_iters=12, **kw),
                  "nf", "changed"),
+    "scc": (lambda s, e, **kw: scc_stream(s, e, **kw), "label", "changed"),
 }
 
 
@@ -81,11 +85,6 @@ def _output(res, col):
     return pdf["id"].to_numpy(), np.array(vals, dtype=np.float64)
 
 
-def _loop_entries(res, stat):
-    # bipartite_stream appends one odd-edge entry after the loop's own.
-    return [h for h in res.history if stat in h]
-
-
 @pytest.mark.parametrize("name", sorted(KERNELS))
 def test_one_task_changes_no_result(spark, edges, name):
     call, col, stat = KERNELS[name]
@@ -93,17 +92,16 @@ def test_one_task_changes_no_result(spark, edges, name):
     per = call(spark, edges, num_partitions=P, state_partitions=P)
     assert one.supersteps == per.supersteps
     assert one.converged == per.converged
-    a, b = _loop_entries(one, stat), _loop_entries(per, stat)
-    assert [h[stat] for h in a] == [h[stat] for h in b]
+    assert [h[stat] for h in one.history] == [h[stat] for h in per.history]
     (ia, va), (ib, vb) = _output(one, col), _output(per, col)
     assert np.array_equal(ia, ib)
     assert np.array_equal(va, vb, equal_nan=True)
     # The history contract: one entry per superstep, consecutive
     # superstep numbers, and only the last entry converged.
-    for res, entries in ((one, a), (per, b)):
-        assert [h["superstep"] for h in entries] == list(range(1, res.supersteps + 1))
-        assert not any(h["converged"] for h in entries[:-1])
-        assert entries[-1]["converged"] == res.converged
+    for res in (one, per):
+        assert [h["superstep"] for h in res.history] == list(range(1, res.supersteps + 1))
+        assert not any(h["converged"] for h in res.history[:-1])
+        assert res.history[-1]["converged"] == res.converged
 
 
 def test_run_supersteps_takes_batches_within_bounds():
@@ -153,6 +151,24 @@ def test_raising_stream_call_leaves_nothing_behind(spark, edges, tmp_path, monke
     with pytest.raises(Exception, match="injected"):
         _stream_loop(spark, edges, FailingCC(), max_iters=10, num_partitions=P)
     assert os.listdir(tmp_path) == []
+
+
+def test_raising_scc_stream_leaves_nothing_behind(spark, edges, tmp_path, monkeypatch):
+    """scc_stream runs two graphs: a call that raises mid-run (here its
+    first checkpoint save) leaves neither block dir nor an update stream."""
+    blocks = tmp_path / "blocks"
+    monkeypatch.setattr(csr_mod, "_DISK_BLOCK_BASE", str(blocks))
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
+    monkeypatch.setattr(csr_mod, "_WARM_KEEP_MAX_EDGES", 0)
+
+    class FailingSave(CheckpointManager):
+        def save(self, *a, **k):
+            raise RuntimeError("injected save failure")
+
+    ck = FailingSave(str(tmp_path / "cp"), "scc_stream", {})
+    with pytest.raises(RuntimeError, match="injected"):
+        scc_stream(spark, edges, num_partitions=P, checkpointer=ck, checkpoint_every=2)
+    assert os.listdir(blocks) == []
 
 
 _RETRY_SCRIPT = textwrap.dedent("""

@@ -18,7 +18,7 @@ from chaos_spark.checkpoint import CheckpointManager
 from chaos_spark.csr import CsrGraph
 from chaos_spark.fixtures import g4_powerlaw
 from chaos_spark.stream import pagerank_stream
-from chaos_spark.stream_algos import cc_stream
+from chaos_spark.stream_algos import cc_stream, scc_stream
 
 K = 4
 STOP_AT = 3
@@ -113,6 +113,29 @@ def test_cc_stream_jobs(graph, count_jobs):
         1  # init: fused init+scatter over range(p), eager localCheckpoint
         + 4  # per superstep: the fused apply+scatter barrier
         + 1  # expand blobs to (id, label) rows
+    ), jobs
+
+
+def test_scc_stream_jobs(spark, count_jobs, tmp_path, monkeypatch):
+    """SCC builds its two block sets cold, then runs its 25 supersteps
+    in one task: one init job, one job for all of them, one expand."""
+    monkeypatch.setattr(csr_mod, "_DISK_BLOCK_BASE", str(tmp_path))
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
+    edges = spark.createDataFrame(g4_powerlaw(scale=8, num_edges=1500)).persist()
+    ne = edges.count()
+    try:
+        with count_jobs() as jobs:
+            res = scc_stream(spark, edges, num_edges=ne)
+    finally:
+        edges.unpersist()
+    assert res.converged and res.supersteps == 25
+    assert len(jobs) == (
+        4  # forward block build: edge pass (three AQE stage jobs), apply pass
+        + 4  # reversed block build, the same four
+        + 1  # init: fused init+scatter over range(p) in one task
+        + 1  # every superstep, run inside the one task
+        + 1  # expand blobs to (id, scc) rows
+        + 1  # min-member relabel: broadcast of the per-SCC minima
     ), jobs
 
 
