@@ -67,7 +67,7 @@ def als(
 
 
 def _als(spark, ratings, rank, reg, num_sweeps, seed, p, init_fn=None) -> RunResult:
-    from ..shipping import ensure_shipped
+    from ..shipping import ensure_shipped, kernel
 
     ensure_shipped(spark)
     e = (
@@ -104,7 +104,7 @@ def _als(spark, ratings, rank, reg, num_sweeps, seed, p, init_fn=None) -> RunRes
             F.pmod(F.xxhash64(F.col(out_key)), F.lit(p)).cast("int").alias("pk"),
         )
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def solve(_, pdf):
             gids = pdf["gid"].to_numpy(dtype=np.int64)
             V = np.stack(pdf["vec"].to_numpy()).astype(np.float64)  # (n, k)
             r = pdf["r"].to_numpy(dtype=np.float64)
@@ -121,7 +121,7 @@ def _als(spark, ratings, rank, reg, num_sweeps, seed, p, init_fn=None) -> RunRes
             return pd.DataFrame({"id": uniq, "vec": list(x)})
 
         return msgs.groupBy("pk").applyInPandas(
-            lambda _, pdf: kernel(pdf), schema="id long, vec array<double>"
+            kernel(solve), schema="id long, vec array<double>"
         )
 
     history = []

@@ -33,6 +33,7 @@ from ..engine import (
     superstep_conf,
 )
 from ..graph import DST, ID, SRC, dedup_edges, partition_edges, symmetrize, vertices_from_edges
+from ..shipping import ensure_shipped, kernel
 from ._route import stream_route
 
 B_BITS = 6  # 2^6 = 64 registers, rel. std err ~ 1.04/sqrt(64) ~ 13%
@@ -105,7 +106,6 @@ def hyper_anf(
     vs join 94.3–163.3 s (7.4× wall), nf_diff 0. Below the crossover,
     warm blocks that another algorithm (CC/LPA — same undirected
     flavor) already built still route stream."""
-    from ..shipping import ensure_shipped
     from ..stream_algos import _HllMaxANF, hyperanf_stream
 
     stream, num_edges = stream_route(
@@ -145,7 +145,7 @@ def _hyper_anf(spark, edges, max_iters, seed, p) -> RunResult:
 
     state = materialize(
         verts.repartition(p, F.col(ID)).mapInPandas(
-            init_udf,
+            kernel(init_udf),
             schema=f"{ID} long, regs array<tinyint>, nf array<double>, changed boolean",
         )
     )
@@ -170,7 +170,7 @@ def _hyper_anf(spark, edges, max_iters, seed, p) -> RunResult:
             F.pmod(F.xxhash64(F.col(DST)), F.lit(p)).cast("int").alias("pk"),
         )
         merged = msgs.groupBy("pk").applyInPandas(
-            merge_udf, schema=f"{ID} long, mregs array<tinyint>"
+            kernel(merge_udf), schema=f"{ID} long, mregs array<tinyint>"
         )
 
         def apply_udf(batches):
@@ -194,7 +194,7 @@ def _hyper_anf(spark, edges, max_iters, seed, p) -> RunResult:
         )
         new = materialize(
             joined.mapInPandas(
-                apply_udf,
+                kernel(apply_udf),
                 schema=f"{ID} long, regs array<tinyint>, nf array<double>, changed boolean",
             ),
             superstep,

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .engine import choose_num_partitions, is_stored
 from .graph import DST, ID, SRC
+from .shipping import ensure_shipped, kernel
 
 # Per-Python-worker memo of loaded block / apply-plan members.
 # key: (cache_token, part) -> dict of np.memmap members. FIFO with a fixed
@@ -230,6 +231,24 @@ def _edge_fp_np(src: np.ndarray, dst: np.ndarray, w: np.ndarray | None) -> int:
     return int(np.bitwise_xor.reduce(h).view(np.int64))
 
 
+def _fold_sums(w: np.ndarray, starts: np.ndarray) -> np.ndarray:
+    """Each run's sum as the left fold ``((0.0 + w0) + w1) + ...`` — the
+    order warm validation's ``aggregate(array_sort(collect_list(w)), 0.0,
+    (a, x) -> a + x)`` sums in. ``np.add.reduceat`` does not (its runs sum
+    pairwise), and float addition is not associative: 0.1 + (0.2 + 0.3)
+    != (0.1 + 0.2) + 0.3. ``starts`` are the run offsets (first 0); one
+    vectorized add per run position, over the runs that long."""
+    lens = np.diff(np.append(starts, len(w)))
+    acc = np.zeros(len(starts))
+    live = np.arange(len(starts))
+    k = 0
+    while len(live):
+        acc[live] += w[starts[live] + k]
+        k += 1
+        live = live[lens[live] > k]
+    return acc
+
+
 def _load_disk_block(token: str, pid: int, block_dir: str):
     """Worker-side block fetch: MEMORY-MAPPED .npy members from the
     block's directory. Returns None when the partition holds no edges
@@ -264,9 +283,6 @@ def _load_disk_block(token: str, pid: int, block_dir: str):
     kernel's reads fault straight onto the shared pages. The worker
     cache therefore only accounts the tiny mmap overhead, not the
     mapped bytes (see _cache_put)."""
-    from .shipping import worker_fastpath
-
-    worker_fastpath()  # kill the per-task zip-directory re-read tax
     key = (token, pid)
     blk = _BLOCK_CACHE.get(key)
     if blk is not None:
@@ -292,9 +308,6 @@ def _load_apply_plan(token: str, q: int, block_dir: str):
     (build pass 3): mmap'd {apos, aoff, soff, iod, ids}. Same shared
     page-cache story as _load_disk_block; cached under a namespaced key
     so block and plan entries never collide."""
-    from .shipping import worker_fastpath
-
-    worker_fastpath()  # kill the per-task zip-directory re-read tax
     key = (f"{token}#apply", q)
     plan = _BLOCK_CACHE.get(key)
     if plan is not None:
@@ -469,8 +482,6 @@ class CsrGraph:
     ):
         import uuid
 
-        from .shipping import ensure_shipped
-
         ensure_shipped(spark)  # kernels reference module fns on executors
         self.weighted = weight_col is not None
         if self.weighted and undirected:
@@ -554,7 +565,12 @@ class CsrGraph:
                     [F.col("w")] if self.weighted else []
                 )
                 if self.weighted:
-                    dd = e.groupBy(SRC, DST).agg(F.sum("w").alias("w"))
+                    # Sorted left fold: bit-exact with the build's
+                    # _fold_sums whatever order the rows arrive in.
+                    dd = e.groupBy(SRC, DST).agg(F.aggregate(
+                        F.array_sort(F.collect_list("w")), F.lit(0.0),
+                        lambda a, x: a + x,
+                    ).alias("w"))
                 else:
                     dd = e.distinct()
                 row = dd.agg(
@@ -602,8 +618,14 @@ class CsrGraph:
             # each dst run while keeping du in (bucket, dst) order. The
             # per-dst edge order becomes src-ascending — a deterministic
             # order independent of shuffle arrival (stronger than the r5
-            # build, whose per-dst order was arrival order).
-            o = np.lexsort((src, dst, bkt))
+            # build, whose per-dst order was arrival order). Weights are
+            # the last key, so a pair's weights sum in ascending order
+            # whatever order they arrived in.
+            keys = (src, dst, bkt)
+            if weighted:
+                wv = np.concatenate(ws)
+                keys = (wv,) + keys
+            o = np.lexsort(keys)
             src, dst, bkt = src[o], dst[o], bkt[o]
             keep = np.empty(len(src), dtype=bool)
             keep[0] = True
@@ -612,8 +634,7 @@ class CsrGraph:
             )
             wsum = None
             if weighted:
-                wv = np.concatenate(ws)[o]
-                wsum = np.add.reduceat(wv, np.flatnonzero(keep))
+                wsum = _fold_sums(wv[o], np.flatnonzero(keep))
             src, dst, bkt = src[keep], dst[keep], bkt[keep]
             n = len(src)
             fp = _edge_fp_np(src, dst, wsum)
@@ -661,7 +682,7 @@ class CsrGraph:
             # repartition(p, id) gives the vertex state.
             e.withColumn("dbkt", F.pmod(F.hash(F.col(DST)), F.lit(p)))
             .repartition(p, F.col(SRC))
-            .mapInPandas(pass1, schema="part int, n long, fp long")
+            .mapInPandas(kernel(pass1), schema="part int, n long, fp long")
             .collect()  # p rows — bounded by partition count, not |E|
         )
         self.num_edges = int(sum(r["n"] for r in built))
@@ -677,7 +698,7 @@ class CsrGraph:
 
         applied = (
             self.spark.range(0, p, 1, p)
-            .mapInPandas(pass2, schema="part int, n long")
+            .mapInPandas(kernel(pass2), schema="part int, n long")
             .collect()
         )
         self.num_vertices = int(sum(r["n"] for r in applied))
@@ -700,7 +721,9 @@ class CsrGraph:
                     if _os.path.isdir(d):
                         yield pd.DataFrame({ID: np.load(_os.path.join(d, "ids.npy"))})
 
-        return self.spark.range(0, p, 1, p).mapInPandas(read, schema=f"{ID} long")
+        return self.spark.range(0, p, 1, p).mapInPandas(
+            kernel(read), schema=f"{ID} long"
+        )
 
     @property
     def verts(self) -> DataFrame:

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .graph import mint_vertex_ids
+from .shipping import ensure_shipped, kernel
 
 # One multiline pattern per language; group 1 = dotted module, group 2 =
 # path-like reference (extension stripped during normalization).
@@ -83,11 +84,9 @@ def extract_references(corpus: DataFrame) -> DataFrame:
     Column-pruned input (only repo/path/lang/content reach Python), Arrow
     batches in/out, vectorized regex — the hot path has no per-row Python.
     """
-    from .shipping import ensure_shipped
-
     ensure_shipped(corpus.sparkSession)
     return corpus.select("repo", "path", "lang", "content").mapInPandas(
-        _extract_batch, schema=REF_SCHEMA
+        kernel(_extract_batch), schema=REF_SCHEMA
     )
 
 

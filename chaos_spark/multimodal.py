@@ -30,6 +30,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from .shipping import ensure_shipped, kernel
+
 MEDIA_SCHEMA = (
     "doc_id long, media_type string, payload binary, "
     "width int, height int, sample_rate int, n_frames int"
@@ -46,8 +48,6 @@ def synthesize_media(docs: DataFrame, text_col: str = "text",
     """Deterministic fake media rows from a text table (one per doc):
     payload = zlib(text bytes); metadata derived from a hash of the id.
     Runs as one mapInPandas pass — no per-row Python."""
-
-    from .shipping import ensure_shipped
 
     ensure_shipped(docs.sparkSession)
 
@@ -67,7 +67,7 @@ def synthesize_media(docs: DataFrame, text_col: str = "text",
                 "n_frames": np.where(h % 3 == 2, 1 + h % 120, 1).astype(np.int32),
             })
 
-    return docs.select(id_col, text_col).mapInPandas(gen, schema=MEDIA_SCHEMA)
+    return docs.select(id_col, text_col).mapInPandas(kernel(gen), schema=MEDIA_SCHEMA)
 
 
 def decode_image(media: DataFrame, fake: bool = True) -> DataFrame:
@@ -81,8 +81,6 @@ def decode_image(media: DataFrame, fake: bool = True) -> DataFrame:
             "real image decode needs PIL/libjpeg, not present in this "
             "container; run with fake=True for the deterministic stub"
         )
-
-    from .shipping import ensure_shipped
 
     ensure_shipped(media.sparkSession)
 
@@ -116,7 +114,7 @@ def decode_image(media: DataFrame, fake: bool = True) -> DataFrame:
                 "hist": list(hist),
             })
 
-    return media.mapInPandas(features, schema=FEATURE_SCHEMA)
+    return media.mapInPandas(kernel(features), schema=FEATURE_SCHEMA)
 
 
 def frame_sample(media: DataFrame, every_n: int = 10, fake: bool = True) -> DataFrame:
@@ -125,8 +123,6 @@ def frame_sample(media: DataFrame, every_n: int = 10, fake: bool = True) -> Data
     attach the frame bytes). Demonstrates the 1->N mapInPandas shape."""
     if not fake:
         raise NotImplementedError("real frame extraction needs ffmpeg")
-
-    from .shipping import ensure_shipped
 
     ensure_shipped(media.sparkSession)
 
@@ -144,7 +140,7 @@ def frame_sample(media: DataFrame, every_n: int = 10, fake: bool = True) -> Data
             yield pd.DataFrame({"doc_id": ids, "frame_idx": out_idx})
 
     return media.select("doc_id", "media_type", "n_frames").mapInPandas(
-        sample, schema="doc_id long, frame_idx long"
+        kernel(sample), schema="doc_id long, frame_idx long"
     )
 
 

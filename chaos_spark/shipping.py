@@ -7,10 +7,16 @@ need this; pure-JVM DataFrame plans do not. Call :func:`ensure_shipped`
 before building such a plan — it zips the package once per process and
 ``addPyFile``s it once per SparkContext, making the module importable in
 executor Python workers regardless of the driver's cwd/PYTHONPATH.
+
+Every function ``chaos_spark`` hands to ``mapInPandas`` /
+``applyInPandas`` enters through :func:`kernel`, which runs
+:func:`worker_fastpath` in the task before the function itself
+(``tests/test_script_imports.py`` fails on a bare one).
 """
 
 from __future__ import annotations
 
+import inspect
 import os
 import tempfile
 import zipfile
@@ -63,24 +69,30 @@ def worker_fastpath() -> None:
     pyspark's per-task preamble (``worker_util.setup_spark_files``) calls
     ``importlib.invalidate_caches()`` unconditionally, and under Python
     3.11 ``zipimporter.invalidate_caches`` EAGERLY re-reads the archive
-    directory. With pyspark.zip + py4j-src.zip (+ the shipped
-    chaos_spark.zip) on the worker's sys.path, that is ~130 ms of pure
-    CPU per task — measured as ~85% of the wall of a 64-task no-op
-    mapInPandas stage on this host (sampled worker stacks:
-    ``worker_util.py:setup_spark_files -> zipimport._read_directory``),
-    i.e. the single largest per-superstep cost of any blob/CSR kernel at
-    bench scale, and one that Spark pays per task forever.
+    directory. A PySpark 4.1 worker has four zips on its sys.path:
+    ``pyspark.zip``, ``py4j-*-src.zip``, the ``spark-core`` jar and the
+    shipped ``chaos_spark_pkg_*.zip`` (``pyspark.zip`` has one importer
+    per imported subpackage, each re-reading the whole archive). One
+    ``invalidate_caches()`` over them took 98-253 ms of pure CPU per task
+    in worker probes (4-vCPU host, ``local[4]``; 0.1-0.2 ms patched)
+    and ~85% of the wall of a 64-task no-op mapInPandas stage (sampled
+    worker stacks: ``worker_util.py:setup_spark_files ->
+    zipimport._read_directory``) — the single largest per-task cost of a
+    cheap kernel, and one that Spark pays per task forever.
 
     The fix is surgical: override ``invalidate_caches`` on the
     zipimporter INSTANCES that already exist in ``sys.path_importer_cache``
-    with a no-op bound attribute. Their cached directories stay valid
-    (the archives never change during a run — Spark ships ADDITIONAL
-    files under NEW paths, which get NEW importers that read fresh), and
-    non-zip finders keep their normal invalidation. Python-side only,
-    per-process, idempotent (re-scans so importers added later — e.g. a
-    mid-run addPyFile — get patched on the next kernel call); call it at
-    the top of every executor-side kernel. Disable with
-    CHAOS_WORKER_FASTPATH=0 to A/B the tax.
+    with a guarded no-op bound attribute. Their cached directories stay
+    valid (the archives never change during a run — Spark ships
+    ADDITIONAL files under NEW paths, which get NEW importers that read
+    fresh), and non-zip finders keep their normal invalidation.
+    Python-side only, per-process, idempotent (re-scans so importers
+    added later — e.g. a mid-run addPyFile — get patched on the next
+    kernel call). Every executor kernel runs it first through
+    :func:`kernel`. The preamble runs before any kernel code, so the
+    FIRST task of a fresh worker still pays the re-read; every later
+    task in that worker does not. Disable with CHAOS_WORKER_FASTPATH=0
+    to A/B the tax.
 
     SCOPE: the patch is per-PYTHON-WORKER-PROCESS but APP-GLOBAL within
     that worker — PySpark reuses worker processes across workloads, so
@@ -92,7 +104,7 @@ def worker_fastpath() -> None:
     re-shipped file under the same SparkFiles path), the next
     invalidate_caches call falls through to the real eager re-read and
     re-arms on the fresh bytes — a stat() per zip per task (~µs) instead
-    of an unconditional central-directory re-read (~130 ms)."""
+    of an unconditional central-directory re-read (~100 ms)."""
     global _WORKER_FASTPATH_DONE
     if _WORKER_FASTPATH_DONE is None:
         _WORKER_FASTPATH_DONE = os.environ.get("CHAOS_WORKER_FASTPATH", "1") == "1"
@@ -131,3 +143,24 @@ def worker_fastpath() -> None:
             finder._chaos_fastpath_guard = True  # type: ignore[attr-defined]
         except AttributeError:
             pass  # C-implemented importer (other interpreters): leave it
+
+
+def kernel(fn):
+    """The one entry of every executor-side kernel: ``fn`` wrapped so the
+    task runs :func:`worker_fastpath` first. Wrap at the call —
+    ``df.mapInPandas(kernel(fn), schema=...)`` — for both mapInPandas
+    (``fn`` returns an iterator; the patch lands before any batch is
+    read) and applyInPandas (``fn`` returns a frame). The wrapper carries
+    ``fn``'s signature, which the worker reads to pass applyInPandas its
+    ``(key, pdf)`` or ``(pdf)`` arguments.
+
+    cloudpickle ships the wrapper by value and ``worker_fastpath`` by
+    reference to this module, so the worker needs the shipped package
+    (:func:`ensure_shipped`) exactly as ``fn`` already does."""
+
+    def run(*args):
+        worker_fastpath()
+        return fn(*args)
+
+    run.__signature__ = inspect.signature(fn)
+    return run

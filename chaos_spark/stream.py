@@ -125,6 +125,7 @@ from .engine import (
 from . import csr
 from .csr import CsrGraph, _load_apply_plan, _load_disk_block
 from .graph import ID
+from .shipping import kernel
 
 PART, BLOB = "part", "blob"
 _STATE_SCHEMA = f"{PART} int, {BLOB} binary"
@@ -476,12 +477,12 @@ def _stream_loop(
                 # ONE fused init+scatter job (see init_kernel_for), already
                 # in sp partitions.
                 state = spark.range(0, p, 1, sp).mapInPandas(
-                    init_kernel_for(start), schema=_STATE_SCHEMA
+                    kernel(init_kernel_for(start)), schema=_STATE_SCHEMA
                 ).localCheckpoint(eager=True)
             else:
                 if state is None:
                     state = g.align_state(g.verts.join(init_rows, ID, "left")).mapInPandas(
-                        rows_init_kernel, schema=_STATE_SCHEMA
+                        kernel(rows_init_kernel), schema=_STATE_SCHEMA
                     ).localCheckpoint(eager=True)
                     if sp != p:
                         # Lazy checkpoint: the scatter job below is the
@@ -493,7 +494,7 @@ def _stream_loop(
                 # regenerated rather than checkpointed (one tiny job);
                 # steady-state supersteps publish inside the fused stage.
                 rows = state.mapInPandas(
-                    scatter_kernel_for(start), schema=f"{PART} int, n long"
+                    kernel(scatter_kernel_for(start)), schema=f"{PART} int, n long"
                 ).collect()
                 assert sum(r["n"] for r in rows) == n
                 assert tuple(sorted(int(r[PART]) for r in rows)) == qs
@@ -503,7 +504,9 @@ def _stream_loop(
                 last = first if sp > 1 else min(
                     max_iters, (superstep // ck_every + 1) * ck_every
                 )
-                pre = cur.mapInPandas(fused_kernel_for(first, last), schema=_STATE_SCHEMA)
+                pre = cur.mapInPandas(
+                    kernel(fused_kernel_for(first, last)), schema=_STATE_SCHEMA
+                )
                 maybe_explain(pre, "superstep")
                 new = pre.localCheckpoint(eager=True)
                 # The barrier just completed, so every stats file of the
@@ -537,7 +540,7 @@ def _stream_loop(
             # never be recomputed — the apply plans they read may be an
             # EPHEMERAL block dir reclaimed by g.unpersist() below.
             result.state = blob_state.mapInPandas(
-                expand, schema=algo.out_schema
+                kernel(expand), schema=algo.out_schema
             ).localCheckpoint(eager=True)
             release_state(blob_state)
         return result

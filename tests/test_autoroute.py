@@ -56,6 +56,7 @@ def test_cc_auto_upgrades_to_stream_on_warm_blocks(spark, monkeypatch):
     """Below the crossover, a warm-block registry hit routes CC to the
     stream kernel (the cold-build argument for the join path is void);
     results are the exact same integer labels."""
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
     pdf = g3_cliques()
     edges = spark.createDataFrame(pdf)
     # Cold small graph: no warm entry -> join path (cc_stream not called).

@@ -298,3 +298,37 @@ def test_edge_fp_np_matches_spark_xxhash64(spark, weighted):
         weight_col="w" if weighted else None,
     )
     assert (g.num_edges, g.edge_fp) == _spark_fp(spark, pdf, weighted)
+
+
+def test_weighted_warm_adoption_ignores_row_order(spark, tmp_path, monkeypatch):
+    """Duplicate (src, dst) weights 0.1, 0.2 and 0.3 sum to different
+    doubles in different orders: (0.1 + 0.2) + 0.3 != 0.1 + (0.2 + 0.3).
+    The build and the warm validation both sum a pair's weights in sorted
+    order, so the same weighted graph fed in another row order adopts the
+    blocks instead of rebuilding them."""
+    import itertools
+    import os
+
+    import chaos_spark.csr as csr_mod
+
+    monkeypatch.setattr(csr_mod, "_DISK_BLOCK_BASE", str(tmp_path))
+    perms = list(itertools.permutations((0.1, 0.2, 0.3)))
+    pairs = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 1), (2, 3)]
+
+    def edges(shift):
+        rows = [
+            (s, d, w) for i, (s, d) in enumerate(pairs)
+            for w in perms[(i + shift) % len(perms)]
+        ]
+        return spark.createDataFrame(pd.DataFrame(rows, columns=["src", "dst", "w"]))
+
+    g = csr_mod.CsrGraph(spark, edges(0), num_partitions=2, token="pinned", weight_col="w")
+    marker = os.path.join(g.block_dir, "_BUILT")
+    built_at = os.path.getmtime(marker)
+    with open(marker) as f:
+        text = f.read()
+    g2 = csr_mod.CsrGraph(spark, edges(3), num_partitions=2, token="pinned", weight_col="w")
+    assert (g2.num_edges, g2.edge_fp) == (g.num_edges, g.edge_fp)
+    assert os.path.getmtime(marker) == built_at  # adopted, not rebuilt
+    with open(marker) as f:
+        assert f.read() == text

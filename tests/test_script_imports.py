@@ -10,7 +10,9 @@ The same ``ast`` pass keeps stream routing in one place: no
 ``chaos_spark/algos`` module but the router (``algos/_route.py``) may use
 the warm-block probe or a ``*_MIN_EDGES`` crossover. It keeps one stream
 loop: in ``stream.py`` and ``stream_algos.py`` only ``_stream_loop``
-calls ``run_supersteps``. And it pins the env-knob budget: the
+calls ``run_supersteps``. It keeps one kernel entry: every function
+``chaos_spark`` hands to ``mapInPandas`` / ``applyInPandas`` is wrapped in
+``shipping.kernel(...)``. And it pins the env-knob budget: the
 ``CHAOS_*`` names read under ``chaos_spark/``.
 """
 
@@ -216,6 +218,57 @@ def test_routing_check_fires_on_a_hand_copied_router():
 def test_only_the_router_routes(path):
     refs = _routing_refs(path.read_text())
     assert not refs, f"{path.relative_to(ROOT)} routes by hand: {refs}; use algos._route"
+
+
+PACKAGE = sorted((ROOT / "chaos_spark").rglob("*.py"))
+
+
+def _bare_kernels(src: str) -> list[str]:
+    """``line: .mapInPandas(fn)`` for every ``mapInPandas`` /
+    ``applyInPandas`` call in ``src`` whose function argument is not a
+    ``kernel(...)`` (or ``shipping.kernel(...)``) call."""
+    bare = []
+    for node in ast.walk(ast.parse(src)):
+        if not (
+            isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("mapInPandas", "applyInPandas")
+        ):
+            continue
+        fn = node.args[0] if node.args else next(
+            (kw.value for kw in node.keywords if kw.arg == "func"), None
+        )
+        if not (isinstance(fn, ast.Call) and "kernel" in (
+            getattr(fn.func, "id", None), getattr(fn.func, "attr", None)
+        )):
+            arg = ast.unparse(fn) if fn is not None else ""
+            bare.append(f"{node.lineno}: .{node.func.attr}({arg})")
+    return bare
+
+
+def test_kernel_check_fires_on_a_bare_kernel():
+    src = (
+        "from .shipping import kernel\n"
+        "from . import shipping\n"
+        "def run(df, fused, merge):\n"
+        "    df.mapInPandas(fused, schema='x long')\n"
+        "    df.groupBy('k').applyInPandas(lambda _, p: merge(p), schema='x long')\n"
+        "    df.mapInPandas(func=fused, schema='x long')\n"
+        "    df.mapInPandas(kernel(fused), schema='x long')\n"
+        "    df.mapInPandas(func=shipping.kernel(fused), schema='x long')\n"
+    )
+    assert _bare_kernels(src) == [
+        "4: .mapInPandas(fused)",
+        "5: .applyInPandas(lambda _, p: merge(p))",
+        "6: .mapInPandas(fused)",
+    ]
+
+
+def test_every_kernel_enters_through_the_wrapper():
+    bare = [
+        f"{p.relative_to(ROOT)}:{hit}" for p in PACKAGE for hit in _bare_kernels(p.read_text())
+    ]
+    assert any("mapInPandas" in p.read_text() for p in PACKAGE)
+    assert not bare, f"kernels that skip shipping.kernel: {bare}"
 
 
 STREAM_MODULES = [ROOT / "chaos_spark" / "stream.py", ROOT / "chaos_spark" / "stream_algos.py"]
