@@ -25,7 +25,8 @@ partition's update slice is contiguous: the block doubles as the
 slipstore update-stream routing table. Blocks are MEMORY-MAPPED, not
 read: all workers on a host share one physical copy of each block.
 
-This module owns the build (two Spark jobs, see CsrGraph), warm adoption
+This module owns the build (one Spark job on a graph at or below
+``BUILD_ONE_TASK_MAX_EDGES``, two above it; see CsrGraph), warm adoption
 of marker-validated blocks (one validation job), the worker-side mmap
 loaders, the cross-algorithm warm-block registry, and the join-vs-stream
 crossover constants the ``algos.*`` dispatchers route by.
@@ -39,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .engine import choose_num_partitions, is_stored
+from .engine import choose_num_partitions, is_stored, superstep_conf
 from .graph import DST, ID, SRC
 from .shipping import ensure_shipped, kernel
 
@@ -124,6 +125,20 @@ CC_STREAM_MIN_EDGES = int(
 # per-superstep shape gains from more cores and one task does not, so the
 # constant sits at half the 4-core parity point.
 STREAM_ONE_TASK_MAX_EDGES = 16_000_000
+# One-task crossover of the block build (CsrGraph): at or below this RAW
+# edge count both build passes run in one task of one Spark job, above it
+# one task per block. Measured by ``scripts/stream_batch_sweep.py --leg
+# build`` (BENCH/cold_build_sweep.json: RMAT, cold build in a fresh
+# Spark application, persisted edges, local[4], min of 3): one task / p
+# tasks = 0.74 at 0.13M raw edges, 0.77 at 1M, 0.87 at 2M, 1.13 at 4M and
+# 1.45 at 16M. One task saves the Python worker forks and the second job,
+# but runs the numpy work on one core, which costs more than the forks
+# from ~3M edges; the constant sits at the largest measured win. The
+# build funnels the edges with coalesce(1), which also pulls an unpersisted
+# source's scan into the one task; on a parquet source repartition(1)
+# measured 0.86-1.09x of it (faster at 4 of 5 sizes), while on the usual
+# persisted edges it would add a shuffle for nothing.
+BUILD_ONE_TASK_MAX_EDGES = 2_000_000
 
 # ---------------------------------------------------------------------------
 # Warm-block registry — in-process analogue of Chaos's cross-algorithm
@@ -331,7 +346,93 @@ def _npy_replace(path: str, arr: np.ndarray) -> None:
     _os.replace(tmp, path)
 
 
-def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
+def _batch_columns(batches, cols: list[str]) -> dict[str, np.ndarray] | None:
+    """The named columns of a mapInPandas batch iterator, each concatenated
+    into one numpy array (``w`` float64, bucket ids int32, ids int64);
+    None when no rows arrived."""
+    dtypes = {"w": np.float64, "dbkt": np.int32, "sbkt": np.int32}
+    parts: dict[str, list[np.ndarray]] = {c: [] for c in cols}
+    for pdf in batches:
+        if len(pdf):
+            for c in cols:
+                parts[c].append(pdf[c].to_numpy(dtype=dtypes.get(c, np.int64)))
+    if not parts[cols[0]]:
+        return None
+    return {c: np.concatenate(v) for c, v in parts.items()}
+
+
+def _build_block_v6(
+    bd: str, p: int, pid: int, src: np.ndarray, dst: np.ndarray,
+    bkt: np.ndarray, wv: np.ndarray | None = None,
+) -> tuple[int, int]:
+    """v6 build pass 1 for block ``pid`` (see CsrGraph), over its raw edge
+    rows: ``src``/``dst`` ids, ``bkt`` the dst's Murmur3 pmod bucket and,
+    for weighted blocks, the weights ``wv``. Dedups (summing duplicate
+    weights) and writes part-{pid}/ (du/di/starts/boff, per-unique-src
+    out-degrees, the temporary per-edge src array). The written bytes are
+    a function of the row multiset, not of arrival order, so the one-task
+    and p-task builds write identical blocks. Returns (deduped edge
+    count, xor-fold content fingerprint)."""
+    # One sort serves dedup AND the v5 block order: (bucket, dst, src)
+    # groups duplicate (src, dst) pairs adjacently inside each dst run
+    # while keeping du in (bucket, dst) order. The per-dst edge order
+    # becomes src-ascending — a deterministic order independent of
+    # shuffle arrival. Weights are the last key, so a pair's weights sum
+    # in ascending order whatever order they arrived in.
+    weighted = wv is not None
+    keys = (src, dst, bkt)
+    if weighted:
+        keys = (wv,) + keys
+    o = np.lexsort(keys)
+    src, dst, bkt = src[o], dst[o], bkt[o]
+    keep = np.empty(len(src), dtype=bool)
+    keep[0] = True
+    np.logical_or(src[1:] != src[:-1], dst[1:] != dst[:-1], out=keep[1:])
+    wsum = None
+    if weighted:
+        wsum = _fold_sums(wv[o], np.flatnonzero(keep))
+    src, dst, bkt = src[keep], dst[keep], bkt[keep]
+    n = len(src)
+    fp = _edge_fp_np(src, dst, wsum)
+    seg = np.empty(n, dtype=bool)
+    seg[0] = True
+    np.not_equal(dst[1:], dst[:-1], out=seg[1:])
+    starts = np.flatnonzero(seg)
+    du = dst[seg]
+    di = (np.cumsum(seg) - 1).astype(np.int64, copy=False)
+    boff = np.searchsorted(bkt[seg], np.arange(p + 1))
+    # Out-degrees over the deduped edges, per unique src.
+    usrc, sidx = np.unique(src, return_inverse=True)
+    if weighted:
+        odeg = np.bincount(sidx, weights=wsum)
+    else:
+        odeg = np.bincount(sidx).astype(np.int64)
+    arrays = {
+        "src": src,  # temporary: pass 2 turns it into pos + ids
+        "du": du,
+        "di": di,
+        "starts": starts.astype(np.int64, copy=False),
+        "boff": boff.astype(np.int64, copy=False),
+        "usrc": usrc,
+        "odeg": odeg,
+    }
+    if weighted:
+        arrays["w"] = wsum
+    tmp = _os.path.join(bd, f".part-{pid}.{_os.getpid()}.tmp")
+    _os.makedirs(tmp, exist_ok=True)
+    for name, arr in arrays.items():
+        with open(_os.path.join(tmp, f"{name}.npy"), "wb") as f:
+            np.save(f, arr)
+    try:
+        _os.rename(tmp, _os.path.join(bd, f"part-{pid}"))
+    except OSError:
+        import shutil
+
+        shutil.rmtree(tmp, ignore_errors=True)  # lost the race
+    return n, fp
+
+
+def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> int:
     """v6 build pass 2 for vertex partition ``q`` (see CsrGraph):
     derive q's sorted vertex-id vector from the blocks (unique srcs of
     block q ∪ every block's bucket-q du slice), write the aligned
@@ -340,7 +441,8 @@ def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
     drop the temporary per-edge src array. Idempotent under task retry:
     every file publish is an atomic replace, the apply dir is an atomic
     rename (a lost race leaves the winner's identical bytes), and a
-    retry after pos.npy landed skips the recompute."""
+    retry after pos.npy landed skips the recompute. Returns q's vertex
+    count."""
     pdir = _os.path.join(bd, f"part-{q}")
     has_part = _os.path.isdir(pdir)
     if has_part:
@@ -365,7 +467,7 @@ def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
     cat = [usrc] + [s for s in slices if s is not None]
     ids = np.unique(np.concatenate(cat)) if cat else np.empty(0, np.int64)
     if len(ids) == 0:
-        return pd.DataFrame({"part": [q], "n": [0]})
+        return 0
     od = np.zeros(len(ids), dtype=np.float64 if weighted else np.int64)
     if len(usrc):
         pos_src = np.searchsorted(ids, usrc)
@@ -422,30 +524,54 @@ def _build_apply_v6(bd: str, p: int, q: int, weighted: bool) -> pd.DataFrame:
             _os.remove(srcp)
         except OSError:
             pass
-    return pd.DataFrame({"part": [q], "n": [len(ids)]})
+    return len(ids)
 
 
 class CsrGraph:
     """Per-partition CSR edge blocks built once (see module docstring).
 
-    Construction runs TWO Spark jobs:
+    Construction runs two passes:
 
-    1. edge pass (the only shuffle of edge rows): ``repartition(p, src)``
-       over the RAW selected edge stream; the kernel dedups (src, dst)
-       [summing duplicate weights], sorts by (dst-bucket, dst, src),
-       computes du/di/starts/boff, the per-unique-src out-degrees, and
-       the partition's xor-fold content fingerprint (bit-exact Spark
-       xxhash64, see _edge_fp_np).
-    2. vertex/apply pass (NO shuffle — ``spark.range(p)`` with one
-       partition per index): partition q's vertex set is derived from the
-       blocks themselves (unique srcs of block q ∪ every block's bucket-q
-       du slice — both defined by the SAME Murmur3 routing
-       ``repartition(p, col)`` uses, so it equals {v : hash(v) % p == q}
-       by construction), then the pass writes the aligned out-degree
-       vector, the slipstore apply plan (apos/aoff/soff/iod), and
-       back-fills the block's build-time gather positions (pos.npy,
-       strict-checked) + ids.npy, dropping the temporary per-edge src
-       array.
+    1. edge pass (``_build_block_v6`` per block): over the block's RAW
+       edge rows, dedup (src, dst) [summing duplicate weights], sort by
+       (dst-bucket, dst, src), compute du/di/starts/boff, the
+       per-unique-src out-degrees, and the block's xor-fold content
+       fingerprint (bit-exact Spark xxhash64, see _edge_fp_np).
+    2. vertex/apply pass (``_build_apply_v6`` per vertex partition):
+       partition q's vertex set is derived from the blocks themselves
+       (unique srcs of block q ∪ every block's bucket-q du slice — both
+       defined by the SAME Murmur3 routing ``repartition(p, col)`` uses,
+       so it equals {v : hash(v) % p == q} by construction), then the
+       pass writes the aligned out-degree vector, the slipstore apply
+       plan (apos/aoff/soff/iod), and back-fills the block's build-time
+       gather positions (pos.npy, strict-checked) + ids.npy, dropping
+       the temporary per-edge src array.
+
+    Where they run depends on the RAW edge count (duplicates and, for
+    undirected blocks, both directions counted):
+
+    - at or below ``BUILD_ONE_TASK_MAX_EDGES``, ONE Spark job of ONE
+      task, as X-Stream runs a graph that fits in memory on its
+      in-memory engine ([X13] §4): Spark computes both bucket columns,
+      ``pmod(hash(src), p)`` and ``pmod(hash(dst), p)``, the edges are
+      coalesced to one partition, and the task splits them by src
+      bucket and runs pass 1 for every block, then pass 2 for every
+      vertex partition. The src bucket is the partition
+      ``repartition(p, src)`` would send the row to, and pass 1's output
+      does not depend on row order, so the blocks, the marker and the
+      fingerprint are byte-identical to the p-task build's.
+    - above it, TWO jobs: ``repartition(p, src)`` (the only shuffle of
+      edge rows) with one pass-1 task per block, then pass 2 over
+      ``spark.range(p)``, one task per vertex partition.
+
+    The one-task build is not faster numpy: repeated in a process whose
+    Python workers already exist, it is as fast as the p-task build at
+    0.13M edges and slower from 1M up (BENCH/cold_build_sweep.json,
+    ``warm_min_s``). What it saves is what a fresh Spark application
+    pays on its first multi-task Python stage: forking a Python worker
+    per core, and the second job. Both passes and adoption's validation
+    query run with AQE off (``engine.superstep_conf``): its per-stage
+    re-planning split each into three jobs.
 
     Partition sizing uses the RAW row count (``num_edges`` skips the
     scan; duplicates only oversize the heuristic). The deduped |E|, |V|,
@@ -523,7 +649,10 @@ class CsrGraph:
                 token or warm_tok or f"g-{uuid.uuid4().hex}-{raw}-{self.p}"
             )
             self._ephemeral_blocks = token is None and warm_tok is None
-            self._build_or_adopt(e)
+            # AQE off: its per-stage re-planning ran the edge pass as
+            # three jobs and the validation query as three.
+            with superstep_conf(spark, self.p, adaptive=False):
+                self._build_or_adopt(e, raw)
         finally:
             if owned:
                 e.unpersist()
@@ -538,9 +667,9 @@ class CsrGraph:
             _WARM_BLOCKS[self._warm_key] = (self.token, self.block_dir)
             self._ephemeral_blocks = False
 
-    def _build_or_adopt(self, e: DataFrame) -> None:
+    def _build_or_adopt(self, e: DataFrame, raw: int) -> None:
         """Adopt marker-validated blocks (one Spark validation job) or
-        wipe and rebuild (the two v6 passes)."""
+        wipe and rebuild (the two v6 passes, see CsrGraph)."""
         import hashlib
         import shutil
 
@@ -589,119 +718,84 @@ class CsrGraph:
             # donate possibly-stale part dirs to this build.
             shutil.rmtree(self.block_dir, ignore_errors=True)
         _os.makedirs(self.block_dir, exist_ok=True)
-        self._build_v6(e)
+        self._build_v6(e, raw)
 
-    def _build_v6(self, e: DataFrame) -> None:
+    def _build_v6(self, e: DataFrame, raw: int) -> None:
         bd, p, weighted = self.block_dir, self.p, self.weighted
+        cols = [SRC, DST, "dbkt"] + (["w"] if weighted else [])
+        # dbkt via Spark's own Murmur3 hash(): EXACTLY the routing
+        # repartition(p, id) gives the vertex state.
+        e = e.withColumn("dbkt", F.pmod(F.hash(F.col(DST)), F.lit(p)))
+        schema = "part int, n long, fp long, nv long"
 
-        def pass1(batches):
-            from pyspark import TaskContext
+        if raw <= BUILD_ONE_TASK_MAX_EDGES:
 
-            pid = TaskContext.get().partitionId()
-            srcs, dsts, bkts, ws = [], [], [], []
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                srcs.append(pdf[SRC].to_numpy(dtype=np.int64))
-                dsts.append(pdf[DST].to_numpy(dtype=np.int64))
-                bkts.append(pdf["dbkt"].to_numpy(dtype=np.int64))
-                if weighted:
-                    ws.append(pdf["w"].to_numpy(dtype=np.float64))
-            if not srcs:
-                yield pd.DataFrame({"part": [pid], "n": [0], "fp": [0]})
-                return
-            src = np.concatenate(srcs)
-            dst = np.concatenate(dsts)
-            bkt = np.concatenate(bkts)
-            # One sort serves dedup AND the v5 block order: (bucket, dst,
-            # src) groups duplicate (src, dst) pairs adjacently inside
-            # each dst run while keeping du in (bucket, dst) order. The
-            # per-dst edge order becomes src-ascending — a deterministic
-            # order independent of shuffle arrival (stronger than the r5
-            # build, whose per-dst order was arrival order). Weights are
-            # the last key, so a pair's weights sum in ascending order
-            # whatever order they arrived in.
-            keys = (src, dst, bkt)
-            if weighted:
-                wv = np.concatenate(ws)
-                keys = (wv,) + keys
-            o = np.lexsort(keys)
-            src, dst, bkt = src[o], dst[o], bkt[o]
-            keep = np.empty(len(src), dtype=bool)
-            keep[0] = True
-            np.logical_or(
-                src[1:] != src[:-1], dst[1:] != dst[:-1], out=keep[1:]
+            def build(batches):
+                # sbkt is repartition(p, src)'s partition id, so each
+                # block gets the rows the p-task edge pass would give it.
+                got = _batch_columns(batches, cols + ["sbkt"])
+                rows = []
+                if got is not None:
+                    sbkt = got.pop("sbkt")
+                    order = np.argsort(sbkt)
+                    cuts = np.zeros(p + 1, dtype=np.int64)
+                    np.cumsum(np.bincount(sbkt, minlength=p), out=cuts[1:])
+                    del sbkt
+                    for b in range(p):
+                        idx = order[cuts[b]:cuts[b + 1]]
+                        if len(idx):
+                            n, fp = _build_block_v6(
+                                bd, p, b, *(got[c][idx] for c in cols)
+                            )
+                            rows.append((b, n, fp, 0))
+                    del got, order
+                for q in range(p):
+                    rows.append((q, 0, 0, _build_apply_v6(bd, p, q, weighted)))
+                yield pd.DataFrame(rows, columns=["part", "n", "fp", "nv"])
+
+            built = (
+                e.withColumn("sbkt", F.pmod(F.hash(F.col(SRC)), F.lit(p)))
+                .coalesce(1)
+                .mapInPandas(kernel(build), schema=schema)
+                .collect()  # 2p rows at most
             )
-            wsum = None
-            if weighted:
-                wsum = _fold_sums(wv[o], np.flatnonzero(keep))
-            src, dst, bkt = src[keep], dst[keep], bkt[keep]
-            n = len(src)
-            fp = _edge_fp_np(src, dst, wsum)
-            seg = np.empty(n, dtype=bool)
-            seg[0] = True
-            np.not_equal(dst[1:], dst[:-1], out=seg[1:])
-            starts = np.flatnonzero(seg)
-            du = dst[seg]
-            di = (np.cumsum(seg) - 1).astype(np.int64, copy=False)
-            boff = np.searchsorted(bkt[seg], np.arange(p + 1))
-            # Out-degrees over the deduped edges, per unique src — the
-            # old degree groupBy, now a bincount inside the same pass.
-            usrc, sidx = np.unique(src, return_inverse=True)
-            if weighted:
-                odeg = np.bincount(sidx, weights=wsum)
-            else:
-                odeg = np.bincount(sidx).astype(np.int64)
-            arrays = {
-                "src": src,  # temporary: pass 2 turns it into pos + ids
-                "du": du,
-                "di": di,
-                "starts": starts.astype(np.int64, copy=False),
-                "boff": boff.astype(np.int64, copy=False),
-                "usrc": usrc,
-                "odeg": odeg,
-            }
-            if weighted:
-                arrays["w"] = wsum
-            tmp = _os.path.join(bd, f".part-{pid}.{_os.getpid()}.tmp")
-            _os.makedirs(tmp, exist_ok=True)
-            for name, arr in arrays.items():
-                with open(_os.path.join(tmp, f"{name}.npy"), "wb") as f:
-                    np.save(f, arr)
-            final = _os.path.join(bd, f"part-{pid}")
-            try:
-                _os.rename(tmp, final)
-            except OSError:
-                import shutil
+        else:
 
-                shutil.rmtree(tmp, ignore_errors=True)  # lost the race
-            yield pd.DataFrame({"part": [pid], "n": [n], "fp": [np.int64(fp)]})
+            def pass1(batches):
+                from pyspark import TaskContext
 
-        built = (
-            # dbkt via Spark's own Murmur3 hash(): EXACTLY the routing
-            # repartition(p, id) gives the vertex state.
-            e.withColumn("dbkt", F.pmod(F.hash(F.col(DST)), F.lit(p)))
-            .repartition(p, F.col(SRC))
-            .mapInPandas(kernel(pass1), schema="part int, n long, fp long")
-            .collect()  # p rows — bounded by partition count, not |E|
-        )
+                pid = TaskContext.get().partitionId()
+                got = _batch_columns(batches, cols)
+                n, fp = (0, 0) if got is None else _build_block_v6(
+                    bd, p, pid, *got.values()
+                )
+                yield pd.DataFrame({"part": [pid], "n": [n], "fp": [fp], "nv": [0]})
+
+            def pass2(batches):
+                for pdf in batches:
+                    for qv in pdf["id"].tolist():
+                        nv = _build_apply_v6(bd, p, int(qv), weighted)
+                        yield pd.DataFrame(
+                            {"part": [int(qv)], "n": [0], "fp": [0], "nv": [nv]}
+                        )
+
+            built = (
+                e.repartition(p, F.col(SRC))
+                .mapInPandas(kernel(pass1), schema=schema)
+                .collect()  # p rows — bounded by partition count, not |E|
+            )
+            # pass 2 reads every block, so it runs after pass 1's job.
+            built += (
+                self.spark.range(0, p, 1, p)
+                .mapInPandas(kernel(pass2), schema=schema)
+                .collect()
+            )
         self.num_edges = int(sum(r["n"] for r in built))
         acc = 0
         for r in built:
             acc ^= int(r["fp"]) & 0xFFFFFFFFFFFFFFFF
         self.edge_fp = acc - (1 << 64) if acc >= 1 << 63 else acc
-
-        def pass2(batches):
-            for pdf in batches:
-                for qv in pdf["id"].tolist():
-                    yield _build_apply_v6(bd, p, int(qv), weighted)
-
-        applied = (
-            self.spark.range(0, p, 1, p)
-            .mapInPandas(kernel(pass2), schema="part int, n long")
-            .collect()
-        )
-        self.num_vertices = int(sum(r["n"] for r in applied))
+        self.num_vertices = int(sum(r["nv"] for r in built))
         with open(_os.path.join(self.block_dir, "_BUILT"), "w") as f:
             f.write(
                 f"v6:{self.num_edges}:{self.num_vertices}:{p}:{self.edge_fp:x}"

@@ -63,6 +63,13 @@ def get_spark(
         # BENCH/SCALING_ANALYSIS.md). Engine-owned stall, engine-owned
         # fix — periodic reclamation stays, the pause goes.
         "spark.driver.extraJavaOptions": "-XX:+ExplicitGCInvokesConcurrent",
+        # PySpark wraps every DataFrame/Column call to record its Python
+        # call site for error messages; each capture walks the stack and
+        # tries ``import IPython``/``ipykernel`` (0.4 s for the first
+        # IPython import, and a failed ipykernel import retried on every
+        # call). Plan construction is on every driver path, so the cost
+        # lands in each call; errors lose the Python call site line.
+        "spark.python.sql.dataFrameDebugging.enabled": "false",
     }
     if extra_conf:
         conf.update(extra_conf)

@@ -46,7 +46,12 @@ actually moves updates ([C15] §4, "slipstore"; [X13] §3.2 update streams):
   convergence, ``max_iters`` or the next checkpoint boundary. The Spark
   job — whose fixed cost dwarfs a small graph's kernel math — is paid
   once per checkpoint interval instead of once per superstep. Same
-  plugin calls in the same order, so results are bit-identical.
+  plugin calls in the same order, so results are bit-identical. The
+  block build in front of the loop has a one-task regime of its own:
+  at or below ``csr.BUILD_ONE_TASK_MAX_EDGES`` raw edges it is one job
+  of one task (``csr.CsrGraph``), so a cold call on a small graph runs
+  in the one Python worker the caller's last one-task stage left,
+  instead of forking one per block.
 
 One loop, many kernels (``_stream_loop``, the Pregelix shape: a vertex
 program as a UDF over one generic plan). The loop owns the graph build

@@ -130,8 +130,8 @@ def test_scc_stream_jobs(spark, count_jobs, tmp_path, monkeypatch):
         edges.unpersist()
     assert res.converged and res.supersteps == 25
     assert len(jobs) == (
-        4  # forward block build: edge pass (three AQE stage jobs), apply pass
-        + 4  # reversed block build, the same four
+        1  # forward block build: both passes in one task
+        + 1  # reversed block build, the same one job
         + 1  # init: fused init+scatter over range(p) in one task
         + 1  # every superstep, run inside the one task
         + 1  # expand blobs to (id, scc) rows
