@@ -127,12 +127,12 @@ def _als(spark, ratings, rank, reg, num_sweeps, seed, p, init_fn=None) -> RunRes
     history = []
     supersteps = 0
     for sweep in range(num_sweeps):
-        new_i = materialize(solve_side(u_vec, SRC, DST), supersteps)
+        new_i = materialize(solve_side(u_vec, SRC, DST))
         new_i.count()
         i_vec.unpersist()
         i_vec = new_i
         supersteps += 1
-        new_u = materialize(solve_side(i_vec, DST, SRC), supersteps)
+        new_u = materialize(solve_side(i_vec, DST, SRC))
         new_u.count()
         u_vec.unpersist()
         u_vec = new_u

@@ -127,7 +127,7 @@ def _sssp(
             F.when(F.col("_d") != float("inf"), F.col("_d")).alias("dist"),
             F.col("changed"),
         )
-        new = materialize(new, superstep)
+        new = materialize(new)
         relaxed = new.where(F.col("changed")).count()
         return new, {"converged": relaxed == 0, "changed": relaxed}
 

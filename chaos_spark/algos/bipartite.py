@@ -111,7 +111,7 @@ def _bipartite(spark, edges, max_iters, p) -> RunResult:
                 & (F.col("cand") < F.struct(cur["root"], cur["dist"].alias("dist")))
             ).alias("changed"),
         )
-        new = materialize(new, superstep)
+        new = materialize(new)
         changed = new.where(F.col("changed")).count()
         return new, {"converged": changed == 0, "changed": changed}
 

@@ -129,8 +129,7 @@ def _bp(spark, edges, coupling, tol, max_iters, p, phi_fn=None) -> RunResult:
         )
         new = materialize(
             joined.select(SRC, DST, "m0", "m1",
-                          F.abs(F.col("m0") - F.col("p0")).alias("_d")),
-            superstep,
+                          F.abs(F.col("m0") - F.col("p0")).alias("_d"))
         )
         delta = float(new.agg(F.max("_d")).first()[0])
         return new, {"converged": delta < tol, "delta": delta}

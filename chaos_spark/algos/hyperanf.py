@@ -196,8 +196,7 @@ def _hyper_anf(spark, edges, max_iters, seed, p) -> RunResult:
             joined.mapInPandas(
                 kernel(apply_udf),
                 schema=f"{ID} long, regs array<tinyint>, nf array<double>, changed boolean",
-            ),
-            superstep,
+            )
         )
         row = new.agg(
             F.sum(F.col("changed").cast("long")).alias("chg"),

@@ -90,7 +90,7 @@ def _k_core(spark, edges, k, max_iters, p) -> RunResult:
             F.coalesce(F.col("_s"), F.lit(False)).alias("in_core"),
             (F.col("_prev") & ~F.coalesce(F.col("_s"), F.lit(False))).alias("_chg"),
         )
-        new = materialize(new, superstep)
+        new = materialize(new)
         row = new.agg(
             F.sum(F.col("_chg").cast("long")).alias("dropped"),
             F.sum(F.col("in_core").cast("long")).alias("alive"),

@@ -144,7 +144,7 @@ def _mis(spark, edges, max_iters, p) -> RunResult:
                 .alias("status"),
             )
         )
-        new = materialize(new, superstep)
+        new = materialize(new)
         undecided = new.where(F.col("status") == UNDECIDED).count()
         return new, {"converged": undecided == 0, "undecided": undecided}
 

@@ -75,7 +75,7 @@ def _fixpoint(start, step_plan, count_changed):
     """Tiny inner driver: iterate plan until no row changes."""
     cur, iters = start, 0
     while True:
-        new = materialize(step_plan(cur), iters)
+        new = materialize(step_plan(cur))
         changed = count_changed(new)
         iters += 1
         prev, cur = cur, new

@@ -98,10 +98,8 @@ _DISK_BLOCK_BASE = _os.environ.get("CHAOS_CSR_BLOCK_DIR", "/tmp/chaos_csr_blocks
 # cheap supersteps, so the block build must stand on a graph large enough
 # to amortize it. STREAM_AUTO_MIN_EDGES (100k) serves the many-superstep
 # algorithms (PageRank, LPA, HyperANF).
-CSR_AUTO_MIN_EDGES = int(_os.environ.get("CHAOS_CSR_MIN_EDGES", 1_000_000))
-STREAM_AUTO_MIN_EDGES = int(
-    _os.environ.get("CHAOS_STREAM_MIN_EDGES", 100_000)
-)
+CSR_AUTO_MIN_EDGES = 1_000_000
+STREAM_AUTO_MIN_EDGES = 100_000
 # CC's cold stream crossover (r6): CC runs few, cheap supersteps, so the
 # one-time block build must itself beat the join path's setup+iterate for
 # cold routing to pay. Re-measured after the v6 single-shuffle build
@@ -110,9 +108,7 @@ STREAM_AUTO_MIN_EDGES = int(
 # ~29k (sf0.01) the join path still wins by a few hundred ms — the
 # crossover sits between, 200k keeps a safety margin on the join side
 # (OPTIMIZATION_r06.md). algos.connected_components reads this.
-CC_STREAM_MIN_EDGES = int(
-    _os.environ.get("CHAOS_CC_STREAM_MIN_EDGES", 200_000)
-)
+CC_STREAM_MIN_EDGES = 200_000
 # One-task crossover of the stream loop (stream._stream_loop): at or below
 # this deduplicated |E| the blob state defaults to ONE partition, whose
 # task runs a whole checkpoint interval of supersteps itself — one Spark
@@ -158,9 +154,7 @@ BUILD_ONE_TASK_MAX_EDGES = 2_000_000
 # the process lifetime (capped: graphs above _WARM_KEEP_MAX_EDGES keep the
 # ephemeral-cleanup behavior; campaign-scale graphs pin tokens anyway).
 _WARM_BLOCKS: dict[tuple, tuple[str, str]] = {}
-_WARM_KEEP_MAX_EDGES = int(
-    _os.environ.get("CHAOS_WARM_KEEP_MAX_EDGES", 16_000_000)
-)
+_WARM_KEEP_MAX_EDGES = 16_000_000
 
 
 def _warm_key(

@@ -40,7 +40,7 @@ StepFn = Callable[
 ]
 
 
-def materialize(df: DataFrame, superstep: int | None = None) -> DataFrame:
+def materialize(df: DataFrame) -> DataFrame:
     """Superstep barrier + lineage truncation, costing ZERO extra jobs.
 
     LAZY ``localCheckpoint``: the algorithm's convergence-stats action
@@ -161,13 +161,12 @@ def release_state(df: DataFrame) -> None:
         pass
 
 
-def choose_num_partitions(
-    spark,
-    num_edges: int,
-    small_edges_per_partition: int = 75_000,
-    large_edges_per_partition: int = 4_000_000,
-    cap: int = 1_000_000,
-) -> int:
+SMALL_EDGES_PER_PARTITION = 75_000
+LARGE_EDGES_PER_PARTITION = 4_000_000
+MAX_PARTITIONS = 1_000_000
+
+
+def choose_num_partitions(spark, num_edges: int) -> int:
     """X-Stream's streaming-partition autotuner, as a formula ([X13] §4).
 
     Three regimes, measured on this host (32 cores):
@@ -182,9 +181,9 @@ def choose_num_partitions(
       at 10^12 edges on a 1000-executor cluster this regime binds.
     """
     par = spark.sparkContext.defaultParallelism
-    p_small = math.ceil(num_edges / small_edges_per_partition)
-    p_mem = math.ceil(num_edges / large_edges_per_partition)
-    return max(4, min(p_small, par * 4), min(p_mem, cap))
+    p_small = math.ceil(num_edges / SMALL_EDGES_PER_PARTITION)
+    p_mem = math.ceil(num_edges / LARGE_EDGES_PER_PARTITION)
+    return max(4, min(p_small, par * 4), min(p_mem, MAX_PARTITIONS))
 
 
 @contextmanager

@@ -6,10 +6,11 @@ the north rule instead derives edges from a source-code corpus
 extracting import/include references with vectorized pandas/Arrow UDFs —
 NO per-row Python (BASELINE.json input_hint). Implementation:
 ``mapInPandas`` + ``pandas.Series.str.extractall`` with one compiled
-multiline regex per language; reference resolution is a plain (broadcast-
-able at sampled tiers) equi-join on (repo, path-stem); unresolvable
-imports are dropped and countable via the returned anti-join, never a
-crash (FIXTURES.md §1).
+multiline regex per language; reference resolution is a plain equi-join
+on (repo, path-stem) whose plan (broadcast or shuffle) Spark's broadcast
+threshold picks; unresolvable imports are dropped and countable via the
+returned anti-join, never a crash (FIXTURES.md §1). Vertex ids are
+``graph.vertex_id(repo, path)``, hashed from the edge row's own columns.
 """
 
 from __future__ import annotations
@@ -20,7 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .graph import mint_vertex_ids
+from .graph import mint_vertex_ids, vertex_id
 from .shipping import ensure_shipped, kernel
 
 # One multiline pattern per language; group 1 = dotted module, group 2 =
@@ -146,53 +147,26 @@ def resolve_references(
     return resolve_against_index(refs, path_index(corpus), broadcast_index)
 
 
-BROADCAST_CORPUS_MAX_FILES = 2_000_000  # index/vertex map ~100 MB at this size
-
-
 def corpus_to_graph(corpus: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Full pipeline: corpus -> (vertices, edges, unresolved).
 
-    vertices = (repo, path, id) with id = xxhash64(repo, path) (SURVEY
+    vertices = (repo, path, id) with id = ``vertex_id(repo, path)`` (SURVEY
     §1.2 id minting; callers at huge scale should run
-    ``graph.assert_no_id_collisions``); edges = (src, dst) vertex ids.
+    ``graph.assert_no_id_collisions``); edges = (src, dst) vertex ids,
+    hashed from each resolved path edge's own (repo, src_path) and (repo,
+    dst_path) — no join against the vertex table. A file with a NULL path
+    has no vertex and so contributes no edges.
 
-    The corpus feeds FOUR consumers (extraction, path index, both vertex
-    maps); at sampled tiers (<= BROADCAST_CORPUS_MAX_FILES) it is
-    persisted once and the index/vertex-map joins are broadcast — round 2
-    measured 33.8 s -> ~3 s for a 400-file corpus whose un-hinted plan
-    re-ran the regex extraction per join and shuffled all three joins.
-    At 10^12 files both hints are wrong (a persist would spill the corpus,
-    the maps exceed broadcast limits) and the shuffle plan is correct, so
-    both are gated on the measured corpus size.
-
-    Sizing probe: ``limit(MAX+1).count()`` — LocalLimit caps every
-    partition's read at MAX+1 rows, so deciding "small or huge" never
-    full-scans a 10^12-file corpus (round 2 ran a FULL uncached count
-    here, executing the corpus plan once extra before the persist).
-    The cached corpus is CALLER-owned: unpersist it after materializing
-    the returned frames; leaving it cached only costs storage-pool
-    memory, never correctness.
+    One code path serves every corpus size: Spark's broadcast threshold
+    (``spark.sql.autoBroadcastJoinThreshold``, AQE on) picks the index
+    join's plan — broadcast at sampled tiers, shuffle at 10^12 files.
+    Nothing is persisted; the caller owns any cache of the returned frames.
     """
-    probe = corpus.limit(BROADCAST_CORPUS_MAX_FILES + 1).count()
-    small = probe <= BROADCAST_CORPUS_MAX_FILES
-    if small:
-        corpus = corpus.persist()
     refs = extract_references(corpus)
-    path_edges, unresolved = resolve_references(refs, corpus, broadcast_index=small)
+    path_edges, unresolved = resolve_references(refs, corpus)
     vertices = mint_vertex_ids(corpus.select("repo", "path"), "repo", "path")
-    src_v = vertices.select(
-        F.col("repo").alias("r"), F.col("path").alias("p"), F.col("id").alias("src")
-    )
-    dst_v = vertices.select(
-        F.col("repo").alias("r2"), F.col("path").alias("p2"), F.col("id").alias("dst")
-    )
-    if small:
-        src_v, dst_v = F.broadcast(src_v), F.broadcast(dst_v)
-    edges = (
-        path_edges.join(
-            src_v, (path_edges["repo"] == src_v["r"]) & (path_edges["src_path"] == src_v["p"])
-        )
-        .join(dst_v, (path_edges["repo"] == dst_v["r2"]) & (path_edges["dst_path"] == dst_v["p2"]))
-        .select("src", "dst")
+    edges = path_edges.where(F.col("src_path").isNotNull()).select(
+        vertex_id("repo", "src_path").alias("src"),
+        vertex_id("repo", "dst_path").alias("dst"),
     )
     return vertices, edges, unresolved

@@ -10,7 +10,7 @@ analogue of Chaos's work stealing for reducer skew, [C15] §3.2).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 SRC, DST, ID = "src", "dst", "id"
 
@@ -61,15 +61,23 @@ def vertices_from_edges(edges: DataFrame) -> DataFrame:
     )
 
 
-def mint_vertex_ids(df: DataFrame, *cols: str, out: str = ID) -> DataFrame:
-    """Mint a stable 64-bit vertex id from natural-key columns.
+def vertex_id(*cols: str) -> Column:
+    """The stable 64-bit vertex id of a natural key: ``xxhash64`` of its
+    columns in order. A pure function of the key, so any frame holding
+    the key (a vertex table, an edge's endpoint columns) mints the same id
+    with no lookup.
 
     ``xxhash64`` keeps minting embarrassingly parallel (no global
     zipWithIndex barrier) — the right trade at 10^12-file scale; collision
     probability reaches ~50% only near 2^32 rows (birthday bound), and
     callers at sampled tiers should assert ``assert_no_id_collisions``.
     """
-    return df.withColumn(out, F.xxhash64(*[F.col(c) for c in cols]))
+    return F.xxhash64(*[F.col(c) for c in cols])
+
+
+def mint_vertex_ids(df: DataFrame, *cols: str, out: str = ID) -> DataFrame:
+    """``df`` plus column ``out`` = :func:`vertex_id` of ``cols``."""
+    return df.withColumn(out, vertex_id(*cols))
 
 
 def assert_no_id_collisions(df: DataFrame, id_col: str = ID) -> None:

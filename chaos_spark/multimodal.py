@@ -28,7 +28,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from .shipping import ensure_shipped, kernel
 
@@ -143,10 +143,3 @@ def frame_sample(media: DataFrame, every_n: int = 10, fake: bool = True) -> Data
         kernel(sample), schema="doc_id long, frame_idx long"
     )
 
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize plumbing: metadata transform is real (JVM-side), payload
-    transform is the fake kernel (re-compress header tag)."""
-    return media.withColumn("width", F.lit(width)).withColumn(
-        "height", F.lit(height)
-    )

@@ -272,8 +272,8 @@ _CEDGES, _TRI = "cedges", "tri"
 # Broadcast ceiling for the incremental-triangle delta: ~2M canonical
 # edge pairs ≈ 32 MB framed — comfortably under the 8 GB / 512M-row hard
 # cap and the driver+executor copies it costs, while every realistically
-# sized micro-batch stays on the fast broadcast plan. Env-tunable.
-_TRI_BCAST_MAX_ROWS = int(os.environ.get("CHAOS_TRI_BCAST_MAX_ROWS", 2_000_000))
+# sized micro-batch stays on the fast broadcast plan.
+_TRI_BCAST_MAX_ROWS = 2_000_000
 
 
 @dataclass

@@ -18,7 +18,8 @@ from pyspark import StorageLevel
 
 from chaos_spark import csr as csr_mod
 from chaos_spark.algos import pagerank, triangle_count
-from chaos_spark.fixtures import g3_cliques, g4_powerlaw
+from chaos_spark.extract import corpus_to_graph
+from chaos_spark.fixtures import g3_cliques, g4_powerlaw, gen_source_files
 from chaos_spark.stream import pagerank_stream
 from chaos_spark.stream_algos import cc_stream, lpa_stream, scc_stream
 
@@ -144,4 +145,17 @@ def test_triangle_count_leaves_no_cache(spark):
     edges = spark.createDataFrame(g3_cliques())
     before = _persistent_rdd_ids(spark)
     assert triangle_count(spark, edges) == 20
+    assert _persistent_rdd_ids(spark) - before == set()
+
+
+def test_corpus_to_graph_leaves_no_cache(spark):
+    """Extraction persists nothing: the caller's corpus keeps its storage
+    level and no persistent RDD outlives counting the edges."""
+    # a corpus no other test builds, so no plan-equal cache entry exists
+    corpus = spark.createDataFrame(gen_source_files(n_rows=400, seed=44).files)
+    level = corpus.storageLevel
+    before = _persistent_rdd_ids(spark)
+    _, edges, _ = corpus_to_graph(corpus)
+    edges.count()
+    assert corpus.storageLevel == level
     assert _persistent_rdd_ids(spark) - before == set()

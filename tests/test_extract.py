@@ -1,5 +1,6 @@
 import hashlib
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from chaos_spark.extract import corpus_to_graph, extract_references, resolve_references
@@ -55,13 +56,73 @@ def test_extraction_matches_ground_truth(spark):
     assert unresolved.count() == corpus.n_unresolvable
 
 
+def _truth_ids(spark, truth):
+    """{(xxhash64(repo, src_path), xxhash64(repo, dst_path))} of the
+    true path edges, computed by Spark independently of the library."""
+    rows = spark.createDataFrame(truth).select(
+        F.xxhash64("repo", "src_path").alias("src"),
+        F.xxhash64("repo", "dst_path").alias("dst"),
+    ).collect()
+    return {(r["src"], r["dst"]) for r in rows}
+
+
+def _edge_rows(edges):
+    return [(r["src"], r["dst"]) for r in edges.collect()]
+
+
 def test_corpus_to_graph_ids(spark):
     corpus = gen_source_files(n_rows=400, seed=42)
     df = _corpus_df(spark, corpus)
     vertices, edges, _ = corpus_to_graph(df)
     assert_no_id_collisions(vertices)
-    assert edges.count() == len(corpus.truth_edges)
-    # every edge endpoint is a minted vertex id
-    vid = {r["id"] for r in vertices.collect()}
-    for r in edges.collect():
-        assert r["src"] in vid and r["dst"] in vid
+    got = _edge_rows(edges)
+    assert len(got) == len(corpus.truth_edges)
+    # each edge is xxhash64(repo, path) of its true endpoints ...
+    assert set(got) == _truth_ids(spark, corpus.truth_edges)
+    # ... and those are the ids the vertex table mints
+    vid = {(r["repo"], r["path"]): r["id"] for r in vertices.collect()}
+    assert set(got) == {
+        (vid[(t.repo, t.src_path)], vid[(t.repo, t.dst_path)])
+        for t in corpus.truth_edges.itertuples(index=False)
+    }
+
+
+def test_corpus_to_graph_null_path_has_no_edges(spark):
+    """A file with a NULL path has no vertex: its imports resolve, but it
+    contributes no edge (and no id hashed from its repo alone)."""
+    corpus = gen_source_files(n_rows=400, seed=42)
+    src = corpus.truth_edges["src_path"].iloc[0]
+    row = corpus.files[corpus.files["path"] == src].assign(path=None)
+    df = spark.createDataFrame(pd.concat([corpus.files, row], ignore_index=True))
+    _, edges, _ = corpus_to_graph(df)
+    got = _edge_rows(edges)
+    assert len(got) == len(corpus.truth_edges)
+    assert set(got) == _truth_ids(spark, corpus.truth_edges)
+
+
+def test_corpus_to_graph_duplicate_file_row(spark):
+    """A (repo, path) listed twice yields each of its edges once."""
+    corpus = gen_source_files(n_rows=400, seed=42)
+    t = corpus.truth_edges.iloc[0]
+    dup = corpus.files[
+        (corpus.files["repo"] == t.repo)
+        & corpus.files["path"].isin([t.src_path, t.dst_path])
+    ]
+    assert len(dup) == 2
+    df = spark.createDataFrame(pd.concat([corpus.files, dup], ignore_index=True))
+    _, edges, _ = corpus_to_graph(df)
+    got = _edge_rows(edges)
+    assert len(got) == len(set(got)) == len(corpus.truth_edges)
+    assert set(got) == _truth_ids(spark, corpus.truth_edges)
+
+
+def test_corpus_to_graph_jobs(spark, count_jobs):
+    """Building the graph runs no job and counting its edges runs one
+    plan: AQE splits it into the index broadcast, two shuffle-map stages
+    (the edge distinct, the count) and the result stage. No size probe,
+    no vertex-table join."""
+    df = _corpus_df(spark, gen_source_files(n_rows=400, seed=43))
+    with count_jobs() as jobs:
+        _, edges, _ = corpus_to_graph(df)
+        edges.count()
+    assert len(jobs) == 4

@@ -308,11 +308,9 @@ def test_only_the_stream_loop_runs_supersteps():
 # are the knobs read under chaos_spark/ today; a change that adds one must
 # delete another (or say in its commit why the budget grows).
 ENV_KNOBS = frozenset({
-    "CHAOS_AQE", "CHAOS_CC_STREAM_MIN_EDGES", "CHAOS_CSR_BLOCK_DIR",
-    "CHAOS_CSR_MIN_EDGES", "CHAOS_EXPLAIN_DIR", "CHAOS_EXPLAIN_NAME",
-    "CHAOS_EXPLAIN_TAG", "CHAOS_PERIODIC_GC", "CHAOS_SPARK_DRIVER_MEM",
-    "CHAOS_STREAM_MIN_EDGES", "CHAOS_TRI_BCAST_MAX_ROWS",
-    "CHAOS_WARM_KEEP_MAX_EDGES", "CHAOS_WORKER_FASTPATH",
+    "CHAOS_AQE", "CHAOS_CSR_BLOCK_DIR", "CHAOS_EXPLAIN_DIR",
+    "CHAOS_EXPLAIN_NAME", "CHAOS_EXPLAIN_TAG", "CHAOS_PERIODIC_GC",
+    "CHAOS_SPARK_DRIVER_MEM", "CHAOS_WORKER_FASTPATH",
 })
 
 
