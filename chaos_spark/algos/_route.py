@@ -8,17 +8,17 @@ stream_algos.py over CSR blocks) or from the dispatcher's join path.
 - ``mode="stream"`` pins the stream path and raises when the call passes
   an argument only the join path supports; ``mode="join"`` (PageRank:
   ``"shuffle"`` / ``"broadcast"``) pins the join path.
-- ``mode="auto"`` routes stream from the dispatcher's cold crossover in
-  raw edges, or below it when the warm-block registry already holds the
-  blocks the kernel would build (the cold-build argument for the join
-  path is then void). PageRank passes no block flavor, so it never
-  probes.
+- ``mode="auto"`` routes stream from the cold crossover in raw edges —
+  ``csr.STREAM_AUTO_MIN_EDGES`` for every dispatcher but CC, which
+  keeps ``csr.CC_STREAM_MIN_EDGES`` — or below it when the warm-block
+  registry already holds the blocks the kernel would build (the
+  cold-build argument for the join path is then void). PageRank passes
+  no block flavor, so it never probes.
 - ``num_edges``: caller-known raw |E| skips the one count routing
   runs for a stream-capable call. The count is handed back, so the block
   build or the join fallback reuses it instead of counting again.
 
-Each dispatcher's docstring keeps the measured record behind its
-crossover.
+The measured records behind the crossovers are cited in csr.py.
 """
 
 from __future__ import annotations
@@ -29,21 +29,6 @@ from pyspark.sql import DataFrame
 
 from .. import csr
 from ..csr import _warm_blocks_ready, _warm_key
-
-# Cold crossover of each dispatcher: the name of the csr constant it
-# compares raw |E| against, read at call time.
-_CROSSOVER = {
-    "pagerank": "STREAM_AUTO_MIN_EDGES",
-    "lpa": "STREAM_AUTO_MIN_EDGES",
-    "hyperanf": "STREAM_AUTO_MIN_EDGES",
-    "cc": "CC_STREAM_MIN_EDGES",
-    "sssp": "CSR_AUTO_MIN_EDGES",
-    "kcores": "CSR_AUTO_MIN_EDGES",
-    "mis": "CSR_AUTO_MIN_EDGES",
-    "bipartite": "CSR_AUTO_MIN_EDGES",
-    "scc": "CSR_AUTO_MIN_EDGES",
-}
-
 
 def stream_route(
     algo: str,
@@ -77,7 +62,8 @@ def stream_route(
         return False, num_edges
     if num_edges is None:
         num_edges = edges.count()
-    if mode == "stream" or num_edges >= getattr(csr, _CROSSOVER[algo]):
+    crossover = csr.CC_STREAM_MIN_EDGES if algo == "cc" else csr.STREAM_AUTO_MIN_EDGES
+    if mode == "stream" or num_edges >= crossover:
         return True, num_edges
     if flavor is None:
         return False, num_edges

@@ -47,10 +47,9 @@ def sssp(
     ``mode="auto"`` (default; routing in algos._route) serves the call
     through the fused min-plus STREAM path (stream_algos.sssp_stream —
     exact same per-superstep state, superstep count, and output, see
-    _MinPlusSSSP) from the 1M-edge cold crossover, or below it on warm
-    blocks of the kernel's flavor; the frontier join path serves the
-    rest (BFS/SSSP run few, cheap supersteps at small scale, so a cold
-    block build isn't amortized — CC's rationale). Measured at 64M
+    _MinPlusSSSP) from the shared 100k-edge cold crossover (record:
+    BENCH/route_sweep.json), or below it on warm blocks of the kernel's
+    flavor; the frontier join path serves the rest. Measured at 64M
     edges local[8], 5 fixed supersteps (scripts/sssp_stream_ab.py,
     BENCH/sssp_stream_ab_64m.json): stream supersteps 0.33–0.66 s vs
     join 0.86–19.3 s, dist diff 0."""

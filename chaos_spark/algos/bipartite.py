@@ -41,16 +41,15 @@ def bipartite_check(
     conflict edges; bipartite iff it is 0 (``history[-1]['bipartite']``).
 
     ``mode="auto"`` (default; routing in algos._route) serves the call
-    through the fused packed-lexmin STREAM path
-    (stream_algos.bipartite_stream — exact same per-superstep (root,
-    dist) state, superstep count, output, and odd-edge count, see
-    _ParityBFS) from the 1M-edge cold crossover, or below it on warm
-    plain undirected blocks (the CC/LPA/HyperANF/MIS flavor). Measured
-    at 64M edges local[8], 4 fixed supersteps
-    (scripts/bipartite_stream_ab.py,
-    BENCH/bipartite_stream_ab_64m.json): stream supersteps 0.41–0.61 s
-    vs join 1.1–13.9 s (15.6× on superstep totals), state diff 0,
-    identical odd-edge counts."""
+    through the fused lexmin STREAM path (stream_algos.bipartite_stream
+    — exact same per-superstep (root, dist) state, superstep count,
+    output, and odd-edge count for any int64 ids, see _ParityBFS) from
+    the shared 100k-edge cold crossover (record: BENCH/route_sweep.json),
+    or below it on warm plain undirected blocks (the CC/LPA/HyperANF/MIS
+    flavor). Measured at 64M edges local[8], 4 fixed supersteps
+    (scripts/bipartite_stream_ab.py, BENCH/bipartite_stream_ab_64m.json):
+    stream supersteps 0.41–0.61 s vs join 1.1–13.9 s (15.6× on superstep
+    totals), state diff 0, identical odd-edge counts."""
     from ..stream_algos import _ParityBFS, bipartite_stream
 
     stream, num_edges = stream_route(

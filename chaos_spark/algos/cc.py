@@ -108,56 +108,58 @@ def _cc(
     # edges the sort is hours of pure waste). r2's recorded 16.3 s was
     # bench run-order JVM state, not cc code (standalone: 7.8-12 s).
     und = partition_edges(und, p, by=SRC, sort=False).persist()
-    und.count()
+    try:
+        und.count()
 
-    def init() -> DataFrame:
-        if init_labels is None:
-            seed = verts.select(F.col(ID), F.col(ID).alias("label"))
-        else:
-            pri = init_labels.select(
-                F.col(ID).alias("_pid"), F.col("label").alias("_plab")
+        def init() -> DataFrame:
+            if init_labels is None:
+                seed = verts.select(F.col(ID), F.col(ID).alias("label"))
+            else:
+                pri = init_labels.select(
+                    F.col(ID).alias("_pid"), F.col("label").alias("_plab")
+                )
+                seed = verts.join(pri, verts[ID] == F.col("_pid"), "left").select(
+                    verts[ID],
+                    F.least(
+                        verts[ID], F.coalesce(F.col("_plab"), verts[ID])
+                    ).alias("label"),
+                )
+            # changed=True everywhere: the first warm superstep does one full
+            # scatter (the price of restarting), after which the shrinking
+            # frontier resumes — required for the exact warm(k)+j ≡ cold k+j
+            # identity above.
+            return materialize(
+                seed.select(ID, "label", F.lit(True).alias("changed")).repartition(
+                    p, F.col(ID)
+                )
             )
-            seed = verts.join(pri, verts[ID] == F.col("_pid"), "left").select(
-                verts[ID],
-                F.least(
-                    verts[ID], F.coalesce(F.col("_plab"), verts[ID])
-                ).alias("label"),
+
+        state, start = resume_or_init(spark, checkpointer, init)
+
+        def step(cur: DataFrame, superstep: int):
+            frontier = cur.where(F.col("changed")).select(F.col(ID), F.col("label"))
+            msgs = und.join(frontier, und[SRC] == frontier[ID]).select(
+                F.col(DST), F.col("label")
             )
-        # changed=True everywhere: the first warm superstep does one full
-        # scatter (the price of restarting), after which the shrinking
-        # frontier resumes — required for the exact warm(k)+j ≡ cold k+j
-        # identity above.
-        return materialize(
-            seed.select(ID, "label", F.lit(True).alias("changed")).repartition(
-                p, F.col(ID)
+            mins = msgs.groupBy(DST).agg(F.min("label").alias("_ml"))
+            new = cur.join(
+                mins.hint("shuffle_hash"), cur[ID] == mins[DST], "left"
+            ).select(
+                cur[ID],
+                F.least(cur["label"], F.coalesce(F.col("_ml"), cur["label"])).alias("label"),
+                (F.col("_ml").isNotNull() & (F.col("_ml") < cur["label"])).alias("changed"),
             )
-        )
+            # `changed` stays in the state — it is next superstep's frontier.
+            new, m = materialize_stats(
+                new, [F.sum(F.col("changed").cast("long")).alias("c")]
+            )
+            changed = int(m["c"] or 0)
+            return new, {"converged": changed == 0, "changed": changed}
 
-    state, start = resume_or_init(spark, checkpointer, init)
-
-    def step(cur: DataFrame, superstep: int):
-        frontier = cur.where(F.col("changed")).select(F.col(ID), F.col("label"))
-        msgs = und.join(frontier, und[SRC] == frontier[ID]).select(
-            F.col(DST), F.col("label")
+        result = run_supersteps(
+            state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
         )
-        mins = msgs.groupBy(DST).agg(F.min("label").alias("_ml"))
-        new = cur.join(
-            mins.hint("shuffle_hash"), cur[ID] == mins[DST], "left"
-        ).select(
-            cur[ID],
-            F.least(cur["label"], F.coalesce(F.col("_ml"), cur["label"])).alias("label"),
-            (F.col("_ml").isNotNull() & (F.col("_ml") < cur["label"])).alias("changed"),
-        )
-        # `changed` stays in the state — it is next superstep's frontier.
-        new, m = materialize_stats(
-            new, [F.sum(F.col("changed").cast("long")).alias("c")]
-        )
-        changed = int(m["c"] or 0)
-        return new, {"converged": changed == 0, "changed": changed}
-
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
-    )
-    und.unpersist()
+    finally:
+        und.unpersist()
     result.state = result.state.select(ID, "label")
     return result

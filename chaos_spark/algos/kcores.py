@@ -34,14 +34,13 @@ def k_core(
     ``mode="auto"`` (default; routing in algos._route) serves the call
     through the fused sum-semiring STREAM path (stream_algos.kcore_stream
     — exact same per-superstep alive set and superstep count, see
-    _KCorePeel) from the 1M-edge cold crossover: each join-path
-    superstep is TWO shuffle joins (both-endpoints-alive filter) plus a
-    groupBy where the stream superstep is one blob pass. Measured at 64M
-    edges local[8], 3 fixed supersteps, k=8 (scripts/kcore_stream_ab.py,
+    _KCorePeel) from the shared 100k-edge cold crossover (record:
+    BENCH/route_sweep.json): each join-path superstep is TWO shuffle joins
+    (both-endpoints-alive filter) plus a groupBy where the stream
+    superstep is one blob pass. Measured at 64M edges local[8], 3 fixed
+    supersteps, k=8 (scripts/kcore_stream_ab.py,
     BENCH/kcore_stream_ab_64m.json): stream supersteps 0.36–0.39 s vs
-    join 16.3–81.5 s (56× wall), in_core diff 0. Peeling still runs few
-    supersteps, so k-core keeps CC's conservative 1M cold crossover
-    (a cold block build isn't amortized below it). Below the crossover,
+    join 16.3–81.5 s (56× wall), in_core diff 0. Below the crossover,
     warm self-loop-free undirected blocks still route stream."""
     from ..stream_algos import _KCorePeel, kcore_stream
 

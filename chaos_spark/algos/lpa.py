@@ -78,39 +78,41 @@ def _lpa(spark, edges, max_iters, p, checkpointer, checkpoint_every) -> RunResul
     und = symmetrize(edges)
     verts = vertices_from_edges(und)
     und = partition_edges(und, p, by=SRC).persist()
-    und.count()
+    try:
+        und.count()
 
-    def init() -> DataFrame:
-        return materialize(
-            verts.select(F.col(ID), F.col(ID).alias("label")).repartition(p, F.col(ID))
-        )
+        def init() -> DataFrame:
+            return materialize(
+                verts.select(F.col(ID), F.col(ID).alias("label")).repartition(p, F.col(ID))
+            )
 
-    state, start = resume_or_init(spark, checkpointer, init)
+        state, start = resume_or_init(spark, checkpointer, init)
 
-    def step(cur: DataFrame, superstep: int):
-        msgs = und.join(cur, und[SRC] == cur[ID]).select(F.col(DST), F.col("label"))
-        counts = msgs.groupBy(DST, "label").agg(F.count(F.lit(1)).alias("cnt"))
-        best = counts.groupBy(DST).agg(
-            F.max_by("label", F.struct(F.col("cnt"), -F.col("label"))).alias("_nl")
-        )
-        new = cur.join(
-            best.hint("shuffle_hash"), cur[ID] == best[DST], "left"
-        ).select(
-            cur[ID],
-            F.coalesce(F.col("_nl"), cur["label"]).alias("label"),
-            (F.coalesce(F.col("_nl"), cur["label"]) != cur["label"]).alias("_changed"),
-        )
-        new, m = materialize_stats(
-            new,
-            [F.sum(F.col("_changed").cast("long")).alias("c")],
-            keep=[ID, "label"],
-        )
-        changed = int(m["c"] or 0)
-        return new, {"converged": changed == 0, "changed": changed}
+        def step(cur: DataFrame, superstep: int):
+            msgs = und.join(cur, und[SRC] == cur[ID]).select(F.col(DST), F.col("label"))
+            counts = msgs.groupBy(DST, "label").agg(F.count(F.lit(1)).alias("cnt"))
+            best = counts.groupBy(DST).agg(
+                F.max_by("label", F.struct(F.col("cnt"), -F.col("label"))).alias("_nl")
+            )
+            new = cur.join(
+                best.hint("shuffle_hash"), cur[ID] == best[DST], "left"
+            ).select(
+                cur[ID],
+                F.coalesce(F.col("_nl"), cur["label"]).alias("label"),
+                (F.coalesce(F.col("_nl"), cur["label"]) != cur["label"]).alias("_changed"),
+            )
+            new, m = materialize_stats(
+                new,
+                [F.sum(F.col("_changed").cast("long")).alias("c")],
+                keep=[ID, "label"],
+            )
+            changed = int(m["c"] or 0)
+            return new, {"converged": changed == 0, "changed": changed}
 
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
-    )
-    und.unpersist()
+        result = run_supersteps(
+            state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
+        )
+    finally:
+        und.unpersist()
     result.state = result.state.select(ID, "label")
     return result

@@ -59,16 +59,16 @@ def maximal_independent_set(
     ``mode="auto"`` (default; routing in algos._route) serves the call
     through the fused two-phase STREAM path (stream_algos.mis_stream —
     identical per-round status vectors and final set, 2 supersteps per
-    Luby round, see _LubyMIS) from the 1M-edge cold crossover: each
-    join-path round is two shuffled message exchanges plus a distinct
-    and two left joins, where the two stream phases are blob passes.
-    Measured at 64M edges local[8], 2 fixed rounds
+    Luby round, see _LubyMIS) from the shared 100k-edge cold crossover
+    (record: BENCH/route_sweep.json): each join-path round is two
+    shuffled message exchanges plus a distinct and two left joins, where
+    the two stream phases are blob passes. Measured at 64M edges
+    local[8], 2 fixed rounds
     (scripts/mis_stream_ab.py, BENCH/mis_stream_ab_64m.json): stream
     phases 0.55–0.60 s (3.85 s wall) vs join rounds 6.1–24.2 s (102.2 s
-    wall, 26.5×), in_set diff 0. MIS runs few rounds (O(log n)
-    expected), so it keeps CC's conservative 1M cold crossover; below
-    it, warm plain undirected blocks route stream (the same flavor
-    CC/LPA/HyperANF build — self-loops masked in-kernel, not at prep).
+    wall, 26.5×), in_set diff 0. Below the crossover, warm plain
+    undirected blocks route stream (the same flavor CC/LPA/HyperANF
+    build — self-loops masked in-kernel, not at prep).
     ``max_iters`` counts Luby ROUNDS on every path (the stream path is
     budgeted 2x internally)."""
     from ..stream_algos import _LubyMIS, mis_stream

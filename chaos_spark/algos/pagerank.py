@@ -357,77 +357,79 @@ def _pagerank_join(
     else:
         e = dedup_edges(edges)
     e = layout(e).persist()
-    verts = vertices_from_edges(e)
-    n = n_verts if n_verts is not None else verts.count()
-    if weighted:
-        # Out-strength W(u) — the weighted analogue of the degree pre-pass.
-        deg = e.groupBy(F.col(SRC).alias(ID)).agg(F.sum("w").alias("out_degree"))
-    else:
-        deg = out_degrees(e)
-
-    # Dangling mass is a driver-side scalar, refreshed by the barrier job
-    # that tests convergence and recorded in each step's stats (so in every
-    # checkpoint manifest). A fresh run observes it in the init job; a
-    # resume reads it from the manifest, aggregating the loaded state only
-    # for a manifest written without it.
-    manifest = checkpointer.latest() if checkpointer is not None else None
-    if manifest is None:
-        start = 0
-        state = seed_ranks(verts, deg, n, init_ranks).repartition(p, F.col(ID))
-        if sources is not None and init_ranks is None:
-            # PPR power-iteration start: rank0 = pref (oracle recurrence).
-            state = state.select(ID, "out_degree", _pref_expr(sources).alias("rank"))
-        state, stats = materialize_stats(state, [_dangling_mass()])
-        dm = stats["dm"]
-    else:
-        start = int(manifest["superstep"])
-        state = checkpointer.load(spark, manifest)
-        dm = manifest["metrics"].get("dm")
-        if dm is None:
-            dm = state.agg(_dangling_mass()).first()["dm"]
-    dangling = {"mass": float(dm or 0.0)}
-    m = (F.col("m0") * F.col("w")) if weighted else F.col("m0")
-
-    def step(cur: DataFrame, superstep: int):
-        dm = dangling["mass"]
-        senders = cur.where(F.col("out_degree") > 0).select(
-            F.col(ID), (F.col("rank") / F.col("out_degree")).alias("m0")
-        )
-        contribs = scatter(e, senders, m)
-        if sources is None:
-            teleport = F.lit((1.0 - damping) / n)
-            dang_share = F.lit(dm / n)
+    try:
+        verts = vertices_from_edges(e)
+        n = n_verts if n_verts is not None else verts.count()
+        if weighted:
+            # Out-strength W(u) — the weighted analogue of the degree pre-pass.
+            deg = e.groupBy(F.col(SRC).alias(ID)).agg(F.sum("w").alias("out_degree"))
         else:
-            pref = _pref_expr(sources, cur[ID])
-            teleport = F.lit(1.0 - damping) * pref
-            dang_share = F.lit(dm) * pref
-        new = cur.join(
-            contribs.hint("shuffle_hash"), cur[ID] == contribs[DST], "left"
-        ).select(
-            cur[ID],
-            cur["out_degree"],
-            cur["rank"].alias("_prev"),
-            (
-                teleport
-                + F.lit(damping)
-                * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
-            ).alias("rank"),
-        )
-        new, stats = materialize_stats(
-            new,
-            [
-                F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
-                _dangling_mass(),
-            ],
-            keep=[ID, "out_degree", "rank"],
-        )
-        dangling["mass"] = float(stats["dm"] or 0.0)
-        delta = float(stats["delta"] or 0.0)
-        return new, {"converged": delta < tol, "delta": delta, "dm": dangling["mass"]}
+            deg = out_degrees(e)
 
-    result = run_supersteps(
-        state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
-    )
-    e.unpersist()
+        # Dangling mass is a driver-side scalar, refreshed by the barrier job
+        # that tests convergence and recorded in each step's stats (so in every
+        # checkpoint manifest). A fresh run observes it in the init job; a
+        # resume reads it from the manifest, aggregating the loaded state only
+        # for a manifest written without it.
+        manifest = checkpointer.latest() if checkpointer is not None else None
+        if manifest is None:
+            start = 0
+            state = seed_ranks(verts, deg, n, init_ranks).repartition(p, F.col(ID))
+            if sources is not None and init_ranks is None:
+                # PPR power-iteration start: rank0 = pref (oracle recurrence).
+                state = state.select(ID, "out_degree", _pref_expr(sources).alias("rank"))
+            state, stats = materialize_stats(state, [_dangling_mass()])
+            dm = stats["dm"]
+        else:
+            start = int(manifest["superstep"])
+            state = checkpointer.load(spark, manifest)
+            dm = manifest["metrics"].get("dm")
+            if dm is None:
+                dm = state.agg(_dangling_mass()).first()["dm"]
+        dangling = {"mass": float(dm or 0.0)}
+        m = (F.col("m0") * F.col("w")) if weighted else F.col("m0")
+
+        def step(cur: DataFrame, superstep: int):
+            dm = dangling["mass"]
+            senders = cur.where(F.col("out_degree") > 0).select(
+                F.col(ID), (F.col("rank") / F.col("out_degree")).alias("m0")
+            )
+            contribs = scatter(e, senders, m)
+            if sources is None:
+                teleport = F.lit((1.0 - damping) / n)
+                dang_share = F.lit(dm / n)
+            else:
+                pref = _pref_expr(sources, cur[ID])
+                teleport = F.lit(1.0 - damping) * pref
+                dang_share = F.lit(dm) * pref
+            new = cur.join(
+                contribs.hint("shuffle_hash"), cur[ID] == contribs[DST], "left"
+            ).select(
+                cur[ID],
+                cur["out_degree"],
+                cur["rank"].alias("_prev"),
+                (
+                    teleport
+                    + F.lit(damping)
+                    * (F.coalesce(F.col("contrib"), F.lit(0.0)) + dang_share)
+                ).alias("rank"),
+            )
+            new, stats = materialize_stats(
+                new,
+                [
+                    F.max(F.abs(F.col("rank") - F.col("_prev"))).alias("delta"),
+                    _dangling_mass(),
+                ],
+                keep=[ID, "out_degree", "rank"],
+            )
+            dangling["mass"] = float(stats["dm"] or 0.0)
+            delta = float(stats["delta"] or 0.0)
+            return new, {"converged": delta < tol, "delta": delta, "dm": dangling["mass"]}
+
+        result = run_supersteps(
+            state, step, max_iters, checkpointer, checkpoint_every, start_superstep=start
+        )
+    finally:
+        e.unpersist()
     result.state = result.state.select(ID, "out_degree", "rank")
     return result

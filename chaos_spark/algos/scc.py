@@ -48,9 +48,9 @@ def strongly_connected_components(
     through the fused two-graph STREAM path (stream_algos.scc_stream —
     identical final labels; dead vertices masked in-kernel instead of
     the per-round live-subgraph rebuild, which at scale costs two
-    full-graph joins per peeling round) from the 1M-edge cold
-    crossover, or below it when scc_stream's forward blocks (directed,
-    deduped) are already warm. ``max_iters`` budgets the inner
+    full-graph joins per peeling round) from the shared 100k-edge cold
+    crossover (record: BENCH/route_sweep.json), or below it when
+    scc_stream's forward blocks (directed, deduped) are already warm. ``max_iters`` budgets the inner
     fixpoints; the stream path's total-superstep budget is
     ``2 * max_iters``."""
     from ..stream_algos import _FBColoringSCC, scc_stream

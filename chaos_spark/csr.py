@@ -28,8 +28,8 @@ read: all workers on a host share one physical copy of each block.
 This module owns the build (one Spark job on a graph at or below
 ``BUILD_ONE_TASK_MAX_EDGES``, two above it; see CsrGraph), warm adoption
 of marker-validated blocks (one validation job), the worker-side mmap
-loaders, the cross-algorithm warm-block registry, and the join-vs-stream
-crossover constants the ``algos.*`` dispatchers route by.
+loaders, the cross-algorithm warm-block registry, and the two
+join-vs-stream crossover constants ``algos._route`` routes by.
 """
 
 from __future__ import annotations
@@ -45,35 +45,20 @@ from .graph import DST, ID, SRC
 from .shipping import ensure_shipped, kernel
 
 # Per-Python-worker memo of loaded block / apply-plan members.
-# key: (cache_token, part) -> dict of np.memmap members. FIFO with a fixed
-# bytes budget: Spark schedules tasks onto workers nondeterministically,
-# so an unbounded cache costs O(workers x blocks) memory. Memmapped
-# members are shared page cache, not worker RSS, and are accounted at a
-# nominal 4 KiB each (_blk_nbytes).
+# key: (cache_token, part) -> dict of np.memmap members. FIFO capped at a
+# fixed entry count: Spark schedules tasks onto workers
+# nondeterministically, so an unbounded cache costs O(workers x blocks)
+# open maps. The members are memory-mapped — shared page cache, not
+# worker RSS — so what an entry costs is its ~5-7 open maps, not its
+# bytes.
 _BLOCK_CACHE: dict[tuple[str, int], dict[str, np.ndarray]] = {}
-_BLOCK_CACHE_BYTES = 256 * 1024 * 1024
-_cache_bytes = 0
-
-
-def _blk_nbytes(blk: dict[str, np.ndarray]) -> int:
-    # memmapped members are shared page-cache, not worker RSS — account
-    # them at a nominal fd/VMA overhead so the byte cap governs only
-    # arrays this worker actually materialized.
-    return sum(
-        4096 if isinstance(a, np.memmap) else int(a.nbytes) for a in blk.values()
-    )
+_BLOCK_CACHE_MAX_ENTRIES = 10_000
 
 
 def _cache_put(key, blk: dict[str, np.ndarray]) -> None:
-    global _cache_bytes
-    nbytes = _blk_nbytes(blk)
-    if nbytes > _BLOCK_CACHE_BYTES:
-        return
-    while _BLOCK_CACHE and _cache_bytes + nbytes > _BLOCK_CACHE_BYTES:
-        old = _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))  # FIFO eviction
-        _cache_bytes -= _blk_nbytes(old)
+    while len(_BLOCK_CACHE) >= _BLOCK_CACHE_MAX_ENTRIES:
+        _BLOCK_CACHE.pop(next(iter(_BLOCK_CACHE)))  # FIFO eviction
     _BLOCK_CACHE[key] = blk
-    _cache_bytes += nbytes
 
 
 _DISK_BLOCK_BASE = _os.environ.get("CHAOS_CSR_BLOCK_DIR", "/tmp/chaos_csr_blocks")
@@ -93,12 +78,14 @@ _DISK_BLOCK_BASE = _os.environ.get("CHAOS_CSR_BLOCK_DIR", "/tmp/chaos_csr_blocks
 # and at sf0.01 (~5k edges) the two are a wash (driver record: 2.3 s vs
 # 2.4 s — fixed Spark job cost dominates either path).
 #
-# CSR_AUTO_MIN_EDGES (1M) is the cold-stream crossover of the BFS/SSSP,
-# k-core, MIS, SCC and bipartite dispatchers: their join paths run few or
-# cheap supersteps, so the block build must stand on a graph large enough
-# to amortize it. STREAM_AUTO_MIN_EDGES (100k) serves the many-superstep
-# algorithms (PageRank, LPA, HyperANF).
-CSR_AUTO_MIN_EDGES = 1_000_000
+# STREAM_AUTO_MIN_EDGES (100k) is the crossover of every dispatcher but
+# CC. For BFS/SSSP, k-core, MIS, bipartiteness and SCC the stream path
+# ran ahead of the join path at every size swept, cold and warm
+# (scripts/stream_batch_sweep.py --leg route, BENCH/route_sweep.json:
+# RMAT, to convergence, local[4], min of 3 fresh processes): stream/join
+# wall 0.28-0.69 cold and 0.16-0.52 warm at 100k raw edges, 0.29-0.54
+# cold and 0.21-0.53 warm at 1M, and 0.34-0.86 cold at 30k. It stays at
+# 100k because perfbench's workloads derive their edge bands from it.
 STREAM_AUTO_MIN_EDGES = 100_000
 # CC's cold stream crossover (r6): CC runs few, cheap supersteps, so the
 # one-time block build must itself beat the join path's setup+iterate for
@@ -290,8 +277,8 @@ def _load_disk_block(token: str, pid: int, block_dir: str):
     placement, and duplicating up to the full block set into EVERY
     worker's byte-capped cache. A memmap "load" is ~5 file opens; the
     kernel's reads fault straight onto the shared pages. The worker
-    cache therefore only accounts the tiny mmap overhead, not the
-    mapped bytes (see _cache_put)."""
+    cache therefore caps its entry count, not the mapped bytes (see
+    _cache_put)."""
     key = (token, pid)
     blk = _BLOCK_CACHE.get(key)
     if blk is not None:

@@ -81,14 +81,17 @@ def mint_vertex_ids(df: DataFrame, *cols: str, out: str = ID) -> DataFrame:
 
 
 def assert_no_id_collisions(df: DataFrame, id_col: str = ID) -> None:
-    """Raise if the minted id column collides (distinct ids < rows)."""
+    """Raise if the minted id column collides: fewer distinct ids than
+    distinct keys, a key being the row's other columns as one struct (so
+    a NULL field still counts). A key listed twice is no collision."""
+    key = F.struct(*[c for c in df.columns if c != id_col])
     row = df.agg(
-        F.count(F.lit(1)).alias("n"),
+        F.countDistinct(key).alias("k"),
         F.countDistinct(F.col(id_col)).alias("d"),
     ).first()
-    if row["n"] != row["d"]:
+    if row["k"] != row["d"]:
         raise ValueError(
-            f"vertex-id collision: {row['n']} rows -> {row['d']} distinct ids"
+            f"vertex-id collision: {row['k']} keys -> {row['d']} distinct ids"
         )
 
 

@@ -979,9 +979,9 @@ def q_bipartite_k6(spark, sf_dir):
 
 def q_bipartite_stream_k6(spark, sf_dir):
     """Same 6-superstep BFS-parity 2-coloring as bipartite_k6 but through
-    the fused slipstore STREAM path (packed (root, dist) lexmin kernel,
+    the fused slipstore STREAM path (two-word (root, dist) lexmin kernel,
     chaos_spark.stream_algos._ParityBFS) — verified against the SAME
-    unrolled DuckDB oracle, proving the packed-lexmin stream kernel ≡
+    unrolled DuckDB oracle, proving the lexmin stream kernel ≡
     the join path to the driver."""
     from .stream_algos import bipartite_stream
 

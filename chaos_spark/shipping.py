@@ -16,6 +16,8 @@ Every function ``chaos_spark`` hands to ``mapInPandas`` /
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import inspect
 import os
 import tempfile
@@ -45,7 +47,14 @@ def _build_zip() -> str | None:
                     rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                     z.write(full, rel)
     _ZIP_PATH = path
+    atexit.register(_remove_zip, path, os.getpid())
     return path
+
+
+def _remove_zip(path: str, pid: int) -> None:
+    if os.getpid() == pid:  # not in a forked child that inherited it
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
 
 
 def ensure_shipped(spark: SparkSession) -> None:

@@ -50,9 +50,10 @@ Per-algorithm update streams over the SAME v5 blocks and apply plans
   self-loop edges are masked in-kernel so the plain undirected blocks
   stay shared (_LubyMIS).
 
-- **Bipartiteness (packed lexmin)**: int64 ``root << 32 | dist`` labels
-  whose scatter message is literally ``label + 1`` under CC's min-fold;
-  self-loops are min-noops (_ParityBFS).
+- **Bipartiteness (lexmin)**: two int64 words ``(root, dist)`` per
+  vertex; the scatter message is the per-dst lexmin of ``(root, dist +
+  1)``, the gather a row-wise lexmin; self-loops are no-ops
+  (_ParityBFS).
 
 - **SCC (FB-coloring, two graphs)**: forward max-color folds over the
   directed blocks, backward min-sweeps over a reversed-edge block set;
@@ -437,58 +438,68 @@ class _HllMaxANF(_StreamKernel):
 
 class _ParityBFS(_StreamKernel):
     """Bipartiteness 2-coloring over the fused stream superstep ([X13]
-    §5.2 lists a BFS-parity bipartiteness kernel) — the packed-lexmin
-    member of the kernel family: state = int64 ``pack(root, dist) =
-    root << 32 | dist`` whose integer order IS the lexicographic
-    (root, dist) order of the join path's struct min (ids < 2^31
-    asserted at init; dist < 2^32 always at sane max_iters). The scatter
-    message ``pack(root, dist+1)`` is literally ``label + 1``, so the
-    whole superstep is CC's hash-min stream shape with a +1 — scatter
-    ``minimum.reduceat(labels[pos] + 1, starts)``, gather the shared
-    _min_fold_gather. Self-loops need no masking: a vertex's own
-    ``label + 1 > label`` is a no-op under min, exactly why the plain
-    undirected blocks (the CC/LPA/ANF/MIS flavor, loops kept) serve
-    unchanged while the join path's loop-free adjacency produces the
-    same folds. Full re-scatter ≡ frontier scatter per superstep (min
-    monotone — the SSSP argument), so per-superstep states, changed
-    counts, and convergence match the join path exactly."""
+    §5.2 lists a BFS-parity bipartiteness kernel) — the lexmin member of
+    the kernel family: state = TWO int64 words per vertex, ``(root,
+    dist)``, ordered lexicographically exactly like the join path's
+    ``struct(root, dist)`` min, for any int64 vertex id. Scatter: per-dst
+    lexmin of the sources' ``(root, dist + 1)`` — ``minimum.reduceat`` of
+    the roots, then of the dists masked, through the block's
+    ``dst_inverse``, to the edges that carry their segment's min root;
+    one (|du_b|, 2) update array per block. Gather: row-wise lexmin of
+    the incoming slices. Self-loops need no masking: a vertex's own
+    ``(root, dist + 1)`` loses to its ``(root, dist)``, exactly why the
+    plain undirected blocks (the CC/LPA/ANF/MIS flavor, loops kept)
+    serve unchanged while the join path's loop-free adjacency produces
+    the same folds. Full re-scatter ≡ frontier scatter per superstep
+    (lexmin monotone — the SSSP argument), so per-superstep states,
+    changed counts, and convergence match the join path exactly."""
 
     dtype = np.int64
     out_schema = f"{ID} long, root long, dist long, color long"
     name = "bipartite_stream"
 
+    def blob_ok(self, n: int, blob_len: int) -> bool:
+        return blob_len == 2 * n
+
     def init_blob(self, ids: np.ndarray) -> np.ndarray:
-        if len(ids) and int(ids.max()) >= 2**31:
-            raise ValueError(
-                "bipartite_stream requires vertex ids < 2^31 (the packed "
-                "(root, dist) int64 ordering)"
-            )
-        return ids.astype(np.int64) << np.int64(32)  # (root=id, dist=0)
+        # (root=id, dist=0) rows, flattened.
+        return np.column_stack([ids, np.zeros_like(ids)]).astype(np.int64).ravel()
 
     def scatter(self, upd_dir: str, q: int, blk, plan,
-                labels: np.ndarray, changed: float) -> None:
+                blob: np.ndarray, changed: float) -> None:
         if blk is not None:
+            st = blob.reshape(-1, 2)[np.asarray(blk["pos"])]
+            starts = np.asarray(blk["starts"])
+            root = np.minimum.reduceat(st[:, 0], starts)
+            dist = np.where(
+                st[:, 0] == root[np.asarray(blk["dst_inverse"])],
+                st[:, 1], np.iinfo(np.int64).max,
+            )
             _publish_arr(
                 upd_dir, f"partial-{q}",
-                np.minimum.reduceat(
-                    labels[blk["pos"]] + np.int64(1),
-                    np.asarray(blk["starts"]),
-                ),
+                np.column_stack([root, np.minimum.reduceat(dist, starts) + 1]),
             )
         _publish_arr(upd_dir, f"stats-{q}", np.array([0.0, changed]))
 
     def gather_apply(self, plan, upd_dir: str, p: int, q: int,
                      prev: np.ndarray) -> tuple[np.ndarray, int]:
-        return _min_fold_gather(plan, upd_dir, p, q, prev)
+        old = prev.reshape(-1, 2)
+        new = old.copy()
+        for rows, sl in _incoming(plan, upd_dir, p):
+            cur = new[rows]
+            less = (sl[:, 0] < cur[:, 0]) | (
+                (sl[:, 0] == cur[:, 0]) & (sl[:, 1] < cur[:, 1])
+            )
+            new[rows[less]] = sl[less]
+        return new.ravel(), int(np.count_nonzero((new != old).any(axis=1)))
 
     def expand_pdf(self, plan, blob: bytes) -> pd.DataFrame:
-        lab = np.frombuffer(blob, np.int64)
-        dist = lab & np.int64(0xFFFFFFFF)
+        st = np.frombuffer(blob, np.int64).reshape(-1, 2)
         return pd.DataFrame({
             ID: np.asarray(plan["ids"]),
-            "root": lab >> np.int64(32),
-            "dist": dist,
-            "color": dist & np.int64(1),
+            "root": st[:, 0],
+            "dist": st[:, 1],
+            "color": st[:, 1] & np.int64(1),
         })
 
 

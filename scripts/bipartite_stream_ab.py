@@ -1,5 +1,5 @@
 """A/B: BFS-parity bipartiteness through the join path (algos.bipartite,
-mode="join") vs the fused packed-lexmin stream path
+mode="join") vs the fused lexmin stream path
 (stream_algos.bipartite_stream), on the persisted RMAT bench graph.
 
 Same protocol as scripts/kcore_stream_ab.py: fixed supersteps, a pinned
@@ -7,7 +7,7 @@ plain-undirected block layout built OUTSIDE the timed window (the
 CC/LPA/HyperANF/MIS flavor — self-loops are min-noops for this kernel),
 a warm leg per path excluded from the timed window, and an exact value
 check over the full (root, dist, color) triple plus the odd-edge count
-(packed int64 lexmin ≡ struct lexmin — no tolerance).
+(two-word lexmin ≡ struct lexmin — no tolerance).
 
 Usage: python scripts/bipartite_stream_ab.py [--scale 22]
        [--edges 64000000] [--cpus 8] [--iters 4]

@@ -37,6 +37,20 @@ the peak RSS of its Python workers (sampled after the cold build), and
 ``BENCH/cold_build_sweep.json`` (extended like the superstep record);
 ``csr.BUILD_ONE_TASK_MAX_EDGES`` is set from it.
 
+``--leg route`` times each ``mode="auto"`` dispatcher's two paths
+against each other: BFS (root 0), k-core (k=8), MIS, bipartiteness, SCC
+and CC, each pinned to ``mode="join"`` or ``mode="stream"`` and run to
+convergence in its own fresh process, over a persisted, counted edge
+frame, with the result's state rows counted inside the timed window.
+``cold_s`` is the process's first call; ``warm_s`` a second call on a
+second, fresh graph of the same size in the same process (the JVM and
+its Python workers warm, the second graph's blocks still built cold).
+Every process gets a fresh block dir. Processes run interleaved, the
+path order alternating per round, ``--reps`` rounds, min kept; the
+record also says whether both paths returned the same state rows.
+Written to ``BENCH/route_sweep.json`` (extended like the others);
+``csr.STREAM_AUTO_MIN_EDGES`` routes the first five from it.
+
 Run it on an otherwise idle host (never next to pytest or a benchmark).
 """
 
@@ -59,6 +73,8 @@ DEFAULT_EDGES = "100000,300000,1000000,3000000,8000000,16000000"
 BUILD_EDGES = "130000,1000000,4000000,16000000"
 BUILD_SHAPES = ("one_task", "p_task", "one_task_parquet",
                 "one_task_parquet_repartition")
+ROUTE_EDGES = "30000,100000,1000000"
+ROUTE_ALGOS = ("bfs", "kcores", "mis", "bipartite", "scc", "cc")
 
 
 def one_point(num_edges: int, supersteps: int, reps: int, cpus: int) -> dict:
@@ -111,11 +127,11 @@ def one_point(num_edges: int, supersteps: int, reps: int, cpus: int) -> dict:
     }
 
 
-def _rmat_parquet(num_edges: int, path: str) -> int:
+def _rmat_parquet(num_edges: int, path: str, seed: int = 7) -> int:
     from chaos_spark.generators import rmat_edges_numpy
 
     scale = max(10, math.ceil(math.log2(num_edges / 16)))
-    rmat_edges_numpy(scale, num_edges, seed=7).to_parquet(path, index=False)
+    rmat_edges_numpy(scale, num_edges, seed=seed).to_parquet(path, index=False)
     return scale
 
 
@@ -243,9 +259,122 @@ def build_leg(args) -> None:
     print(f"wrote {out}")
 
 
+def _route_call(algo: str):
+    from chaos_spark import algos
+
+    return {
+        "bfs": lambda s, e, mode: algos.bfs(s, e, 0, mode=mode),
+        "kcores": lambda s, e, mode: algos.k_core(s, e, 8, mode=mode),
+        "mis": lambda s, e, mode: algos.maximal_independent_set(s, e, mode=mode),
+        "bipartite": lambda s, e, mode: algos.bipartite_check(s, e, mode=mode),
+        "scc": lambda s, e, mode: algos.strongly_connected_components(s, e, mode=mode),
+        "cc": lambda s, e, mode: algos.connected_components(s, e, mode=mode),
+    }[algo]
+
+
+def one_route(algo: str, path: str, parquets: list[str], cpus: int) -> dict:
+    import pandas as pd
+
+    from chaos_spark.session import get_spark
+
+    spark = get_spark("route-sweep", master=f"local[{cpus}]")
+    call = _route_call(algo)
+    walls, steps, digests = [], [], []
+    for pq in parquets:
+        edges = spark.read.parquet(pq).persist()
+        edges.count()
+        t0 = time.time()
+        res = call(spark, edges, path)
+        res.state.count()
+        walls.append(round(time.time() - t0, 3))
+        steps.append(res.supersteps)
+        pdf = res.state.toPandas().sort_values("id").reset_index(drop=True)
+        digests.append(str(int(pd.util.hash_pandas_object(pdf, index=False).sum())))
+        edges.unpersist()
+    spark.stop()
+    return {"cold_s": walls[0], "warm_s": walls[1], "supersteps": steps,
+            "digests": digests}
+
+
+def route_leg(args) -> None:
+    import pandas as pd
+
+    load0 = os.getloadavg()[0]
+    out = args.out or os.path.join(ROOT, "BENCH", "route_sweep.json")
+    sizes = [int(x) for x in args.edges.split(",")]
+    points = []
+    if os.path.exists(out):  # extend: points at other sizes stay
+        with open(out) as f:
+            points = [pt for pt in json.load(f)["points"] if pt["edges_raw"] not in sizes]
+    for n in sizes:
+        tmp = tempfile.mkdtemp(prefix="route_sweep_")
+        try:
+            paths = [os.path.join(tmp, f"edges{i}.parquet") for i in range(2)]
+            scale = [_rmat_parquet(n, pq, seed) for pq, seed in zip(paths, (7, 8))][0]
+            dedup = len(pd.read_parquet(paths[0]).drop_duplicates())
+            runs = {a: {"join": [], "stream": []} for a in ROUTE_ALGOS}
+            for rep in range(args.reps):
+                order = ("join", "stream") if rep % 2 == 0 else ("stream", "join")
+                for algo in ROUTE_ALGOS:
+                    for path in order:
+                        bd = os.path.join(tmp, "blocks")
+                        env = dict(os.environ, CHAOS_CSR_BLOCK_DIR=bd)
+                        proc = subprocess.run(
+                            [sys.executable, os.path.abspath(__file__), "--one-route",
+                             algo, "--path", path, "--parquet", ",".join(paths),
+                             "--cpus", str(args.cpus)],
+                            capture_output=True, text=True, env=env,
+                        )
+                        shutil.rmtree(bd, ignore_errors=True)
+                        line = [ln for ln in proc.stdout.splitlines()
+                                if ln.startswith("ROUTE ")]
+                        if proc.returncode != 0 or not line:
+                            sys.exit(f"point {n} {algo} {path} failed:\n"
+                                     f"{proc.stderr[-3000:]}")
+                        r = json.loads(line[-1][len("ROUTE "):])
+                        print(n, rep, algo, path, r["cold_s"], r["warm_s"], flush=True)
+                        runs[algo][path].append(r)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        pt = {"edges_raw": n, "edges_dedup": dedup, "scale": scale, "algos": {}}
+        for algo, by_path in runs.items():
+            a = {}
+            for when in ("cold_s", "warm_s"):
+                a[when] = {k: [r[when] for r in rs] for k, rs in by_path.items()}
+                a[f"min_{when}"] = {k: min(v) for k, v in a[when].items()}
+            a["stream_over_join"] = {
+                w: round(a[f"min_{w}_s"]["stream"] / a[f"min_{w}_s"]["join"], 3)
+                for w in ("cold", "warm")
+            }
+            a["supersteps"] = {k: rs[0]["supersteps"] for k, rs in by_path.items()}
+            a["same_result"] = len({tuple(r["digests"]) for rs in by_path.values()
+                                    for r in rs}) == 1
+            pt["algos"][algo] = a
+        print(json.dumps(pt), flush=True)
+        points.append(pt)
+        points.sort(key=lambda pt: pt["edges_raw"])
+        record = {
+            "what": "each mode=auto dispatcher pinned to mode='join' or "
+                    "mode='stream', run to convergence in a fresh process over "
+                    "a persisted RMAT edge frame; cold_s = the process's first "
+                    "call, warm_s = a second fresh graph of the same size in the "
+                    f"same process; min of {args.reps} interleaved rounds",
+            "calls": {"bfs": "root 0", "kcores": "k=8", "mis": "defaults",
+                      "bipartite": "defaults", "scc": "defaults", "cc": "defaults"},
+            "cpus": args.cpus,
+            "loadavg_before_last_extension": load0,
+            "points": points,
+        }
+        with open(out, "w") as f:
+            json.dump(record, f, indent=1)
+            f.write("\n")
+    print(f"wrote {out}")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--leg", choices=("supersteps", "build"), default="supersteps")
+    ap.add_argument("--leg", choices=("supersteps", "build", "route"),
+                    default="supersteps")
     ap.add_argument("--edges")
     ap.add_argument("--supersteps", type=int, default=20)
     ap.add_argument("--reps", type=int, default=3)
@@ -253,6 +382,9 @@ def main() -> None:
     ap.add_argument("--one", type=int, help="run one point in this process")
     ap.add_argument("--one-build", type=int, help="run one build in this process")
     ap.add_argument("--shape", choices=BUILD_SHAPES)
+    ap.add_argument("--one-route", choices=ROUTE_ALGOS,
+                    help="time one dispatcher in this process")
+    ap.add_argument("--path", choices=("join", "stream"))
     ap.add_argument("--parquet")
     ap.add_argument("--out")
     args = ap.parse_args()
@@ -260,6 +392,14 @@ def main() -> None:
     if args.one_build:
         out = one_build(args.one_build, args.shape, args.parquet, args.cpus)
         print("BUILD " + json.dumps(out))
+        return
+    if args.one_route:
+        out = one_route(args.one_route, args.path, args.parquet.split(","), args.cpus)
+        print("ROUTE " + json.dumps(out))
+        return
+    if args.leg == "route":
+        args.edges = args.edges or ROUTE_EDGES
+        route_leg(args)
         return
     if args.leg == "build":
         args.edges = args.edges or BUILD_EDGES

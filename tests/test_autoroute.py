@@ -1,10 +1,11 @@
 """Auto-routing of the nine stream-capable dispatchers (pagerank, cc, lpa,
 bfs/sssp, kcores, mis, bipartite, hyperanf, scc) through algos._route:
-mode="auto" calls take the fused stream kernels above the measured
-crossovers and, for every dispatcher but PageRank, below them when the
-warm-block registry already holds the blocks the kernel would build —
-with results identical to the pinned join path. Also covers the mode
-check and the mode="stream" refusals."""
+mode="auto" calls take the fused stream kernels from the measured
+crossover (CC's own, one shared by the other eight) and, for every
+dispatcher but PageRank, below it when the warm-block registry already
+holds the blocks the kernel would build — with results identical to the
+pinned join path. Also covers the mode check and the mode="stream"
+refusals."""
 
 import numpy as np
 import pytest
@@ -100,7 +101,7 @@ def test_auto_dispatch_threads_edge_count_into_block_build(spark, monkeypatch, a
     that count to the block build instead of paying a second count job."""
     import chaos_spark.stream as st_mod
 
-    for name in ("CSR_AUTO_MIN_EDGES", "STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+    for name in ("STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
         monkeypatch.setattr(csr_mod, name, 1)
     seen = []
 
@@ -165,6 +166,38 @@ def test_auto_dispatch_adopts_its_kernels_warm_blocks(spark, monkeypatch, algo):
     assert calls == [1]
     assert csr_mod._WARM_BLOCKS == registered
     assert _markers() == built_at
+
+
+class _Routed(Exception):
+    """Raised by a stubbed stream kernel: the call routed stream."""
+
+
+@pytest.mark.parametrize("algo", sorted(_dispatch_cases()))
+def test_auto_routes_by_the_one_crossover(spark, monkeypatch, algo):
+    """Cold (registry empty), auto mode routes stream from the crossover —
+    CC_STREAM_MIN_EDGES for CC, STREAM_AUTO_MIN_EDGES for every other
+    dispatcher — and join one raw edge below it."""
+    import chaos_spark.stream as st_mod
+
+    pdf = g3_cliques()
+    edges = spark.createDataFrame(pdf)
+    monkeypatch.setattr(csr_mod, "_WARM_BLOCKS", {})
+    mod, target = (
+        (st_mod, "pagerank_stream") if algo == "pagerank"
+        else (sa_mod, _WARM_CASES[algo][0])
+    )
+
+    def routed(*a, **k):
+        raise _Routed
+
+    monkeypatch.setattr(mod, target, routed)
+    for name in ("STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+        monkeypatch.setattr(csr_mod, name, len(pdf))
+    with pytest.raises(_Routed):
+        _dispatch_cases()[algo](spark, edges)
+    for name in ("STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+        monkeypatch.setattr(csr_mod, name, len(pdf) + 1)
+    _dispatch_cases()[algo](spark, edges).state.count()
 
 
 def test_auto_scc_ignores_pagerank_blocks(spark, monkeypatch):

@@ -159,3 +159,42 @@ def test_corpus_to_graph_leaves_no_cache(spark):
     edges.count()
     assert corpus.storageLevel == level
     assert _persistent_rdd_ids(spark) - before == set()
+
+
+def _join_calls():
+    import importlib
+
+    from chaos_spark.algos import cc as cc_mod, lpa as lpa_mod
+
+    # the package exports a function of the module's own name
+    pr_mod = importlib.import_module("chaos_spark.algos.pagerank")
+
+    return {
+        "pagerank_shuffle": (pr_mod, lambda s, e: pr_mod.pagerank(
+            s, e, tol=0.0, max_iters=3, mode="shuffle")),
+        "pagerank_broadcast": (pr_mod, lambda s, e: pr_mod.pagerank(
+            s, e, tol=0.0, max_iters=3, mode="broadcast")),
+        "cc": (cc_mod, lambda s, e: cc_mod.connected_components(s, e, mode="join")),
+        "lpa": (lpa_mod, lambda s, e: lpa_mod.label_propagation(
+            s, e, max_iters=3, mode="join")),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_join_calls()))
+def test_join_path_releases_edges_when_a_superstep_raises(spark, monkeypatch, name):
+    """A superstep that raises leaves no cache behind: the join path's
+    persisted edge layout is released on the way out."""
+    mod, call = _join_calls()[name]
+    real, calls = mod.materialize_stats, []
+
+    def fail_second(*a, **k):  # the first call is PageRank's init, or superstep 1
+        calls.append(1)
+        if len(calls) == 2:
+            raise RuntimeError("superstep failed")
+        return real(*a, **k)
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(mod, "materialize_stats", fail_second)
+    with pytest.raises(RuntimeError, match="superstep failed"):
+        call(spark, spark.createDataFrame(g3_cliques()))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

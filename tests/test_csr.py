@@ -109,7 +109,7 @@ def test_auto_route_serves_stream_above_crossover(spark, monkeypatch):
     from chaos_spark import stream as st_mod
     from chaos_spark import stream_algos as sa_mod
 
-    for name in ("CSR_AUTO_MIN_EDGES", "STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
+    for name in ("STREAM_AUTO_MIN_EDGES", "CC_STREAM_MIN_EDGES"):
         monkeypatch.setattr(csr_mod, name, 1)
     calls = []
     for mod, fn in ((st_mod, "pagerank_stream"), (sa_mod, "cc_stream"),

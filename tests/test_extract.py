@@ -87,6 +87,15 @@ def test_corpus_to_graph_ids(spark):
     }
 
 
+def test_corpus_to_graph_duplicate_file_row_ids(spark):
+    """A file listed twice is one key, not an id collision."""
+    corpus = gen_source_files(n_rows=100, seed=1)
+    files = pd.concat([corpus.files, corpus.files.iloc[:1]], ignore_index=True)
+    vertices, _, _ = corpus_to_graph(spark.createDataFrame(files))
+    assert vertices.count() == 101
+    assert_no_id_collisions(vertices)
+
+
 def test_corpus_to_graph_null_path_has_no_edges(spark):
     """A file with a NULL path has no vertex: its imports resolve, but it
     contributes no edge (and no id hashed from its repo alone)."""

@@ -60,3 +60,16 @@ def test_mint_ids_stable(spark):
     assert ids1 == ids2
     assert len(set(ids1.values())) == 3
     G.assert_no_id_collisions(G.mint_vertex_ids(df, "repo", "path"))
+
+
+def test_id_collision_check_counts_keys(spark):
+    """Two distinct keys on one id raise, a NULL key field included; one
+    key listed twice does not."""
+    import pytest
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "repo string, path string, id long")
+
+    G.assert_no_id_collisions(frame([("a", "x", 1), ("a", "x", 1)]))
+    with pytest.raises(ValueError, match="vertex-id collision: 2 keys -> 1 distinct ids"):
+        G.assert_no_id_collisions(frame([("a", "x", 1), ("a", "x", 1), ("b", None, 1)]))

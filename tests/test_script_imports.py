@@ -208,7 +208,7 @@ def test_routing_check_fires_on_a_hand_copied_router():
     assert _routing_refs(src) == [
         "CC_STREAM_MIN_EDGES", "_warm_blocks_ready", "_warm_key",
     ]
-    assert _routing_refs("from chaos_spark import csr\ncsr.CSR_AUTO_MIN_EDGES\n")
+    assert _routing_refs("from chaos_spark import csr\ncsr.STREAM_AUTO_MIN_EDGES\n")
     assert _routing_refs(ROUTER.read_text())
 
 

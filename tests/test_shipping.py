@@ -130,3 +130,18 @@ def test_every_task_worker_is_guarded(spark):
     for r in rows:
         assert r["zips"] >= 1  # the shipped chaos_spark zip at least
         assert r["guarded"] == r["zips"], r
+
+
+def test_package_zip_removed_at_exit():
+    """The per-process package zip is gone once its process exits."""
+    import os
+    import subprocess
+
+    code = "from chaos_spark import shipping; print(shipping._build_zip())"
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, capture_output=True,
+        text=True, check=True,
+    ).stdout.strip()
+    assert out.endswith(".zip")
+    assert not os.path.exists(out)

@@ -10,6 +10,8 @@ placement (state_partitions) never affects results.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pytest
 
 from chaos_spark.algos.bfs import bfs, sssp
@@ -208,7 +210,7 @@ def test_sssp_auto_routes_stream_at_scale(spark, monkeypatch):
     import chaos_spark.csr as csr_mod
     import chaos_spark.stream_algos as sa
 
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
     called = {}
     orig = sa.sssp_stream
 
@@ -450,7 +452,7 @@ def test_kcore_auto_routes_stream_at_scale(spark, monkeypatch):
     import chaos_spark.stream_algos as sa
     from chaos_spark.algos.kcores import k_core
 
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
     called = {}
     orig = sa.kcore_stream
 
@@ -562,7 +564,7 @@ def test_mis_auto_routes_stream_at_scale(spark, monkeypatch):
     import chaos_spark.stream_algos as sa
     from chaos_spark.algos.mis import maximal_independent_set
 
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
     called = {}
     orig = sa.mis_stream
 
@@ -580,9 +582,9 @@ def test_mis_auto_routes_stream_at_scale(spark, monkeypatch):
 
 
 # ---------------------------------------------------------------------------
-# Bipartiteness packed-lexmin stream kernel — exact parity with
-# algos.bipartite (pack(root, dist) int64 order ≡ struct(root, dist)
-# lexmin; message = label + 1; same odd-edge conflict count).
+# Bipartiteness lexmin stream kernel — exact parity with algos.bipartite
+# (two-word (root, dist) lexmin ≡ struct(root, dist) min; message =
+# (root, dist + 1); same odd-edge conflict count).
 # ---------------------------------------------------------------------------
 
 def _colorings(res):
@@ -604,6 +606,27 @@ def test_bipartite_stream_equals_join_path(spark, name):
     assert r_str.supersteps == r_join.supersteps
     assert r_str.history[-1]["odd_edges"] == r_join.history[-1]["odd_edges"]
     assert r_str.history[-1]["bipartite"] == r_join.history[-1]["bipartite"]
+
+
+def test_bipartite_stream_equals_join_path_on_high_ids(spark):
+    """Ids from 2^31 up to near 2^63 (as xxhash64 mints them): the
+    two-word state keeps exact parity where a packed one cannot."""
+    from chaos_spark.algos.bipartite import bipartite_check
+    from chaos_spark.stream_algos import bipartite_stream
+
+    pdf = g4_powerlaw(scale=9, num_edges=3000)
+    ids = np.unique(np.concatenate([pdf["src"], pdf["dst"]]))
+    hashed = dict(zip(ids, np.random.default_rng(3).integers(
+        2**31, 2**63 - 1, size=len(ids), dtype=np.int64)))
+    edges = spark.createDataFrame(pd.DataFrame({
+        "src": pdf["src"].map(hashed), "dst": pdf["dst"].map(hashed),
+    }))
+    r_join = bipartite_check(spark, edges, max_iters=200, mode="join")
+    r_str = bipartite_stream(spark, edges, max_iters=200)
+    assert _colorings(r_join) == _colorings(r_str)
+    assert min(_colorings(r_str)) >= 2**31
+    assert r_str.supersteps == r_join.supersteps
+    assert r_str.history[-1]["odd_edges"] == r_join.history[-1]["odd_edges"]
 
 
 def test_bipartite_stream_verdicts(spark):
@@ -663,7 +686,7 @@ def test_bipartite_auto_routes_stream_at_scale(spark, monkeypatch):
     import chaos_spark.stream_algos as sa
     from chaos_spark.algos.bipartite import bipartite_check
 
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
     called = {}
     orig = sa.bipartite_stream
 
@@ -788,7 +811,7 @@ def test_scc_auto_routes_stream_at_scale(spark, monkeypatch):
     import chaos_spark.stream_algos as sa
     from chaos_spark.algos.scc import strongly_connected_components
 
-    monkeypatch.setattr(csr_mod, "CSR_AUTO_MIN_EDGES", 1)
+    monkeypatch.setattr(csr_mod, "STREAM_AUTO_MIN_EDGES", 1)
     called = {}
     orig = sa.scc_stream
 
